@@ -313,28 +313,14 @@ SIDEBAR = [
 ]
 
 
-def _clear_all_state() -> None:
-    """Clear every session pin and result memo: cold-start state for
-    isolated/scale-arm measurements (the _clear_ann_state superset)."""
-    from clusterindices_spark.functions.pins import clear_pins
-    from clusterindices_spark.operators import dedup as _dd
-    from clusterindices_spark.operators import pq as _pq
-    from clusterindices_spark.operators import similarity as _sm
-
-    _dd._CC_STAR_MEMO.clear()
-    _sm._SEM_CC_MEMO.clear()
-    _sm._IVF_TRAINED.clear()
-    _pq._TRAINED.clear()
-    clear_pins()
-
-
 def _isolated_child(key: str, samples: int, sf_dir: str, cpus: str) -> None:
     """One key in THIS fresh interpreter/JVM: warm once at the smallest SF
     (codegen priming, the headline-warmup precedent), then ``samples``
-    fully-cold runs (all pins/memos cleared before each). Prints one JSON
+    fully-cold runs (all pins cleared before each). Prints one JSON
     line; min is the steal-robust estimator."""
     import statistics
 
+    from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.registry import all_queries
     from clusterindices_spark.session import get_spark
 
@@ -350,7 +336,7 @@ def _isolated_child(key: str, samples: int, sf_dir: str, cpus: str) -> None:
         print(f"# isolated warmup {key} failed: {ex}", file=sys.stderr)
     walls = []
     for _ in range(samples):
-        _clear_all_state()
+        clear_pins()
         t0 = time.monotonic()
         fn(spark, sf_dir).count()
         walls.append(round(time.monotonic() - t0, 3))
@@ -421,6 +407,8 @@ def _run_scale_arm(spark, queries, repo_dir: str, mult: float) -> dict[str, floa
     import shutil
     import tempfile
 
+    from clusterindices_spark.functions.pins import clear_pins
+
     sys.path.insert(0, os.path.join(repo_dir, "tools"))
     import scaling_curves as sc
 
@@ -447,14 +435,14 @@ def _run_scale_arm(spark, queries, repo_dir: str, mult: float) -> dict[str, floa
             size = max(int(rows * mult), 1000)
             fn = queries[key]
             # untimed warm pass on the dedicated tiny fixture (codegen
-            # priming; separate dir so pins/memos cannot serve the timed run)
+            # priming; separate dir so pins cannot serve the timed run)
             try:
                 fn(spark, fix[(table, sc.WARM_N)]).write.format("noop").mode(
                     "overwrite"
                 ).save()
             except Exception as ex:
                 print(f"# scale-arm warm {key} failed: {ex}", file=sys.stderr)
-            _clear_all_state()
+            clear_pins()
             spark.sparkContext.setJobDescription(f"scale_arm:{key}@{size}")
             t0 = time.monotonic()
             df = fn(spark, fix[(table, size)])
@@ -465,7 +453,7 @@ def _run_scale_arm(spark, queries, repo_dir: str, mult: float) -> dict[str, floa
                 f"# scale_{key} @{size:,}: {walls[f'scale_{key}']}s",
                 file=sys.stderr,
             )
-        _clear_all_state()  # scale-arm pins/memos must not leak onward
+        clear_pins()  # scale-arm pins must not leak onward
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return walls
@@ -488,6 +476,7 @@ def main() -> None:
         )
         return
 
+    from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.registry import all_queries
     from clusterindices_spark.session import get_spark
 
@@ -560,26 +549,10 @@ def main() -> None:
     ]
     triggered.sort(key=lambda k: timings[k] - hist[k], reverse=True)
     RERUN_CAP = 12
-    # r13: repeat invocations of the CC-consuming keys ride the star-CC /
-    # semantic-membership RESULT memos (labels frames keyed by input-plan
-    # identity), so an un-cleared rerun sample would measure a memo read
-    # (0.3 s for a 6.5 s key) instead of the key's computation — the
-    # _clear_ann_state precedent, scoped to the result memos only: the
-    # intermediate PINS stay, because the first-pass timing legitimately
-    # rode pins built by earlier suite keys and the rerun must reproduce
-    # that same session state, not a colder or warmer one.
-    def _clear_result_memos() -> None:
-        from clusterindices_spark.operators import dedup as _dd
-        from clusterindices_spark.operators import similarity as _sm
-
-        _dd._CC_STAR_MEMO.clear()
-        _sm._SEM_CC_MEMO.clear()
-
     reruns: dict[str, dict] = {}
     for name in triggered[:RERUN_CAP]:
         samples = [timings[name]]
         for _ in range(2):
-            _clear_result_memos()
             t0 = time.monotonic()
             queries[name](spark, sf_dir).count()
             samples.append(round(time.monotonic() - t0, 3))
@@ -604,25 +577,13 @@ def main() -> None:
 
     # ANN build/query split (VERDICT r3 item 4): index BUILD (Lloyd training
     # + encode) is an offline job at scale, but the registry keys charge it
-    # to query time. Each key is timed from a genuinely cold index — the
-    # training memos and cache pins are cleared first (ADVICE r4: earlier
-    # headline ANN keys populate _IVF_TRAINED/_TRAINED for the same sf plan,
-    # so reusing the headline number understated build_est) — then repeated:
-    # the repeat rides the rebuilt memos/pins, so repeat ≈ pure query-side
-    # cost and (cold − repeat) ≈ build cost.
-    def _clear_ann_state() -> None:
-        from clusterindices_spark.functions.pins import clear_pins
-        from clusterindices_spark.operators import pq as _pq
-        from clusterindices_spark.operators import similarity as _sim
-
-        _sim._IVF_TRAINED.clear()
-        _pq._TRAINED.clear()
-        clear_pins()
-
+    # to query time. Each key is timed from cold cache pins, then repeated:
+    # the repeat rides the rebuilt pins, so repeat ≈ query-side cost plus
+    # the retrain and (cold − repeat) ≈ the work the pins save.
     ann_split: dict[str, dict[str, float]] = {}
     for name in ("similarity_ann_ivf", "similarity_ann_pq", "similarity_ann_ivfpq"):
         fn = queries[name]
-        _clear_ann_state()
+        clear_pins()
         t0 = time.monotonic()
         fn(spark, sf_dir).count()
         cold = round(time.monotonic() - t0, 3)

@@ -36,8 +36,8 @@ pinned by a live probe this round — see OPTIMIZATION_r14.md):
   avg) accumulate partials in the same sequence and stay bit-identical.
 - Plan identity: the kernel closure pickles the centroid arrays by VALUE,
   so two builds over the same centroids canonicalize ``sameResult`` and
-  every downstream pin/memo (functions/pins.py) behaves exactly as with
-  the broadcast-literal plans (probe committed in OPTIMIZATION_r14.md).
+  every downstream pin (functions/pins.py) behaves exactly as with the
+  broadcast-literal plans (probe committed in OPTIMIZATION_r14.md).
 
 Full-output equality vs the HOF forms is pinned by tests
 (tests/test_cellassign.py: clean, NULL-row, NULL-element, ragged-dim,

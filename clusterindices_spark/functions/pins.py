@@ -26,16 +26,6 @@ from pyspark.sql import DataFrame
 
 _PINNED: dict[str, DataFrame] = {}
 
-# plan-identity memo containers (ivf/pq/star-CC style) registered so a
-# fixture regeneration invalidates them together with the pins — a memo
-# over stale checkpoint blocks is the same hazard as a stale cache entry
-_MEMO_CONTAINERS: list = []
-
-
-def register_memo(container) -> None:
-    """Register a dict/list memo to be emptied by clear_pins()."""
-    _MEMO_CONTAINERS.append(container)
-
 
 def clear_pins() -> None:
     """Unpersist and forget every cached generation — required after
@@ -44,11 +34,6 @@ def clear_pins() -> None:
         df = _PINNED.pop(tag)
         try:
             df.unpersist()
-        except Exception:
-            pass
-    for c in _MEMO_CONTAINERS:
-        try:
-            c.clear()
         except Exception:
             pass
 

@@ -687,22 +687,6 @@ def connected_components(
     return labels.withColumnRenamed("label", "component")
 
 
-# star-CC fixpoint memo (r13): the ivf_build/_TRAINED idiom applied to the
-# component labels — three registry keys (components, components_star,
-# cluster_keep_best) run the SAME star loop over the SAME pinned doc-pair
-# graph; memoizing the labels frame keyed by input-plan identity makes every
-# re-entry skip the whole driver fixpoint loop (~1 action/round). Entries
-# hold (nodes, edges, max_iters, labels, stats); the labels frame reads from
-# localCheckpoint blocks, valid for the session under the same
-# fixtures-immutable assumption as every pin.
-_CC_STAR_MEMO: list[tuple] = []
-_CC_STAR_MEMO_CAP = 6
-
-from clusterindices_spark.functions.pins import register_memo  # noqa: E402
-
-register_memo(_CC_STAR_MEMO)
-
-
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
@@ -736,18 +720,6 @@ def connected_components_star(
     data does. On a real cluster, swap localCheckpoint for checkpoint()
     to reliable storage so a lost executor can't drop checkpoint blocks.
     """
-    from clusterindices_spark.functions.pins import same_plan
-
-    for m_nodes, m_edges, m_iters, m_out, m_stats in _CC_STAR_MEMO:
-        if (
-            m_iters == max_iters
-            and same_plan(m_nodes, nodes)
-            and same_plan(m_edges, edges)
-        ):
-            if stats is not None:
-                stats.update(m_stats)
-            return m_out
-
     # canonical big→small direction; self-loops dropped
     e = (
         edges.select(
@@ -837,19 +809,9 @@ def connected_components_star(
 
         warnings.warn(msg, stacklevel=2)
     labels = e.groupBy("u").agg(F.min("v").alias("component"))
-    out = (
-        nodes.join(labels, nodes.node == labels.u, "left")
-        .select(
-            "node", F.coalesce("component", F.col("node")).alias("component")
-        )
+    return nodes.join(labels, nodes.node == labels.u, "left").select(
+        "node", F.coalesce("component", F.col("node")).alias("component")
     )
-    if converged:
-        if len(_CC_STAR_MEMO) >= _CC_STAR_MEMO_CAP:
-            _CC_STAR_MEMO.pop(0)
-        _CC_STAR_MEMO.append(
-            (nodes, edges, max_iters, out, {"rounds": rounds, "converged": True})
-        )
-    return out
 
 
 def _component_report(comp: DataFrame) -> DataFrame:

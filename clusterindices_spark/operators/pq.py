@@ -34,8 +34,6 @@ per 6G vectors.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -56,18 +54,6 @@ PQ_N_PROBES = 10
 # below expand 32) — ADC ordering quality was.
 PQ_EXPAND = 64
 
-# r14 kernel dispatch bound, in distinct fit/encode vectors: below it the
-# HOF code-assignment argmin (m×k evals over d_sub-dim subvectors) is
-# cheaper than the kernel's fixed Python-stage + per-round-collect cost
-# (isolated cold min-of-3: 2 000 vecs — embedding_pq_codes — HOF wins 3.82
-# vs 4.97 s; 100 000 vecs — the scale-arm size — kernel wins train+encode
-# 8.7 vs 5.7 s, profile_pq_phases min-of-2). Both forms are bit-identical
-# (cellassign contract + tests); env-parameterised for other hardware.
-PQ_KERNEL_MIN_VECS = int(os.environ.get("SPARK_GRAFT_PQ_KERNEL_MIN", "16384"))
-
-# hyperparams → (sub_frame, collected_rows, schema) — see pq_train_encode;
-# keyed so the plain-PQ and residual (ivfpq) tiers don't evict each other
-_TRAINED: dict[tuple, tuple] = {}
 # diagnostics for the last COLD codebook fit (zero extra actions — all
 # values are computed by the fit anyway): n = distinct fit-universe size,
 # cap = sample_cap, sampled = whether the hash slice engaged. Read by
@@ -140,32 +126,18 @@ def _books_of(rows):
     return books
 
 
-def _assign_codes_any(
-    sub: DataFrame,
-    folded: DataFrame,
-    books=None,
-    with_sub: bool = False,
-    kernel: bool = True,
-) -> DataFrame:
+def _assign_codes_any(sub: DataFrame, folded: DataFrame, books) -> DataFrame:
     """Per-subspace code assignment via the vectorized kernel (guide §4.2)
-    with the broadcast-join HOF argmin as the guarded fallback. ``books``
-    is the collected codebook when the caller already has it (fit loop,
-    training memo); otherwise the M-row table is collected here (M×K×d_sub
-    doubles — the payload the broadcast carried anyway). NOTE: the HOF
-    fallback always carries ``sub`` through; kernel callers that need it
-    must say so."""
+    with the broadcast-join HOF argmin as the fallback for inputs outside
+    the kernel contract. ``books`` is the collected codebook
+    (``_books_of``; None when its shape is outside the contract)."""
     from clusterindices_spark.functions import cellassign as _ck
 
-    if kernel and _ck.kernel_ok(sub, "sub"):
-        if books is None:
-            books = _books_of(folded.collect())
-        if books is not None:
-            try:
-                return _ck.assign_codes_kernel(
-                    sub, books, "vec_id", with_sub=with_sub
-                )
-            except _ck.Unsupported:
-                pass
+    if books is not None and _ck.kernel_ok(sub, "sub"):
+        try:
+            return _ck.assign_codes_kernel(sub, books, "vec_id")
+        except _ck.Unsupported:
+            pass
     return _assign_codes(sub, folded)
 
 
@@ -200,7 +172,7 @@ def pq_train_encode(
     size; the encode stays one embarrassingly-parallel broadcast pass.
     Gate/bench SFs sit under the default cap, so every oracle/recall
     artifact is bit-identical to the unsampled path; ``None`` restores
-    full-corpus fit. Memo keys include the cap.
+    full-corpus fit.
 
     Returns ``(codebook, codes)``: codebook = M rows (m, book), codes =
     (vec_id, codes ARRAY<INT> length M), both materialized (codebook is a
@@ -212,7 +184,7 @@ def pq_train_encode(
     sf0.1)."""
     from pyspark.storagelevel import StorageLevel
 
-    from clusterindices_spark.functions.pins import repin, same_plan
+    from clusterindices_spark.functions.pins import repin
 
     # normalize=False for RESIDUAL inputs (ivfpq): residuals must stay in
     # the raw space the search-side tables are computed in, and a
@@ -235,114 +207,81 @@ def pq_train_encode(
         )
         return folded, codes
     d_sub = len(first["sub"])
-    spark = emb.sparkSession
-    # size-1 codebook memo keyed by plan identity: the Lloyd chain + collect
-    # is ~5 s of tiny-stage overhead at fixture scale, and repeat
-    # invocations on the same corpus (bench warmup→timed, registry sweeps)
-    # derive an identical codebook by construction. Same fixtures-immutable
-    # assumption as every pin (functions/pins.py).
-    params = (m, k, lloyd_iters, normalize, sample_cap)
-    prev = _TRAINED.get(params)
-    if prev is not None and same_plan(prev[0], sub):
-        # the ONE literal codebook DataFrame from training time — a fresh
-        # createDataFrame over the same rows would NOT be sameResult
-        # (Spark 4.1 LocalRelation canonicalization), killing the codes
-        # pin's reuse and re-encoding the corpus on every warm query
-        # the stored kernel decision is replayed so the memo-hit codes plan
-        # is sameResult with the miss-path plan (the pq_codes pin rides it)
-        folded, books, use_kernel = prev[1], prev[2], prev[3]
-    else:
-        # fit set: full sub-vector frame under the cap, else a hash slice
-        # of ~sample_cap vectors (fraction from one count over the pinned
-        # frame; the filter re-evaluates over it per Lloyd reference)
-        sub_fit = sub
-        use_kernel = True
-        _LAST_FIT.update(n=None, cap=sample_cap, sampled=False)
-        if sample_cap is not None:
-            n = sub.select("vec_id").distinct().count()
-            # size-adaptive kernel dispatch (see PQ_KERNEL_MIN_VECS): the
-            # distinct count was already paid for the sampling decision;
-            # sample_cap=None (stress paths) keeps the kernel
-            use_kernel = n >= PQ_KERNEL_MIN_VECS
-            _LAST_FIT.update(n=n, sampled=n > sample_cap)
-            if n > sample_cap:
-                thresh = max(1, (1_000_003 * sample_cap) // n)
-                # pmod, not %: Spark's % is sign-preserving, so a negative
-                # vec_id would yield a negative remainder that is ALWAYS
-                # under the threshold — sweeping every negative-id vector
-                # into the fit set and defeating the cap (r10 advice)
-                sub_fit = sub.where(
-                    F.expr(
-                        "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
-                        f" < {thresh}"
-                    )
+    # fit set: full sub-vector frame under the cap, else a hash slice of
+    # ~sample_cap vectors (fraction from one count over the pinned frame;
+    # the filter re-evaluates over it per Lloyd reference)
+    sub_fit = sub
+    _LAST_FIT.update(n=None, cap=sample_cap, sampled=False)
+    if sample_cap is not None:
+        n = sub.select("vec_id").distinct().count()
+        _LAST_FIT.update(n=n, sampled=n > sample_cap)
+        if n > sample_cap:
+            thresh = max(1, (1_000_003 * sample_cap) // n)
+            # pmod, not %: Spark's % is sign-preserving, so a negative
+            # vec_id would yield a negative remainder that is ALWAYS under
+            # the threshold — sweeping every negative-id vector into the
+            # fit set and defeating the cap (r10 advice)
+            sub_fit = sub.where(
+                F.expr(
+                    "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
+                    f" < {thresh}"
                 )
-        # seeds = the FIT SET's k lowest vec_ids — seeding from the full
-        # corpus's lowest ids would lose every seed the hash sample
-        # dropped, silently shrinking the codebook below k (measured:
-        # recall@5 0.825 vs 1.0 at a 1/3 sample before this fix)
-        seeds = sub_fit.join(
-            F.broadcast(
-                sub_fit.select("vec_id").distinct().orderBy("vec_id").limit(k)
+            )
+    # seeds = the FIT SET's k lowest vec_ids — seeding from the full
+    # corpus's lowest ids would lose every seed the hash sample dropped,
+    # silently shrinking the codebook below k (measured: recall@5 0.825
+    # vs 1.0 at a 1/3 sample before this fix)
+    seeds = sub_fit.join(
+        F.broadcast(
+            sub_fit.select("vec_id").distinct().orderBy("vec_id").limit(k)
+        ),
+        "vec_id",
+    )
+    cents0 = seeds.groupBy("m").agg(
+        F.array_sort(F.collect_list(F.struct("vec_id", "sub"))).alias("sv")
+    )
+    folded = cents0.select(
+        "m",
+        F.transform(
+            "sv",
+            lambda s, i: F.struct(
+                i.cast("int").alias("code"), s["sub"].alias("c")
             ),
-            "vec_id",
-        )
-        cents0 = seeds.groupBy("m").agg(
-            F.array_sort(F.collect_list(F.struct("vec_id", "sub"))).alias("sv")
-        )
-        folded = cents0.select(
-            "m",
-            F.transform(
-                "sv",
-                lambda s, i: F.struct(
-                    i.cast("int").alias("code"), s["sub"].alias("c")
-                ),
-            ).alias("book"),
-        )
-        # r14 (guide §4.2): when the kernel contract holds, each Lloyd
-        # round's n·m×k interpreted argmin (the measured wall of the PQ
-        # family at scale-arm sizes: train+encode 7.2-8.0 s of the ~10 s
-        # key @100k) runs as a vectorized Arrow pass. The kernel needs the
-        # round's codebook driver-resident, so the single chained action
-        # becomes 1 + lloyd_iters tiny collects (M×k×d_sub doubles each);
-        # assignment values, row order and the (m, code) avg shuffle are
-        # identical, so every round's codebook is bit-equal to the chained
-        # HOF form (tests/test_cellassign.py; oracle/recall gates).
-        from clusterindices_spark.functions import cellassign as _ck
+        ).alias("book"),
+    )
+    # r14 (guide §4.2): when the kernel contract holds, each Lloyd round's
+    # n·m×k interpreted argmin runs as a vectorized Arrow pass. The kernel
+    # needs the round's codebook driver-resident, so each round ends in
+    # one tiny collect (M×k×d_sub doubles); assignment values, row order
+    # and the (m, code) avg shuffle are identical, so every round's
+    # codebook is bit-equal to the chained HOF form
+    # (tests/test_cellassign.py; oracle/recall gates). Outside the
+    # contract the HOF rounds chain into one action.
+    from clusterindices_spark.functions import cellassign as _ck
 
-        books = None
-        if use_kernel and _ck.kernel_ok(sub_fit, "sub"):
-            rows = folded.collect()
-            books = _books_of(rows)
-        if books is not None:
-            schema = folded.schema
-            for _ in range(lloyd_iters):
-                cdf = _fold_codebook(
-                    _update_codebook(
-                        _ck.assign_codes_kernel(
-                            sub_fit, books, "vec_id", with_sub=True
-                        ),
-                        d_sub,
-                    )
+    if _ck.kernel_ok(sub_fit, "sub"):
+        rows = folded.collect()
+        for _ in range(lloyd_iters):
+            # a NULL m can never come out of groupBy("m") over the
+            # posexploded frame, so _books_of never returns None here
+            folded = _fold_codebook(
+                _update_codebook(
+                    _ck.assign_codes_kernel(
+                        sub_fit, _books_of(rows), "vec_id", with_sub=True
+                    ),
+                    d_sub,
                 )
-                rows = cdf.collect()
-                # a NULL m can never come out of groupBy("m") over the
-                # posexploded frame, so books stays non-None
-                books = _books_of(rows)
-                schema = cdf.schema
-            folded = spark.createDataFrame(rows, schema)
-        else:
-            for _ in range(lloyd_iters):
-                folded = _fold_codebook(
-                    _update_codebook(_assign_codes(sub_fit, folded), d_sub)
-                )
+            )
             rows = folded.collect()
-            folded = spark.createDataFrame(rows, folded.schema)
-            books = _books_of(rows)
-        use_kernel = books is not None and use_kernel
-        _TRAINED[params] = (sub, folded, books, use_kernel)
+    else:
+        for _ in range(lloyd_iters):
+            folded = _fold_codebook(
+                _update_codebook(_assign_codes(sub_fit, folded), d_sub)
+            )
+        rows = folded.collect()
+    folded = emb.sparkSession.createDataFrame(rows, folded.schema)
     codes = (
-        _assign_codes_any(sub, folded, books=books, kernel=use_kernel)
+        _assign_codes_any(sub, folded, _books_of(rows))
         .groupBy("vec_id")
         .agg(
             F.transform(
@@ -353,11 +292,8 @@ def pq_train_encode(
     )
     # one pinned generation (functions/pins): repeated invocations on the
     # same corpus reuse the materialized codes instead of leaking a cache
-    # entry per call. NOTE: the codebook was collected through `folded`, so
-    # a repeat invocation's codes plan embeds an identical literal table
-    # and sameResult holds.
-    from clusterindices_spark.functions.pins import repin
-
+    # entry per call (the kernel pickles the codebook by value, so a repeat
+    # invocation's codes plan is sameResult)
     codes = repin(
         "pq_codes" if normalize else "pq_codes_resid",
         codes,
@@ -609,7 +545,7 @@ def ivfpq_topk(
     corpus-scale shuffles before the top-k; the full-precision re-rank
     join is candidate-scale. Approximate → rows-only + recall tests."""
     from clusterindices_spark.operators.similarity import (
-        _probe_cells_any,
+        _probe_cells,
         ivf_build,
         unfold_cents,
     )
@@ -621,11 +557,8 @@ def ivfpq_topk(
     )
     # residuals against the OWN cell centroid (cells is K rows, broadcast).
     # Pinned: the frame feeds codebook training, the encode pass, AND the
-    # codes-cell join below; with the r4 ivf_build centroid memo the plan
-    # is sameResult across invocations, so warm queries read the
-    # materialized residuals instead of replaying the corpus zip_with
-    # (isolated warm A/B at sf0.1: ~6.0 → ~5.2 s; the remaining warm cost
-    # is tiny-stage scheduling across the ~70-stage composite, not data).
+    # codes-cell join below, none of which should replay the corpus
+    # zip_with.
     from clusterindices_spark.functions.pins import repin
 
     resid = repin(
@@ -651,9 +584,7 @@ def ivfpq_topk(
     )
 
     # probe side: n_probe nearest cells, residual q − c_cell per pair
-    pc = _probe_cells_any(
-        _unit(probes), folded_cells, n_probe_cells, kernel=False
-    )
+    pc = _probe_cells(_unit(probes), folded_cells, n_probe_cells)
     qresid = pc.join(F.broadcast(cells), "cell").select(
         "probe_id",
         "cell",

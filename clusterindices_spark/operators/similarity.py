@@ -21,7 +21,6 @@ and exists only as oracle ground truth.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,27 +34,6 @@ from clusterindices_spark.functions.distances import (
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 N_PROBES = 10
-# r14 kernel dispatch bound, in corpus_rows × n_cells distance evaluations:
-# below it the interpreted HOF argmin is cheaper than the Arrow kernel's
-# fixed Python-stage cost (isolated cold min-of-3 at sf0.1, 2 000 vectors:
-# 16k evals — ann_ivf — HOF wins 2.20 vs 2.48 s; 32k — knn K=16 — wash
-# 2.76/2.74; 44k — semantic ann — kernel wins 6.55 vs 5.76; 88k — knn auto
-# — kernel wins 5.22 vs 2.78). Both forms are bit-identical (cellassign
-# contract + tests), so this is an adaptive plan choice like AQE's, not a
-# semantic switch; env-parameterised for other hardware.
-IVF_KERNEL_MIN_WORK = int(os.environ.get("SPARK_GRAFT_IVF_KERNEL_MIN", "32768"))
-# folded-centroid memo for ivf_build, keyed by (n_cells, lloyd_iters) and
-# guarded by plan identity — the IVF twin of pq.py's _TRAINED codebook memo
-_IVF_TRAINED: dict[tuple, tuple] = {}
-# semantic-cluster membership memo (r13): keyed by (nodes, edges) plan
-# identity in _clusters_from_pairs; registered with clear_pins like the
-# star-CC memo
-_SEM_CC_MEMO: list[tuple] = []
-
-from clusterindices_spark.functions.pins import register_memo  # noqa: E402
-
-register_memo(_SEM_CC_MEMO)
-register_memo(_IVF_TRAINED)
 # last COLD centroid-fit diagnostics (pq.py's _LAST_FIT twin; zero extra
 # actions) — proves the sampled-fit path engaged at stress scale
 _LAST_FIT: dict = {"n": None, "cap": None, "sampled": False}
@@ -406,30 +384,17 @@ def _clusters_from_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
     engine's own canonicalize-distinct step lazily checkpoints it, so the
     pair scan still runs exactly once (round 1's first action materializes
     it) and the former eager outer checkpoint's EXTRA full pass over the
-    pair tier is gone. Memoized by input-plan identity (the star engine's
-    own memo keys on its post-canonicalization inputs, which a fresh
-    checkpoint RDD would always miss): repeat invocations on the same
-    corpus+pair source reuse the fixpoint."""
+    pair tier is gone."""
     from pyspark.sql import Window as W
 
-    from clusterindices_spark.functions.pins import same_plan
     from clusterindices_spark.operators.dedup import (
         connected_components_star,
     )
 
-    nodes = emb.select(F.col("vec_id").alias("node"))
-    edges = pairs.select(
-        F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")
+    comp = connected_components_star(
+        emb.select(F.col("vec_id").alias("node")),
+        pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst")),
     )
-    for m_nodes, m_edges, m_comp in _SEM_CC_MEMO:
-        if same_plan(m_nodes, nodes) and same_plan(m_edges, edges):
-            comp = m_comp
-            break
-    else:
-        comp = connected_components_star(nodes, edges)
-        if len(_SEM_CC_MEMO) >= 4:
-            _SEM_CC_MEMO.pop(0)
-        _SEM_CC_MEMO.append((nodes, edges, comp))
     w = W.partitionBy("component")
     return comp.select(
         F.col("node").alias("vec_id"),
@@ -539,12 +504,7 @@ def semantic_pairs_ann(
     hot_cells = sorted(
         r["cell"] for r in occ.where(F.col("occ") > cap).collect()
     )
-    probe_side = _probe_cells_any(
-        emb_v,
-        folded,
-        n_probe_cells,
-        kernel=n * n_cells >= IVF_KERNEL_MIN_WORK,
-    )
+    probe_side = _probe_cells_any(emb_v, folded, n_probe_cells)
     idx_n = index
     if hot_cells:
         probe_side = probe_side.where(~F.col("cell").isin(hot_cells))
@@ -722,10 +682,10 @@ def _assign_folded(pts: DataFrame, folded: DataFrame) -> DataFrame:
     centroid table — ZERO shuffle per Lloyd assignment. Tie-break (d2, cl)
     matches min_by(struct(cluster,x), struct(d2, cluster)).
 
-    This is the HOF reference form; corpus-scale callers route through
-    _assign_any, which swaps in the vectorized Arrow kernel (bit-identical
-    — functions/cellassign.py) whenever the centroid rows are already
-    driver-resident and the column types fit the kernel contract."""
+    This is the HOF reference form; callers route through _assign_any,
+    which swaps in the vectorized Arrow kernel (bit-identical —
+    functions/cellassign.py) whenever the column types fit the kernel
+    contract."""
     best = F.array_min(
         F.transform(
             "cents",
@@ -752,27 +712,19 @@ def _cents_of(rows):
     return [(s["cl"], s["c"]) for s in cents]
 
 
-def _assign_any(
-    pts: DataFrame, folded: DataFrame, rows=None, kernel: bool = True
-) -> DataFrame:
+def _assign_any(pts: DataFrame, folded: DataFrame, rows) -> DataFrame:
     """Nearest-cell assignment via the vectorized kernel (guide §4.2) with
-    the HOF crossJoin as the guarded fallback. ``rows`` is the collected
-    folded table when the caller already has it (build memo, fit loop);
-    otherwise the 1-row table is collected here (driver-bounded: K×dim
-    doubles — the same payload the broadcast carried). ``kernel=False``
-    keeps the HOF form — callers below the IVF_KERNEL_MIN_WORK crossover
-    (both forms are bit-identical; see the constant's rationale)."""
+    the HOF crossJoin as the fallback for inputs outside the kernel
+    contract. ``rows`` is the collected 1-row folded table (driver-bounded:
+    K×dim doubles — the same payload the broadcast carried)."""
     from clusterindices_spark.functions import cellassign as _ck
 
-    if kernel and _ck.kernel_ok(pts, "x"):
-        if rows is None:
-            rows = folded.collect()
-        cents = _cents_of(rows)
-        if cents is not None:
-            try:
-                return _ck.assign_cells(pts, cents, "vec_id", "x")
-            except _ck.Unsupported:
-                pass
+    cents = _cents_of(rows)
+    if cents is not None and _ck.kernel_ok(pts, "x"):
+        try:
+            return _ck.assign_cells(pts, cents, "vec_id", "x")
+        except _ck.Unsupported:
+            pass
     return _assign_folded(pts, folded)
 
 
@@ -861,60 +813,10 @@ def ivf_build(
     (``unfold_cents`` gives the K-row form) and the inverted file
     ``(neighbor_id, cell, xb)``. The whole build carries centroids in the
     folded broadcast form — K-row tables only materialize at the storage
-    boundary (ivf_write_bucketed).
-
-    Centroid memo (r4): like pq_train_encode's codebook memo, the folded
-    centroid row is cached keyed by (params, plan identity) — repeat
-    invocations on the same corpus (bench warm runs, the ivfpq composite
-    re-entering per call) skip the Lloyd chain's driver actions entirely.
-    Same fixtures-immutable assumption as every pin."""
+    boundary (ivf_write_bucketed)."""
     from pyspark.storagelevel import StorageLevel
 
-    from clusterindices_spark.functions.pins import same_plan
-
     pts = emb.select("vec_id", "x").persist(StorageLevel.MEMORY_AND_DISK)
-    spark = emb.sparkSession
-    params = (n_cells, lloyd_iters, sample_cap)
-    prev = _IVF_TRAINED.get(params)
-    if prev is not None and same_plan(prev[0], pts):
-        # return the ONE literal DataFrame created at training time — in
-        # Spark 4.1 two createDataFrame calls over identical rows are NOT
-        # sameResult (LocalRelation canonicalization), so recreating the
-        # literal here silently broke every downstream pin's same-plan
-        # reuse (the ivfpq warm path retrained per query until r5)
-        # the stored kernel decision is replayed so the memo-hit index plan
-        # is sameResult with the miss-path plan (downstream pins ride it)
-        folded = prev[1]
-        index = _assign_any(pts, folded, rows=prev[2], kernel=prev[3]).select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cluster").alias("cell"),
-            F.col("x").alias("xb"),
-        )
-        return folded, index
-    # r14: the FIT actions below (sizing count, seed selection, the Lloyd
-    # chain's single collect) run with AQE off. The fit subplan is bounded
-    # by operator constants at ANY corpus size — sample_cap rows in,
-    # K×dim aggregate rows out — so AQE's per-exchange stage
-    # materialization can never help it and only adds one scheduling job
-    # per exchange (measured: 12-14 jobs → 4, ~3.0 s → ~1.2 s at sf0.1).
-    # The corpus-scale consumers (index assignment, candidate joins) are
-    # built AFTER the restore and keep the session's AQE. Centroids are
-    # unchanged at every gate SF (full-output equality verified for all
-    # ivf_build consumers — the per-(cluster,dim) avg still merges the
-    # same per-task partials).
-    sess = spark.conf
-    aqe_prev = sess.get("spark.sql.adaptive.enabled", "true")
-    sess.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _ivf_fit_and_index(spark, pts, params, n_cells, lloyd_iters, sample_cap)
-    finally:
-        sess.set("spark.sql.adaptive.enabled", aqe_prev)
-
-
-def _ivf_fit_and_index(spark, pts, params, n_cells, lloyd_iters, sample_cap):
-    """The build-miss body of ivf_build (fit runs under the AQE-off scope
-    established by the caller; the returned index plan executes later under
-    the session's normal config)."""
     seeds = (
         pts.orderBy("vec_id")
         .limit(n_cells)
@@ -928,32 +830,15 @@ def _ivf_fit_and_index(spark, pts, params, n_cells, lloyd_iters, sample_cap):
             ).alias("cents")
         )
     )
-
-    # Lineage note: each Lloyd round's centroid row enters the next round
-    # as a broadcast subplan, so ONE action computes each round once over
-    # the persisted points — no per-round driver round-trips (a
-    # collect-per-round variant was measured ~2s slower at sf0.1 from pure
-    # job-scheduling overhead). The FINAL centroid row, however, is
-    # materialized once: both downstream consumers (index assignment and
-    # probe-cell selection) embed it as a subplan, and leaving it lazy
-    # re-executes the whole Lloyd chain per consumer (measured ~0.8 s of
-    # duplicated stages at sf0.1). One row of K×dim doubles —
-    # driver-scale by construction.
     # fit set: the full corpus under the cap, else a deterministic hash
     # slice of ~sample_cap rows (fraction from ONE count over the persisted
     # points — the count doubles as the persist materializer). The filter
     # re-evaluates over cached pts per Lloyd reference: cheaper than a
     # second cache entry.
     fit = pts
-    use_kernel = True
     _LAST_FIT.update(n=None, cap=sample_cap, sampled=False)
     if sample_cap is not None:
         n = pts.count()
-        # size-adaptive kernel dispatch (see IVF_KERNEL_MIN_WORK): the
-        # count was already paid for the sampling decision, so the
-        # crossover check is free. sample_cap=None (stress paths) skips
-        # the count and keeps the kernel — the scale posture.
-        use_kernel = n * n_cells >= IVF_KERNEL_MIN_WORK
         _LAST_FIT.update(n=n, sampled=n > sample_cap)
         if n > sample_cap:
             thresh = max(1, (1_000_003 * sample_cap) // n)
@@ -967,37 +852,34 @@ def _ivf_fit_and_index(spark, pts, params, n_cells, lloyd_iters, sample_cap):
             )
     # r14 (guide §4.2): when the kernel contract holds, each Lloyd round's
     # assignment runs as a vectorized Arrow pass instead of K interpreted
-    # l2sq folds per row — the measured wall of the fit at scale-arm sizes
-    # (knn_auto @30k: 6.16 s of the 8.9 s key). The kernel needs the
-    # round's centroids driver-resident, so the single chained action
-    # becomes 1 + lloyd_iters tiny collects (each one row of K×dim
-    # doubles); the assignment values, row order and the per-(cluster,dim)
-    # avg shuffle are identical, so every round's centroid row is
-    # bit-equal to the chained HOF form (full-output equality + oracle
-    # gates; tests/test_cellassign.py).
+    # l2sq folds per row. The kernel needs the round's centroids
+    # driver-resident, so each round ends in one tiny collect (one row of
+    # K×dim doubles); the assignment values, row order and the
+    # per-(cluster,dim) avg shuffle are identical, so every round's
+    # centroid row is bit-equal to the chained HOF form (full-output
+    # equality + oracle gates; tests/test_cellassign.py). Outside the
+    # contract the HOF rounds chain into ONE action, each round's centroid
+    # row entering the next as a broadcast subplan.
     from clusterindices_spark.functions import cellassign as _ck
 
-    folded = seeds
-    schema = None
-    rows = None
-    use_kernel = use_kernel and _ck.kernel_ok(pts, "x")
-    if use_kernel:
+    cdf = seeds
+    if _ck.kernel_ok(pts, "x"):
         rows = seeds.collect()
-        cents = _cents_of(rows)
-        schema = seeds.schema
         for _ in range(lloyd_iters):
-            cdf = _centroids_folded(_ck.assign_cells(fit, cents, "vec_id", "x"))
+            cdf = _centroids_folded(
+                _ck.assign_cells(fit, _cents_of(rows), "vec_id", "x")
+            )
             rows = cdf.collect()
-            cents = _cents_of(rows)
-            schema = cdf.schema
     else:
         for _ in range(lloyd_iters):
-            folded = _centroids_folded(_assign_folded(fit, folded))
-        rows = folded.collect()
-        schema = folded.schema
-    folded = spark.createDataFrame(rows, schema)
-    _IVF_TRAINED[params] = (pts, folded, rows, use_kernel)
-    index = _assign_any(pts, folded, rows=rows, kernel=use_kernel).select(
+            cdf = _centroids_folded(_assign_folded(fit, cdf))
+        rows = cdf.collect()
+    # the FINAL centroid row is materialized once: both downstream
+    # consumers (index assignment and probe-cell selection) embed it, and a
+    # lazy row would re-execute the whole Lloyd chain per consumer
+    # (measured ~0.8 s of duplicated stages at sf0.1)
+    folded = emb.sparkSession.createDataFrame(rows, cdf.schema)
+    index = _assign_any(pts, folded, rows).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         F.col("x").alias("xb"),
@@ -1041,26 +923,18 @@ def _probe_cells(
 
 
 def _probe_cells_any(
-    probes: DataFrame,
-    folded: DataFrame,
-    n_probe_cells: int,
-    rows=None,
-    kernel: bool = True,
+    probes: DataFrame, folded: DataFrame, n_probe_cells: int
 ) -> DataFrame:
-    """Probe-cell selection via the vectorized kernel (guide §4.2) with the
-    HOF crossJoin form as the guarded fallback. ``rows`` is the collected
-    1-row folded table when the caller already has it; otherwise it is
-    collected here (driver-bounded: K×dim doubles — the payload the
-    broadcast carried anyway). ``kernel=False`` keeps the HOF form — used
-    by the probe-CONSTANT sites (_ivf_search / ivf_search_bucketed / ivfpq
-    query side: N_PROBES-scale rows at ANY corpus size, where a Python
-    stage is pure overhead forever) and below the size crossover."""
+    """Corpus-side probe-cell selection via the vectorized kernel (guide
+    §4.2) with the HOF crossJoin form as the fallback for inputs outside
+    the kernel contract. The 1-row folded table is collected here
+    (driver-bounded: K×dim doubles — the payload the broadcast carried
+    anyway). Probe-constant sites (N_PROBES-scale rows at any corpus size)
+    call _probe_cells directly: a Python stage there is pure overhead."""
     from clusterindices_spark.functions import cellassign as _ck
 
-    if kernel and _ck.kernel_ok(probes, "x"):
-        if rows is None:
-            rows = folded.collect()
-        cents = _cents_of(rows)
+    if _ck.kernel_ok(probes, "x"):
+        cents = _cents_of(folded.collect())
         if cents is not None:
             try:
                 return _ck.probe_cells_kernel(
@@ -1094,9 +968,9 @@ def _ivf_search(
     # side: once per inverted-list row) — bit-identical to inline cosine_sim
     sims = (
         F.broadcast(
-            _probe_cells_any(
-                probes, folded_cents, n_probe_cells, kernel=False
-            ).withColumn("na", norm(F.col("xa")))
+            _probe_cells(probes, folded_cents, n_probe_cells).withColumn(
+                "na", norm(F.col("xa"))
+            )
         )
         .join(index.withColumn("nb", norm(F.col("xb"))), "cell")
         .where(F.col("probe_id") != F.col("neighbor_id"))
@@ -1189,7 +1063,7 @@ def ivf_append_bucketed(
     )
     frows = folded.collect()
     folded = spark.createDataFrame(frows, folded.schema)
-    rows = _assign_any(new_emb.select("vec_id", "x"), folded, rows=frows).select(
+    rows = _assign_any(new_emb.select("vec_id", "x"), folded, frows).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         F.col("x").alias("xb"),
@@ -1240,9 +1114,7 @@ def ivf_search_bucketed(
     """
     cents = spark.table(f"{table}_cents")
     index = spark.table(table)
-    probe_cells = _probe_cells_any(
-        probes, fold_cents_table(cents), n_probe_cells, kernel=False
-    )
+    probe_cells = _probe_cells(probes, fold_cents_table(cents), n_probe_cells)
     wanted_cells = sorted(
         r["cell"] for r in probe_cells.select("cell").distinct().collect()
     )

@@ -306,13 +306,11 @@ EXPECTATIONS: dict[str, dict[str, list[str]]] = {
         "forbid": ["CartesianProduct"],
     },
     "embedding_pq_codes": {
-        # r14: the per-subspace encode argmin is size-dispatched — the
-        # broadcast-join HOF below PQ_KERNEL_MIN_VECS (gate SFs land here:
-        # Broadcast present), the vectorized Arrow kernel above it
-        # (MapInArrow, codebook = driver-bounded closure). Both are
-        # zero-shuffle on the corpus side; the only wide exchange is the
-        # vec_id reassembly agg, which stays two-phase
-        "require": ["partial"],
+        # the per-subspace encode argmin is the vectorized Arrow kernel
+        # (MapInArrow, codebook = driver-bounded closure): zero-shuffle on
+        # the corpus side; the only wide exchange is the vec_id reassembly
+        # agg, which stays two-phase
+        "require": ["MapInArrow", "partial"],
         "forbid": ["CartesianProduct", "SortMergeJoin"],
     },
     "similarity_ann_pq": {

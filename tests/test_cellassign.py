@@ -198,48 +198,50 @@ def _plan_str(df):
 
 
 def test_size_dispatch_and_memo_replay(spark):
-    """Below the work crossover the build keeps the HOF broadcast form
-    (no Python stage for trivial inputs); above it (or with the sampling
-    cap disabled — the stress/scale posture) the kernel engages. The memo
-    replays the decision so repeat builds stay sameResult (downstream
-    pins ride that identity)."""
-    from clusterindices_spark.functions.pins import same_plan
-    from clusterindices_spark.operators import similarity as sm
+    """The ivf_build arm follows the input type only: a float64 corpus
+    runs the Arrow kernel (MapInArrow) at any size, sampled or not (no
+    work crossover keeps trivial inputs on the HOF form); a float32 corpus
+    is outside the kernel contract and keeps the HOF broadcast form. A
+    repeat build replays to a sameResult plan with no result memo — the
+    build is a pure function of its input."""
+    from clusterindices_spark.functions.pins import clear_pins, same_plan
+    from clusterindices_spark.operators.similarity import ivf_build
 
-    emb = _mk_pts(
-        spark, [(i, [float(i % 7), float(i % 3)]) for i in range(100)]
-    )
-    sm._IVF_TRAINED.clear()
-    _, i1 = sm.ivf_build(emb, n_cells=4, lloyd_iters=1)  # 400 evals << min
-    assert "MapInArrow" not in _plan_str(i1)
-    _, i2 = sm.ivf_build(emb, n_cells=4, lloyd_iters=1)  # memo hit
+    rows = [(i, [float(i % 7), float(i % 3)]) for i in range(100)]
+    emb64 = _mk_pts(spark, rows)
+    emb32 = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<FLOAT>")
+    _, i1 = ivf_build(emb64, n_cells=4, lloyd_iters=1)  # 400 evals
+    assert "MapInArrow" in _plan_str(i1)
+    _, i2 = ivf_build(emb64, n_cells=4, lloyd_iters=1)
     assert same_plan(i1, i2)
-    sm._IVF_TRAINED.clear()
-    _, i3 = sm.ivf_build(emb, n_cells=4, lloyd_iters=1, sample_cap=None)
+    assert _rows(i1) == _rows(i2)
+    _, i3 = ivf_build(emb64, n_cells=4, lloyd_iters=1, sample_cap=None)
     assert "MapInArrow" in _plan_str(i3)
-    sm._IVF_TRAINED.clear()
+    _, i4 = ivf_build(emb32, n_cells=4, lloyd_iters=1)
+    assert "MapInArrow" not in _plan_str(i4)
+    clear_pins()
 
 
 def test_pq_size_dispatch(spark):
-    """Same dispatch for the PQ encode: tiny corpus keeps the HOF
-    broadcast-join argmin; sample_cap=None engages the kernel."""
+    """Same arm rule for the PQ encode: a tiny float64 corpus runs the
+    kernel with or without the sampling cap; a float32 corpus keeps the
+    HOF broadcast-join argmin."""
     from clusterindices_spark.functions.pins import clear_pins
-    from clusterindices_spark.operators import pq as P
+    from clusterindices_spark.operators.pq import pq_train_encode
 
-    emb = _mk_pts(
-        spark,
-        [(i, [float((i * 31) % 13) for _ in range(8)]) for i in range(64)],
-    )
-    P._TRAINED.clear()
-    clear_pins()
-    _, codes = P.pq_train_encode(emb, m=4, k=4, lloyd_iters=1)
-    assert "MapInArrow" not in _plan_str(codes)
-    P._TRAINED.clear()
-    clear_pins()
-    _, codes2 = P.pq_train_encode(emb, m=4, k=4, lloyd_iters=1, sample_cap=None)
-    assert "MapInArrow" in _plan_str(codes2)
-    P._TRAINED.clear()
-    clear_pins()
+    rows = [(i, [float((i * 31) % 13) for _ in range(8)]) for i in range(64)]
+    emb64 = _mk_pts(spark, rows)
+    emb32 = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<FLOAT>")
+    for emb, cap, kernel in (
+        (emb64, 100_000, True),
+        (emb64, None, True),
+        (emb32, 100_000, False),
+    ):
+        _, codes = pq_train_encode(
+            emb, m=4, k=4, lloyd_iters=1, sample_cap=cap, normalize=False
+        )
+        assert ("MapInArrow" in _plan_str(codes)) is kernel
+        clear_pins()
 
 
 def test_fit_loop_kernel_equals_hof_chain(spark):

@@ -696,3 +696,62 @@ def test_cluster_keep_best_invariants(spark):
         assert k["kept_doc_id"] == best, cid
         assert k["kept_n_chars"] == chars[best]
         assert k["chars_dropped"] == sum(chars[d] for d in docs) - chars[best]
+
+
+def _write_parquet(spark, path, rows, schema):
+    # one file: a single scan partition keeps float aggregation order fixed
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
+        str(path)
+    )
+
+
+def test_star_cc_sees_overwritten_input(spark, tmp_path):
+    """A result depends only on the rows read, not on call history: after
+    the edge file is overwritten in place, star CC must label the new
+    graph exactly as a run over a never-used path does."""
+    from clusterindices_spark.operators.dedup import connected_components_star
+
+    nodes_p, edges_p, fresh_p = (tmp_path / n for n in ("n", "e", "fresh"))
+    schema = "src BIGINT, dst BIGINT"
+    _write_parquet(spark, nodes_p, [(i,) for i in range(8)], "node BIGINT")
+
+    def run(path):
+        comp = connected_components_star(
+            spark.read.parquet(str(nodes_p)), spark.read.parquet(str(path))
+        )
+        return sorted(tuple(r) for r in comp.collect())
+
+    _write_parquet(spark, edges_p, [(1, 0), (3, 2), (5, 4)], schema)
+    run(edges_p)
+    new_edges = [(2, 1), (7, 6), (6, 5)]
+    _write_parquet(spark, edges_p, new_edges, schema)
+    _write_parquet(spark, fresh_p, new_edges, schema)
+    got = run(edges_p)
+    want = run(fresh_p)
+    assert want == [(0, 0), (1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (6, 5), (7, 5)]
+    assert got == want
+
+
+def test_ivf_build_sees_overwritten_input(spark, tmp_path):
+    """ivf_build's centroids come from the rows at the path now, not from
+    an earlier build over the same plan."""
+    from clusterindices_spark.operators.similarity import ivf_build, unfold_cents
+
+    path, fresh = tmp_path / "emb", tmp_path / "fresh"
+    schema = "vec_id BIGINT, x ARRAY<DOUBLE>"
+
+    def cents(p):
+        folded, _ = ivf_build(spark.read.parquet(str(p)), n_cells=3, lloyd_iters=2)
+        return sorted((r["cluster"], r["centroid"]) for r in unfold_cents(folded).collect())
+
+    _write_parquet(
+        spark, path, [(i, [float(i % 5), float(i % 3)]) for i in range(40)], schema
+    )
+    old = cents(path)
+    new_rows = [(i, [10.0 + i % 7, -float(i % 4)]) for i in range(40)]
+    _write_parquet(spark, path, new_rows, schema)
+    _write_parquet(spark, fresh, new_rows, schema)
+    got = cents(path)
+    want = cents(fresh)
+    assert want != old
+    assert got == want

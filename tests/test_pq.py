@@ -131,3 +131,35 @@ def test_pq_expand_curve_monotone_with_deployed_floor(spark):
     assert all(a <= b for a, b in zip(recalls, recalls[1:])), recalls
     deployed = dict(zip(PQ_EXPAND_GRID, recalls))[PQ_EXPAND]
     assert deployed >= 0.85, recalls
+
+
+def test_pq_codebook_sees_overwritten_input(spark, tmp_path):
+    """After the corpus file is overwritten in place (and the pins are
+    released), the trained codebook must be the new rows' codebook — the
+    same one a never-used path yields."""
+    from clusterindices_spark.functions.pins import clear_pins
+
+    path, fresh = tmp_path / "emb", tmp_path / "fresh"
+    schema = "vec_id BIGINT, x ARRAY<DOUBLE>"
+
+    def write(p, rows):
+        # one file: a single scan partition keeps float aggregation order fixed
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
+            str(p)
+        )
+
+    def book(p):
+        folded, _ = pq_train_encode(spark.read.parquet(str(p)), m=2, k=4, lloyd_iters=1)
+        return sorted((r["m"], r["book"]) for r in folded.collect())
+
+    write(path, [(i, [float((i * 7) % 5 + 1), 1.0, float(i % 3), 2.0]) for i in range(32)])
+    old = book(path)
+    new_rows = [(i, [1.0, float((i * 5) % 9 + 1), 3.0, float(i % 4)]) for i in range(32)]
+    write(path, new_rows)
+    write(fresh, new_rows)
+    clear_pins()
+    got = book(path)
+    clear_pins()
+    want = book(fresh)
+    assert want != old
+    assert got == want

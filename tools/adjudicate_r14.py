@@ -15,15 +15,13 @@ Arms are installed by monkeypatching the operator module per sample — the
 repo code is never edited mid-run:
   ann/A     : HEAD _clusters_from_pairs (no eager edge checkpoint)
   ann/B     : r12 variant — edges eagerly localCheckpoint()ed before the
-              star engine (memo kept, it never hits on a cold sample)
+              star engine
   nprobe/A  : HEAD q_similarity_ivf_nprobe_curve (hoisted norms)
   nprobe/B  : r12 variant — inline cosine_sim at the sims join
   control   : sd_index at HEAD (stable 0.59-0.87 s across r6-r13) — if the
               control inflates, the whole session is inflated.
 
-Every sample is COLD for the key's result state: _SEM_CC_MEMO, _CC_STAR_MEMO
-and _IVF_TRAINED are cleared first (matching the bench's first-pass
-conditions, where none of these memos has an sf0.1 entry for these inputs).
+Every sample recomputes the key's result (no operator memoizes results).
 The sink is .count() — the bench's sink for these keys.
 
 Usage: python tools/adjudicate_r14.py [--iters 7] [--sf /root/testdata/sf0.1]
@@ -64,7 +62,7 @@ def main() -> int:
     head_clusters_from_pairs = sm._clusters_from_pairs
 
     def clusters_from_pairs_eager_ckpt(emb, pairs):
-        """r12 variant: eager edge checkpoint, no membership memo."""
+        """r12 variant: eager edge checkpoint."""
         from pyspark.sql import Window as W
 
         nodes = emb.select(F.col("vec_id").alias("node"))
@@ -168,16 +166,10 @@ def main() -> int:
 
     # ---- sample machinery ----
 
-    def cold() -> None:
-        sm._SEM_CC_MEMO.clear()
-        sm._IVF_TRAINED.clear()
-        dd._CC_STAR_MEMO.clear()
-
     def run_ann(arm: str) -> float:
         sm._clusters_from_pairs = (
             head_clusters_from_pairs if arm == "A" else clusters_from_pairs_eager_ckpt
         )
-        cold()
         spark.sparkContext.setJobDescription(f"adjudicate ann/{arm}")
         t0 = time.monotonic()
         qs["dedup_semantic_clusters_ann"](spark, args.sf).count()
@@ -191,7 +183,6 @@ def main() -> int:
             if arm == "A"
             else (lambda s, d: nprobe_curve_inline_cosine(s, d))
         )
-        cold()
         spark.sparkContext.setJobDescription(f"adjudicate nprobe/{arm}")
         t0 = time.monotonic()
         fn(spark, args.sf).count()
@@ -207,20 +198,16 @@ def main() -> int:
     # membership rows at the gate SF (the A/B is pointless otherwise)
     gate = "/root/testdata/sf0.01"
     sm._clusters_from_pairs = head_clusters_from_pairs
-    cold()
     rows_a = sorted(
         tuple(r) for r in qs["dedup_semantic_clusters_ann"](spark, gate).collect()
     )
     sm._clusters_from_pairs = clusters_from_pairs_eager_ckpt
-    cold()
     rows_b = sorted(
         tuple(r) for r in qs["dedup_semantic_clusters_ann"](spark, gate).collect()
     )
     sm._clusters_from_pairs = head_clusters_from_pairs
     same_ann = rows_a == rows_b
-    cold()
     np_a = sorted(tuple(r) for r in qs["similarity_ivf_nprobe_curve"](spark, gate).collect())
-    cold()
     np_b = sorted(tuple(r) for r in nprobe_curve_inline_cosine(spark, gate).collect())
     same_np = np_a == np_b
     print(f"# arm-equality: ann={same_ann} nprobe={same_np}", file=sys.stderr)
@@ -228,9 +215,7 @@ def main() -> int:
     # warm both keys + control at sf0.001 (codegen compile, fixture cache)
     for fn in (run_ann, run_nprobe):
         pass
-    cold()
     qs["dedup_semantic_clusters_ann"](spark, "/root/testdata/sf0.001").count()
-    cold()
     qs["similarity_ivf_nprobe_curve"](spark, "/root/testdata/sf0.001").count()
     qs["sd_index"](spark, "/root/testdata/sf0.001").count()
 

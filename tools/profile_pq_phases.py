@@ -53,7 +53,6 @@ def main() -> None:
         def clear():
             from clusterindices_spark.functions.pins import clear_pins
 
-            P._TRAINED.clear()
             clear_pins()
 
         def jid():

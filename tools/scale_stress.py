@@ -267,7 +267,6 @@ def stress_pq(spark) -> dict:
     Train+encode wall for each arm plus recall@5 of the deployed
     ADC-over-retrieve search against exact cosine top-k."""
     from clusterindices_spark.operators.pq import (
-        _TRAINED,
         pq_topk_reranked,
         pq_train_encode,
     )
@@ -296,7 +295,6 @@ def stress_pq(spark) -> dict:
 
     walls, recalls = {}, {}
     for arm, cap in (("sampled", sample_cap), ("full", None)):
-        _TRAINED.clear()  # cold fit per arm
         t0 = time.monotonic()
         codebook, codes = pq_train_encode(emb, sample_cap=cap)
         walls[arm] = round(time.monotonic() - t0, 1)
@@ -354,8 +352,6 @@ def stress_ivfpq(spark) -> dict:
         (r["probe_id"], r["neighbor_id"])
         for r in topk_exact(emb, probes, k=5).collect()
     }
-    pqmod._TRAINED.clear()
-    simmod._IVF_TRAINED.clear()
     clear_pins()
     t0 = time.monotonic()
     got = {
@@ -406,7 +402,6 @@ def stress_knn(spark) -> dict:
     """
     import math
 
-    from clusterindices_spark.operators import similarity as simmod
     from clusterindices_spark.operators.similarity import (
         _probe_cells,
         ivf_build,
@@ -460,7 +455,6 @@ def stress_knn(spark) -> dict:
     def volumes(emb, n_cells: int) -> tuple[int, int]:
         """(total candidate volume, max cell occupancy) for this sizing —
         from histograms over one build; never executes the pair join."""
-        simmod._IVF_TRAINED.clear()
         geom = emb.where(geom_filter)
         folded, index = ivf_build(geom, n_cells=n_cells)
         m = index.groupBy("cell").agg(F.count(F.lit(1)).alias("m"))

@@ -6,12 +6,12 @@ Runs the FULL registry twice in ONE Spark session and asserts:
 1. **Bit-identical second pass** — every key's canonical row multiset from
    pass 2 equals pass 1's. This systematizes the r10 same-plan
    cache-collision and k-core cache-race classes: a pin that tears down a
-   shared cache entry, a memo keyed too loosely, or any state leaking
-   between invocations shows up as a second-pass drift.
+   shared cache entry, or any state leaking between invocations, shows up
+   as a second-pass drift.
 2. **Bounded cache growth** — after pass 2, the session-wide cache
-   population (persistent RDDs, pins registry, IVF/PQ memos, roundtrip
-   tempdirs) equals the post-pass-1 snapshot: invocation N+1 must REUSE or
-   REPLACE generation N, never stack a new one (the pins.py contract,
+   population (persistent RDDs, pins registry, roundtrip tempdirs) equals
+   the post-pass-1 snapshot: invocation N+1 must REUSE or REPLACE
+   generation N, never stack a new one (the pins.py contract,
    measured rather than asserted in prose).
 3. **No monotone slowdown** — pass-2 total wall must not exceed pass-1
    total by more than 1.5× (a dead InMemoryRelation recomputing per action
@@ -47,7 +47,6 @@ def _cache_snapshot(spark):
     import time as _t
 
     from clusterindices_spark.functions import pins
-    from clusterindices_spark.operators import pq, similarity
     from clusterindices_spark.sources import readers
 
     try:
@@ -73,8 +72,6 @@ def _cache_snapshot(spark):
     return {
         "persistent_rdds": int(n_rdd),
         "pins": len(pins._PINNED),
-        "pq_memo": len(pq._TRAINED),
-        "ivf_memo": len(similarity._IVF_TRAINED),
         "roundtrip_tmpdirs": n_tmp,
     }
 
