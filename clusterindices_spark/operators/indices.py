@@ -18,18 +18,21 @@ Pinned formula choices (documented per SURVEY.md §7 "hard parts"):
 - WSSSE: Σ_p ‖x_p − c_own‖².
 
 Architecture (the 100 TB posture — SURVEY.md §2A "key architectural
-consequence"): every index is
+consequence"): the indices are centroid-based, so ONE pass over the points,
+``cluster_stats``, is enough:
   (one parquet scan) → (broadcast join against a K-row centroid table)
   → (per-row array math via codegen'd higher-order functions)
   → (one hash aggregation over ≤K groups).
 The centroid table is carried as ONE broadcast row holding an
 array<struct<cl,c>> of all K centroids, so per-point nearest-other-centroid
-needs no n×K shuffle and no driver collect. The only shuffles are
-groupBy(cluster, dim) for centroids (map-side partial agg reduces it to
-K×dim×partitions records) and groupBy(cluster) for the stats (K groups).
+needs no n×K shuffle. The rest is arithmetic over K and K² scalars, which
+``finish_indices`` does in the driver with the oracle's SQL semantics.
 """
 
 from __future__ import annotations
+
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -156,54 +159,123 @@ def _silhouette_col() -> F.Column:
     )
 
 
-def index_suite(pts: DataFrame, cents: DataFrame) -> DataFrame:
-    """All four indices in ONE pass over the points (SURVEY.md §4.1: fuse at
-    the API level — one groupBy(cluster) agg feeds every index).
-
-    Returns a 1-row DataFrame
-    (k, bd_silhouette, bd_dunn, davies_bouldin, wssse).
-    """
-    pm = point_metrics(pts, cents)
-    per_cluster = pm.groupBy("cluster").agg(
+def cluster_stats(pts: DataFrame, cents: DataFrame) -> DataFrame:
+    """The one pass over the points that every index needs: K rows
+    (cluster, n, s_sum, ss, max_d, s_i) — point count, Σ silhouette, Σ d²,
+    max d and mean d to the own centroid."""
+    return point_metrics(pts, cents).groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(_silhouette_col()).alias("s_sum"),
         F.sum("d2_own").alias("ss"),
         F.max("d_own").alias("max_d"),
         F.avg("d_own").alias("s_i"),
     )
-    # global scalars from the K-row frame (second "aggregate" is over K rows)
-    glob = per_cluster.agg(
-        F.count(F.lit(1)).alias("k"),
-        (F.sum("s_sum") / F.sum("n")).alias("bd_silhouette_raw"),
-        F.sum("ss").alias("wssse_raw"),
-        F.max("max_d").alias("max_d_own"),
+
+
+# The driver finish over K or K² scalars keeps the SQL aggregates'
+# semantics: NULLs are skipped, an all-NULL input gives NULL, a sum is the
+# left fold from 0.0 (Python's sum() is not) and NaN orders above +Inf.
+
+
+def double_order_key(v: float) -> tuple:
+    """Sort key of Spark's double ordering: NaN above +Inf, -0.0 == 0.0."""
+    return (True, 0.0) if math.isnan(v) else (False, v)
+
+
+def _sql_sum(vals) -> float | None:
+    acc = None
+    for v in vals:
+        if v is not None:
+            acc = (0.0 if acc is None else acc) + v
+    return acc
+
+
+def _sql_avg(vals) -> float | None:
+    vals = [v for v in vals if v is not None]
+    return _sql_sum(vals) / len(vals) if vals else None
+
+
+def _sql_extreme(pick, vals) -> float | None:
+    """SQL MAX (``pick=max``) or MIN (``pick=min``)."""
+    vals = [v for v in vals if v is not None]
+    return pick(vals, key=double_order_key) if vals else None
+
+
+def sql_div(a: float | None, b: float | None) -> float | None:
+    """``a / NULLIF(b, 0.0)`` with NULL propagation."""
+    return None if a is None or b is None or b == 0.0 else a / b
+
+
+_ROUND_CTX = Context(prec=400)  # every finite double quantizes to 1e-6 exactly
+_MICRO = Decimal("1e-6")
+
+
+def round6(v: float | None) -> float | None:
+    """Spark's ROUND(v, 6) on a double: HALF_UP applied to
+    java.math.BigDecimal.valueOf(v), i.e. to the shortest decimal string of
+    v (Python's repr), not to its binary value — 1.0000005 rounds up to
+    1.000001. NaN and ±Inf pass through, and a zero result is unsigned
+    (BigDecimal has no -0)."""
+    if v is None or not math.isfinite(v):
+        return v
+    return float(Decimal(repr(v)).quantize(_MICRO, ROUND_HALF_UP, _ROUND_CTX)) + 0.0
+
+
+def _l2_fold(a, b) -> float | None:
+    """``l2(a, b)`` with the HOF's semantics: a NULL array, a NULL element or
+    a length mismatch (zip_with pads with NULL) gives NULL; the squares are
+    summed as the left fold ((0 + t0²) + t1²) + … ."""
+    if a is None or b is None or len(a) != len(b) or None in a or None in b:
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += (x - y) * (x - y)
+    return math.sqrt(acc)
+
+
+def finish_indices(stats, cents) -> tuple:
+    """(k, bd_silhouette, bd_dunn, davies_bouldin, wssse) from the collected
+    ``cluster_stats`` rows and the (cluster, centroid) pairs, as the oracle
+    computes them: pairs i ≠ j of non-NULL cluster ids; Davies-Bouldin over
+    the clusters with stats; sums in cluster order (partitioning-free);
+    ratios through NULLIF(…, 0.0); every value ROUND(…, 6)."""
+    stats = sorted(stats, key=lambda r: (r["cluster"] is not None, r["cluster"]))
+    cents = [(cl, c) for cl, c in cents if cl is not None]
+    s_sum = _sql_sum(r["s_sum"] for r in stats)
+    bd_silhouette = None if s_sum is None else s_sum / sum(r["n"] for r in stats)
+    dists = [(i, j, _l2_fold(a, b)) for i, a in cents for j, b in cents if i != j]
+    bd_dunn = sql_div(
+        _sql_extreme(min, (d for _, _, d in dists)),
+        _sql_extreme(max, (r["max_d"] for r in stats)),
     )
-    pairs = centroid_pair_dists(cents)
-    min_inter = pairs.agg(F.min("dist").alias("min_inter"))
-    # Davies-Bouldin from the K-row per_cluster frame + K² pairs
-    s = per_cluster.select("cluster", "s_i")
-    sa = s.select(F.col("cluster").alias("i"), F.col("s_i").alias("si"))
-    sb = s.select(F.col("cluster").alias("j"), F.col("s_i").alias("sj"))
-    db = (
-        pairs.join(F.broadcast(sa), "i")
-        .join(F.broadcast(sb), "j")
-        .select("i", ((F.col("si") + F.col("sj")) / F.nullif(F.col("dist"), F.lit(0.0))).alias("r"))
-        .groupBy("i")
-        .agg(F.max("r").alias("r_i"))
-        .agg(F.avg("r_i").alias("davies_bouldin_raw"))
+    s_i = {r["cluster"]: r["s_i"] for r in stats if r["cluster"] is not None}
+    ratios: dict = {}
+    for i, j, d in dists:
+        if i in s_i and j in s_i:
+            pair = None if s_i[i] is None or s_i[j] is None else s_i[i] + s_i[j]
+            ratios.setdefault(i, []).append(sql_div(pair, d))
+    davies_bouldin = _sql_avg(
+        _sql_extreme(max, ratios[i]) for i in sorted(ratios)
     )
-    return (
-        glob.crossJoin(min_inter)
-        .crossJoin(db)
-        .select(
-            "k",
-            F.round("bd_silhouette_raw", 6).alias("bd_silhouette"),
-            F.round(
-                F.col("min_inter") / F.nullif(F.col("max_d_own"), F.lit(0.0)), 6
-            ).alias("bd_dunn"),
-            F.round("davies_bouldin_raw", 6).alias("davies_bouldin"),
-            F.round("wssse_raw", 6).alias("wssse"),
-        )
+    wssse = _sql_sum(r["ss"] for r in stats)
+    return (len(stats), *map(round6, (bd_silhouette, bd_dunn, davies_bouldin, wssse)))
+
+
+def index_suite(pts: DataFrame, cents: DataFrame) -> DataFrame:
+    """All four indices from ONE pass over the points (SURVEY.md §4.1: one
+    groupBy(cluster) agg feeds every index), finished in the driver.
+
+    Returns a 1-row DataFrame
+    (k, bd_silhouette, bd_dunn, davies_bouldin, wssse).
+    """
+    spark = pts.sparkSession
+    cent_rows = cents.collect()
+    local = spark.createDataFrame(cent_rows, cents.schema)
+    stats = cluster_stats(pts, local).collect()
+    return spark.createDataFrame(
+        [finish_indices(stats, cent_rows)],
+        "k BIGINT, bd_silhouette DOUBLE, bd_dunn DOUBLE, davies_bouldin DOUBLE, "
+        "wssse DOUBLE",
     )
 
 

@@ -7,9 +7,12 @@ curves elbow/peak at the true K).
 
 Spark-first shape: the feature DataFrame is persisted ONCE across the whole
 sweep (the reference's ``.cache()``); each K runs one JVM-side MLlib fit plus
-ONE index-suite job (all four indices share a single pass — SURVEY.md §4.1).
-The loop itself is driver orchestration by design: K is small and each fit
-saturates the cluster, so parallelizing across K buys nothing (SURVEY.md §3.2).
+ONE pass over the points (``cluster_stats``: all four indices share it —
+SURVEY.md §4.1). The rest of the suite is arithmetic over K and K² scalars,
+finished in the driver (``finish_indices``), as is ``best_k``'s pick over
+the K-row table. The loop itself is driver orchestration by design: K is
+small and each fit saturates the cluster, so parallelizing across K buys
+nothing (SURVEY.md §3.2).
 
 Not oracle-checked (iterative ML is not SQL-expressible); validated by
 property tests: WSSSE decreases in K, and the sweep recovers the true K on
@@ -28,14 +31,21 @@ from pyspark.storagelevel import StorageLevel
 
 from clusterindices_spark.operators.indices import (
     centroids_of,
-    index_suite,
+    cluster_stats,
+    double_order_key,
+    finish_indices,
     labeled_points,
+    round6,
+    sql_div,
 )
 
 
 _SWEEP_SCHEMA = (
     "k INT, bd_silhouette DOUBLE, bd_dunn DOUBLE, davies_bouldin DOUBLE, "
     "wssse DOUBLE, time_s DOUBLE"
+)
+_GAP_SCHEMA = (
+    "k INT, log_w DOUBLE, exp_log_w_ref DOUBLE, gap DOUBLE, sd_ref DOUBLE, pick INT"
 )
 
 
@@ -49,53 +59,7 @@ def kmeans_sweep(
 ) -> DataFrame:
     """Returns (k, bd_silhouette, bd_dunn, davies_bouldin, wssse, time_s) —
     one row per K, the reference's results-table shape."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    pts = (
-        labeled_points(spark, sf_dir)
-        .withColumn("fv", array_to_vector("x"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # cap K at the point count: MLlib refuses k > n fits (a 1-row corpus —
-    # fuzz wave-3 one:embeddings — crashed every sweep); an empty candidate
-    # range degrades to the empty frame like the r9 empty-corpus guard
-    n_pts = pts.count()
-    if n_pts < k_min:
-        pts.unpersist()
-        return spark.createDataFrame([], _SWEEP_SCHEMA)
-    results = []
-    try:
-        for k in range(k_min, min(k_max, n_pts) + 1):
-            t0 = time.monotonic()
-            model = KMeans(
-                k=k, seed=seed, maxIter=max_iter, featuresCol="fv"
-            ).fit(pts)
-            pred = model.transform(pts).select(
-                "vec_id", model.getPredictionCol(), "x"
-            ).withColumnRenamed(model.getPredictionCol(), "cluster")
-            cents = spark.createDataFrame(
-                [(i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())],
-                "cluster INT, centroid ARRAY<DOUBLE>",
-            )
-            row = index_suite(pred, cents).collect()[0]
-            results.append(
-                (
-                    k,
-                    row["bd_silhouette"],
-                    row["bd_dunn"],
-                    row["davies_bouldin"],
-                    row["wssse"],
-                    round(time.monotonic() - t0, 3),
-                )
-            )
-    finally:
-        pts.unpersist()
-    return spark.createDataFrame(
-        results,
-        "k INT, bd_silhouette DOUBLE, bd_dunn DOUBLE, davies_bouldin DOUBLE, "
-        "wssse DOUBLE, time_s DOUBLE",
-    )
+    return clusterer_sweep(spark, sf_dir, "kmeans", k_min, k_max, seed, max_iter)
 
 
 def write_results_csv(df: DataFrame, path: str) -> None:
@@ -125,52 +89,42 @@ def best_k(sweep: DataFrame) -> DataFrame:
       difference mis-picks when pre-knee drops are still large in absolute
       terms — observed on planted 10-blob data, where it chose 7.)
 
-    All window work runs on the K-row sweep frame — driver-scale by
-    construction, like the reference's own selection step."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.orderBy("k")
-    with_diff = sweep.select(
-        "k",
-        "bd_silhouette",
-        "bd_dunn",
-        "davies_bouldin",
-        "wssse",
-        (
-            (F.lag("wssse", 1).over(w) - F.col("wssse"))
-            / F.nullif(F.col("wssse") - F.lead("wssse", 1).over(w), F.lit(0.0))
-        ).alias("elbow"),
+    The K-row sweep is picked over in the driver, like the reference's own
+    selection step, in SQL order: NULLs never win, NaN ranks above +Inf,
+    ties go to the lowest k. An index with no non-NULL value (no interior
+    elbow in a 2-point sweep; a flat WSSSE) keeps its row with NULL chosen_k
+    — consumers key on 'index'."""
+    rows = sorted(
+        sweep.select("k", "bd_silhouette", "bd_dunn", "davies_bouldin", "wssse")
+        .collect(),
+        key=lambda r: (r["k"] is not None, r["k"]),
     )
+    w = [None] + [r["wssse"] for r in rows] + [None]
 
-    def _pick(col: str, ascending: bool, out_name: str) -> DataFrame:
-        # the output contract is exactly one row PER INDEX: when no non-null
-        # value exists (a 2-point sweep has no interior elbow; a flat-WSSSE
-        # plateau nullifs every ratio), emit the row with NULL chosen_k
-        # rather than silently dropping it — consumers key on 'index'
-        ordered = with_diff.where(F.col(col).isNotNull()).orderBy(
-            F.col(col).asc() if ascending else F.col(col).desc(),
-            F.col("k").asc(),
-        )
-        one = ordered.limit(1).select(
-            F.lit(out_name).alias("index"),
-            F.col("k").alias("chosen_k"),
-            F.round(col, 6).alias("value"),
-        )
-        placeholder = sweep.sparkSession.createDataFrame(
-            [(out_name, None, None)], "index STRING, chosen_k INT, value DOUBLE"
-        )
-        return (
-            one.unionByName(
-                placeholder.join(one.select("index"), "index", "left_anti")
-            )
-        )
+    def minus(a, b):
+        return None if a is None or b is None else a - b
 
-    return (
-        _pick("bd_silhouette", False, "bd_silhouette")
-        .unionByName(_pick("bd_dunn", False, "bd_dunn"))
-        .unionByName(_pick("davies_bouldin", True, "davies_bouldin"))
-        .unionByName(_pick("elbow", False, "wssse_elbow"))
+    def pick(name, values, extreme):
+        cands = [(r["k"], v) for r, v in zip(rows, values) if v is not None]
+        if not cands:
+            return (name, None, None)
+        k, v = extreme(cands, key=lambda c: double_order_key(c[1]))
+        return (name, k, round6(v))
+
+    out = [
+        pick(c, [r[c] for r in rows], extreme)
+        for c, extreme in (
+            ("bd_silhouette", max), ("bd_dunn", max), ("davies_bouldin", min)
+        )
+    ]
+    elbow = [
+        sql_div(minus(w[i], w[i + 1]), minus(w[i + 1], w[i + 2]))
+        for i in range(len(rows))
+    ]
+    out.append(pick("wssse_elbow", elbow, max))
+    k_type = sweep.schema["k"].dataType.simpleString()
+    return sweep.sparkSession.createDataFrame(
+        out, f"index STRING, chosen_k {k_type}, value DOUBLE"
     )
 
 
@@ -184,8 +138,45 @@ def q_kmeans_sweep_best_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reference sweeps MLlib K-Means only; a user comparing algorithms needs the
 # same results-table shape for hierarchical (bisecting) and model-based (GMM)
 # clusterings. Same architecture: persist features once, one JVM fit + one
-# fused index pass per K.
+# pass over the points per K, the index finish in the driver.
 # ---------------------------------------------------------------------------
+
+
+_CLUSTERERS = {
+    "bisecting": "BisectingKMeans",
+    "gmm": "GaussianMixture",
+    "kmeans": "KMeans",
+}
+
+
+def make_clusterer(algo: str, k: int, seed: int, max_iter: int):
+    """The unfitted MLlib estimator for one K of an ``algo`` sweep."""
+    from pyspark.ml import clustering
+
+    return getattr(clustering, _CLUSTERERS[algo])(
+        k=k, seed=seed, maxIter=max_iter, featuresCol="fv"
+    )
+
+
+def index_pass(spark: SparkSession, algo: str, model, pts: DataFrame):
+    """(centroid rows, ``cluster_stats`` frame) for one fitted K: the one
+    pass over the points; the caller collects it and finishes the indices
+    in the driver."""
+    pred = (
+        model.transform(pts)
+        .select("vec_id", model.getPredictionCol(), "x")
+        .withColumnRenamed(model.getPredictionCol(), "cluster")
+    )
+    if algo == "gmm":
+        # empirical centroids in the ORIGINAL space (the model's Gaussian
+        # means live in PCA space)
+        cent_rows = centroids_of(pred).collect()
+    else:
+        cent_rows = [
+            (i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())
+        ]
+    cents = spark.createDataFrame(cent_rows, "cluster INT, centroid ARRAY<DOUBLE>")
+    return cent_rows, cluster_stats(pred, cents)
 
 
 def clusterer_sweep(
@@ -211,22 +202,12 @@ def clusterer_sweep(
     fit ONCE outside the K loop), while the indices are still evaluated in
     the ORIGINAL space — with empirical per-cluster mean centroids
     (centroids_of), so every algorithm's row measures the same geometry."""
-    from pyspark.ml.clustering import BisectingKMeans, GaussianMixture, KMeans
     from pyspark.ml.feature import PCA
     from pyspark.ml.functions import array_to_vector
 
     gmm_pca_dim = 8
-    makers = {
-        "kmeans": lambda k: KMeans(k=k, seed=seed, maxIter=max_iter, featuresCol="fv"),
-        "bisecting": lambda k: BisectingKMeans(
-            k=k, seed=seed, maxIter=max_iter, featuresCol="fv"
-        ),
-        "gmm": lambda k: GaussianMixture(
-            k=k, seed=seed, maxIter=max_iter, featuresCol="fv"
-        ),
-    }
-    if algo not in makers:
-        raise ValueError(f"algo must be one of {sorted(makers)}, got {algo!r}")
+    if algo not in _CLUSTERERS:
+        raise ValueError(f"algo must be one of {sorted(_CLUSTERERS)}, got {algo!r}")
     pts = (
         labeled_points(spark, sf_dir)
         .withColumn("fv", array_to_vector("x"))
@@ -253,47 +234,19 @@ def clusterer_sweep(
             reduced.count()  # materialize BEFORE dropping the parent cache
             pts.unpersist()
             pts = reduced
-    pts.count()
     results = []
     try:
         for k in range(k_min, k_max + 1):
             t0 = time.monotonic()
-            model = makers[algo](k).fit(pts)
-            pred = (
-                model.transform(pts)
-                .select("vec_id", model.getPredictionCol(), "x")
-                .withColumnRenamed(model.getPredictionCol(), "cluster")
-            )
-            if algo == "gmm":
-                # empirical centroids in the ORIGINAL space (the model's
-                # Gaussian means live in PCA space)
-                cents = centroids_of(pred)
-            else:
-                cents = spark.createDataFrame(
-                    [
-                        (i, [float(v) for v in c])
-                        for i, c in enumerate(model.clusterCenters())
-                    ],
-                    "cluster INT, centroid ARRAY<DOUBLE>",
-                )
-            row = index_suite(pred, cents).collect()[0]
-            results.append(
-                (
-                    k,
-                    row["bd_silhouette"],
-                    row["bd_dunn"],
-                    row["davies_bouldin"],
-                    row["wssse"],
-                    round(time.monotonic() - t0, 3),
-                )
-            )
+            model = make_clusterer(algo, k, seed, max_iter).fit(pts)
+            cent_rows, stats = index_pass(spark, algo, model, pts)
+            # collected here: a traced sweep attributes its
+            # `collect at sweep.py` jobs to the index suite
+            _, *indices = finish_indices(stats.collect(), cent_rows)
+            results.append((k, *indices, round(time.monotonic() - t0, 3)))
     finally:
         pts.unpersist()
-    return spark.createDataFrame(
-        results,
-        "k INT, bd_silhouette DOUBLE, bd_dunn DOUBLE, davies_bouldin DOUBLE, "
-        "wssse DOUBLE, time_s DOUBLE",
-    )
+    return spark.createDataFrame(results, _SWEEP_SCHEMA)
 
 
 def q_bisecting_sweep_small(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,11 +299,7 @@ def gap_statistic(
     base = labeled_points(spark, sf_dir)
     first = base.select("x").first()
     if first is None:  # empty corpus (r9 hostile gate)
-        return spark.createDataFrame(
-            [],
-            "k INT, log_w DOUBLE, exp_log_w_ref DOUBLE, gap DOUBLE, "
-            "sd_ref DOUBLE, pick INT",
-        )
+        return spark.createDataFrame([], _GAP_SCHEMA)
     ndim = len(first["x"])
     bounds = base.select(
         F.array(
@@ -369,11 +318,7 @@ def gap_statistic(
     k_max = min(k_max, n_pts)
     if k_max < k_min:
         pts.unpersist()
-        return spark.createDataFrame(
-            [],
-            "k INT, log_w DOUBLE, exp_log_w_ref DOUBLE, gap DOUBLE, "
-            "sd_ref DOUBLE, pick INT",
-        )
+        return spark.createDataFrame([], _GAP_SCHEMA)
 
     def _ref(b: int) -> DataFrame:
         # u01(vec_id, dim, b) = pmod(xxhash64(...), 2^20) / 2^20 — pure
@@ -432,11 +377,7 @@ def gap_statistic(
         (k, round(lw, 6), round(mr, 6), round(g, 6), round(sd, 6), int(k == picked))
         for k, lw, mr, g, sd in rows
     ]
-    return spark.createDataFrame(
-        out,
-        "k INT, log_w DOUBLE, exp_log_w_ref DOUBLE, gap DOUBLE, sd_ref DOUBLE, "
-        "pick INT",
-    )
+    return spark.createDataFrame(out, _GAP_SCHEMA)
 
 
 def q_gap_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:

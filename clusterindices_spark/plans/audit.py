@@ -1487,12 +1487,10 @@ EXPECTATIONS: dict[str, dict[str, list[str]]] = {
     # ---- r7: the five iterative MLlib sweep keys (VERDICT r6 missing #4).
     # Their RETURNED frames are K-row driver-built summaries, so the audit
     # instead exercises the per-K INDEX JOB via SUBPLAN_PROBES below — one
-    # representative fit + the index_suite pass that runs once per K inside
-    # the sweep loop. Designed markers: the centroid/suite attaches ride
-    # broadcasts (incl. the sanctioned 1-row BNLJ pattern), aggs are
-    # two-phase; the data side must never sort-merge or go quadratic. The
-    # K-row → 1-row suite reduction is a legitimate K-scale
-    # Exchange SinglePartition, so that marker is NOT forbidden here.
+    # representative fit + the cluster_stats pass that runs once per K inside
+    # the sweep loop. Designed markers: the centroid attach rides a
+    # broadcast (the sanctioned 1-row BNLJ pattern), the agg is two-phase;
+    # the data side must never sort-merge or go quadratic.
     **{
         k: {
             "require": ["Broadcast", "partial_"],
@@ -1521,18 +1519,15 @@ def _sweep_index_probe(algo: str):
     audit can see the subplan the returned K-row summary cannot witness."""
 
     def probe(spark: SparkSession, sf_dir: str):
-        from pyspark.ml.clustering import (  # noqa: PLC0415
-            BisectingKMeans,
-            GaussianMixture,
-            KMeans,
-        )
         from pyspark.ml.feature import PCA  # noqa: PLC0415
         from pyspark.ml.functions import array_to_vector  # noqa: PLC0415
 
         from clusterindices_spark.operators.indices import (  # noqa: PLC0415
-            centroids_of,
-            index_suite,
             labeled_points,
+        )
+        from clusterindices_spark.operators.sweep import (  # noqa: PLC0415
+            index_pass,
+            make_clusterer,
         )
 
         pts = labeled_points(spark, sf_dir).withColumn(
@@ -1542,36 +1537,23 @@ def _sweep_index_probe(algo: str):
             # mirror clusterer_sweep: GMM fits in an 8-dim PCA space
             pca = PCA(k=8, inputCol="fv", outputCol="pv").fit(pts)
             pts = pca.transform(pts).drop("fv").withColumnRenamed("pv", "fv")
-        maker = {
-            "kmeans": lambda: KMeans(
-                k=3, seed=42, maxIter=2, featuresCol="fv"
-            ),
-            "bisecting": lambda: BisectingKMeans(
-                k=3, seed=42, maxIter=2, featuresCol="fv"
-            ),
-            "gmm": lambda: GaussianMixture(
-                k=3, seed=42, maxIter=2, featuresCol="fv"
-            ),
-        }[algo]
-        model = maker().fit(pts)
-        pred = (
-            model.transform(pts)
-            .select("vec_id", model.getPredictionCol(), "x")
-            .withColumnRenamed(model.getPredictionCol(), "cluster")
-        )
-        if algo == "gmm":
-            cents = centroids_of(pred)
-        else:
-            cents = spark.createDataFrame(
-                [
-                    (i, [float(v) for v in c])
-                    for i, c in enumerate(model.clusterCenters())
-                ],
-                "cluster INT, centroid ARRAY<DOUBLE>",
-            )
-        return index_suite(pred, cents)
+        model = make_clusterer(algo, 3, seed=42, max_iter=2).fit(pts)
+        return index_pass(spark, algo, model, pts)[1]
 
     return probe
+
+
+def _index_suite_probe(spark: SparkSession, sf_dir: str):
+    """index_suite returns a driver-finished 1-row frame; its one pass over
+    the points is ``cluster_stats``."""
+    from clusterindices_spark.operators.indices import (  # noqa: PLC0415
+        centroids_of,
+        cluster_stats,
+        labeled_points,
+    )
+
+    pts = labeled_points(spark, sf_dir)
+    return cluster_stats(pts, centroids_of(pts))
 
 
 def _gap_ref_probe(spark: SparkSession, sf_dir: str):
@@ -1609,6 +1591,7 @@ def _gap_ref_probe(spark: SparkSession, sf_dir: str):
 # keys whose registry frame is a driver-built summary: audit the
 # representative INTERNAL job instead (the plan users actually pay for)
 SUBPLAN_PROBES = {
+    "index_suite": _index_suite_probe,
     "kmeans_sweep_small": _sweep_index_probe("kmeans"),
     "kmeans_sweep_best_k": _sweep_index_probe("kmeans"),
     "bisecting_sweep_small": _sweep_index_probe("bisecting"),

@@ -67,6 +67,31 @@ def test_degenerate_single_cluster(spark):
     assert row["wssse"] == pytest.approx(2.0, abs=1e-6)
 
 
+@pytest.mark.parametrize(
+    "rows, expected",
+    [
+        ([], (0, None, None, None, None)),
+        ([(0, 0, [1.0])], (1, 0.0, None, None, 0.0)),
+        # identical points in two clusters: every distance is 0, so both
+        # ratios hit NULLIF(…, 0.0)
+        (
+            [(0, 0, [1.0]), (1, 0, [1.0]), (2, 1, [1.0])],
+            (2, 0.0, None, None, 0.0),
+        ),
+        # wssse = 0.0078125 exactly: ROUND is HALF_UP, not half-even
+        (
+            [(0, 0, [0.0]), (1, 0, [0.125]), (2, 1, [10.0]), (3, 1, [10.0])],
+            (2, 0.996855, 159.0, 0.006289, 0.007813),
+        ),
+    ],
+    ids=["empty", "one_row", "identical_points", "half_up_rounding"],
+)
+def test_index_suite_degenerate_inputs(spark, rows, expected):
+    pts = spark.createDataFrame(rows, "vec_id BIGINT, cluster INT, x ARRAY<DOUBLE>")
+    got = index_suite(pts, centroids_of(pts)).collect()
+    assert [tuple(r) for r in got] == [expected]
+
+
 def test_single_point_cluster(spark):
     rows = [(0, 0, [0.0, 0.0]), (1, 1, [10.0, 0.0]), (2, 1, [12.0, 0.0])]
     pts = spark.createDataFrame(rows, "vec_id BIGINT, cluster INT, x ARRAY<DOUBLE>")

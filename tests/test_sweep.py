@@ -119,20 +119,50 @@ def test_assignment_matches_own_label_centroid_geometry(spark):
 
 def test_best_k_two_point_sweep_keeps_all_index_rows(spark):
     """A sweep too short for an interior elbow still emits the wssse_elbow
-    row (NULL chosen_k) — one row per index is the output contract."""
+    row (NULL chosen_k) — one row per index is the output contract. The
+    same contract holds on an empty sweep, a flat WSSSE and NaN values
+    (NaN ranks above every number; ties go to the lowest k)."""
     from clusterindices_spark.operators.sweep import best_k
 
-    sweep = spark.createDataFrame(
-        [(2, 0.5, 0.1, 1.0, 100.0, 0.1), (3, 0.6, 0.2, 0.9, 50.0, 0.1)],
-        "k INT, bd_silhouette DOUBLE, bd_dunn DOUBLE, davies_bouldin DOUBLE,"
-        " wssse DOUBLE, time_s DOUBLE",
-    )
-    rows = {r["index"]: r for r in best_k(sweep).collect()}
-    assert set(rows) == {
-        "bd_silhouette", "bd_dunn", "davies_bouldin", "wssse_elbow",
-    }
-    assert rows["wssse_elbow"]["chosen_k"] is None
-    assert rows["bd_silhouette"]["chosen_k"] == 3
+    nan = float("nan")
+    cases = [
+        # (sweep rows, {index: (chosen_k, value)} to check)
+        (
+            [(2, 0.5, 0.1, 1.0, 100.0, 0.1), (3, 0.6, 0.2, 0.9, 50.0, 0.1)],
+            {"wssse_elbow": (None, None), "bd_silhouette": (3, 0.6)},
+        ),
+        (
+            [],
+            {i: (None, None) for i in (
+                "bd_silhouette", "bd_dunn", "davies_bouldin", "wssse_elbow")},
+        ),
+        (
+            [(2, 0.5, 0.1, 1.0, 100.0, 0.1), (3, 0.5, 0.2, 0.9, 50.0, 0.1)],
+            {"bd_silhouette": (2, 0.5)},
+        ),
+        (
+            [(k, 0.5, 0.1, 1.0, 10.0, 0.1) for k in (2, 3, 4)],
+            {"wssse_elbow": (None, None)},
+        ),
+        (
+            [(2, nan, 0.1, nan, 100.0, 0.1), (3, 0.1, 0.2, 0.1, 50.0, 0.1)],
+            {"bd_silhouette": (2, nan), "davies_bouldin": (3, 0.1)},
+        ),
+    ]
+    for sweep_rows, expected in cases:
+        sweep = spark.createDataFrame(
+            sweep_rows,
+            "k INT, bd_silhouette DOUBLE, bd_dunn DOUBLE, davies_bouldin DOUBLE,"
+            " wssse DOUBLE, time_s DOUBLE",
+        )
+        rows = {r["index"]: r for r in best_k(sweep).collect()}
+        assert set(rows) == {
+            "bd_silhouette", "bd_dunn", "davies_bouldin", "wssse_elbow",
+        }
+        for index, want in expected.items():
+            got = (rows[index]["chosen_k"], rows[index]["value"])
+            # repr compares NaN to NaN and floats exactly
+            assert repr(got) == repr(want), (sweep_rows, index, got)
 
 
 def _planted_blobs(
