@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from clusterindices_spark.functions.aggregates import SQL_ROUND6
 from clusterindices_spark.functions.text import SQL_SHINGLES3, SQL_TOKENS, tokens
+from clusterindices_spark.operators.dedup import _doc_shingles
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 # train share = 243/256 ≈ 94.9%: folds are hex-string prefix ranges so both
@@ -381,7 +382,7 @@ def decontaminate(d: DataFrame) -> DataFrame:
     contamination check run before training on scraped corpora; 13-grams in
     the GPT-3/PaLM write-ups — 3-grams here because fixture docs are short).
 
-    Input: (doc_id, toks, is_eval). Output: (doc_id, n_shared_shingles) for
+    Input: (doc_id, shingles, is_eval). Output: (doc_id, n_shared_shingles) for
     every CONTAMINATED training doc — the scrub step is then an anti-join
     of the corpus against this frame.
 
@@ -415,11 +416,9 @@ def decontaminate(d: DataFrame) -> DataFrame:
 
 
 def q_curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clusterindices_spark.functions.text import shingles3
-
-    d = fan_out(load_table(spark, sf_dir, "documents")).select(
+    d = _doc_shingles(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
-        shingles3(tokens(F.col("text"))).alias("shingles"),
+        "shingles",
         (
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
             == DECON_EVAL_PREFIX

@@ -215,11 +215,16 @@ def q_dedup_token_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_shingles(d: DataFrame) -> DataFrame:
-    # fan_out: the shingle HOF chain is the most CPU-bound expression work
-    # in the repo — never let a 1-file scan serialize it on one core
-    return fan_out(d).select(
-        "doc_id", shingles3(tokens(F.col("text"))).alias("shingles")
-    ).withColumn("n_shingles", F.size("shingles"))
+    # fan_out: never let a 1-file scan serialize the repo's most CPU-bound
+    # expression chain on one core. toks is its own projection so each doc
+    # is tokenized once (shingles3 note). Never filter on a shingles-derived
+    # column such as n_shingles: pushdown copies the whole chain into it.
+    return (
+        fan_out(d)
+        .select("doc_id", tokens(F.col("text")).alias("toks"))
+        .select("doc_id", shingles3(F.col("toks")).alias("shingles"))
+        .withColumn("n_shingles", F.size("shingles"))
+    )
 
 
 def _ngram_ex0(d: DataFrame, max_shingle_df: int = MAX_SHINGLE_DF) -> DataFrame:
@@ -390,26 +395,22 @@ def minhash_pairs(
     d: DataFrame, threshold: float = 0.5, seeds: int = MINHASH_SEEDS
 ) -> DataFrame:
     """Candidate pairs via banded MinHash (2 rows/band), verified with exact
-    Jaccard ≥ threshold. xxhash64 is the hash family (seeded by prefixing)."""
+    Jaccard ≥ threshold. The hash family is xxhash64: each shingle g is
+    hashed once, h = xxhash64(g), and seed s's value is xxhash64(s, h)."""
 
     # persisted: read twice (signatures + exact-Jaccard verification), and
-    # shingling is the expensive expression work
-    sh = _repin(
-        "minhash_shingles",
-        _doc_shingles(d).where(F.col("n_shingles") > 0),
-    )
-    # signatures via explode → codegen'd seeded xxhash64 columns → min per
-    # doc. Higher-order transform() lambdas are INTERPRETED (no codegen);
-    # the exploded form runs whole-stage-codegen'd hashes and the groupBy
-    # min partial-aggregates map-side, so the shuffle carries only
-    # docs×seeds minima — measured 1.6× faster than the HOF form at sf0.1.
+    # shingling is the expensive expression work. A doc without shingles
+    # explodes to zero rows: no signature, so never a candidate.
+    sh = _repin("minhash_shingles", _doc_shingles(d))
+    # signatures via explode → one string hash per shingle → codegen'd
+    # long-over-long seeded hashes → min per doc. Higher-order transform()
+    # lambdas are INTERPRETED (no codegen); the exploded form codegens and
+    # the groupBy min partial-aggregates map-side, so the shuffle carries
+    # only docs×seeds minima — measured 1.6× faster than HOF at sf0.1.
     ex = sh.select("doc_id", F.explode("shingles").alias("g"))
-    hashed = ex.select(
+    hashed = ex.select("doc_id", F.xxhash64("g").alias("h")).select(
         "doc_id",
-        *[
-            F.xxhash64(F.concat(F.lit(f"s{s}:"), F.col("g"))).alias(f"x{s}")
-            for s in range(seeds)
-        ],
+        *[F.xxhash64(F.lit(s), F.col("h")).alias(f"x{s}") for s in range(seeds)],
     )
     # pinned (r13): `bands` below is referenced three times (hot-bucket
     # aggregation + both candidate sides) and each reference used to replay
@@ -459,10 +460,9 @@ def minhash_pairs(
         .distinct()
     )
     # exact-Jaccard verification of candidates only
-    sets_ = sh.select("doc_id", "shingles", "n_shingles")
     verified = (
         cands.join(
-            sets_.select(
+            sh.select(
                 F.col("doc_id").alias("doc_a"),
                 F.col("shingles").alias("sh_a"),
                 F.col("n_shingles").alias("na"),
@@ -470,7 +470,7 @@ def minhash_pairs(
             "doc_a",
         )
         .join(
-            sets_.select(
+            sh.select(
                 F.col("doc_id").alias("doc_b"),
                 F.col("shingles").alias("sh_b"),
                 F.col("n_shingles").alias("nb"),

@@ -117,6 +117,70 @@ def test_minhash_no_false_positives_across_bases(spark):
         assert r["doc_a"] // 10 == r["doc_b"] // 10  # only within-base pairs
 
 
+def _n_split(df):
+    return df._jdf.queryExecution().optimizedPlan().toString().count("split(")
+
+
+def test_minhash_layer_tokenizes_once(spark):
+    """shingles3 references its tokens argument six times, and Catalyst
+    shares no subexpression holding a lambda: the tokenizer must stay in
+    its own projection (one split per row), and no filter on a
+    shingles-derived column may be pushed below it with the shingle chain
+    substituted in."""
+    from clusterindices_spark.operators import dedup
+    from clusterindices_spark.operators.curation import q_curation_decontaminate
+
+    d = planted_docs(spark)
+    assert _n_split(dedup._doc_shingles(d)) == 1
+    dedup.minhash_pairs(d)
+    assert _n_split(dedup._PINNED["minhash_shingles"]) == 1
+    # one tokenizer per side: the eval set and the training docs
+    assert _n_split(q_curation_decontaminate(spark, SF_SMOKE)) == 2
+
+
+EDGE_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "\n"),
+    (4, "one"),
+    (5, "two words"),
+    (6, "  runs   of\t\tspaces \n\n tabs\t and \r\n newlines  "),
+    (7, "a b c a b c a b c"),
+    (8, "İstanbul ΣΟΦΙΑ İi Σσς kaİ ΣΣ word"),
+    (9, ""),
+    (10, "one"),
+    (11, "two words"),
+]
+
+
+def test_doc_shingles_and_minhash_edge_inputs(spark):
+    """The projected-tokens shingle frame equals the inline expression row
+    for row on degenerate text, and MinHash still finds a planted pair
+    while never pairing a document that has no shingles (the empty and
+    short documents above include identical copies)."""
+    from clusterindices_spark.functions.text import shingles3, tokens
+    from clusterindices_spark.operators.dedup import _doc_shingles
+
+    rows = EDGE_DOCS + [(20, BASE[0]), (21, BASE[0].replace("brown", "EDITED"))]
+    d = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+    inline = d.select(
+        "doc_id", shingles3(tokens(F.col("text"))).alias("shingles")
+    ).withColumn("n_shingles", F.size("shingles"))
+
+    def by_doc(df):
+        return {r["doc_id"]: (r["shingles"], r["n_shingles"]) for r in df.collect()}
+
+    got = by_doc(_doc_shingles(d))
+    assert got == by_doc(inline)
+    assert len(got) == len(rows)
+
+    no_shingles = {k for k, (sh, _) in got.items() if not sh}
+    assert no_shingles == {1, 2, 3, 4, 5, 9, 10, 11}
+    pairs = {(r["doc_a"], r["doc_b"]) for r in minhash_pairs(d).collect()}
+    assert (20, 21) in pairs
+    assert not {x for p in pairs for x in p} & no_shingles
+
+
 def test_simhash_finds_exact_copies(spark):
     rows = [(1, BASE[0]), (2, BASE[0]), (3, BASE[3])]
     d = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
