@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from clusterindices_spark.functions.local import local_frame
+
 _PID = "_rr_pid"
 _LRK = "_rr_lrk"
 _LCUM = "_rr_lcum"
@@ -83,8 +85,8 @@ def ranked(
         offsets.append((pid, rk_off, cum_off))
         rk_off += n
         cum_off += s if s is not None else 0
-    off = df.sparkSession.createDataFrame(
-        offsets, f"{_PID} INT, _rk_off BIGINT, _cum_off BIGINT"
+    off = local_frame(
+        df.sparkSession, offsets, f"{_PID} INT, _rk_off BIGINT, _cum_off BIGINT"
     )
     # BIGINT rank: local row_number (int) + bigint offset stays bigint —
     # casting down to int would silently wrap past 2^31 rows, exactly the

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.functions.text import (
     FNV_MOD,
     SQL_FINGERPRINT,
@@ -537,8 +538,8 @@ def simhash_signatures(d: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
 
 
 def spark_bitvals(spark: SparkSession, bits: int) -> DataFrame:
-    return spark.createDataFrame(
-        [(b, 1 << b) for b in range(bits)], "bit INT, bitval BIGINT"
+    return local_frame(
+        spark, [(b, 1 << b) for b in range(bits)], "bit INT, bitval BIGINT"
     )
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from clusterindices_spark.functions.aggregates import SQL_ROUND6
 from clusterindices_spark.functions.distances import norm
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.sources.fixtures import load_table
 
 
@@ -271,8 +272,8 @@ def q_embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").isNotNull()  # no geometry, no projection (r9)
     ).select("vec_id", F.col("embedding").alias("x"))
     if emb.first() is None:  # empty corpus: nothing to fit (r9 hostile)
-        return spark.createDataFrame(
-            [], "vec_id BIGINT, " + ", ".join(
+        return local_frame(
+            spark, [], "vec_id BIGINT, " + ", ".join(
                 f"pc{i + 1} DOUBLE" for i in range(PCA_K)
             )
         )
@@ -316,7 +317,7 @@ def q_embedding_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").isNotNull()  # no geometry, no projection (r9)
     ).select("vec_id", F.col("embedding").alias("x"))
     if emb.first() is None:  # empty corpus: nothing to fit (r9 hostile)
-        return spark.createDataFrame([], "vec_id BIGINT, w_micros STRING")
+        return local_frame(spark, [], "vec_id BIGINT, w_micros STRING")
     comps, mean, _, eigvals = pca_fit(emb, k=WHITEN_K)
     mean_lit = F.array(*[F.lit(float(v)) for v in mean])
     centered = F.zip_with(F.col("x"), mean_lit, lambda a, b: a - b)
@@ -809,8 +810,8 @@ def q_embedding_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("embedding").alias("x"))
     first = emb.first()
     if first is None:  # empty corpus → empty 8-column frame (ADVICE r7)
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "dim_a INT, dim_b INT, n BIGINT, sa BIGINT, sb BIGINT, "
             "sab BIGINT, saa BIGINT, sbb BIGINT",
         ).transform(_dim_cov_finalize)
@@ -858,6 +859,7 @@ def q_embedding_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(dim)
         for j in range(i + 1, dim)
     ]
+    # list-built on purpose: the plan audit and a test pin Scan ExistingRDD here
     s = spark.createDataFrame(
         stats,
         "dim_a INT, dim_b INT, n BIGINT, sa BIGINT, sb BIGINT, "

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clusterindices_spark.functions.distances import l2, l2sq
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 # ---------------------------------------------------------------------------
@@ -270,10 +271,10 @@ def index_suite(pts: DataFrame, cents: DataFrame) -> DataFrame:
     """
     spark = pts.sparkSession
     cent_rows = cents.collect()
-    local = spark.createDataFrame(cent_rows, cents.schema)
+    local = local_frame(spark, cent_rows, cents.schema)
     stats = cluster_stats(pts, local).collect()
-    return spark.createDataFrame(
-        [finish_indices(stats, cent_rows)],
+    return local_frame(
+        spark, [finish_indices(stats, cent_rows)],
         "k BIGINT, bd_silhouette DOUBLE, bd_dunn DOUBLE, davies_bouldin DOUBLE, "
         "wssse DOUBLE",
     )

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clusterindices_spark.functions.distances import l2sq, norm
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 M_SUBSPACES = 8  # 64-dim fixtures → 8 subvectors of 8 dims
@@ -199,11 +200,11 @@ def pq_train_encode(
         # with the contract schemas instead of first()[0] crashing (r9
         # hostile empty gate); every downstream search yields 0 rows
         spark = emb.sparkSession
-        folded = spark.createDataFrame(
-            [], "m INT, book ARRAY<STRUCT<code: INT, c: ARRAY<DOUBLE>>>"
+        folded = local_frame(
+            spark, [], "m INT, book ARRAY<STRUCT<code: INT, c: ARRAY<DOUBLE>>>"
         )
-        codes = spark.createDataFrame(
-            [], "vec_id BIGINT, codes ARRAY<INT>"
+        codes = local_frame(
+            spark, [], "vec_id BIGINT, codes ARRAY<INT>"
         )
         return folded, codes
     d_sub = len(first["sub"])
@@ -279,7 +280,7 @@ def pq_train_encode(
                 _update_codebook(_assign_codes(sub_fit, folded), d_sub)
             )
         rows = folded.collect()
-    folded = emb.sparkSession.createDataFrame(rows, folded.schema)
+    folded = local_frame(emb.sparkSession, rows, folded.schema)
     codes = (
         _assign_codes_any(sub, folded, _books_of(rows))
         .groupBy("vec_id")
@@ -445,8 +446,8 @@ def q_similarity_pq_expand_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine_sim(F.col("xa"), F.col("xb")), 6).alias("sim"),
         )
     )
-    grid = spark.createDataFrame(
-        [(e,) for e in PQ_EXPAND_GRID], "expand INT"
+    grid = local_frame(
+        spark, [(e,) for e in PQ_EXPAND_GRID], "expand INT"
     )
     sel = sims.join(
         F.broadcast(grid), F.col("adc_rank") <= F.col("expand") * F.lit(k)

@@ -33,6 +33,7 @@ from clusterindices_spark.functions.aggregates import (
     exact_sum,
     sql_exact_sum,
 )
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.operators.relational import SQL_JSON_LENIENT
 from clusterindices_spark.sources.fixtures import load_table
 
@@ -1274,8 +1275,8 @@ def q_agg_quantiles_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = bw.withColumn("cum", F.sum("bw").over(w_cum)).withColumn(
         "tot", F.sum("bw").over(Window.partitionBy("et"))
     )
-    ps = spark.createDataFrame(
-        list(Q_FRACTIONS), "p STRING, num LONG, den LONG"
+    ps = local_frame(
+        spark, list(Q_FRACTIONS), "p STRING, num LONG, den LONG"
     )
     tagged = bc.crossJoin(F.broadcast(ps)).withColumn(
         "r",

@@ -31,6 +31,7 @@ from clusterindices_spark.functions.distances import (
     l2sq,
     norm,
 )
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 N_PROBES = 10
@@ -292,8 +293,8 @@ def q_similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (probe, pick, cid, sim, score)
             for cid, pick, sim, score in picked
         )
-    return spark.createDataFrame(
-        out_rows,
+    return local_frame(
+        spark, out_rows,
         "probe_id BIGINT, pick_order INT, neighbor_id BIGINT, "
         "sim DOUBLE, mmr_score DOUBLE",
     )
@@ -474,8 +475,8 @@ def semantic_pairs_ann(
     n = emb_v.count()
     if n == 0:
         # MLlib-era contract: empty corpus → empty 3-col frame
-        return emb.sparkSession.createDataFrame(
-            [], "vec_a BIGINT, vec_b BIGINT, cos DOUBLE"
+        return local_frame(
+            emb.sparkSession, [], "vec_a BIGINT, vec_b BIGINT, cos DOUBLE"
         )
     if n_cells is None:
         # WIDE default calibration for the LOOSE default threshold: K =
@@ -878,7 +879,7 @@ def ivf_build(
     # consumers (index assignment and probe-cell selection) embed it, and a
     # lazy row would re-execute the whole Lloyd chain per consumer
     # (measured ~0.8 s of duplicated stages at sf0.1)
-    folded = emb.sparkSession.createDataFrame(rows, cdf.schema)
+    folded = local_frame(emb.sparkSession, rows, cdf.schema)
     index = _assign_any(pts, folded, rows).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
@@ -1062,7 +1063,7 @@ def ivf_append_bucketed(
         ).alias("cents")
     )
     frows = folded.collect()
-    folded = spark.createDataFrame(frows, folded.schema)
+    folded = local_frame(spark, frows, folded.schema)
     rows = _assign_any(new_emb.select("vec_id", "x"), folded, frows).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
@@ -1224,8 +1225,8 @@ def q_similarity_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(cosine_sim(F.col("xa"), F.col("xb")), 6).alias("sim"),
         )
     )
-    grid = spark.createDataFrame(
-        [(p,) for p in IVF_NPROBE_GRID], "n_probe_cells INT"
+    grid = local_frame(
+        spark, [(p,) for p in IVF_NPROBE_GRID], "n_probe_cells INT"
     )
     cand = sims.join(
         F.broadcast(grid), F.col("cell_rank") < F.col("n_probe_cells")

@@ -10,9 +10,12 @@ sweep (the reference's ``.cache()``); each K runs one JVM-side MLlib fit plus
 ONE pass over the points (``cluster_stats``: all four indices share it —
 SURVEY.md §4.1). The rest of the suite is arithmetic over K and K² scalars,
 finished in the driver (``finish_indices``), as is ``best_k``'s pick over
-the K-row table. The loop itself is driver orchestration by design: K is
-small and each fit saturates the cluster, so parallelizing across K buys
-nothing (SURVEY.md §3.2).
+the K-row table. Every driver-held frame (the per-K centroid table, the
+results table, ``best_k``'s rows) goes back into Spark through
+``local_frame``, an Arrow ``LocalRelation``: no Python-worker task runs, and
+collecting a returned frame runs no job. The loop itself is driver
+orchestration by design: K is small and each fit saturates the cluster, so
+parallelizing across K buys nothing (SURVEY.md §3.2).
 
 Not oracle-checked (iterative ML is not SQL-expressible); validated by
 property tests: WSSSE decreases in K, and the sweep recovers the true K on
@@ -29,6 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.operators.indices import (
     centroids_of,
     cluster_stats,
@@ -123,8 +127,8 @@ def best_k(sweep: DataFrame) -> DataFrame:
     ]
     out.append(pick("wssse_elbow", elbow, max))
     k_type = sweep.schema["k"].dataType.simpleString()
-    return sweep.sparkSession.createDataFrame(
-        out, f"index STRING, chosen_k {k_type}, value DOUBLE"
+    return local_frame(
+        sweep.sparkSession, out, f"index STRING, chosen_k {k_type}, value DOUBLE"
     )
 
 
@@ -159,9 +163,10 @@ def make_clusterer(algo: str, k: int, seed: int, max_iter: int):
 
 
 def index_pass(spark: SparkSession, algo: str, model, pts: DataFrame):
-    """(centroid rows, ``cluster_stats`` frame) for one fitted K: the one
-    pass over the points; the caller collects it and finishes the indices
-    in the driver."""
+    """(centroid rows, ``cluster_stats`` frame) for one fitted K. The
+    centroids enter the plan as a ``local_frame`` LocalRelation that the
+    stats pass broadcasts; the stats frame is the one pass over the points,
+    which the caller collects before finishing the indices in the driver."""
     pred = (
         model.transform(pts)
         .select("vec_id", model.getPredictionCol(), "x")
@@ -175,7 +180,7 @@ def index_pass(spark: SparkSession, algo: str, model, pts: DataFrame):
         cent_rows = [
             (i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())
         ]
-    cents = spark.createDataFrame(cent_rows, "cluster INT, centroid ARRAY<DOUBLE>")
+    cents = local_frame(spark, cent_rows, "cluster INT, centroid ARRAY<DOUBLE>")
     return cent_rows, cluster_stats(pred, cents)
 
 
@@ -219,7 +224,7 @@ def clusterer_sweep(
     n_pts = pts.count()
     if n_pts < k_min or (algo == "gmm" and n_pts < 2):
         pts.unpersist()
-        return spark.createDataFrame([], _SWEEP_SCHEMA)
+        return local_frame(spark, [], _SWEEP_SCHEMA)
     k_max = min(k_max, n_pts)
     if algo == "gmm":
         n_dim = len(pts.select("x").first()["x"])
@@ -246,7 +251,7 @@ def clusterer_sweep(
             results.append((k, *indices, round(time.monotonic() - t0, 3)))
     finally:
         pts.unpersist()
-    return spark.createDataFrame(results, _SWEEP_SCHEMA)
+    return local_frame(spark, results, _SWEEP_SCHEMA)
 
 
 def q_bisecting_sweep_small(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,7 +304,7 @@ def gap_statistic(
     base = labeled_points(spark, sf_dir)
     first = base.select("x").first()
     if first is None:  # empty corpus (r9 hostile gate)
-        return spark.createDataFrame([], _GAP_SCHEMA)
+        return local_frame(spark, [], _GAP_SCHEMA)
     ndim = len(first["x"])
     bounds = base.select(
         F.array(
@@ -318,7 +323,7 @@ def gap_statistic(
     k_max = min(k_max, n_pts)
     if k_max < k_min:
         pts.unpersist()
-        return spark.createDataFrame([], _GAP_SCHEMA)
+        return local_frame(spark, [], _GAP_SCHEMA)
 
     def _ref(b: int) -> DataFrame:
         # u01(vec_id, dim, b) = pmod(xxhash64(...), 2^20) / 2^20 — pure
@@ -377,7 +382,7 @@ def gap_statistic(
         (k, round(lw, 6), round(mr, 6), round(g, 6), round(sd, 6), int(k == picked))
         for k, lw, mr, g, sd in rows
     ]
-    return spark.createDataFrame(out, _GAP_SCHEMA)
+    return local_frame(spark, out, _GAP_SCHEMA)
 
 
 def q_gap_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1108,6 +1108,7 @@ def q_text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         words = words.select(
             "freq", _bpe_merge_once(F.col("seq"), best["pair"], merged).alias("seq")
         )
+    # list-built on purpose: the plan audit pins Scan ExistingRDD here
     return spark.createDataFrame(
         merges, "round INT, pair STRING, merged STRING, cnt BIGINT"
     )

@@ -458,9 +458,12 @@ def _derived_partsupp(li: DataFrame) -> DataFrame:
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
     ).agg(
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
-            "ps_supplycost"
-        ),
+        # nullif as in _SQL_PS: a zero-quantity line has no unit cost. A bare
+        # division raised ANSI DIVIDE_BY_ZERO whenever the stage ran before
+        # AQE could cancel it for an empty join side (fuzz seed 104003)
+        F.min(
+            F.col("l_extendedprice") / F.nullif(F.col("l_quantity"), F.lit(0.0))
+        ).alias("ps_supplycost"),
         F.sum(F.col("l_quantity").cast("decimal(18,6)"))
         .cast("double")
         .alias("ps_qty"),

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clusterindices_spark.functions.aggregates import exact_sum
+from clusterindices_spark.functions.local import local_frame
 from clusterindices_spark.operators.sessions import SESSION_GAP_MIN
 
 EVENTS_STREAM_SCHEMA = (
@@ -1179,8 +1180,8 @@ def distinct_users_census_foreach_batch(
         state_pairs = (
             spark.read.parquet(state_dir)
             if has_state
-            else spark.createDataFrame(
-                [], batch_df.select("event_type", "user_id").schema
+            else local_frame(
+                spark, [], batch_df.select("event_type", "user_id").schema
             )
         )
         observed = (

@@ -77,3 +77,18 @@ def test_fuzz_w4_seed_subset_green(spark, fuzz_root, seed):
         # took ~20 min for this cell alone
         assert wall < 120, f"w4 monster-doc subset took {wall:.0f}s"
 
+
+def test_derived_partsupp_drops_zero_quantity_lines(spark):
+    """A zero-quantity line has no unit cost: the derived partsupp's
+    MIN(price / quantity) skips it, as its oracle's NULLIF does, instead of
+    raising ANSI DIVIDE_BY_ZERO (seed 104003's lineitem has such lines;
+    tpch_q11 passed only when AQE cancelled that stage in time)."""
+    from clusterindices_spark.operators.tpch import _derived_partsupp
+
+    li = spark.createDataFrame(
+        [(1, 1, 10.0, 0.0), (1, 1, 12.0, 3.0), (2, 1, 5.0, 0.0)],
+        "l_partkey BIGINT, l_suppkey BIGINT, l_extendedprice DOUBLE, "
+        "l_quantity DOUBLE",
+    )
+    got = sorted(tuple(r) for r in _derived_partsupp(li).collect())
+    assert got == [(1, 1, 4.0, 3.0), (2, 1, None, 0.0)]

@@ -165,6 +165,36 @@ def test_best_k_two_point_sweep_keeps_all_index_rows(spark):
             assert repr(got) == repr(want), (sweep_rows, index, got)
 
 
+def test_driver_held_frames_are_local_relations(spark):
+    """The sweep's driver-held frames — its result, best_k's rows,
+    index_suite's row and index_pass's centroid table — are Arrow
+    LocalRelations: a list-built LogicalRDD runs Python-worker tasks on its
+    first action."""
+    from pyspark.ml.functions import array_to_vector
+
+    from clusterindices_spark.operators.indices import index_suite
+    from clusterindices_spark.operators.sweep import (
+        best_k,
+        index_pass,
+        make_clusterer,
+    )
+
+    sweep = kmeans_sweep(spark, SF_SMOKE, k_min=2, k_max=2, max_iter=2)
+    pts = labeled_points(spark, SF_SMOKE)
+    fv = pts.withColumn("fv", array_to_vector("x"))
+    model = make_clusterer("kmeans", 2, seed=42, max_iter=2).fit(fv)
+    frames = {
+        "sweep": sweep,
+        "best_k": best_k(sweep),
+        "index_suite": index_suite(pts, centroids_of(pts)),
+        "index_pass": index_pass(spark, "kmeans", model, fv)[1],
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan, (name, plan)
+        assert "LogicalRDD" not in plan, (name, plan)
+
+
 def _planted_blobs(
     spark, tmp_path, true_k=5, dim=6, per=30, spread=0.4, seed=11, box=40
 ):
