@@ -1,0 +1,444 @@
+"""One k-means++/Lloyd loop for every K of a sweep.
+
+The validity indices are centroid-based, so once the centroids are fixed
+one linear pass over the points yields every index (Luna-Romera et al.
+2018, §3–4). This module makes that pass double as the Lloyd step, and
+fits every K of a sweep in the same passes:
+
+1. **Sample.** One count, then one ``toArrow()`` collect (a JVM job, no
+   Python worker) of the points — all of them when there are at most
+   ``SAMPLE_CAP``, else ``ivf_build``'s deterministic hash slice of about
+   ``SAMPLE_CAP`` rows — sorted by ``vec_id``.
+2. **Driver updates.** Per K, greedy k-means++ seeded with
+   ``default_rng([seed, k])``, then Lloyd updates on the sample until its labels stop changing
+   or ``max_iter`` updates are spent.
+3. **Full passes.** One ``mapInArrow`` over the points with every active
+   K's centroids in the closure (distances by ``cellassign._d2acc``, the
+   ``l2sq`` left fold) emits, per Arrow batch and (k, cluster): the
+   count, the coordinate sums, a label fingerprint and the
+   ``cluster_stats`` fields (Σ silhouette, Σd², max d, Σd); one JVM
+   ``groupBy(k, cl)`` aggregate (its map-side partial merges a
+   partition's batches) and one collect of ΣK rows follow. A K is final when the
+   pass's labels equal the labels that produced its centroids, or when its
+   budget is spent; otherwise its centroids become the pass means, which
+   costs one update. Final Ks leave the closure.
+
+Every result is therefore the ``cluster_stats`` of (final centroids, their
+nearest-centroid labels). When the input fits the sample, the driver
+updates are full-data updates and the first pass finds every K final: the
+sweep costs one pass, whatever the number of Ks.
+
+The fingerprint of a labelling is, per cluster, the count and the sums of
+two 31-bit halves of a 64-bit mix of each member's ``vec_id``: exact
+integers, independent of row order and partitioning, that cannot overflow
+a BIGINT below 2³² rows.
+
+Input contract: ``(vec_id BIGINT, x ARRAY<DOUBLE>)``; rows with a NULL
+``x`` carry no geometry and are skipped (``indices.labeled_points``). A
+NaN, ±Inf or NULL coordinate, or a vector whose dimension differs from the
+others, raises ``ValueError`` naming a ``vec_id``: the driver checks the
+sample, and each pass counts such rows among the rest.
+"""
+
+from __future__ import annotations
+
+import math
+import time
+from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.storagelevel import StorageLevel
+
+from clusterindices_spark.functions.cellassign import _d2acc
+
+SAMPLE_CAP = 100_000
+
+_INT, _LONG, _DBL = T.IntegerType(), T.LongType(), T.DoubleType()
+_PASS_SCHEMA = T.StructType(
+    [
+        T.StructField(name, t)
+        for name, t in [
+            ("k", _INT), ("cl", _INT), ("n", _LONG), ("hi", _LONG), ("lo", _LONG),
+            ("sums", T.ArrayType(_DBL)), ("s_sum", _DBL), ("ss", _DBL),
+            ("max_d", _DBL), ("d_sum", _DBL), ("bad_id", _LONG),
+        ]
+    ]
+)
+_ARROW_PASS = to_arrow_schema(_PASS_SCHEMA)
+# A pass row with k = 0 reports rows the loop cannot use: cl is their
+# dimension, or -1 for a non-finite or NULL coordinate.
+_NONFINITE = -1
+
+
+@dataclass
+class Fit:
+    """One K's final clustering: centroids (k × dim), its ``cluster_stats``
+    rows (non-empty clusters only), and the wall seconds from the start of
+    the sweep until the row was final."""
+
+    k: int
+    centroids: np.ndarray
+    stats: list[dict]
+    time_s: float
+
+    @property
+    def cent_rows(self) -> list[tuple[int, list[float]]]:
+        return [(i, c.tolist()) for i, c in enumerate(self.centroids)]
+
+    @property
+    def wssse(self) -> float:
+        return sum(r["ss"] for r in self.stats)
+
+
+def fit_sweep(
+    pts: DataFrame, k_min: int, k_max: int, seed: int, max_iter: int
+) -> list[Fit]:
+    """Fit every K in ``k_min..k_max`` (capped at the number of distinct
+    points in the sample) and return one ``Fit`` per K, ascending."""
+    if k_min < 2:
+        raise ValueError(f"k_min must be at least 2, got {k_min}")
+    t0 = time.monotonic()
+    pts = (
+        pts.where(F.col("x").isNotNull())
+        .select("vec_id", "x")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        n = pts.count()
+        if n < k_min:
+            return []
+        sampled = n > SAMPLE_CAP
+        src = pts
+        if sampled:
+            thresh = max(1, (1_000_003 * SAMPLE_CAP) // n)
+            src = pts.where(
+                F.expr(
+                    "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
+                    f" < {thresh}"
+                )
+            )
+        ids, X = _sample(src.toArrow())
+        hi, lo = _id_hash(ids)
+        xx = np.einsum("ij,ij->i", X, X)
+        state = {}
+        for k in range(k_min, min(k_max, n) + 1):
+            C = _kmeanspp(X, k, np.random.default_rng([seed, k]))
+            if C is None:  # fewer than k distinct points
+                break
+            C, lab, used = _lloyd(X, xx, C, max_iter)
+            # sample labels are the full labelling only when nothing was cut
+            fp = None if sampled or lab is None else _fingerprint(lab, k, hi, lo)
+            state[k] = (C, fp, max_iter - used)
+        return _refine(pts, state, X.shape[1], t0)
+    finally:
+        pts.unpersist()
+
+
+def _refine(pts: DataFrame, state: dict, dim: int, t0: float) -> list[Fit]:
+    """Full passes until every K in ``state`` ({k: (centroids, fingerprint
+    of the labels that produced them or None, updates left)}) is final."""
+    fits = []
+    while state:
+        got = pass_frame(pts, {k: s[0] for k, s in state.items()}, dim).collect()
+        by_k: dict[int, list] = {}
+        for r in got:
+            by_k.setdefault(r["k"], []).append(r)
+        if 0 in by_k:
+            _raise_bad(
+                {r["cl"]: (r["n"], r["bad_id"]) for r in by_k[0]}, dim
+            )
+        for k in sorted(state):
+            C, fp, left = state.pop(k)
+            rows = sorted(by_k.get(k, []), key=lambda r: r["cl"])
+            new_fp = {r["cl"]: (r["n"], r["hi"], r["lo"]) for r in rows}
+            if new_fp == fp or left == 0:
+                stats = [
+                    {
+                        "cluster": r["cl"],
+                        "n": r["n"],
+                        "s_sum": r["s_sum"],
+                        "ss": r["ss"],
+                        "max_d": r["max_d"],
+                        "s_i": r["d_sum"] / r["n"],
+                    }
+                    for r in rows
+                ]
+                fits.append(Fit(k, C, stats, round(time.monotonic() - t0, 3)))
+            else:
+                C = C.copy()
+                for r in rows:
+                    C[r["cl"]] = np.asarray(r["sums"]) / r["n"]
+                state[k] = (C, new_fp, left - 1)
+    return sorted(fits, key=lambda f: f.k)
+
+
+def pass_frame(pts: DataFrame, cents: dict[int, np.ndarray], dim: int) -> DataFrame:
+    """The aggregated pass over ``pts`` (vec_id, x) for the given
+    {k: centroids}: one row per (k, non-empty cluster) plus k = 0 rows for
+    unusable input rows."""
+    parts = pts.select("vec_id", "x").mapInArrow(
+        _pass_fn(sorted(cents.items()), dim), _PASS_SCHEMA
+    )
+    return parts.groupBy("k", "cl").agg(
+        F.sum("n").alias("n"),
+        F.sum("hi").alias("hi"),
+        F.sum("lo").alias("lo"),
+        F.aggregate(
+            F.collect_list("sums"),
+            F.array_repeat(F.lit(0.0), dim),
+            lambda acc, s: F.zip_with(acc, s, lambda a, b: a + b),
+        ).alias("sums"),
+        F.sum("s_sum").alias("s_sum"),
+        F.sum("ss").alias("ss"),
+        F.max("max_d").alias("max_d"),
+        F.sum("d_sum").alias("d_sum"),
+        F.min("bad_id").alias("bad_id"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# driver side
+# ---------------------------------------------------------------------------
+
+
+def _sample(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, X) of the collected sample sorted by vec_id; raises on rows the
+    loop cannot use."""
+    table = table.sort_by([("vec_id", "ascending")])
+    ids = _ids(table.column("vec_id").combine_chunks())
+    xcol = table.column("x").combine_chunks()
+    if len(xcol) == 0:
+        return ids, np.zeros((0, 0))
+    lens = pc.list_value_length(xcol).to_numpy(zero_copy_only=False)
+    dim = int(np.bincount(lens).argmax())
+    ok, X, bad = _usable(ids, xcol, dim)
+    if bad:
+        _raise_bad(bad, dim)
+    return ids, X
+
+
+def _raise_bad(bad: dict, dim: int):
+    """``bad``: {dimension or _NONFINITE: (row count, lowest vec_id)}."""
+    if _NONFINITE in bad:
+        cnt, vid = bad[_NONFINITE]
+        raise ValueError(
+            f"non-finite or NULL coordinate in {cnt} row(s), e.g. vec_id {vid}"
+        )
+    dims = sorted({dim, *bad})
+    other = min(bad)
+    cnt, vid = bad[other]
+    raise ValueError(
+        f"vectors of mixed dimensions {dims}: {cnt} row(s) of dimension "
+        f"{other}, e.g. vec_id {vid}, where the rest have {dim}"
+    )
+
+
+def _kmeanspp(X: np.ndarray, k: int, rng) -> np.ndarray | None:
+    """Greedy k-means++ seeding: each step draws 2 + ⌊ln k⌋ candidates by
+    D² sampling and keeps the one that lowers the potential most. None
+    when fewer than k distinct points exist, since a point at distance 0
+    from a chosen centroid is never drawn."""
+    n = len(X)
+    if n == 0:
+        return None
+    trials = 2 + int(math.log(k))
+    chosen = [int(rng.integers(n))]
+    d2 = ((X - X[chosen[0]]) ** 2).sum(axis=1)
+    for _ in range(1, k):
+        cs = np.cumsum(d2)
+        if not cs[-1] > 0:
+            return None
+        cands = np.searchsorted(cs, rng.random(trials) * cs[-1], side="right")
+        best = None
+        for j in cands:
+            dj = np.minimum(d2, ((X - X[j]) ** 2).sum(axis=1))
+            pot = dj.sum()
+            if best is None or pot < best[0]:
+                best = (pot, int(j), dj)
+        _, j, d2 = best
+        chosen.append(j)
+    return X[chosen].copy()
+
+
+def _nearest(X: np.ndarray, xx: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Nearest-centroid labels equal to the argmin of the exact left fold
+    (``_d2acc``; ties to the lowest index). Distances are screened as
+    ‖x‖² + ‖c‖² − 2x·c; a row whose two best screened distances lie within
+    the rounding bound of both forms is recomputed with the fold."""
+    cc = np.einsum("ij,ij->i", C, C)
+    # einsum, not a BLAS matmul: BLAS worker threads spin between calls and
+    # tripled the driver's CPU time for no wall gain
+    D = xx[:, None] + cc[None, :] - 2.0 * np.einsum("ij,kj->ik", X, C)
+    lab = np.argmin(D, axis=1)
+    two = np.partition(D, 1, axis=1)
+    tol = 8.0 * (X.shape[1] + 2) * np.finfo(float).eps * (xx + cc.max())
+    amb = np.flatnonzero(~(two[:, 1] - two[:, 0] > 2.0 * tol))
+    if amb.size:
+        lab[amb] = np.argmin(_d2acc(X[amb], C), axis=1)
+    return lab
+
+
+def _lloyd(X, xx, C, budget: int):
+    """Lloyd updates on the sample until its labels stop changing or
+    ``budget`` updates are spent: (centroids, the labels that produced
+    them or None, updates used)."""
+    lab_src, used = None, 0
+    while used < budget:
+        lab = _nearest(X, xx, C)
+        if lab_src is not None and np.array_equal(lab, lab_src):
+            break
+        C, lab_src, used = _means(X, lab, C), lab, used + 1
+    return C, lab_src, used
+
+
+def _means(X: np.ndarray, lab: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Cluster means of ``X`` under ``lab``; an empty cluster keeps its
+    centroid."""
+    present, order, starts = _segments(lab, C.shape[0])
+    out = C.copy()
+    out[present] = np.add.reduceat(X[order], starts) / np.bincount(lab)[present, None]
+    return out
+
+
+def _fingerprint(lab: np.ndarray, k: int, hi: np.ndarray, lo: np.ndarray) -> dict:
+    """{cluster: (count, Σ hi, Σ lo)} of the non-empty clusters, as a pass
+    reports them."""
+    present, order, starts = _segments(lab, k)
+    cnt = np.bincount(lab)[present]
+    shi, slo = (np.add.reduceat(v[order], starts) for v in (hi, lo))
+    return {
+        int(c): (int(n), int(h), int(l))
+        for c, n, h, l in zip(present, cnt, shi, slo)
+    }
+
+
+# ---------------------------------------------------------------------------
+# shared by the driver and the pass
+# ---------------------------------------------------------------------------
+
+
+def _ids(col: pa.Array) -> np.ndarray:
+    return col.fill_null(0).to_numpy(zero_copy_only=False).astype("int64")
+
+
+def _id_hash(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Two 31-bit halves of the splitmix64 finalizer of each id."""
+    h = ids.astype("uint64") * np.uint64(0x9E3779B97F4A7C15)
+    h ^= h >> np.uint64(30)
+    h *= np.uint64(0xBF58476D1CE4E5B9)
+    h ^= h >> np.uint64(27)
+    h *= np.uint64(0x94D049BB133111EB)
+    h ^= h >> np.uint64(31)
+    mask = np.uint64(0x7FFFFFFF)
+    return (
+        (h >> np.uint64(33)).astype("int64"),
+        ((h >> np.uint64(2)) & mask).astype("int64"),
+    )
+
+
+def _segments(lab: np.ndarray, k: int):
+    """(present cluster ids, a row order that groups the rows by cluster,
+    each present cluster's start in it) — the ``reduceat`` layout."""
+    order = np.argsort(lab, kind="stable")
+    cnt = np.bincount(lab, minlength=k)
+    present = np.flatnonzero(cnt)
+    return present, order, (np.cumsum(cnt) - cnt)[present]
+
+
+def _usable(ids: np.ndarray, xcol: pa.ListArray, dim: int):
+    """(ok mask, X of the ok rows, {dimension or _NONFINITE: (count, lowest
+    vec_id)} of the others) for a list column without NULL rows."""
+    n = len(xcol)
+    lens = pc.list_value_length(xcol).to_numpy(zero_copy_only=False)
+    vals = (
+        xcol.flatten()
+        .fill_null(float("nan"))
+        .to_numpy(zero_copy_only=False)
+        .astype("float64", copy=False)
+    )
+    fin = np.isfinite(vals)
+    wrong = lens != dim
+    if not wrong.any():
+        X = vals.reshape(n, dim)
+        ok = fin.reshape(n, dim).all(axis=1)
+    else:
+        row_bad = np.zeros(n, dtype=bool)
+        row_bad[np.repeat(np.arange(n), lens)[~fin]] = True
+        ok = ~wrong & ~row_bad
+        X = vals[np.repeat(ok, lens)].reshape(-1, dim)
+    bad = {}
+    if ok.all():
+        return ok, X, bad
+    for key, rows in [(_NONFINITE, ~ok & ~wrong)] + [
+        (int(d), wrong & (lens == d)) for d in np.unique(lens[wrong])
+    ]:
+        if rows.any():
+            bad[key] = (int(rows.sum()), int(ids[rows].min()))
+    return ok, X if wrong.any() else X[ok], bad
+
+
+# ---------------------------------------------------------------------------
+# the pass (runs in Python workers)
+# ---------------------------------------------------------------------------
+
+
+def _pass_fn(cents: list[tuple[int, np.ndarray]], dim: int):
+    """mapInArrow generator: per Arrow batch, the ``_PASS_SCHEMA`` rows of
+    every (k, non-empty cluster), plus k = 0 rows for unusable rows. The
+    aggregate's map-side partial merges a partition's batches."""
+
+    def fn(batches):
+        for b in batches:
+            ids = _ids(b.column(b.schema.get_field_index("vec_id")))
+            ok, X, bad = _usable(ids, b.column(b.schema.get_field_index("x")), dim)
+            rows = [
+                (0, key, cnt, None, None, None, None, None, None, None, vid)
+                for key, (cnt, vid) in bad.items()
+            ]
+            if len(X):
+                hi, lo = _id_hash(ids[ok])
+                for k, C in cents:
+                    rows += _cluster_rows(k, X, C, hi, lo)
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(zip(*rows), _ARROW_PASS)],
+                    schema=_ARROW_PASS,
+                )
+
+    return fn
+
+
+def _cluster_rows(k: int, X, C, hi, lo) -> list[tuple]:
+    """Label ``X`` by nearest centroid (ties to the lowest cluster) and sum
+    its ``cluster_stats`` terms per cluster: d_own = √(own d²), d_other =
+    √(min other d²), silhouette (d_other − d_own) / max(d_own, d_other),
+    0 when both are 0."""
+    D = _d2acc(X, C)
+    rows = np.arange(len(X))
+    lab = np.argmin(D, axis=1)
+    own2 = D[rows, lab]
+    D[rows, lab] = np.inf
+    d_own, d_other = np.sqrt(own2), np.sqrt(D.min(axis=1))
+    g = np.maximum(d_own, d_other)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        sil = np.where(g > 0, (d_other - d_own) / g, 0.0)
+    present, order, starts = _segments(lab, k)
+    cnt = np.bincount(lab)[present]
+    sums = np.add.reduceat(X[order], starts)
+    hs, ls, s, ss, ds = (
+        np.add.reduceat(v[order], starts) for v in (hi, lo, sil, own2, d_own)
+    )
+    mx = np.maximum.reduceat(d_own[order], starts)
+    return [
+        (
+            k, int(c), int(cnt[i]), int(hs[i]), int(ls[i]), sums[i].tolist(),
+            float(s[i]), float(ss[i]), float(mx[i]), float(ds[i]), None,
+        )
+        for i, c in enumerate(present)
+    ]

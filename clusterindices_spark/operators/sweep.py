@@ -5,17 +5,25 @@ MLlib K-Means per K, computes all four validity indices, and emits a
 (K × index × elapsed) results table as CSV (paper §4 methodology: the index
 curves elbow/peak at the true K).
 
-Spark-first shape: the feature DataFrame is persisted ONCE across the whole
-sweep (the reference's ``.cache()``); each K runs one JVM-side MLlib fit plus
-ONE pass over the points (``cluster_stats``: all four indices share it —
-SURVEY.md §4.1). The rest of the suite is arithmetic over K and K² scalars,
-finished in the driver (``finish_indices``), as is ``best_k``'s pick over
-the K-row table. Every driver-held frame (the per-K centroid table, the
-results table, ``best_k``'s rows) goes back into Spark through
-``local_frame``, an Arrow ``LocalRelation``: no Python-worker task runs, and
-collecting a returned frame runs no job. The loop itself is driver
-orchestration by design: K is small and each fit saturates the cluster, so
-parallelizing across K buys nothing (SURVEY.md §3.2).
+This engine does not train MLlib K-Means. ``kmeans_sweep`` (and
+``gap_statistic``) run one k-means++/Lloyd loop for all K
+(``functions.lloyd``): greedy k-means++ and Lloyd updates on one
+deterministic driver sample, then full ``mapInArrow`` passes over the
+persisted points that update every unconverged K at once and emit each
+final K's ``cluster_stats`` — the pass the index suite needs
+(SURVEY.md §4.1), so an input within the sample cap costs one pass for the
+whole sweep. The initialisation differs from MLlib's k-means‖, so the
+centroids, and the index values, differ from the reference's on the same
+data; the indices of a row are always those of its own final centroids and
+nearest-centroid labels. The rest of the suite is arithmetic over K and K²
+scalars, finished in the driver (``finish_indices``), as is ``best_k``'s
+pick over the K-row table. Every driver-held frame (the per-K centroid
+table, the results table, ``best_k``'s rows) goes back into Spark through
+``local_frame``, an Arrow ``LocalRelation``: no Python-worker task runs
+for it, and collecting a returned frame runs no job.
+
+The bisecting and GMM sweeps (``clusterer_sweep``) keep one MLlib fit plus
+one ``cluster_stats`` pass per K.
 
 Not oracle-checked (iterative ML is not SQL-expressible); validated by
 property tests: WSSSE decreases in K, and the sweep recovers the true K on
@@ -33,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from clusterindices_spark.functions.local import local_frame
+from clusterindices_spark.functions.lloyd import fit_sweep
 from clusterindices_spark.operators.indices import (
     centroids_of,
     cluster_stats,
@@ -62,7 +71,33 @@ def kmeans_sweep(
     max_iter: int = 20,
 ) -> DataFrame:
     """Returns (k, bd_silhouette, bd_dunn, davies_bouldin, wssse, time_s) —
-    one row per K, the reference's results-table shape."""
+    one row per K, the reference's results-table shape — from one
+    k-means++/Lloyd loop for all K (``functions.lloyd``).
+
+    - ``max_iter``: Lloyd updates per K, wherever they run — first on the
+      driver sample until its labels stop changing, then any remaining
+      budget on full passes, until the labels stop changing.
+    - ``seed``: K's k-means++ draws use ``numpy.random.default_rng([seed,
+      k])`` over the sample sorted by vec_id, so the draws and the driver
+      updates replay identically under any partitioning.
+    - ``time_s``: wall seconds from the start of the sweep until that K's
+      row was final (Ks finalized by the same pass share it).
+
+    Each row is the index suite of the K final centroids and their
+    nearest-centroid labels. Degenerate inputs:
+
+    - ``k_min`` below 2: ``ValueError`` (MLlib's k parameter refused 1 too);
+    - empty input or one row: the empty frame;
+    - K above the number of distinct points (of the sample, when the input
+      exceeds ``lloyd.SAMPLE_CAP``): the sweep stops below that K, as it
+      stops at the point count. k-means++ never draws a duplicate
+      centroid, so a row for k has k distinct centroids; all-identical
+      points give the empty frame;
+    - a NaN, ±Inf or NULL coordinate: ``ValueError`` naming a vec_id;
+    - vectors of different dimensions: ``ValueError`` naming the
+      dimensions;
+    - a cluster that empties during the loop keeps its centroid (as MLlib
+      does); the row's k still counts it."""
     return clusterer_sweep(spark, sf_dir, "kmeans", k_min, k_max, seed, max_iter)
 
 
@@ -141,7 +176,7 @@ def q_kmeans_sweep_best_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # alternative clusterers under the same sweep + index suite (round-3b): the
 # reference sweeps MLlib K-Means only; a user comparing algorithms needs the
 # same results-table shape for hierarchical (bisecting) and model-based (GMM)
-# clusterings. Same architecture: persist features once, one JVM fit + one
+# clusterings. These keep MLlib: persist features once, one JVM fit + one
 # pass over the points per K, the index finish in the driver.
 # ---------------------------------------------------------------------------
 
@@ -149,8 +184,8 @@ def q_kmeans_sweep_best_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLUSTERERS = {
     "bisecting": "BisectingKMeans",
     "gmm": "GaussianMixture",
-    "kmeans": "KMeans",
 }
+_ALGOS = sorted(["kmeans", *_CLUSTERERS])
 
 
 def make_clusterer(algo: str, k: int, seed: int, max_iter: int):
@@ -195,7 +230,8 @@ def clusterer_sweep(
 ) -> DataFrame:
     """kmeans_sweep generalized over the MLlib clusterer family.
 
-    algo: 'kmeans' | 'bisecting' (hierarchical divisive; centroids from the
+    algo: 'kmeans' (``kmeans_sweep``: one k-means++/Lloyd loop for all K,
+    no MLlib) | 'bisecting' (hierarchical divisive; centroids from the
     model) | 'gmm' (Gaussian mixture; MAP assignment — the index suite then
     measures the HARD clustering the mixture induces).
 
@@ -211,8 +247,18 @@ def clusterer_sweep(
     from pyspark.ml.functions import array_to_vector
 
     gmm_pca_dim = 8
-    if algo not in _CLUSTERERS:
-        raise ValueError(f"algo must be one of {sorted(_CLUSTERERS)}, got {algo!r}")
+    if algo not in _ALGOS:
+        raise ValueError(f"algo must be one of {_ALGOS}, got {algo!r}")
+    if algo == "kmeans":
+        fits = fit_sweep(labeled_points(spark, sf_dir), k_min, k_max, seed, max_iter)
+        return local_frame(
+            spark,
+            [
+                (f.k, *finish_indices(f.stats, f.cent_rows)[1:], f.time_s)
+                for f in fits
+            ],
+            _SWEEP_SCHEMA,
+        )
     pts = (
         labeled_points(spark, sf_dir)
         .withColumn("fv", array_to_vector("x"))
@@ -287,18 +333,18 @@ def gap_statistic(
     the last K never picks since it has no successor to compare).
 
     Pins: W_K = WSSSE (the paper's eq. 2 pooled-dispersion simplification
-    for squared-Euclidean); reference datasets are uniform over the per-dim
-    [min,max] bounding box, generated DETERMINISTICALLY via xxhash64(vec_id,
-    dim, b) — no rand(), so replays and partitionings agree (the
-    curation_split convention). Each reference fit reads W from MLlib's
-    summary.trainingCost (no extra pass).
+    for squared-Euclidean), read as Σd² from each K's final pass of the
+    k-means++/Lloyd loop (``functions.lloyd``, the ``kmeans_sweep`` fit);
+    reference datasets are uniform over the per-dim [min,max] bounding
+    box, generated DETERMINISTICALLY via xxhash64(vec_id, dim, b) — no
+    rand(), so replays and partitionings agree (the curation_split
+    convention).
 
-    Scale: (k_max−k_min+1)·(B+1) MLlib fits, each one distributed job; the
-    per-dim bounds are ONE 2·p-value aggregate broadcast back as array
-    literals. Driver loops over K and B only (reference-parity design,
-    SURVEY.md §3.2)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    Scale: B+1 loops — the data, then each reference set — each fitting
+    every K in the same passes; the per-dim bounds are ONE 2·p-value
+    aggregate broadcast back as array literals."""
+    import math
+
     from pyspark.sql import functions as F
 
     base = labeled_points(spark, sf_dir)
@@ -314,16 +360,6 @@ def gap_statistic(
             *[F.max(F.get("x", d)) for d in range(ndim)]
         ).alias("hi"),
     )
-    pts = base.withColumn("fv", array_to_vector("x")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # K capped at the point count (k > n fits refuse — fuzz wave-3
-    # one:embeddings); an empty candidate range yields the empty frame
-    n_pts = pts.count()
-    k_max = min(k_max, n_pts)
-    if k_max < k_min:
-        pts.unpersist()
-        return local_frame(spark, [], _GAP_SCHEMA)
 
     def _ref(b: int) -> DataFrame:
         # u01(vec_id, dim, b) = pmod(xxhash64(...), 2^20) / 2^20 — pure
@@ -334,45 +370,35 @@ def gap_statistic(
             .crossJoin(F.broadcast(bounds))
             .select(
                 "vec_id",
-                array_to_vector(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(ndim - 1)),
-                        lambda d: F.get("lo", d)
-                        + (
-                            F.pmod(
-                                F.xxhash64(F.col("vec_id"), d, F.lit(b)), F.lit(den)
-                            ).cast("double")
-                            / F.lit(float(den))
-                        )
-                        * (F.get("hi", d) - F.get("lo", d)),
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(ndim - 1)),
+                    lambda d: F.get("lo", d)
+                    + (
+                        F.pmod(
+                            F.xxhash64(F.col("vec_id"), d, F.lit(b)), F.lit(den)
+                        ).cast("double")
+                        / F.lit(float(den))
                     )
-                ).alias("fv"),
+                    * (F.get("hi", d) - F.get("lo", d)),
+                ).alias("x"),
             )
         )
 
-    refs = [
-        _ref(b).persist(StorageLevel.MEMORY_AND_DISK) for b in range(n_refs)
-    ]
-    for r in refs:
-        r.count()
-    import math
+    def _w(df: DataFrame) -> dict:
+        return {f.k: f.wssse for f in fit_sweep(df, k_min, k_max, seed, max_iter)}
 
+    w = _w(base)
+    refs = [_w(_ref(b)) for b in range(n_refs)]
     rows = []
-    try:
-        for k in range(k_min, k_max + 1):
-            km = KMeans(k=k, seed=seed, maxIter=max_iter, featuresCol="fv")
-            log_w = math.log(km.fit(pts).summary.trainingCost)
-            ref_logs = [
-                math.log(km.fit(r).summary.trainingCost) for r in refs
-            ]
-            mean_ref = sum(ref_logs) / n_refs
-            var_ref = sum((v - mean_ref) ** 2 for v in ref_logs) / n_refs
-            sd_ref = math.sqrt(var_ref) * math.sqrt(1.0 + 1.0 / n_refs)
-            rows.append((k, log_w, mean_ref, mean_ref - log_w, sd_ref))
-    finally:
-        pts.unpersist()
-        for r in refs:
-            r.unpersist()
+    for k in sorted(w):
+        if not all(k in r for r in refs):
+            break
+        log_w = math.log(w[k])
+        ref_logs = [math.log(r[k]) for r in refs]
+        mean_ref = sum(ref_logs) / n_refs
+        var_ref = sum((v - mean_ref) ** 2 for v in ref_logs) / n_refs
+        sd_ref = math.sqrt(var_ref) * math.sqrt(1.0 + 1.0 / n_refs)
+        rows.append((k, log_w, mean_ref, mean_ref - log_w, sd_ref))
     picked = None
     for i in range(len(rows) - 1):
         if rows[i][3] >= rows[i + 1][3] - rows[i + 1][4]:

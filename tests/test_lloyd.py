@@ -1,0 +1,211 @@
+"""The k-means++/Lloyd loop behind kmeans_sweep and gap_statistic
+(functions/lloyd.py): its rows are the index suite of its own final
+centroids, they do not depend on partitioning or on the sample cap, the
+sweep runs a handful of Spark jobs, degenerate inputs give their stated
+results, and MLlib K-Means is gone from the package."""
+
+from __future__ import annotations
+
+import ast
+import math
+import os
+
+import numpy as np
+import pytest
+
+from clusterindices_spark.functions import lloyd
+from clusterindices_spark.operators.indices import index_suite, labeled_points
+from clusterindices_spark.operators.sweep import best_k, kmeans_sweep
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "clusterindices_spark",
+)
+_INDICES = ("bd_silhouette", "bd_dunn", "davies_bouldin", "wssse")
+
+
+def _blobs(true_k=3, dim=4, per=200, seed=5, box=30, spread=1.0):
+    rng = np.random.default_rng(seed)
+    rows, vid = [], 0
+    for label, c in enumerate(rng.uniform(-box, box, size=(true_k, dim))):
+        for _ in range(per):
+            rows.append((vid, (c + rng.normal(0, spread, dim)).tolist(), label))
+            vid += 1
+    return rows
+
+
+def _write(spark, tmp_path, rows, name="pts", parts=None, schema=None):
+    df = spark.createDataFrame(
+        rows, schema or "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    )
+    if parts is not None:
+        df = df.repartition(parts)
+    out = str(tmp_path / name)
+    df.write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
+    return out
+
+
+def _close(a, b):
+    if a is None or b is None:
+        return a is b
+    return math.isclose(a, b, rel_tol=1e-6, abs_tol=1e-6)
+
+
+def _same_rows(a, b):
+    assert [r["k"] for r in a] == [r["k"] for r in b]
+    for ra, rb in zip(a, b):
+        for c in _INDICES:
+            assert _close(ra[c], rb[c]), (ra, rb, c)
+
+
+def test_rows_equal_index_suite_on_final_centroids(spark, tmp_path):
+    out = _write(spark, tmp_path, _blobs())
+    rows = kmeans_sweep(spark, out, 2, 4, max_iter=10).collect()
+    fits = lloyd.fit_sweep(labeled_points(spark, out), 2, 4, 42, 10)
+    assert [f.k for f in fits] == [r["k"] for r in rows] == [2, 3, 4]
+    pts = labeled_points(spark, out).collect()
+    X = np.array([p["x"] for p in pts])
+    for fit, row in zip(fits, rows):
+        labels = np.argmin(((X[:, None, :] - fit.centroids[None]) ** 2).sum(-1), 1)
+        labeled = spark.createDataFrame(
+            [(p["vec_id"], int(c), p["x"]) for p, c in zip(pts, labels)],
+            "vec_id BIGINT, cluster INT, x ARRAY<DOUBLE>",
+        )
+        cents = spark.createDataFrame(
+            fit.cent_rows, "cluster INT, centroid ARRAY<DOUBLE>"
+        )
+        want = index_suite(labeled, cents).first()
+        for c in _INDICES:
+            assert _close(row[c], want[c]), (fit.k, c, row[c], want[c])
+
+
+def test_rows_do_not_depend_on_partitioning(spark, tmp_path):
+    rows = _blobs(true_k=4, per=60, seed=8)
+    one = _write(spark, tmp_path, rows, "one", parts=1)
+    seven = _write(spark, tmp_path, rows, "seven", parts=7)
+    _same_rows(
+        kmeans_sweep(spark, one, 2, 5, max_iter=10).collect(),
+        kmeans_sweep(spark, seven, 2, 5, max_iter=10).collect(),
+    )
+
+
+def test_sampled_path_recovers_planted_k_and_replays(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(lloyd, "SAMPLE_CAP", 150)
+    out = _write(spark, tmp_path, _blobs(true_k=4, per=150, seed=12))
+    a = kmeans_sweep(spark, out, 2, 6, max_iter=10)
+    chosen = {r["index"]: r["chosen_k"] for r in best_k(a).collect()}
+    assert chosen["bd_silhouette"] == chosen["davies_bouldin"] == 4, chosen
+    b = kmeans_sweep(spark, out, 2, 6, max_iter=10).collect()
+    assert [r[:5] for r in a.collect()] == [r[:5] for r in b]
+
+
+def test_sweep_runs_few_spark_jobs(spark, tmp_path):
+    """count, sample collect and one aggregated pass: the per-K MLlib fits
+    ran ~58 jobs for K=2..4."""
+    out = _write(spark, tmp_path, _blobs(per=200))
+    sc = spark.sparkContext
+    sc.setJobGroup("lloyd-job-count", "kmeans_sweep k 2..4")
+    try:
+        kmeans_sweep(spark, out, 2, 4, max_iter=5).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("lloyd-job-count")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(jobs) <= 8, sorted(jobs)
+
+
+_NAN, _INF = float("nan"), float("inf")
+
+
+def _pair_rows():
+    return [(i, [0.0, 0.0] if i % 2 else [5.0, 5.0], 0) for i in range(20)]
+
+
+def _bad(i, v):
+    rows = _blobs(true_k=2, dim=2, per=20, seed=3)
+    rows[i] = (rows[i][0], v, 0)
+    return rows
+
+
+# (input rows, sample cap, expected k list or (exception, message regex))
+DEGENERATE = {
+    "empty": ([], None, []),
+    "one_row": ([(0, [1.0, 2.0], 0)], None, []),
+    "k_above_distinct": (_pair_rows(), None, [2]),
+    "all_identical": ([(i, [1.0, 1.0], 0) for i in range(20)], None, []),
+    "nan": (_bad(7, [_NAN, 1.0]), None, (ValueError, "vec_id 7")),
+    "inf_sampled": (_bad(9, [1.0, -_INF]), 10, (ValueError, "vec_id 9")),
+    "null_coordinate": (_bad(4, [None, 1.0]), None, (ValueError, "vec_id 4")),
+    "mixed_dims": (
+        _bad(5, [1.0, 2.0, 3.0]), None, (ValueError, r"dimensions \[2, 3\]")
+    ),
+    "mixed_dims_sampled": (
+        _bad(5, [1.0, 2.0, 3.0]), 10, (ValueError, r"dimensions \[2, 3\].*vec_id 5")
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DEGENERATE))
+def test_degenerate_inputs(spark, tmp_path, monkeypatch, case):
+    rows, cap, want = DEGENERATE[case]
+    if cap is not None:
+        monkeypatch.setattr(lloyd, "SAMPLE_CAP", cap)
+    out = _write(spark, tmp_path, rows)
+    if isinstance(want, tuple):
+        with pytest.raises(want[0], match=want[1]):
+            kmeans_sweep(spark, out, 2, 4, max_iter=5).collect()
+        return
+    got = kmeans_sweep(spark, out, 2, 4, max_iter=5).collect()
+    assert [r["k"] for r in got] == want
+
+
+def test_emptied_cluster_keeps_its_centroid(spark):
+    """A centroid that wins no point keeps its place, both in the driver
+    updates and in a full pass's update."""
+    X = np.array([[0.0, 0.0], [0.0, 1.0], [10.0, 0.0], [10.0, 1.0]])
+    C0 = np.array([[0.0, 0.5], [10.0, 0.5], [100.0, 100.0]])
+    C, lab, used = lloyd._lloyd(X, (X * X).sum(1), C0, 5)
+    assert used == 1 and lab.tolist() == [0, 0, 1, 1]
+    assert C[2].tolist() == [100.0, 100.0]
+
+    pts = spark.createDataFrame(
+        [(i, x.tolist()) for i, x in enumerate(X)], "vec_id BIGINT, x ARRAY<DOUBLE>"
+    )
+    start = np.array([[0.0, 0.0], [10.0, 1.0], [100.0, 100.0]])
+    (fit,) = lloyd._refine(pts, {3: (start, None, 2)}, 2, 0.0)
+    assert fit.centroids.tolist() == C.tolist()
+    assert sorted(r["cluster"] for r in fit.stats) == [0, 1]
+
+
+class _KMeansUses(ast.NodeVisitor):
+    def __init__(self):
+        self.found: list[int] = []
+
+    def visit_ImportFrom(self, node):
+        if any(a.name == "KMeans" for a in node.names):
+            self.found.append(node.lineno)
+
+    def visit_Call(self, node):
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name == "KMeans":
+            self.found.append(node.lineno)
+        self.generic_visit(node)
+
+    def visit_Constant(self, node):
+        if node.value == "KMeans":  # getattr(clustering, "KMeans")
+            self.found.append(node.lineno)
+
+
+def test_package_does_not_use_mllib_kmeans():
+    hits = {}
+    for root, _, files in os.walk(_PKG):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    v = _KMeansUses()
+                    v.visit(ast.parse(fh.read()))
+                if v.found:
+                    hits[os.path.relpath(path, _PKG)] = v.found
+    assert hits == {}

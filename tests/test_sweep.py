@@ -182,12 +182,12 @@ def test_driver_held_frames_are_local_relations(spark):
     sweep = kmeans_sweep(spark, SF_SMOKE, k_min=2, k_max=2, max_iter=2)
     pts = labeled_points(spark, SF_SMOKE)
     fv = pts.withColumn("fv", array_to_vector("x"))
-    model = make_clusterer("kmeans", 2, seed=42, max_iter=2).fit(fv)
+    model = make_clusterer("bisecting", 2, seed=42, max_iter=2).fit(fv)
     frames = {
         "sweep": sweep,
         "best_k": best_k(sweep),
         "index_suite": index_suite(pts, centroids_of(pts)),
-        "index_pass": index_pass(spark, "kmeans", model, fv)[1],
+        "index_pass": index_pass(spark, "bisecting", model, fv)[1],
     }
     for name, df in frames.items():
         plan = df._jdf.queryExecution().optimizedPlan().toString()
