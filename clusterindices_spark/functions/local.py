@@ -61,6 +61,13 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
         [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
+    return arrow_frame(spark, table, struct)
+
+
+def arrow_frame(spark: SparkSession, table: pa.Table, struct: StructType) -> DataFrame:
+    """The JVM hand-off behind ``local_frame``, for a driver-built Arrow
+    table already in ``struct``'s exact Arrow schema (no per-row checks —
+    for column-built tables such as the star-CC driver finish's labels)."""
     jvm = spark._jvm
     batches = table.to_batches(max_chunksize=spark._jconf.arrowMaxRecordsPerBatch())
     jbatches = spark.sparkContext._serialize_to_jvm(

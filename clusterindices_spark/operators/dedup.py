@@ -22,16 +22,20 @@ path.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
-from clusterindices_spark.functions.local import local_frame
+from clusterindices_spark.functions.local import arrow_frame, local_frame
 from clusterindices_spark.functions.text import (
     FNV_MOD,
     SQL_FINGERPRINT,
     SQL_SHINGLES3,
     SQL_TOKENS,
-    shingles3,
+    fold_lower,
     tokens,
 )
 from clusterindices_spark.functions.aggregates import SQL_ROUND6, round6_stable
@@ -56,6 +60,11 @@ MINHASH_BAND_ROWS = 2
 # for the non-identical tail. Planted near-dup groups at gate scale are
 # ≤18 docs, far under the cap.
 MAX_BAND_BUCKET = 100
+# Edge budget of the star-CC driver finish (connected_components_star):
+# a canonical edge set of at most this many rows is labelled in NumPy on
+# the driver instead of by further Spark rounds — 32 MB as two int64
+# Arrow columns.
+LOCAL_CC_EDGES = 1 << 21
 SIMHASH_BITS = 63  # 63 keeps the packed value inside a signed int64
 JACCARD_THRESHOLD = 0.2
 # Stop-shingle cap for the exact-Jaccard tier: a shingle appearing in more
@@ -108,8 +117,6 @@ def q_dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     many distinct byte-level texts collapsed into each canonical form —
     the yield signal for whether this tier is worth running on a corpus."""
     d = load_table(spark, sf_dir, "documents")
-    from clusterindices_spark.functions.text import fold_lower
-
     norm = F.trim(
         F.regexp_replace(fold_lower(F.col("text")), "[^a-z0-9]+", " ")
     )
@@ -215,15 +222,28 @@ def q_dedup_token_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# A zero-width match at every token start (string start or after a space)
+# that captures the token and the next two: over text whose whitespace runs
+# are collapsed to one space, its matches in order are the word 3-grams.
+_TRIGRAM_AT_TOKEN = r"(?<=^| )(?=([^ ]+ [^ ]+ [^ ]+))"
+
+
 def _doc_shingles(d: DataFrame) -> DataFrame:
     # fan_out: never let a 1-file scan serialize the repo's most CPU-bound
-    # expression chain on one core. toks is its own projection so each doc
-    # is tokenized once (shingles3 note). Never filter on a shingles-derived
-    # column such as n_shingles: pushdown copies the whole chain into it.
+    # expression on one core. The shingles are shingles3(tokens(text)) built
+    # from two codegen'd regex expressions instead of tokens' filter and
+    # shingles3's transform lambdas, which are interpreted: collapse each
+    # \s+ run (tokens' separator) to one space, then take every token start's
+    # trigram. Leading/trailing whitespace yields no empty token, NULL text
+    # gives NULL shingles, and array_distinct keeps first occurrences, as in
+    # shingles3. No lambda, so Catalyst shares the chain with n_shingles.
+    spaced = F.regexp_replace(fold_lower(F.col("text")), r"\s+", " ")
+    shingles = F.array_distinct(
+        F.regexp_extract_all(spaced, F.lit(_TRIGRAM_AT_TOKEN), 1)
+    )
     return (
         fan_out(d)
-        .select("doc_id", tokens(F.col("text")).alias("toks"))
-        .select("doc_id", shingles3(F.col("toks")).alias("shingles"))
+        .select("doc_id", shingles.alias("shingles"))
         .withColumn("n_shingles", F.size("shingles"))
     )
 
@@ -393,11 +413,20 @@ def q_dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_pairs(
-    d: DataFrame, threshold: float = 0.5, seeds: int = MINHASH_SEEDS
+    d: DataFrame,
+    threshold: float = 0.5,
+    seeds: int = MINHASH_SEEDS,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Candidate pairs via banded MinHash (2 rows/band), verified with exact
     Jaccard ≥ threshold. The hash family is xxhash64: each shingle g is
-    hashed once, h = xxhash64(g), and seed s's value is xxhash64(s, h)."""
+    hashed once, h = xxhash64(g), and seed s's value is xxhash64(s, h).
+
+    Band buckets holding more than MAX_BAND_BUCKET docs are dropped from
+    the candidate join, which loses the pairs only they would have found.
+    The hot buckets are collected when this function is called, and
+    ``stats``, when given, receives ``dropped_buckets`` and
+    ``dropped_band_rows`` (the (doc, band) rows those buckets held)."""
 
     # persisted: read twice (signatures + exact-Jaccard verification), and
     # shingling is the expensive expression work. A doc without shingles
@@ -443,13 +472,23 @@ def minhash_pairs(
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bh")
     # hot-bucket cap (MAX_BAND_BUCKET note): occupancy is one map-side
-    # combined agg over the band rows; the anti-join broadcast is
-    # hot-bucket-scale (tiny by construction)
-    hot_b = (
+    # combined agg over the band rows, and the hot set is hot-bucket-scale
+    # (tiny by construction). It is collected here rather than broadcast
+    # inside the caller's action — the same two jobs — so the driver can
+    # report what the cap dropped. (An Observation on the aggregate reads
+    # nothing whenever AQE prunes a subtree that ran empty, e.g. when every
+    # bucket is hot.)
+    hot = (
         bands.groupBy("band", "bh")
         .agg(F.count(F.lit(1)).alias("occ"))
         .where(F.col("occ") > MAX_BAND_BUCKET)
-        .select("band", "bh")
+        .collect()
+    )
+    if stats is not None:
+        stats["dropped_buckets"] = len(hot)
+        stats["dropped_band_rows"] = sum(r["occ"] for r in hot)
+    hot_b = local_frame(
+        d.sparkSession, [(r["band"], r["bh"]) for r in hot], "band INT, bh INT"
     )
     bands = bands.join(F.broadcast(hot_b), ["band", "bh"], "left_anti")
     ca = bands.select(F.col("doc_id").alias("doc_a"), "band", "bh")
@@ -688,6 +727,54 @@ def connected_components(
     return labels.withColumnRenamed("label", "component")
 
 
+def _local_components(u, v):
+    """(node ids, component) for every node of the edge list u–v, where
+    component is the smallest id in the node's connected component.
+
+    Min-label hooking with pointer jumping over ids compacted by
+    ``np.unique`` (so a smaller index is a smaller id): each round hooks
+    the label root of every edge end to the other end's label, in both
+    directions, then jumps pointers until every label is a root. A label
+    only decreases and always names a node of the same component, so the
+    round that changes nothing leaves each component labelled by its
+    minimum."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    lab = np.arange(len(ids))
+    while True:
+        before = lab.copy()
+        np.minimum.at(lab, lab[a], lab[b])
+        np.minimum.at(lab, lab[b], lab[a])
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        if np.array_equal(lab, before):
+            return ids, ids[lab]
+
+
+def _driver_labels(e: DataFrame, edges: pa.Table) -> DataFrame:
+    """(u, component) for every node of the collected (u, v) edge table,
+    labelled by ``_local_components`` and handed back to Spark in the
+    column types of ``e``."""
+    ids, comp = _local_components(
+        edges.column("u").to_numpy(), edges.column("v").to_numpy()
+    )
+    struct = StructType(
+        [
+            StructField("u", e.schema["u"].dataType),
+            StructField("component", e.schema["v"].dataType),
+        ]
+    )
+    schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(ids, type=schema[0].type), pa.array(comp, type=schema[1].type)],
+        schema=schema,
+    )
+    return arrow_frame(e.sparkSession, table, struct)
+
+
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
@@ -699,7 +786,8 @@ def connected_components_star(
     the O(log n)-round upgrade over min-label propagation (O(diameter)) for
     adversarially long chains (per the two-phase star algorithm of Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14 —
-    public literature, re-derived here as pure DataFrame ops).
+    public literature, re-derived here as pure DataFrame ops) — finished in
+    the driver once the edge set is small.
 
     Representation: edges are kept big→small (u > v) throughout.
     - large-star: each node u links every LARGER neighbor to u's minimum
@@ -707,12 +795,33 @@ def connected_components_star(
       minima from below.
     - small-star: each node u re-points itself and its smaller neighbors at
       m — stars flatten to depth 1.
-    At the joint fixpoint every edge is (x, component_min(x)). Each round is
-    two (groupBy-min + join) shuffles and a distinct; the fixpoint witness
-    is one tiny agg action (count + an order-free bit_xor-of-xxhash64 set
+    Both phases keep every non-isolated node and every component, so any
+    round's edge set labels the graph as well as the input's does. At the
+    joint fixpoint every edge is (x, component_min(x)). Each round is two
+    (groupBy-min + join) shuffles and a distinct; the fixpoint witness is
+    one tiny agg action (count + an order-free bit_xor-of-xxhash64 set
     fingerprint).
 
-    Same output contract as connected_components: (node, component).
+    Driver finish: whenever the canonical edge rows — the input's, read
+    by one bounded ``limit(LOCAL_CC_EDGES + 1).toArrow()`` job, or a
+    round's, whose count the fingerprint agg already returns — number at
+    most LOCAL_CC_EDGES, they are collected with ``toArrow()`` (a JVM job,
+    no Python worker), labelled by ``_local_components`` in NumPy and
+    handed back as an Arrow relation (``arrow_frame``) that is left-joined
+    onto ``nodes``. The budget bounds the driver's share: 2²¹ edges are
+    32 MB of Arrow and peak at about 0.25 GB of NumPy arrays, at most
+    ~5 CPU-s (a randomly relabelled 2M-node chain). At 100 TB the rounds
+    stay in Spark until the graph is under the budget, and the driver
+    finishes only that remainder. Rounds shrink a graph towards one edge
+    per non-minimum node, so a graph with more than LOCAL_CC_EDGES such
+    nodes ends at the Spark fixpoint as before; a near-dup graph of fewer
+    edge rows runs no round at all. ``stats["rounds"]`` counts Spark
+    rounds only (0 when the input fits), ``stats["converged"]`` is True
+    for a driver finish or a Spark fixpoint, and ``stats["finish"]`` says
+    which one ran ("driver" or "spark").
+
+    Same output contract as connected_components: (node, component), with
+    component the smallest node id of the node's component.
 
     Each round's edge set is localCheckpoint'ed, not merely persisted: a
     round references the previous edge set ~4× (symmetric view + both
@@ -721,21 +830,26 @@ def connected_components_star(
     data does. On a real cluster, swap localCheckpoint for checkpoint()
     to reliable storage so a lost executor can't drop checkpoint blocks.
     """
-    # canonical big→small direction; self-loops dropped
+    # canonical big→small direction; self-loops dropped. Duplicate rows
+    # stay: they change no label, and round 1's closing distinct drops them.
     e = (
         edges.select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        # lazy: round 1's first stage job materializes + checkpoints it —
-        # the returned frame's plan is already a truncated LogicalRDD
-        # regardless of eager, so planning stays bounded (r13, −1 job)
+        # lazy: the collect below materializes + checkpoints it, so the
+        # edge source runs once even when round 1 reads it next
         .localCheckpoint(eager=False)
     )
+    # one job whose reduce side stops at LOCAL_CC_EDGES + 1 rows: the
+    # whole edge set when it fits, a bounded prefix when it does not (its
+    # map side writes up to that many rows per partition, so over the
+    # budget it costs at most one shuffle write of the edges, once)
+    head = e.limit(LOCAL_CC_EDGES + 1).toArrow()
+    n_edges = head.num_rows
     prev = None
     rounds = 0
-    converged = False
+    fixpoint = False
     # r13 round-shape rewrite (guide §2.4 — remove shuffles outright): each
     # star phase needs "per-u min attached to every row of the u-group",
     # which the original expressed as groupBy-min + an equi-join back — one
@@ -750,7 +864,7 @@ def connected_components_star(
     # |sym| = 2|e| rows, the same order the distinct's own input had.
     # Measured: 65 → ~35 jobs / 7.9 → ~4 s for the 6-round sf0.1 graph.
     w_u = Window.partitionBy("u")
-    for _ in range(max_iters):
+    while n_edges > LOCAL_CC_EDGES and rounds < max_iters:
         rounds += 1
         # large-star over the symmetric view
         sym = e.unionByName(
@@ -789,17 +903,20 @@ def connected_components_star(
         e = ss
         cur = tuple(state)
         if cur == prev:
-            converged = True
+            fixpoint = True
             break
         prev = cur
+        n_edges = cur[0]
+    local = not fixpoint and n_edges <= LOCAL_CC_EDGES
     if stats is not None:  # observability for scale stress / callers
         stats["rounds"] = rounds
-        stats["converged"] = converged
+        stats["converged"] = fixpoint or local
+        stats["finish"] = "driver" if local else "spark"
     # Hitting the cap without the fixpoint means the labels are WRONG, not
     # merely approximate (the round-8 5M-node/100k-chain stress returned
     # 672k bad labels silently at the old cap of 15) — fail loudly. The
     # cap exists only to bound a pathological input, not as an answer.
-    if not converged:
+    if not (fixpoint or local):
         msg = (
             f"connected_components_star did not reach its fixpoint in "
             f"{max_iters} rounds — labels would be wrong; raise max_iters"
@@ -809,7 +926,10 @@ def connected_components_star(
         import warnings
 
         warnings.warn(msg, stacklevel=2)
-    labels = e.groupBy("u").agg(F.min("v").alias("component"))
+    if local:
+        labels = _driver_labels(e, head if rounds == 0 else e.toArrow())
+    else:
+        labels = e.groupBy("u").agg(F.min("v").alias("component"))
     return nodes.join(labels, nodes.node == labels.u, "left").select(
         "node", F.coalesce("component", F.col("node")).alias("component")
     )
@@ -975,16 +1095,17 @@ def q_dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters via alternating large-star/small-star rounds.
+    """Near-dup clusters via connected_components_star.
 
     Headline choice pinned by measurement (r4 A/B, BASELINE.md "CC engine
-    A/B"): star beats min-label propagation on BOTH the fixture dup graph
-    (4.7 s vs 20.0 s cold, 3.3 s vs 6.3 s warm at sf0.1) and a 20k-node
-    adversarial chain (8.5 s converged vs label-prop unconverged after 100
-    rounds) — O(log n) rounds dominates O(diameter) even on clique-like dup
-    topologies because each star round is the same join+min-agg cost as a
-    propagation round. connected_components (label-prop) stays exported for
-    tiny-diameter graphs where its 2-3 rounds beat star's fixed overhead.
+    A/B"): star rounds beat min-label propagation on BOTH the fixture dup
+    graph (4.7 s vs 20.0 s cold, 3.3 s vs 6.3 s warm at sf0.1) and a
+    20k-node adversarial chain (8.5 s converged vs label-prop unconverged
+    after 100 rounds) — O(log n) rounds against O(diameter). A pair graph
+    within the engine's LOCAL_CC_EDGES budget — every fixture's — is now
+    labelled in the driver after one bounded collect, with no round at
+    all; the rounds run only above the budget. connected_components
+    (label-prop) stays exported.
     """
     nodes, pairs = _doc_pair_edges(spark, sf_dir)
     return _component_report(connected_components_star(nodes, pairs))

@@ -381,11 +381,12 @@ def _clusters_from_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
     source: (vec_a, vec_b) edges → large/small-star components → per-vector
     membership (vec_id, component_id, is_canonical, n_members).
 
-    r13: the edge list is handed to the star engine UN-checkpointed — the
-    engine's own canonicalize-distinct step lazily checkpoints it, so the
-    pair scan still runs exactly once (round 1's first action materializes
-    it) and the former eager outer checkpoint's EXTRA full pass over the
-    pair tier is gone."""
+    The edge list is handed to the star engine UN-checkpointed: the
+    engine's canonicalize step lazily checkpoints it, and its first action
+    (the bounded collect that decides between the driver finish and the
+    Spark rounds) materializes it, so the pair scan runs exactly once and
+    no outer checkpoint adds a full pass over the pair tier (r13). A pair
+    graph within LOCAL_CC_EDGES is labelled in the driver."""
     from pyspark.sql import Window as W
 
     from clusterindices_spark.operators.dedup import (

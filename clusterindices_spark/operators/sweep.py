@@ -340,6 +340,12 @@ def gap_statistic(
     rand(), so replays and partitionings agree (the curation_split
     convention).
 
+    Degenerate input: the K range ends before the first K whose W_K, on
+    the data or on a reference set, is 0 — log W_K is undefined there, and
+    every point already sits on a centroid. 15 points on 3 distinct
+    positions with K=2..4 give the K=2 row only (pick 0); the sweep itself
+    already stops at the distinct-point count.
+
     Scale: B+1 loops — the data, then each reference set — each fitting
     every K in the same passes; the per-dim bounds are ONE 2·p-value
     aggregate broadcast back as array literals."""
@@ -391,7 +397,9 @@ def gap_statistic(
     refs = [_w(_ref(b)) for b in range(n_refs)]
     rows = []
     for k in sorted(w):
-        if not all(k in r for r in refs):
+        # a K missing from a reference sweep, or a zero W_K (no log), ends
+        # the range
+        if w[k] <= 0 or not all(r.get(k, 0) > 0 for r in refs):
             break
         log_w = math.log(w[k])
         ref_logs = [math.log(r[k]) for r in refs]

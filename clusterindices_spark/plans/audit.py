@@ -514,9 +514,10 @@ EXPECTATIONS: dict[str, dict[str, list[str]]] = {
         "forbid": ["CartesianProduct"],
     },
     "dedup_components": {
-        # star rounds end in a localCheckpoint lineage cut; the returned
-        # join-back must stay an equi-join with map-side-combined min-agg
-        "require": ["partial"],
+        # the fixture pair graph fits the star engine's edge budget: its
+        # driver-labelled components come back as a LocalTableScan that is
+        # equi-joined onto the nodes, and n_members is a window count
+        "require": ["LocalTableScan", "Window"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
     },
     "dedup_cluster_keep_best": {
@@ -527,7 +528,8 @@ EXPECTATIONS: dict[str, dict[str, list[str]]] = {
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
     },
     "dedup_components_star": {
-        "require": ["partial"],
+        # same engine and report as dedup_components
+        "require": ["LocalTableScan", "Window"],
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
     },
     "dedup_graph_pagerank": {

@@ -117,25 +117,24 @@ def test_minhash_no_false_positives_across_bases(spark):
         assert r["doc_a"] // 10 == r["doc_b"] // 10  # only within-base pairs
 
 
-def _n_split(df):
-    return df._jdf.queryExecution().optimizedPlan().toString().count("split(")
+def _n_tokenizers(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return plan.count("regexp_extract_all(")
 
 
 def test_minhash_layer_tokenizes_once(spark):
-    """shingles3 references its tokens argument six times, and Catalyst
-    shares no subexpression holding a lambda: the tokenizer must stay in
-    its own projection (one split per row), and no filter on a
-    shingles-derived column may be pushed below it with the shingle chain
-    substituted in."""
+    """The shingle tokenizer (regexp_extract_all over the whitespace-
+    collapsed text) runs once per row: no filter on a shingles-derived
+    column may be pushed below it with the shingle chain substituted in."""
     from clusterindices_spark.operators import dedup
     from clusterindices_spark.operators.curation import q_curation_decontaminate
 
     d = planted_docs(spark)
-    assert _n_split(dedup._doc_shingles(d)) == 1
+    assert _n_tokenizers(dedup._doc_shingles(d)) == 1
     dedup.minhash_pairs(d)
-    assert _n_split(dedup._PINNED["minhash_shingles"]) == 1
+    assert _n_tokenizers(dedup._PINNED["minhash_shingles"]) == 1
     # one tokenizer per side: the eval set and the training docs
-    assert _n_split(q_curation_decontaminate(spark, SF_SMOKE)) == 2
+    assert _n_tokenizers(q_curation_decontaminate(spark, SF_SMOKE)) == 2
 
 
 EDGE_DOCS = [
@@ -150,6 +149,12 @@ EDGE_DOCS = [
     (9, ""),
     (10, "one"),
     (11, "two words"),
+    (12, "\ttab\tseparated\twords\t"),
+    (13, "cr\rvt\x0bff\x0cmixed\r\n\x0b\x0c end"),
+    (14, "   leading and trailing whitespace   \n"),
+    (15, "Über STRASSE straße ÜBER Straße über"),
+    (16, "x y z x y z x y z x y"),
+    (17, "no\u00a0break space\u00a0inside tokens"),
 ]
 
 
@@ -179,6 +184,45 @@ def test_doc_shingles_and_minhash_edge_inputs(spark):
     pairs = {(r["doc_a"], r["doc_b"]) for r in minhash_pairs(d).collect()}
     assert (20, 21) in pairs
     assert not {x for p in pairs for x in p} & no_shingles
+
+
+def test_minhash_reports_hot_bucket_drop(spark):
+    """A near-duplicate family larger than MAX_BAND_BUCKET: 150 variants of
+    one 60-word text (2 random word substitutions each, every pair at
+    J ≥ 0.5) plus 250 unrelated docs. Whole band buckets of the family go
+    over the cap and are dropped, so pairs go missing — and the caller is
+    told how many buckets and band rows the cap dropped."""
+    import random
+
+    from clusterindices_spark.operators.dedup import MAX_BAND_BUCKET
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(2000)]
+    base = [rng.choice(vocab) for _ in range(60)]
+    rows = []
+    for i in range(150):
+        t = list(base)
+        for _ in range(2):
+            t[rng.randrange(60)] = rng.choice(vocab)
+        rows.append((i, " ".join(t)))
+    unrelated = [
+        (1000 + j, " ".join(rng.choice(vocab) for _ in range(60))) for j in range(250)
+    ]
+    d = spark.createDataFrame(rows + unrelated, "doc_id BIGINT, text STRING")
+    true_pairs = ngram_jaccard_pairs(d, threshold=0.5, max_shingle_df=10**9).count()
+    assert true_pairs == 150 * 149 // 2
+
+    stats: dict = {}
+    found = minhash_pairs(d, threshold=0.5, stats=stats).count()
+    assert found < true_pairs
+    assert stats["dropped_buckets"] > 0
+    assert stats["dropped_band_rows"] > stats["dropped_buckets"] * MAX_BAND_BUCKET
+
+    clean: dict = {}
+    minhash_pairs(
+        spark.createDataFrame(unrelated, "doc_id BIGINT, text STRING"), stats=clean
+    ).count()
+    assert clean == {"dropped_buckets": 0, "dropped_band_rows": 0}
 
 
 def test_simhash_finds_exact_copies(spark):

@@ -37,17 +37,20 @@ def test_roundtrip_path_distinct_roots_same_basename():
     assert _roundtrip_path("json", a) != pa_  # format-keyed
 
 
-def test_cc_nonconvergence_raises(spark):
+def test_cc_nonconvergence_raises(spark, monkeypatch):
     """A chain needs ~2·log₂(len) star rounds; a cap below that must RAISE,
     never return silently-wrong labels (the round-8 5M-node stress found
-    672k bad labels under the old silent truncation)."""
+    672k bad labels under the old silent truncation). The star engine's
+    driver finish is off (edge budget 0), so the chain runs its rounds."""
     import pytest
 
+    from clusterindices_spark.operators import dedup
     from clusterindices_spark.operators.dedup import (
         connected_components,
         connected_components_star,
     )
 
+    monkeypatch.setattr(dedup, "LOCAL_CC_EDGES", 0)
     n = 64
     nodes = spark.range(0, n).selectExpr("id AS node")
     edges = spark.range(0, n - 1).selectExpr("id AS src", "id+1 AS dst")

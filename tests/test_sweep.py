@@ -276,3 +276,21 @@ def test_gap_statistic_picks_true_k_and_is_deterministic(spark, tmp_path):
     assert picked == [4]
     b = gap_statistic(spark, out, k_min=2, k_max=6, n_refs=3).collect()
     assert a == b
+
+
+def test_gap_statistic_stops_before_zero_dispersion(spark, tmp_path):
+    """15 points on 3 distinct positions: the sweep fits K=2 and K=3, and
+    K=3 puts every point on a centroid (W_3 = 0, log undefined). The gap
+    frame ends before it — one K=2 row that cannot pick — instead of
+    raising a bare math domain error."""
+    from clusterindices_spark.operators.sweep import gap_statistic
+
+    pos = [[0.0, 0.0], [5.0, 0.0], [0.0, 7.0]]
+    rows = [(i, pos[i % 3], 0) for i in range(15)]
+    out = str(tmp_path / "three")
+    spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
+    ).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
+    got = gap_statistic(spark, out, k_min=2, k_max=4, n_refs=2).collect()
+    assert [(r["k"], r["pick"]) for r in got] == [(2, 0)]
+    assert got[0]["log_w"] > 0 and got[0]["sd_ref"] >= 0
