@@ -1,52 +1,52 @@
-"""Vectorized nearest-centroid assignment / cell probing (r14, guide §4.2).
+"""Vectorized nearest-centroid assignment and cell probing (guide §4.2).
 
-The IVF family's remaining corpus-scale wall after the pairdots rewrite is
-the n×K interpreted argmin/sort over the broadcast centroid table: index
-assignment (`_assign_folded`), probe-cell selection (`_probe_cells`), the
-Lloyd fit rounds, and the PQ per-subspace encode (`_assign_codes`) all
-evaluate K (or k·m) `l2sq` HOF folds per row inside `array_min`/`array_sort`
-— measured 60-70 % of the ANN family at the scale-arm sizes (knn_auto @30k:
-3.18 s assignment + 2.17 s probing + 6.16 s fit of the 8.9 s wall; PQ @100k:
-train+encode 7.2-8.0 s of ~10 s). Per guide §4.2 these batches move to
-NumPy behind `mapInArrow`: rows cross Arrow once, the distance matrix is a
-vectorized left fold, and the id/vector columns PASS THROUGH untouched
-(same Arrow buffers — values never reformatted).
+Every corpus-side nearest-centroid step runs here, as one NumPy pass behind
+``mapInArrow``: the IVF Lloyd rounds and index assignment
+(``similarity.ivf_build``), ``ivf_append_bucketed``, the corpus-side probe
+sets of ``knn_graph`` and ``semantic_pairs_ann``, and the PQ per-subspace
+encode (``pq.pq_train_encode``). Rows cross Arrow once, the distance matrix
+is a vectorized left fold, and the id/vector columns PASS THROUGH untouched
+(same Arrow buffers — values never reformatted). Evaluated per row as
+interpreted ``l2sq`` folds inside ``array_min``/``array_sort``, the same
+argmin was 60-70 % of the ANN family's wall at the scale-arm sizes.
 
-Bit-exactness contract (the pairdots discipline; Spark ordering semantics
-pinned by a live probe this round — see OPTIMIZATION_r14.md):
+Input: ``assign_cells``, ``probe_cells_kernel`` and ``assign_codes_kernel``
+cast their vector column to ``ARRAY<DOUBLE>`` in their own ``select``. On
+double input Catalyst drops that cast, so the plan is unchanged; any other
+numeric element type is widened and its distances are computed in double.
+
+Bit-exactness contract — the semantics of the Spark expression
+``array_min``/``array_sort`` over ``struct(l2sq(x, c) AS d2, cl)``, which
+tests/test_cellassign.py keeps as its reference:
 
 - ``l2sq = aggregate(zip_with(a, b, (p,q)->(p-q)*(p-q)), 0.0D, acc+v)`` is
   the IEEE binary64 left fold ((0 + t0²) + t1²) + …; the NumPy loop
   ``acc = acc + t*t`` per dimension performs the identical elementwise
-  operation sequence, so distances are bit-equal. Engaged ONLY when the
-  vector column is ``ARRAY<DOUBLE>`` (every query path casts at the scan —
-  sources/fixtures.py); anything else falls back to the HOF form.
-- struct ``(d2, cl)`` ordering in ``array_min``/``array_sort``: NULL d2
-  sorts FIRST, then finite ascending, +Inf, NaN LAST; ties break on cl
-  ascending; -0.0 == 0.0. ``zip_with`` pads length mismatches with NULL and
-  propagates element NULLs, so a centroid whose dim != the row's dim (or
-  with a NULL element, or a NULL row vector) has d2 NULL and OUTRANKS every
-  real distance. The kernel replicates this exactly: such "null-distance"
-  centroids win by min-cl before any matrix math, NaN distances rank after
-  +Inf (argmin on a NaN→+Inf key, with an explicit fix for the
-  overflow-only +Inf-vs-NaN tie), and equal distances break to the lowest
-  cl (centroids are pre-sorted by cl; first-index wins).
-- Row order is PRESERVED (the broadcast-join forms were order-preserving
-  too), so downstream floating aggregations (Lloyd's per-(cluster,dim)
-  avg) accumulate partials in the same sequence and stay bit-identical.
+  operation sequence, so distances are bit-equal.
+- struct ``(d2, cl)`` ordering: NULL d2 sorts FIRST, then finite
+  ascending, +Inf, NaN LAST; ties break on cl ascending; -0.0 == 0.0.
+  ``zip_with`` pads length mismatches with NULL and propagates element
+  NULLs, so a centroid whose dim != the row's dim (or with a NULL element,
+  or a NULL row vector) has d2 NULL and OUTRANKS every real distance. The
+  kernel replicates this exactly: such "null-distance" centroids win by
+  min-cl before any matrix math, NaN distances rank after +Inf (argmin on
+  a NaN→+Inf key, with an explicit fix for the overflow-only +Inf-vs-NaN
+  tie), and equal distances break to the lowest cl (centroids are
+  pre-sorted by cl; first-index wins).
+- Row order is PRESERVED, so downstream floating aggregations (Lloyd's
+  per-(cluster,dim) avg) accumulate partials in the same sequence.
 - Plan identity: the kernel closure pickles the centroid arrays by VALUE,
   so two builds over the same centroids canonicalize ``sameResult`` and
-  every downstream pin (functions/pins.py) behaves exactly as with the
-  broadcast-literal plans (probe committed in OPTIMIZATION_r14.md).
-
-Full-output equality vs the HOF forms is pinned by tests
-(tests/test_cellassign.py: clean, NULL-row, NULL-element, ragged-dim,
-NaN/Inf, empty-centroid and mixed-dim-centroid corpora) and by the standing
-oracle gates at sf0.001/0.01/0.1.
+  every downstream pin (functions/pins.py) behaves as with a broadcast
+  literal.
+- A centroid with a NULL ``cl`` has no place in that ordering; ``_prep``
+  raises ``ValueError`` for it. No builder writes one; only a hostile
+  persisted centroid table can hold it.
 
 Scale note (100 TB): assignment/probing stay one narrow pass over the
-corpus with a driver-bounded closure (K×dim doubles — the same payload the
-broadcast carried); nothing new shuffles, partitioning is preserved.
+corpus with a driver-bounded closure (K×dim doubles — the payload a
+broadcast centroid row would carry); nothing shuffles, partitioning is
+preserved.
 """
 
 from __future__ import annotations
@@ -57,23 +57,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-class Unsupported(Exception):
-    """Raised driver-side when the centroid table or column types fall
-    outside the kernel contract — callers fall back to the HOF form."""
-
-
-def kernel_ok(df: DataFrame, x_col: str) -> bool:
-    """True when ``x_col`` is ARRAY<DOUBLE> — the only element type whose
-    HOF arithmetic the float64 kernel replicates bit-for-bit."""
-    try:
-        dt = df.schema[x_col].dataType
-    except Exception:
-        return False
-    return isinstance(dt, T.ArrayType) and isinstance(
-        dt.elementType, T.DoubleType
-    )
 
 
 def _prep(cents):
@@ -90,9 +73,9 @@ def _prep(cents):
     per_dim: dict[int, list] = {}
     for cl, c in cents:
         if cl is None:
-            # a NULL cl would need NULL-int struct ordering — out of
-            # contract (never produced by any builder); use the HOF form
-            raise Unsupported("NULL cl in centroid table")
+            # a NULL cl would need NULL-int struct ordering; no builder
+            # produces one
+            raise ValueError("NULL cl in centroid table")
         cl = int(cl)
         all_cls.append(cl)
         if c is None or any(v is None for v in c):
@@ -307,7 +290,7 @@ def make_assign_fn(cents, id_name: str, x_name: str):
 def make_probe_fn(cents, p: int, id_name: str, x_name: str):
     """mapInArrow generator: (id, x) -> (id, x, cells ARRAY<INT>) with cells
     the slice(1, p) of the (d2, cl)-sorted centroid structs — the caller
-    explodes, reproducing _probe_cells row-for-row."""
+    posexplodes, reproducing _probe_cells row-for-row."""
     null_cls, by_dim, all_cls = _prep(cents)
     single = not null_cls and len(by_dim) == 1 and len(all_cls) > 0
     if single:
@@ -425,10 +408,15 @@ def make_codes_fn(
     return fn
 
 
+def _doubles(x_col: str, name: str | None = None):
+    """``x_col`` as ARRAY<DOUBLE> (a no-op Catalyst drops on double input)."""
+    return F.col(x_col).cast("array<double>").alias(name or x_col)
+
+
 def assign_cells(pts: DataFrame, cents, id_col: str, x_col: str) -> DataFrame:
-    """(id, cluster, x) via the vectorized kernel. Caller guarantees
-    kernel_ok(pts, x_col) and a well-formed driver-side ``cents`` list."""
-    src = pts.select(id_col, x_col)
+    """(id, cluster, x) via the vectorized kernel, ``x`` as ARRAY<DOUBLE>.
+    ``cents``: driver-side [(cl, c), ...]."""
+    src = pts.select(id_col, _doubles(x_col))
     schema = T.StructType(
         [
             src.schema[id_col],
@@ -442,11 +430,10 @@ def assign_cells(pts: DataFrame, cents, id_col: str, x_col: str) -> DataFrame:
 def probe_cells_kernel(
     probes: DataFrame, cents, p: int, id_col: str, x_col: str
 ) -> DataFrame:
-    """(probe_id, xa, cell) via the vectorized kernel — row-for-row equal to
-    similarity._probe_cells (explode of the sorted top-p slice)."""
-    src = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(x_col).alias("xa")
-    )
+    """(probe_id, xa, cell_rank, cell) via the vectorized kernel —
+    row-for-row equal to similarity._probe_cells (posexplode of the sorted
+    top-p slice)."""
+    src = probes.select(F.col(id_col).alias("probe_id"), _doubles(x_col, "xa"))
     schema = T.StructType(
         [
             src.schema["probe_id"],
@@ -456,7 +443,7 @@ def probe_cells_kernel(
     )
     ranked = src.mapInArrow(make_probe_fn(cents, p, "probe_id", "xa"), schema)
     return ranked.select(
-        "probe_id", "xa", F.explode("cells").alias("cell")
+        "probe_id", "xa", F.posexplode("cells").alias("cell_rank", "cell")
     )
 
 
@@ -465,7 +452,7 @@ def assign_codes_kernel(
 ) -> DataFrame:
     """(vec_id, m[, sub], code) via the vectorized kernel — the PQ encode's
     argmin with inner-join-on-m semantics. ``books``: {m: [(code, c), ...]}."""
-    src = sub.select(id_col, "m", "sub")
+    src = sub.select(id_col, "m", _doubles("sub"))
     fields = [src.schema[id_col], src.schema["m"]]
     if with_sub:
         fields.append(src.schema["sub"])

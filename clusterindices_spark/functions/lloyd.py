@@ -7,7 +7,7 @@ fits every K of a sweep in the same passes:
 
 1. **Sample.** One count, then one ``toArrow()`` collect (a JVM job, no
    Python worker) of the points — all of them when there are at most
-   ``SAMPLE_CAP``, else ``ivf_build``'s deterministic hash slice of about
+   ``SAMPLE_CAP``, else the deterministic ``hash_slice`` of about
    ``SAMPLE_CAP`` rows — sorted by ``vec_id``.
 2. **Driver updates.** Per K, greedy k-means++ seeded with
    ``default_rng([seed, k])``, then Lloyd updates on the sample until its labels stop changing
@@ -96,6 +96,23 @@ class Fit:
         return sum(r["ss"] for r in self.stats)
 
 
+def hash_slice(df: DataFrame, n: int, cap: int) -> DataFrame:
+    """``df`` when its ``n`` rows fit ``cap``, else a deterministic slice of
+    about ``cap`` of them: an overflow-safe Knuth multiplicative hash of
+    ``vec_id`` mod 1000003, kept under ``1000003·cap/n`` (no rand(), so the
+    same input gives the same sample in every engine and run). ``pmod``,
+    not ``%``: Spark's ``%`` keeps the sign, so a negative ``vec_id`` would
+    always land under the threshold and defeat the cap."""
+    if n <= cap:
+        return df
+    thresh = max(1, (1_000_003 * cap) // n)
+    return df.where(
+        F.expr(
+            f"pmod(pmod(vec_id, 1000003) * 2654435761, 1000003) < {thresh}"
+        )
+    )
+
+
 def fit_sweep(
     pts: DataFrame, k_min: int, k_max: int, seed: int, max_iter: int
 ) -> list[Fit]:
@@ -114,16 +131,7 @@ def fit_sweep(
         if n < k_min:
             return []
         sampled = n > SAMPLE_CAP
-        src = pts
-        if sampled:
-            thresh = max(1, (1_000_003 * SAMPLE_CAP) // n)
-            src = pts.where(
-                F.expr(
-                    "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
-                    f" < {thresh}"
-                )
-            )
-        ids, X = _sample(src.toArrow())
+        ids, X = _sample(hash_slice(pts, n, SAMPLE_CAP).toArrow())
         hi, lo = _id_hash(ids)
         xx = np.einsum("ij,ij->i", X, X)
         state = {}

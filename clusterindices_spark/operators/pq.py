@@ -37,8 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clusterindices_spark.functions import cellassign as _ck
 from clusterindices_spark.functions.distances import l2sq, norm
 from clusterindices_spark.functions.local import local_frame
+from clusterindices_spark.functions.lloyd import hash_slice
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 M_SUBSPACES = 8  # 64-dim fixtures → 8 subvectors of 8 dims
@@ -95,51 +97,11 @@ def _fold_codebook(cents: DataFrame) -> DataFrame:
     )
 
 
-def _assign_codes(sub: DataFrame, folded: DataFrame) -> DataFrame:
-    """argmin over the broadcast per-subspace codebook; (d2, code)
-    tie-break like the IVF assignment."""
-    best = F.get(
-        F.array_sort(
-            F.transform(
-                "book",
-                lambda s: F.struct(
-                    l2sq(F.col("sub"), s["c"]).alias("d2"),
-                    s["code"].alias("code"),
-                ),
-            )
-        ),
-        0,
-    )
-    return sub.join(F.broadcast(folded), "m").select(
-        "vec_id", "m", "sub", best["code"].alias("code")
-    )
-
-
 def _books_of(rows):
-    """{m: [(code, c), ...]} from collected codebook rows, or None when the
-    shape falls outside the kernel contract (a NULL m could never have come
-    from the posexplode that builds the subvector frame)."""
-    books = {}
-    for r in rows:
-        if r["m"] is None:
-            return None
-        books[int(r["m"])] = [(s["code"], s["c"]) for s in (r["book"] or [])]
-    return books
-
-
-def _assign_codes_any(sub: DataFrame, folded: DataFrame, books) -> DataFrame:
-    """Per-subspace code assignment via the vectorized kernel (guide §4.2)
-    with the broadcast-join HOF argmin as the fallback for inputs outside
-    the kernel contract. ``books`` is the collected codebook
-    (``_books_of``; None when its shape is outside the contract)."""
-    from clusterindices_spark.functions import cellassign as _ck
-
-    if books is not None and _ck.kernel_ok(sub, "sub"):
-        try:
-            return _ck.assign_codes_kernel(sub, books, "vec_id")
-        except _ck.Unsupported:
-            pass
-    return _assign_codes(sub, folded)
+    """{m: [(code, c), ...]} from collected codebook rows."""
+    return {
+        int(r["m"]): [(s["code"], s["c"]) for s in r["book"]] for r in rows
+    }
 
 
 def _update_codebook(assigned: DataFrame, d_sub: int) -> DataFrame:
@@ -170,10 +132,16 @@ def pq_train_encode(
     deterministic hash-sample of at most ``sample_cap`` vectors (Knuth
     mod-reduce on vec_id — no rand()) while the full corpus is encoded
     exactly once. At fixed cap the training cost is constant in corpus
-    size; the encode stays one embarrassingly-parallel broadcast pass.
+    size; the encode stays one embarrassingly-parallel pass.
     Gate/bench SFs sit under the default cap, so every oracle/recall
     artifact is bit-identical to the unsampled path; ``None`` restores
     full-corpus fit.
+
+    Every assignment (Lloyd rounds and the final encode) is the Arrow
+    kernel ``cellassign.assign_codes_kernel``, which casts ``sub`` to
+    ``ARRAY<DOUBLE>``: a float32 (or other numeric) corpus is encoded from
+    distances computed in double, and its codebook is ``ARRAY<DOUBLE>``
+    once a Lloyd round has run.
 
     Returns ``(codebook, codes)``: codebook = M rows (m, book), codes =
     (vec_id, codes ARRAY<INT> length M), both materialized (codebook is a
@@ -216,18 +184,7 @@ def pq_train_encode(
     if sample_cap is not None:
         n = sub.select("vec_id").distinct().count()
         _LAST_FIT.update(n=n, sampled=n > sample_cap)
-        if n > sample_cap:
-            thresh = max(1, (1_000_003 * sample_cap) // n)
-            # pmod, not %: Spark's % is sign-preserving, so a negative
-            # vec_id would yield a negative remainder that is ALWAYS under
-            # the threshold — sweeping every negative-id vector into the
-            # fit set and defeating the cap (r10 advice)
-            sub_fit = sub.where(
-                F.expr(
-                    "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
-                    f" < {thresh}"
-                )
-            )
+        sub_fit = hash_slice(sub, n, sample_cap)
     # seeds = the FIT SET's k lowest vec_ids — seeding from the full
     # corpus's lowest ids would lose every seed the hash sample dropped,
     # silently shrinking the codebook below k (measured: recall@5 0.825
@@ -250,39 +207,26 @@ def pq_train_encode(
             ),
         ).alias("book"),
     )
-    # r14 (guide §4.2): when the kernel contract holds, each Lloyd round's
-    # n·m×k interpreted argmin runs as a vectorized Arrow pass. The kernel
-    # needs the round's codebook driver-resident, so each round ends in
-    # one tiny collect (M×k×d_sub doubles); assignment values, row order
-    # and the (m, code) avg shuffle are identical, so every round's
-    # codebook is bit-equal to the chained HOF form
-    # (tests/test_cellassign.py; oracle/recall gates). Outside the
-    # contract the HOF rounds chain into one action.
-    from clusterindices_spark.functions import cellassign as _ck
-
-    if _ck.kernel_ok(sub_fit, "sub"):
-        rows = folded.collect()
-        for _ in range(lloyd_iters):
-            # a NULL m can never come out of groupBy("m") over the
-            # posexploded frame, so _books_of never returns None here
-            folded = _fold_codebook(
-                _update_codebook(
-                    _ck.assign_codes_kernel(
-                        sub_fit, _books_of(rows), "vec_id", with_sub=True
-                    ),
-                    d_sub,
-                )
+    # each Lloyd round's n·m×k argmin is one vectorized Arrow pass
+    # (cellassign.assign_codes_kernel). The kernel needs the round's
+    # codebook driver-resident, so each round ends in one tiny collect
+    # (M×k×d_sub doubles); assignment values and order equal the HOF
+    # argmin reference (tests/test_cellassign.py), so the (m, code) avg
+    # accumulates the same partials.
+    rows = folded.collect()
+    for _ in range(lloyd_iters):
+        folded = _fold_codebook(
+            _update_codebook(
+                _ck.assign_codes_kernel(
+                    sub_fit, _books_of(rows), "vec_id", with_sub=True
+                ),
+                d_sub,
             )
-            rows = folded.collect()
-    else:
-        for _ in range(lloyd_iters):
-            folded = _fold_codebook(
-                _update_codebook(_assign_codes(sub_fit, folded), d_sub)
-            )
+        )
         rows = folded.collect()
     folded = local_frame(emb.sparkSession, rows, folded.schema)
     codes = (
-        _assign_codes_any(sub, folded, _books_of(rows))
+        _ck.assign_codes_kernel(sub, _books_of(rows), "vec_id")
         .groupBy("vec_id")
         .agg(
             F.transform(

@@ -31,7 +31,9 @@ from clusterindices_spark.functions.distances import (
     l2sq,
     norm,
 )
+from clusterindices_spark.functions import cellassign as _ck
 from clusterindices_spark.functions.local import local_frame
+from clusterindices_spark.functions.lloyd import hash_slice
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 N_PROBES = 10
@@ -506,7 +508,9 @@ def semantic_pairs_ann(
     hot_cells = sorted(
         r["cell"] for r in occ.where(F.col("occ") > cap).collect()
     )
-    probe_side = _probe_cells_any(emb_v, folded, n_probe_cells)
+    probe_side = _ck.probe_cells_kernel(
+        emb_v, _cents_of(folded.collect()), n_probe_cells, "vec_id", "x"
+    )
     idx_n = index
     if hot_cells:
         probe_side = probe_side.where(~F.col("cell").isin(hot_cells))
@@ -679,55 +683,10 @@ def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_lsh_topk(emb, emb.where(F.col("vec_id") < N_PROBES))
 
 
-def _assign_folded(pts: DataFrame, folded: DataFrame) -> DataFrame:
-    """(vec_id, cluster, x): per-row argmin over the broadcast 1-row folded
-    centroid table — ZERO shuffle per Lloyd assignment. Tie-break (d2, cl)
-    matches min_by(struct(cluster,x), struct(d2, cluster)).
-
-    This is the HOF reference form; callers route through _assign_any,
-    which swaps in the vectorized Arrow kernel (bit-identical —
-    functions/cellassign.py) whenever the column types fit the kernel
-    contract."""
-    best = F.array_min(
-        F.transform(
-            "cents",
-            lambda s: F.struct(
-                l2sq(F.col("x"), s["c"]).alias("d2"), s["cl"].alias("cl")
-            ),
-        )
-    )
-    return (
-        pts.crossJoin(F.broadcast(folded))
-        .select("vec_id", best["cl"].alias("cluster"), "x")
-    )
-
-
 def _cents_of(rows):
-    """(cl, c) list from a collected 1-row folded centroid table, or None
-    when the shape falls outside the kernel contract (≠1 row — the
-    crossJoin form then isn't a per-row argmin at all)."""
-    if len(rows) != 1:
-        return None
-    cents = rows[0]["cents"]
-    if cents is None:
-        return []
-    return [(s["cl"], s["c"]) for s in cents]
-
-
-def _assign_any(pts: DataFrame, folded: DataFrame, rows) -> DataFrame:
-    """Nearest-cell assignment via the vectorized kernel (guide §4.2) with
-    the HOF crossJoin as the fallback for inputs outside the kernel
-    contract. ``rows`` is the collected 1-row folded table (driver-bounded:
-    K×dim doubles — the same payload the broadcast carried)."""
-    from clusterindices_spark.functions import cellassign as _ck
-
-    cents = _cents_of(rows)
-    if cents is not None and _ck.kernel_ok(pts, "x"):
-        try:
-            return _ck.assign_cells(pts, cents, "vec_id", "x")
-        except _ck.Unsupported:
-            pass
-    return _assign_folded(pts, folded)
+    """(cl, c) list from a collected 1-row folded centroid table."""
+    (row,) = rows
+    return [(s["cl"], s["c"]) for s in row["cents"]]
 
 
 def _centroids_folded(assigned: DataFrame) -> DataFrame:
@@ -790,8 +749,8 @@ def ivf_build(
     sample_cap: int | None = 100_000,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF index build: coarse-quantize vectors into ``n_cells`` Voronoi
-    cells (seeds = lowest vec_ids, refined with ``lloyd_iters`` pure-
-    DataFrame Lloyd passes — fully deterministic, no MLlib randomness).
+    cells (seeds = lowest vec_ids, refined with ``lloyd_iters`` Lloyd
+    rounds — fully deterministic, no MLlib randomness).
 
     Sampled fit (VERDICT r8 item 4 — the scale-correct BUILD path): Lloyd
     refinement is O(n·K) distance evaluations PER ROUND, the one place the
@@ -803,7 +762,7 @@ def ivf_build(
     the final index assignment. Build cost drops from O(n·K·iters + n·K)
     to O(s·K·iters + n·K) with s = sample_cap: at 100 TB the fit cost is
     CONSTANT in corpus size while assignment stays a single embarrassingly
-    parallel broadcast pass. Centroid quality is a sample estimate of the
+    parallel pass. Centroid quality is a sample estimate of the
     same Voronoi means — recall floors are re-verified by the standing
     bench gate (>=0.90) and the A/B lives in tools/scale_stress.py
     (IVF_SAMPLE_CAP env). ``sample_cap=None`` restores full-corpus fit.
@@ -814,11 +773,24 @@ def ivf_build(
     Returns ``(folded_cents, index)``: the 1-row folded centroid table
     (``unfold_cents`` gives the K-row form) and the inverted file
     ``(neighbor_id, cell, xb)``. The whole build carries centroids in the
-    folded broadcast form — K-row tables only materialize at the storage
-    boundary (ivf_write_bucketed)."""
+    folded form — K-row tables only materialize at the storage boundary
+    (ivf_write_bucketed).
+
+    ``x`` is cast to ``ARRAY<DOUBLE>`` on entry (a no-op on double input),
+    so a float32 or other numeric corpus gets double seeds, centroids and
+    distances, and its ``xb`` is ``ARRAY<DOUBLE>``.
+
+    Each Lloyd round's assignment and the final index assignment are one
+    vectorized Arrow pass (``cellassign.assign_cells``). The kernel needs
+    the round's centroids driver-resident, so each round ends in one tiny
+    collect (one row of K×dim doubles); assignment order is preserved, so
+    every round's centroid row is bit-equal to the same rounds chained over
+    the ``array_min`` HOF reference (tests/test_cellassign.py)."""
     from pyspark.storagelevel import StorageLevel
 
-    pts = emb.select("vec_id", "x").persist(StorageLevel.MEMORY_AND_DISK)
+    pts = emb.select(
+        "vec_id", F.col("x").cast("array<double>").alias("x")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     seeds = (
         pts.orderBy("vec_id")
         .limit(n_cells)
@@ -842,46 +814,19 @@ def ivf_build(
     if sample_cap is not None:
         n = pts.count()
         _LAST_FIT.update(n=n, sampled=n > sample_cap)
-        if n > sample_cap:
-            thresh = max(1, (1_000_003 * sample_cap) // n)
-            # pmod, not %: sign-preserving % sweeps every negative-id
-            # vector into the fit set unconditionally (r10 advice)
-            fit = pts.where(
-                F.expr(
-                    "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
-                    f" < {thresh}"
-                )
-            )
-    # r14 (guide §4.2): when the kernel contract holds, each Lloyd round's
-    # assignment runs as a vectorized Arrow pass instead of K interpreted
-    # l2sq folds per row. The kernel needs the round's centroids
-    # driver-resident, so each round ends in one tiny collect (one row of
-    # K×dim doubles); the assignment values, row order and the
-    # per-(cluster,dim) avg shuffle are identical, so every round's
-    # centroid row is bit-equal to the chained HOF form (full-output
-    # equality + oracle gates; tests/test_cellassign.py). Outside the
-    # contract the HOF rounds chain into ONE action, each round's centroid
-    # row entering the next as a broadcast subplan.
-    from clusterindices_spark.functions import cellassign as _ck
-
+        fit = hash_slice(pts, n, sample_cap)
     cdf = seeds
-    if _ck.kernel_ok(pts, "x"):
-        rows = seeds.collect()
-        for _ in range(lloyd_iters):
-            cdf = _centroids_folded(
-                _ck.assign_cells(fit, _cents_of(rows), "vec_id", "x")
-            )
-            rows = cdf.collect()
-    else:
-        for _ in range(lloyd_iters):
-            cdf = _centroids_folded(_assign_folded(fit, cdf))
+    rows = seeds.collect()
+    for _ in range(lloyd_iters):
+        cdf = _centroids_folded(
+            _ck.assign_cells(fit, _cents_of(rows), "vec_id", "x")
+        )
         rows = cdf.collect()
-    # the FINAL centroid row is materialized once: both downstream
-    # consumers (index assignment and probe-cell selection) embed it, and a
-    # lazy row would re-execute the whole Lloyd chain per consumer
-    # (measured ~0.8 s of duplicated stages at sf0.1)
+    # the FINAL centroid row goes back as a local relation: both downstream
+    # consumers (index assignment and probe-cell selection) read it, and a
+    # lazy row would re-execute the last round per consumer
     folded = local_frame(emb.sparkSession, rows, cdf.schema)
-    index = _assign_any(pts, folded, rows).select(
+    index = _ck.assign_cells(pts, _cents_of(rows), "vec_id", "x").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         F.col("x").alias("xb"),
@@ -892,17 +837,23 @@ def ivf_build(
 def _probe_cells(
     probes: DataFrame, folded: DataFrame, n_probe_cells: int
 ) -> DataFrame:
-    """(probe_id, xa, cell) — each probe's n_probe_cells nearest cells,
-    selected with per-row array math over the broadcast 1-row folded
-    centroid table (zero shuffle; tie-break (d2, cell) matches the window
-    formulation this replaced)."""
+    """(probe_id, xa, cell_rank, cell) — each probe's n_probe_cells nearest
+    cells in rank order, selected with per-row array math over the
+    broadcast 1-row folded centroid table (zero shuffle; tie-break
+    (d2, cell) matches the window formulation this replaced).
+
+    Probe-constant sites (``_ivf_search``, ``ivf_search_bucketed``,
+    ``ivfpq_topk``) stay on this form: there ``probe_cells_kernel`` cost
+    24-31% more CPU per 20-probe bucketed query (5k×32, 32 cells, 4-core
+    host), its Python stage running for the pruning collect and again for
+    the broadcast."""
     return (
         probes.select(F.col("vec_id").alias("probe_id"), F.col("x"))
         .crossJoin(F.broadcast(folded))
         .select(
             "probe_id",
             F.col("x").alias("xa"),
-            F.explode(
+            F.posexplode(
                 F.transform(
                     F.slice(
                         F.array_sort(
@@ -919,32 +870,9 @@ def _probe_cells(
                     ),
                     lambda s: s["cl"],
                 )
-            ).alias("cell"),
+            ).alias("cell_rank", "cell"),
         )
     )
-
-
-def _probe_cells_any(
-    probes: DataFrame, folded: DataFrame, n_probe_cells: int
-) -> DataFrame:
-    """Corpus-side probe-cell selection via the vectorized kernel (guide
-    §4.2) with the HOF crossJoin form as the fallback for inputs outside
-    the kernel contract. The 1-row folded table is collected here
-    (driver-bounded: K×dim doubles — the payload the broadcast carried
-    anyway). Probe-constant sites (N_PROBES-scale rows at any corpus size)
-    call _probe_cells directly: a Python stage there is pure overhead."""
-    from clusterindices_spark.functions import cellassign as _ck
-
-    if _ck.kernel_ok(probes, "x"):
-        cents = _cents_of(folded.collect())
-        if cents is not None:
-            try:
-                return _ck.probe_cells_kernel(
-                    probes, cents, n_probe_cells, "vec_id", "x"
-                )
-            except _ck.Unsupported:
-                pass
-    return _probe_cells(probes, folded, n_probe_cells)
 
 
 def _ivf_search(
@@ -1049,23 +977,24 @@ def ivf_append_bucketed(
     where the corpus grows continuously and a coarse-quantizer rebuild is
     a scheduled event, not a per-ingest cost.
 
-    New vectors are assigned to their nearest EXISTING cell (one broadcast
-    argmin against the persisted centroid table, zero shuffle) and
+    New vectors are assigned to their nearest EXISTING cell (one Arrow
+    argmin pass against the collected centroid table, zero shuffle) and
     appended with the SAME bucket spec, so bucket pruning keeps holding:
     the appended rows land in their cell's bucket files. Centroids drift
     as data grows — embeddings.centroid_drift is the monitoring signal
-    for when to schedule the rebuild. Returns the number of rows appended.
+    for when to schedule the rebuild. Returns the number of rows appended;
+    a centroid table with a NULL ``cluster`` raises ``ValueError``.
     """
     spark = new_emb.sparkSession
-    cents = spark.table(f"{table}_cents")
-    folded = cents.agg(
-        F.collect_list(
-            F.struct(F.col("cluster").alias("cl"), F.col("centroid").alias("c"))
-        ).alias("cents")
-    )
-    frows = folded.collect()
-    folded = local_frame(spark, frows, folded.schema)
-    rows = _assign_any(new_emb.select("vec_id", "x"), folded, frows).select(
+    cents = [
+        (r["cluster"], r["centroid"])
+        for r in spark.table(f"{table}_cents").collect()
+    ]
+    try:
+        assigned = _ck.assign_cells(new_emb, cents, "vec_id", "x")
+    except ValueError as e:
+        raise ValueError(f"{table}_cents: {e}") from e
+    rows = assigned.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         F.col("x").alias("xb"),
@@ -1165,7 +1094,7 @@ def q_similarity_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Single-scan formulation: the search runs ONCE at the max grid nprobe
     with each candidate tagged by the RANK of the cell it came from
-    (posexplode of the sorted cell slice); recall at p is then a filter
+    (``_probe_cells``'s cell_rank); recall at p is then a filter
     cell_rank < p + re-rank — the whole curve costs one inverted-list
     join, not |grid| searches. Each neighbor lives in exactly one cell,
     so the slices need no dedup.
@@ -1181,32 +1110,7 @@ def q_similarity_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     k = TOP_K
     max_p = max(IVF_NPROBE_GRID)
     folded, index = ivf_build(emb, n_cells=8, lloyd_iters=2)
-    ranked = (
-        probes.select(F.col("vec_id").alias("probe_id"), "x")
-        .crossJoin(F.broadcast(folded))
-        .select(
-            "probe_id",
-            F.col("x").alias("xa"),
-            F.posexplode(
-                F.transform(
-                    F.slice(
-                        F.array_sort(
-                            F.transform(
-                                "cents",
-                                lambda s: F.struct(
-                                    l2sq(F.col("x"), s["c"]).alias("d2"),
-                                    s["cl"].alias("cl"),
-                                ),
-                            )
-                        ),
-                        1,
-                        max_p,
-                    ),
-                    lambda s: s["cl"],
-                )
-            ).alias("cell_rank", "cell"),
-        )
-    )
+    ranked = _probe_cells(probes, folded, max_p)
     # r14: the r13 norm hoist is REVERTED at this site — candidates here
     # are only probes × max_p × (n/K) rows (~20k at sf0.1, candidate-scale
     # at any corpus: the probe set is an operator constant), so the hoist
@@ -1324,7 +1228,9 @@ def knn_graph(
         make_topk_fold,
     )
 
-    probe_side = _probe_cells_any(emb, folded, n_probe_cells)
+    probe_side = _ck.probe_cells_kernel(
+        emb, _cents_of(folded.collect()), n_probe_cells, "vec_id", "x"
+    )
     surv = (
         probe_side.groupby("cell")
         .cogroup(index.groupby("cell"))

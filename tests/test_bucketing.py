@@ -181,3 +181,40 @@ def test_ivf_append_bucketed_absorbs_new_vectors(spark):
     finally:
         drop_table(spark, table)
         drop_table(spark, f"{table}_cents")
+
+
+def test_ivf_append_rejects_null_cluster_centroid(spark):
+    """A persisted centroid table with a NULL ``cluster`` has no place in
+    the (d2, cl) ordering: the append raises a ValueError naming the
+    table instead of assigning against it."""
+    import pytest
+
+    from clusterindices_spark.operators.similarity import (
+        ivf_append_bucketed,
+        ivf_write_bucketed,
+    )
+    from clusterindices_spark.sources.bucketing import drop_table
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3)]) for i in range(40)],
+        "vec_id BIGINT, x ARRAY<DOUBLE>",
+    )
+    table = "t_ivf_null_cent"
+    try:
+        ivf_write_bucketed(emb, table, n_cells=4)
+        cents = spark.table(f"{table}_cents").collect()
+        bad = spark.createDataFrame(
+            [(None, [0.0, 0.0])] + [(r["cluster"], r["centroid"]) for r in cents],
+            "cluster INT, centroid ARRAY<DOUBLE>",
+        )
+        drop_table(spark, f"{table}_cents")
+        bad.write.format("parquet").saveAsTable(f"{table}_cents")
+        n_before = spark.table(table).count()
+        with pytest.raises(ValueError, match=f"{table}_cents"):
+            ivf_append_bucketed(
+                emb.select((F.col("vec_id") + 100).alias("vec_id"), "x"), table
+            )
+        assert spark.table(table).count() == n_before
+    finally:
+        drop_table(spark, table)
+        drop_table(spark, f"{table}_cents")

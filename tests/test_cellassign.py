@@ -1,10 +1,12 @@
-"""Kernel ≡ HOF equality pins for the r14 vectorized cell-assignment kernel
+"""Kernel ≡ HOF equality pins for the vectorized cell-assignment kernel
 (functions/cellassign.py).
 
 Every test builds a hostile corpus / centroid table, runs BOTH forms — the
-HOF reference (`_assign_folded` / `_probe_cells` / `_assign_codes`) and the
-Arrow kernel — and requires bit-identical full outputs (floats compared by
-repr, i.e. exact doubles). These are the ordering semantics the kernel
+Spark higher-order-function (HOF) reference and the Arrow kernel — and
+requires bit-identical full outputs (floats compared by repr, i.e. exact
+doubles). The references are `_assign_folded` and `_assign_codes` below
+(the library's former HOF forms, kept here as the oracle) and the library's
+`similarity._probe_cells`. These are the ordering semantics the kernel
 replicates: NULL d2 outranks every real distance, NaN ranks after +Inf,
 ties break on the lowest cl/code, zip_with pads dim mismatches with NULL,
 row order is preserved.
@@ -18,11 +20,49 @@ import pytest
 from pyspark.sql import functions as F
 
 from clusterindices_spark.functions import cellassign as ck
+from clusterindices_spark.functions.distances import l2sq
 from clusterindices_spark.operators.similarity import (
-    _assign_folded,
     _cents_of,
     _probe_cells,
 )
+
+
+def _assign_folded(pts, folded):
+    """(vec_id, cluster, x): per-row argmin over the broadcast 1-row folded
+    centroid table. Tie-break (d2, cl) matches
+    min_by(struct(cluster,x), struct(d2, cluster))."""
+    best = F.array_min(
+        F.transform(
+            "cents",
+            lambda s: F.struct(
+                l2sq(F.col("x"), s["c"]).alias("d2"), s["cl"].alias("cl")
+            ),
+        )
+    )
+    return (
+        pts.crossJoin(F.broadcast(folded))
+        .select("vec_id", best["cl"].alias("cluster"), "x")
+    )
+
+
+def _assign_codes(sub, folded):
+    """argmin over the broadcast per-subspace codebook; (d2, code)
+    tie-break like the IVF assignment."""
+    best = F.get(
+        F.array_sort(
+            F.transform(
+                "book",
+                lambda s: F.struct(
+                    l2sq(F.col("sub"), s["c"]).alias("d2"),
+                    s["code"].alias("code"),
+                ),
+            )
+        ),
+        0,
+    )
+    return sub.join(F.broadcast(folded), "m").select(
+        "vec_id", "m", "sub", best["code"].alias("code")
+    )
 
 
 def _rows(df):
@@ -119,11 +159,7 @@ def test_probe_kernel_equals_hof(spark, name, pts_rows, cents, p):
 
 
 def test_codes_kernel_equals_hof(spark):
-    from clusterindices_spark.operators.pq import (
-        _assign_codes,
-        _books_of,
-        _fold_codebook,
-    )
+    from clusterindices_spark.operators.pq import _books_of, _fold_codebook
 
     sub_rows = [
         (1, 0, [0.1, 0.2]),
@@ -181,15 +217,16 @@ def test_kernel_closures_are_same_result(spark):
 
 
 def test_kernel_guards(spark):
-    """Out-of-contract shapes fall back (callers catch Unsupported or use
-    kernel_ok): float32 column refuses the kernel; NULL cl raises."""
-    pts32 = spark.createDataFrame(
-        [(1, [0.1, 0.2])], "vec_id BIGINT, x ARRAY<FLOAT>"
-    )
-    assert not ck.kernel_ok(pts32, "x")
+    """A float32 column runs the kernel (cast to double in its own
+    select, same cells as the float64 copy); a NULL cl raises."""
+    rows = [(1, [0.5, 0.25]), (2, [9.5, 0.75]), (3, [1.0, 9.0])]
+    pts32 = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<FLOAT>")
+    got = ck.assign_cells(pts32, CLEAN_CENTS, "vec_id", "x")
+    assert "MapInArrow" in _plan_str(got)
+    want = ck.assign_cells(_mk_pts(spark, rows), CLEAN_CENTS, "vec_id", "x")
+    assert _ordered_rows(got) == _ordered_rows(want)
     pts = _mk_pts(spark, HOSTILE_PTS[:2])
-    assert ck.kernel_ok(pts, "x")
-    with pytest.raises(ck.Unsupported):
+    with pytest.raises(ValueError, match="NULL cl"):
         ck.assign_cells(pts, [(None, [0.0, 0.0])], "vec_id", "x")
 
 
@@ -198,12 +235,12 @@ def _plan_str(df):
 
 
 def test_size_dispatch_and_memo_replay(spark):
-    """The ivf_build arm follows the input type only: a float64 corpus
-    runs the Arrow kernel (MapInArrow) at any size, sampled or not (no
-    work crossover keeps trivial inputs on the HOF form); a float32 corpus
-    is outside the kernel contract and keeps the HOF broadcast form. A
-    repeat build replays to a sameResult plan with no result memo — the
-    build is a pure function of its input."""
+    """ivf_build has one arm: a float64 corpus runs the Arrow kernel
+    (MapInArrow) at any size, sampled or not, and so does a float32 corpus
+    (cast to double at entry) — whose values, exact in float32, give the
+    same index as the float64 copy. A repeat build replays to a sameResult
+    plan with no result memo — the build is a pure function of its
+    input."""
     from clusterindices_spark.functions.pins import clear_pins, same_plan
     from clusterindices_spark.operators.similarity import ivf_build
 
@@ -218,37 +255,40 @@ def test_size_dispatch_and_memo_replay(spark):
     _, i3 = ivf_build(emb64, n_cells=4, lloyd_iters=1, sample_cap=None)
     assert "MapInArrow" in _plan_str(i3)
     _, i4 = ivf_build(emb32, n_cells=4, lloyd_iters=1)
-    assert "MapInArrow" not in _plan_str(i4)
+    assert "MapInArrow" in _plan_str(i4)
+    assert _rows(i4) == _rows(i1)
     clear_pins()
 
 
 def test_pq_size_dispatch(spark):
-    """Same arm rule for the PQ encode: a tiny float64 corpus runs the
-    kernel with or without the sampling cap; a float32 corpus keeps the
-    HOF broadcast-join argmin."""
+    """Same single arm for the PQ encode: a tiny float64 corpus runs the
+    kernel with or without the sampling cap, and a float32 corpus runs it
+    too, encoding its float32-exact values exactly as the float64 copy."""
     from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.operators.pq import pq_train_encode
 
     rows = [(i, [float((i * 31) % 13) for _ in range(8)]) for i in range(64)]
     emb64 = _mk_pts(spark, rows)
     emb32 = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<FLOAT>")
-    for emb, cap, kernel in (
-        (emb64, 100_000, True),
-        (emb64, None, True),
-        (emb32, 100_000, False),
+    got = {}
+    for name, emb, cap in (
+        ("f64", emb64, 100_000),
+        ("f64_nocap", emb64, None),
+        ("f32", emb32, 100_000),
     ):
         _, codes = pq_train_encode(
             emb, m=4, k=4, lloyd_iters=1, sample_cap=cap, normalize=False
         )
-        assert ("MapInArrow" in _plan_str(codes)) is kernel
+        assert "MapInArrow" in _plan_str(codes), name
+        got[name] = _rows(codes)
         clear_pins()
+    assert got["f32"] == got["f64"]
 
 
 def test_fit_loop_kernel_equals_hof_chain(spark):
     """End-to-end Lloyd fit: the kernel path's per-round collect+reembed
-    must produce the SAME centroid rows as the chained HOF plan — pinned
-    here at the library level (ivf_build dispatches on kernel_ok, so the
-    registry keys only ever see one path per dtype)."""
+    must produce the SAME centroid rows as the chained HOF plan built on
+    the `_assign_folded` reference."""
     from clusterindices_spark.operators.similarity import (
         _centroids_folded,
         ivf_build,

@@ -181,8 +181,9 @@ def test_lsh_paths_survive_null_vectors_on_16dim_corpus(spark):
 def test_fit_sample_hash_pmod_on_negative_ids(spark):
     """ADVICE r10 low: the fit-sample filter must reduce NEGATIVE ids
     into [0, 1000003) so the cap holds; sign-preserving % passed every
-    negative id. Pins both the expression semantics and that the source
-    sites use pmod."""
+    negative id. Pins both the expression semantics and that the one
+    source site, lloyd.hash_slice (called by the IVF and PQ fits), uses
+    pmod."""
     expr = "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
     df = spark.range(-4000, 0).withColumnRenamed("id", "vec_id")
     lo, hi, n_under = (
@@ -198,13 +199,17 @@ def test_fit_sample_hash_pmod_on_negative_ids(spark):
     assert n_under < 4000 * 0.25
     import inspect
 
+    from clusterindices_spark.functions import lloyd
     from clusterindices_spark.operators import pq as pqmod
     from clusterindices_spark.operators import similarity as simmod
 
-    for mod in (pqmod, simmod):
+    assert lloyd.hash_slice(df, 4000, 200).count() < 4000 * 0.25
+    assert "pmod(pmod(vec_id" in inspect.getsource(lloyd)
+    for mod in (lloyd, pqmod, simmod):
         src = inspect.getsource(mod)
-        assert "pmod(pmod(vec_id" in src
         assert "(vec_id % 1000003) * 2654435761" not in src
+    for mod in (pqmod, simmod):
+        assert "hash_slice(" in inspect.getsource(mod)
 
 
 def test_bench_hist_medians_same_sf_only(tmp_path):

@@ -20,12 +20,15 @@ from __future__ import annotations
 import argparse
 import datetime
 import math
+import os
 import sys
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this file lives in, wherever it was cloned
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from clusterindices_spark.session import get_spark
 from clusterindices_spark.sources.fixtures import TABLES
