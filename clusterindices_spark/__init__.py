@@ -13,8 +13,12 @@ public knowledge of the GitHub repo, not to file:line of a local checkout.
 Design principles (SURVEY.md §7):
 - DataFrame expressions over UDFs everywhere; every op oracle-expressible
   unless inherently approximate / iterative.
-- Distance kernels are higher-order-function expressions (whole-stage codegen),
-  never Python UDFs.
+- Corpus-side distance kernels are one vectorized NumPy left fold
+  (``functions.cellassign._d2acc``, bit-equal to the ``l2sq`` expression)
+  behind ``mapInArrow``; data the driver already holds (the K-sweep's points
+  within ``lloyd.SAMPLE_CAP``, K-row centroid tables) is scored in the
+  driver. Probe-constant sites and the index suite keep ``l2sq``
+  expressions. Never a row-at-a-time Python UDF.
 - Tiny tables (centroids: K rows) travel via broadcast; the only large shuffle
   any index query performs is a groupBy over K clusters.
 - round(6) on every computed double, in both the Spark query and the DuckDB

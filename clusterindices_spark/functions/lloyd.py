@@ -2,42 +2,48 @@
 
 The validity indices are centroid-based, so once the centroids are fixed
 one linear pass over the points yields every index (Luna-Romera et al.
-2018, §3–4). This module makes that pass double as the Lloyd step, and
-fits every K of a sweep in the same passes:
+2018, §3–4). This module fits every K of a sweep on one driver sample and
+runs that pass in the driver whenever the sample is the whole input:
 
 1. **Sample.** One count, then one ``toArrow()`` collect (a JVM job, no
    Python worker) of the points — all of them when there are at most
    ``SAMPLE_CAP``, else the deterministic ``hash_slice`` of about
    ``SAMPLE_CAP`` rows — sorted by ``vec_id``.
 2. **Driver updates.** Per K, greedy k-means++ seeded with
-   ``default_rng([seed, k])``, then Lloyd updates on the sample until its labels stop changing
-   or ``max_iter`` updates are spent.
-3. **Full passes.** One ``mapInArrow`` over the points with every active
-   K's centroids in the closure (distances by ``cellassign._d2acc``, the
-   ``l2sq`` left fold) emits, per Arrow batch and (k, cluster): the
-   count, the coordinate sums, a label fingerprint and the
-   ``cluster_stats`` fields (Σ silhouette, Σd², max d, Σd); one JVM
-   ``groupBy(k, cl)`` aggregate (its map-side partial merges a
-   partition's batches) and one collect of ΣK rows follow. A K is final when the
-   pass's labels equal the labels that produced its centroids, or when its
-   budget is spent; otherwise its centroids become the pass means, which
-   costs one update. Final Ks leave the closure.
+   ``default_rng([seed, k])``, then Lloyd updates on the sample until its
+   labels stop changing or ``max_iter`` updates are spent.
+3. **Driver finish (input within the cap).** The sample holds every
+   point, so each K is final after step 2: its labels converged (and
+   ``_nearest`` equals the pass's exact argmin), or its budget is spent.
+   ``_cluster_rows`` — the function the pass runs per Arrow batch — labels
+   the collected array by the final centroids and sums the
+   ``cluster_stats`` fields (Σ silhouette, Σd², max d, Σd) per cluster.
+   The sweep is a count, a collect and NumPy, with no Python worker.
+4. **Full passes (sampled input).** One ``mapInArrow`` over the points
+   with every active K's centroids in the closure (distances by
+   ``cellassign._d2acc``, the ``l2sq`` left fold) emits, per Arrow batch
+   and (k, cluster): the count, the coordinate sums, a label fingerprint
+   and the ``cluster_stats`` fields; one JVM ``groupBy(k, cl)`` aggregate
+   (its map-side partial merges a partition's batches) and one collect of
+   ΣK rows follow. A K is final when the pass's labels equal the labels of
+   its previous pass, or when its budget is spent; otherwise its centroids
+   become the pass means, which costs one update. Final Ks leave the
+   closure.
 
 Every result is therefore the ``cluster_stats`` of (final centroids, their
-nearest-centroid labels). When the input fits the sample, the driver
-updates are full-data updates and the first pass finds every K final: the
-sweep costs one pass, whatever the number of Ks.
+nearest-centroid labels).
 
-The fingerprint of a labelling is, per cluster, the count and the sums of
-two 31-bit halves of a 64-bit mix of each member's ``vec_id``: exact
-integers, independent of row order and partitioning, that cannot overflow
-a BIGINT below 2³² rows.
+The fingerprint of a pass's labelling is, per cluster, the count and the
+sums of two 31-bit halves of a 64-bit mix of each member's ``vec_id``:
+exact integers, independent of row order and partitioning, that cannot
+overflow a BIGINT below 2³² rows.
 
 Input contract: ``(vec_id BIGINT, x ARRAY<DOUBLE>)``; rows with a NULL
 ``x`` carry no geometry and are skipped (``indices.labeled_points``). A
 NaN, ±Inf or NULL coordinate, or a vector whose dimension differs from the
 others, raises ``ValueError`` naming a ``vec_id``: the driver checks the
-sample, and each pass counts such rows among the rest.
+sample (the whole input within the cap), and each pass counts such rows
+among the rest.
 """
 
 from __future__ import annotations
@@ -134,16 +140,20 @@ def fit_sweep(
         ids, X = _sample(hash_slice(pts, n, SAMPLE_CAP).toArrow())
         hi, lo = _id_hash(ids)
         xx = np.einsum("ij,ij->i", X, X)
-        state = {}
+        fits, state = [], {}
         for k in range(k_min, min(k_max, n) + 1):
             C = _kmeanspp(X, k, np.random.default_rng([seed, k]))
             if C is None:  # fewer than k distinct points
                 break
-            C, lab, used = _lloyd(X, xx, C, max_iter)
-            # sample labels are the full labelling only when nothing was cut
-            fp = None if sampled or lab is None else _fingerprint(lab, k, hi, lo)
-            state[k] = (C, fp, max_iter - used)
-        return _refine(pts, state, X.shape[1], t0)
+            C, _, used = _lloyd(X, xx, C, max_iter)
+            if sampled:
+                state[k] = (C, None, max_iter - used)
+            else:
+                # the sample is the input, so a pass would label it as
+                # _nearest did: converged, or out of budget, K is final
+                stats = _stats(_cluster_rows(k, X, C, hi, lo))
+                fits.append(Fit(k, C, stats, round(time.monotonic() - t0, 3)))
+        return _refine(pts, state, X.shape[1], t0) if sampled else fits
     finally:
         pts.unpersist()
 
@@ -166,24 +176,22 @@ def _refine(pts: DataFrame, state: dict, dim: int, t0: float) -> list[Fit]:
             rows = sorted(by_k.get(k, []), key=lambda r: r["cl"])
             new_fp = {r["cl"]: (r["n"], r["hi"], r["lo"]) for r in rows}
             if new_fp == fp or left == 0:
-                stats = [
-                    {
-                        "cluster": r["cl"],
-                        "n": r["n"],
-                        "s_sum": r["s_sum"],
-                        "ss": r["ss"],
-                        "max_d": r["max_d"],
-                        "s_i": r["d_sum"] / r["n"],
-                    }
-                    for r in rows
-                ]
-                fits.append(Fit(k, C, stats, round(time.monotonic() - t0, 3)))
+                fits.append(Fit(k, C, _stats(rows), round(time.monotonic() - t0, 3)))
             else:
                 C = C.copy()
                 for r in rows:
                     C[r["cl"]] = np.asarray(r["sums"]) / r["n"]
                 state[k] = (C, new_fp, left - 1)
     return sorted(fits, key=lambda f: f.k)
+
+
+def _stats(rows) -> list[dict]:
+    """The ``cluster_stats`` dicts of one K's pass rows (``_PASS_SCHEMA``
+    order, ascending by cluster)."""
+    return [
+        {"cluster": cl, "n": n, "s_sum": s, "ss": ss, "max_d": mx, "s_i": ds / n}
+        for _, cl, n, _, _, _, s, ss, mx, ds, _ in rows
+    ]
 
 
 def pass_frame(pts: DataFrame, cents: dict[int, np.ndarray], dim: int) -> DataFrame:
@@ -314,18 +322,6 @@ def _means(X: np.ndarray, lab: np.ndarray, C: np.ndarray) -> np.ndarray:
     return out
 
 
-def _fingerprint(lab: np.ndarray, k: int, hi: np.ndarray, lo: np.ndarray) -> dict:
-    """{cluster: (count, Σ hi, Σ lo)} of the non-empty clusters, as a pass
-    reports them."""
-    present, order, starts = _segments(lab, k)
-    cnt = np.bincount(lab)[present]
-    shi, slo = (np.add.reduceat(v[order], starts) for v in (hi, lo))
-    return {
-        int(c): (int(n), int(h), int(l))
-        for c, n, h, l in zip(present, cnt, shi, slo)
-    }
-
-
 # ---------------------------------------------------------------------------
 # shared by the driver and the pass
 # ---------------------------------------------------------------------------
@@ -391,6 +387,36 @@ def _usable(ids: np.ndarray, xcol: pa.ListArray, dim: int):
     return ok, X if wrong.any() else X[ok], bad
 
 
+def _cluster_rows(k: int, X, C, hi, lo) -> list[tuple]:
+    """Label ``X`` by nearest centroid (ties to the lowest cluster) and sum
+    its ``cluster_stats`` terms per cluster: d_own = √(own d²), d_other =
+    √(min other d²), silhouette (d_other − d_own) / max(d_own, d_other),
+    0 when both are 0."""
+    D = _d2acc(X, C)
+    rows = np.arange(len(X))
+    lab = np.argmin(D, axis=1)
+    own2 = D[rows, lab]
+    D[rows, lab] = np.inf
+    d_own, d_other = np.sqrt(own2), np.sqrt(D.min(axis=1))
+    g = np.maximum(d_own, d_other)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        sil = np.where(g > 0, (d_other - d_own) / g, 0.0)
+    present, order, starts = _segments(lab, k)
+    cnt = np.bincount(lab)[present]
+    sums = np.add.reduceat(X[order], starts)
+    hs, ls, s, ss, ds = (
+        np.add.reduceat(v[order], starts) for v in (hi, lo, sil, own2, d_own)
+    )
+    mx = np.maximum.reduceat(d_own[order], starts)
+    return [
+        (
+            k, int(c), int(cnt[i]), int(hs[i]), int(ls[i]), sums[i].tolist(),
+            float(s[i]), float(ss[i]), float(mx[i]), float(ds[i]), None,
+        )
+        for i, c in enumerate(present)
+    ]
+
+
 # ---------------------------------------------------------------------------
 # the pass (runs in Python workers)
 # ---------------------------------------------------------------------------
@@ -420,33 +446,3 @@ def _pass_fn(cents: list[tuple[int, np.ndarray]], dim: int):
                 )
 
     return fn
-
-
-def _cluster_rows(k: int, X, C, hi, lo) -> list[tuple]:
-    """Label ``X`` by nearest centroid (ties to the lowest cluster) and sum
-    its ``cluster_stats`` terms per cluster: d_own = √(own d²), d_other =
-    √(min other d²), silhouette (d_other − d_own) / max(d_own, d_other),
-    0 when both are 0."""
-    D = _d2acc(X, C)
-    rows = np.arange(len(X))
-    lab = np.argmin(D, axis=1)
-    own2 = D[rows, lab]
-    D[rows, lab] = np.inf
-    d_own, d_other = np.sqrt(own2), np.sqrt(D.min(axis=1))
-    g = np.maximum(d_own, d_other)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        sil = np.where(g > 0, (d_other - d_own) / g, 0.0)
-    present, order, starts = _segments(lab, k)
-    cnt = np.bincount(lab)[present]
-    sums = np.add.reduceat(X[order], starts)
-    hs, ls, s, ss, ds = (
-        np.add.reduceat(v[order], starts) for v in (hi, lo, sil, own2, d_own)
-    )
-    mx = np.maximum.reduceat(d_own[order], starts)
-    return [
-        (
-            k, int(c), int(cnt[i]), int(hs[i]), int(ls[i]), sums[i].tolist(),
-            float(s[i]), float(ss[i]), float(mx[i]), float(ds[i]), None,
-        )
-        for i, c in enumerate(present)
-    ]

@@ -412,6 +412,34 @@ def q_dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _drop_hot_buckets(bands: DataFrame, bucket: str, stats: dict | None) -> DataFrame:
+    """``bands`` (band, ``bucket``, …) without the buckets holding more
+    than MAX_BAND_BUCKET rows; ``stats``, when given, receives
+    ``dropped_buckets`` and ``dropped_band_rows`` (the rows they held).
+
+    Occupancy is one map-side combined agg over the band rows, and the hot
+    set is hot-bucket-scale (tiny by construction). It is collected here
+    rather than broadcast inside the caller's action — the same two jobs —
+    so the driver can report what the cap dropped. (An Observation on the
+    aggregate reads nothing whenever AQE prunes a subtree that ran empty,
+    e.g. when every bucket is hot.)"""
+    hot = (
+        bands.groupBy("band", bucket)
+        .agg(F.count(F.lit(1)).alias("occ"))
+        .where(F.col("occ") > MAX_BAND_BUCKET)
+        .collect()
+    )
+    if stats is not None:
+        stats["dropped_buckets"] = len(hot)
+        stats["dropped_band_rows"] = sum(r["occ"] for r in hot)
+    hot_b = local_frame(
+        bands.sparkSession,
+        [(r["band"], r[bucket]) for r in hot],
+        f"band INT, {bucket} {bands.schema[bucket].dataType.simpleString()}",
+    )
+    return bands.join(F.broadcast(hot_b), ["band", bucket], "left_anti")
+
+
 def minhash_pairs(
     d: DataFrame,
     threshold: float = 0.5,
@@ -471,26 +499,7 @@ def minhash_pairs(
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bh")
-    # hot-bucket cap (MAX_BAND_BUCKET note): occupancy is one map-side
-    # combined agg over the band rows, and the hot set is hot-bucket-scale
-    # (tiny by construction). It is collected here rather than broadcast
-    # inside the caller's action — the same two jobs — so the driver can
-    # report what the cap dropped. (An Observation on the aggregate reads
-    # nothing whenever AQE prunes a subtree that ran empty, e.g. when every
-    # bucket is hot.)
-    hot = (
-        bands.groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .where(F.col("occ") > MAX_BAND_BUCKET)
-        .collect()
-    )
-    if stats is not None:
-        stats["dropped_buckets"] = len(hot)
-        stats["dropped_band_rows"] = sum(r["occ"] for r in hot)
-    hot_b = local_frame(
-        d.sparkSession, [(r["band"], r["bh"]) for r in hot], "band INT, bh INT"
-    )
-    bands = bands.join(F.broadcast(hot_b), ["band", "bh"], "left_anti")
+    bands = _drop_hot_buckets(bands, "bh", stats)
     ca = bands.select(F.col("doc_id").alias("doc_a"), "band", "bh")
     cb = bands.select(F.col("doc_id").alias("doc_b"), "band", "bh")
     cands = (
@@ -582,10 +591,17 @@ def spark_bitvals(spark: SparkSession, bits: int) -> DataFrame:
     )
 
 
-def simhash_pairs(d: DataFrame, hamming_max: int = HAMMING_MAX) -> DataFrame:
+def simhash_pairs(
+    d: DataFrame, hamming_max: int = HAMMING_MAX, stats: dict | None = None
+) -> DataFrame:
     """Banded candidates (4 × 16-bit bands — pairs within Hamming ≤ 3 of a
     64-bit hash must share a band; wider radius trades recall) + exact
-    Hamming verification."""
+    Hamming verification.
+
+    Band buckets holding more than MAX_BAND_BUCKET docs are dropped, as in
+    ``minhash_pairs``: the hot buckets are collected when this function is
+    called, and ``stats``, when given, receives ``dropped_buckets`` and
+    ``dropped_band_rows``."""
     sig = simhash_signatures(d)
     bands = sig.select(
         "doc_id",
@@ -604,15 +620,8 @@ def simhash_pairs(d: DataFrame, hamming_max: int = HAMMING_MAX) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "simhash", "bb.band", "bb.bv")
-    # hot-bucket cap — same hazard and remedy as minhash_pairs
-    # (MAX_BAND_BUCKET note): an exact-dup clique shares every band value
-    hot_b = (
-        bands.groupBy("band", "bv")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .where(F.col("occ") > MAX_BAND_BUCKET)
-        .select("band", "bv")
-    )
-    bands = bands.join(F.broadcast(hot_b), ["band", "bv"], "left_anti")
+    # an exact-dup clique shares every band value (MAX_BAND_BUCKET note)
+    bands = _drop_hot_buckets(bands, "bv", stats)
     a = bands.select(
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"), "band", "bv"
     )

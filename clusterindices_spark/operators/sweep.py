@@ -8,11 +8,13 @@ curves elbow/peak at the true K).
 This engine does not train MLlib K-Means. ``kmeans_sweep`` (and
 ``gap_statistic``) run one k-means++/Lloyd loop for all K
 (``functions.lloyd``): greedy k-means++ and Lloyd updates on one
-deterministic driver sample, then full ``mapInArrow`` passes over the
-persisted points that update every unconverged K at once and emit each
-final K's ``cluster_stats`` — the pass the index suite needs
-(SURVEY.md §4.1), so an input within the sample cap costs one pass for the
-whole sweep. The initialisation differs from MLlib's k-means‖, so the
+deterministic driver sample. An input within the sample cap is the sample,
+so the driver finishes every K there: its ``cluster_stats`` — the pass the
+index suite needs (SURVEY.md §4.1) — come from the collected array, and
+the whole sweep is a count, one Arrow collect and NumPy, with no Python
+worker. A larger input runs full ``mapInArrow`` passes over the persisted
+points that update every unconverged K at once and emit each final K's
+``cluster_stats``. The initialisation differs from MLlib's k-means‖, so the
 centroids, and the index values, differ from the reference's on the same
 data; the indices of a row are always those of its own final centroids and
 nearest-centroid labels. The rest of the suite is arithmetic over K and K²
@@ -75,13 +77,16 @@ def kmeans_sweep(
     k-means++/Lloyd loop for all K (``functions.lloyd``).
 
     - ``max_iter``: Lloyd updates per K, wherever they run — first on the
-      driver sample until its labels stop changing, then any remaining
-      budget on full passes, until the labels stop changing.
+      driver sample until its labels stop changing; when the input exceeds
+      ``lloyd.SAMPLE_CAP``, any remaining budget on full passes, until the
+      labels stop changing.
     - ``seed``: K's k-means++ draws use ``numpy.random.default_rng([seed,
       k])`` over the sample sorted by vec_id, so the draws and the driver
       updates replay identically under any partitioning.
     - ``time_s``: wall seconds from the start of the sweep until that K's
-      row was final (Ks finalized by the same pass share it).
+      row was final. Within the sample cap each K is finished in the
+      driver in turn, so every K has its own time; above it, Ks finalized
+      by the same pass share that pass's time.
 
     Each row is the index suite of the K final centroids and their
     nearest-centroid labels. Degenerate inputs:
@@ -333,8 +338,10 @@ def gap_statistic(
     the last K never picks since it has no successor to compare).
 
     Pins: W_K = WSSSE (the paper's eq. 2 pooled-dispersion simplification
-    for squared-Euclidean), read as Σd² from each K's final pass of the
-    k-means++/Lloyd loop (``functions.lloyd``, the ``kmeans_sweep`` fit);
+    for squared-Euclidean), read as Σd² of each K's final centroids and
+    labels from the k-means++/Lloyd loop (``functions.lloyd``, the
+    ``kmeans_sweep`` fit; finished in the driver within the sample cap,
+    else by its final pass);
     reference datasets are uniform over the per-dim [min,max] bounding
     box, generated DETERMINISTICALLY via xxhash64(vec_id, dim, b) — no
     rand(), so replays and partitionings agree (the curation_split

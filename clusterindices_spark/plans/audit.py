@@ -1551,7 +1551,10 @@ def _sweep_index_probe(algo: str):
 
 def _lloyd_pass_probe(spark: SparkSession, sf_dir: str):
     """The k-means sweep's pass over the points (functions/lloyd), with one
-    representative K=3 fit's centroids in its closure."""
+    representative K=3 fit's centroids in its closure. At fixture scale the
+    sweep keys run no such pass (every input within ``lloyd.SAMPLE_CAP`` is
+    finished in the driver); the probe guards the plan of the sampled
+    path, which runs it for inputs above the cap."""
     from clusterindices_spark.functions import lloyd  # noqa: PLC0415
     from clusterindices_spark.operators.indices import (  # noqa: PLC0415
         labeled_points,

@@ -84,27 +84,14 @@ def fan_out(df: DataFrame) -> DataFrame:
     RDD conversion per call and reads the PRE-AQE partition count, so keep
     fan_out on scan-stage frames (as every current call site does) — on a
     derived frame the probe pays a full planner pass and can insert a
-    repartition AQE would have handled. The probe result is memoized per
-    analyzed plan (semanticHash), so repeated invocations of the same query
-    shape (bench loops, registry sweeps) pay it once.
+    repartition AQE would have handled. The probe runs on every call: the
+    partition count belongs to the files on disk now, and a path that was
+    overwritten keeps its analyzed plan.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        key = (id(df.sparkSession), df._jdf.queryExecution().analyzed().semanticHash())
-        nparts = _FANOUT_PROBE_CACHE.get(key)
-        if nparts is None:
-            nparts = df.rdd.getNumPartitions()
-            if len(_FANOUT_PROBE_CACHE) > 256:
-                _FANOUT_PROBE_CACHE.clear()
-            _FANOUT_PROBE_CACHE[key] = nparts
-    except Exception:
-        nparts = df.rdd.getNumPartitions()
-    if nparts < target:
+    if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-_FANOUT_PROBE_CACHE: dict[tuple[int, int], int] = {}
 
 
 def fan_out_by_bytes(

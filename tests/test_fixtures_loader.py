@@ -111,6 +111,22 @@ def test_fan_out_noop_on_well_partitioned_input(spark):
     assert fanned is df
 
 
+def test_fan_out_probes_an_overwritten_path(spark, tmp_path):
+    """The analyzed plan of a path is the same after the path is
+    overwritten, so the partition probe must read the files on disk now."""
+    from clusterindices_spark.sources.fixtures import fan_out
+
+    target = spark.sparkContext.defaultParallelism
+    path = f"{tmp_path}/documents.parquet"
+    spark.range(1000).coalesce(1).write.parquet(path)
+    one = load_table(spark, str(tmp_path), "documents")
+    assert fan_out(one) is not one
+    spark.range(1000).repartition(target).write.mode("overwrite").parquet(path)
+    many = load_table(spark, str(tmp_path), "documents")
+    assert many.rdd.getNumPartitions() >= target
+    assert fan_out(many) is many
+
+
 def test_fan_out_by_bytes_sizes_partitions_by_weight(spark):
     from pyspark.sql import functions as F
 

@@ -99,9 +99,49 @@ def test_sampled_path_recovers_planted_k_and_replays(spark, tmp_path, monkeypatc
     assert [r[:5] for r in a.collect()] == [r[:5] for r in b]
 
 
+def test_within_cap_sweep_runs_no_pass(spark, tmp_path, monkeypatch):
+    """Within the cap the driver holds every point, so every K is finished
+    there, and its rows are the one-pass rows of the same centroids."""
+    out = _write(spark, tmp_path, _blobs(true_k=3, per=80, seed=9), parts=3)
+    pts = labeled_points(spark, out)
+
+    def no_pass(*a, **kw):
+        raise AssertionError("pass_frame ran on an input within the sample cap")
+
+    monkeypatch.setattr(lloyd, "pass_frame", no_pass)
+    fits = lloyd.fit_sweep(pts, 2, 5, 42, 10)
+    assert [f.k for f in fits] == [2, 3, 4, 5]
+    monkeypatch.undo()
+    for fit in fits:
+        (one,) = lloyd._refine(pts, {fit.k: (fit.centroids, None, 0)}, 4, 0.0)
+        assert [r["cluster"] for r in fit.stats] == [r["cluster"] for r in one.stats]
+        for a, b in zip(fit.stats, one.stats):
+            assert a["n"] == b["n"]
+            for c in ("s_sum", "ss", "max_d", "s_i"):
+                assert math.isclose(a[c], b[c], rel_tol=1e-9, abs_tol=1e-12), (
+                    fit.k, c, a[c], b[c]
+                )
+
+
+def test_sampled_sweep_still_runs_passes(spark, tmp_path, monkeypatch):
+    out = _write(spark, tmp_path, _blobs(true_k=3, per=80, seed=9))
+    calls = []
+    real = lloyd.pass_frame
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(lloyd, "SAMPLE_CAP", 100)
+    monkeypatch.setattr(lloyd, "pass_frame", counted)
+    fits = lloyd.fit_sweep(labeled_points(spark, out), 2, 4, 42, 10)
+    assert [f.k for f in fits] == [2, 3, 4]
+    assert calls
+
+
 def test_sweep_runs_few_spark_jobs(spark, tmp_path):
-    """count, sample collect and one aggregated pass: the per-K MLlib fits
-    ran ~58 jobs for K=2..4."""
+    """count and sample collect, then NumPy in the driver (the input fits
+    the sample cap): the per-K MLlib fits ran ~58 jobs for K=2..4."""
     out = _write(spark, tmp_path, _blobs(per=200))
     sc = spark.sparkContext
     sc.setJobGroup("lloyd-job-count", "kmeans_sweep k 2..4")
@@ -111,7 +151,7 @@ def test_sweep_runs_few_spark_jobs(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert 0 < len(jobs) <= 8, sorted(jobs)
+    assert 0 < len(jobs) <= 6, sorted(jobs)
 
 
 _NAN, _INF = float("nan"), float("inf")

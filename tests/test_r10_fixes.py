@@ -315,9 +315,23 @@ def test_banded_tiers_drop_hot_buckets(spark):
                    for r in mh), "mega clique must not emit banded pairs"
     assert any(r["doc_a"] >= 10 and r["doc_b"] < 30 for r in mh), \
         "small near-dup group must still pair"
-    sh = simhash_pairs(d).collect()
+    stats = {}
+    sh = simhash_pairs(d, stats=stats).collect()
     assert not any(r["doc_a"] in mega_ids or r["doc_b"] in mega_ids
                    for r in sh)
+    # the drop is reported: every band of the clique is one hot bucket
+    assert stats["dropped_buckets"] >= 1
+    assert stats["dropped_band_rows"] >= len(mega)
+    clean = {}
+    simhash_pairs(
+        spark.createDataFrame(
+            small,
+            "doc_id bigint, text string, lang string, source string,"
+            " n_chars bigint",
+        ),
+        stats=clean,
+    ).collect()
+    assert clean == {"dropped_buckets": 0, "dropped_band_rows": 0}
 
 
 def test_path_trigrams_null_type_nullifies_window(spark):
