@@ -1,10 +1,11 @@
 """Vectorized nearest-centroid assignment and cell probing (guide §4.2).
 
 Every corpus-side nearest-centroid step runs here, as one NumPy pass behind
-``mapInArrow``: the IVF Lloyd rounds and index assignment
-(``similarity.ivf_build``), ``ivf_append_bucketed``, the corpus-side probe
-sets of ``knn_graph`` and ``semantic_pairs_ann``, and the PQ per-subspace
-encode (``pq.pq_train_encode``). Rows cross Arrow once, the distance matrix
+``mapInArrow``: the IVF index assignment (``similarity.ivf_build``),
+``ivf_append_bucketed``, the corpus-side probe sets of ``knn_graph`` and
+``semantic_pairs_ann``, and the PQ per-subspace encode
+(``pq.pq_train_encode``). The centroids themselves are fitted in the
+driver (``lloyd.fit_seeded``). Rows cross Arrow once, the distance matrix
 is a vectorized left fold, and the id/vector columns PASS THROUGH untouched
 (same Arrow buffers — values never reformatted). Evaluated per row as
 interpreted ``l2sq`` folds inside ``array_min``/``array_sort``, the same
@@ -33,8 +34,6 @@ tests/test_cellassign.py keeps as its reference:
   a NaN→+Inf key, with an explicit fix for the overflow-only +Inf-vs-NaN
   tie), and equal distances break to the lowest cl (centroids are
   pre-sorted by cl; first-index wins).
-- Row order is PRESERVED, so downstream floating aggregations (Lloyd's
-  per-(cluster,dim) avg) accumulate partials in the same sequence.
 - Plan identity: the kernel closure pickles the centroid arrays by VALUE,
   so two builds over the same centroids canonicalize ``sameResult`` and
   every downstream pin (functions/pins.py) behaves as with a broadcast
@@ -328,16 +327,11 @@ def make_probe_fn(cents, p: int, id_name: str, x_name: str):
     return fn
 
 
-def make_codes_fn(
-    books, id_name: str, m_name: str, sub_name: str, with_sub: bool = False
-):
+def make_codes_fn(books, id_name: str, m_name: str, sub_name: str):
     """mapInArrow generator for the PQ encode: (vec_id, m, sub) ->
-    (vec_id, m[, sub], code), bit-identical to get(array_sort(transform(
-    book, (d2, code))), 0).code after the broadcast join on m. Rows whose
-    m has no book row are dropped (inner-join semantics); input order is
-    preserved (downstream Lloyd averages stay bit-identical). ``with_sub``
-    passes the subvector column through untouched (the Lloyd update needs
-    it; the final encode does not and should not pay its Arrow bytes)."""
+    (vec_id, m, code), bit-identical to get(array_sort(transform(book,
+    (d2, code))), 0).code after the broadcast join on m. Rows whose m has
+    no book row are dropped (inner-join semantics)."""
     prepped = {int(m): _prep(book) for m, book in sorted(books.items())}
     mkeys = np.array(sorted(prepped), dtype="int64")
 
@@ -396,14 +390,10 @@ def make_codes_fn(
                     out[idx] = got
                     valid[idx] = v
             code_arr = pa.array(out, type=pa.int32(), mask=~valid)
-            cols = [b.column(ii), b.column(mi)]
-            names = [id_name, m_name]
-            if with_sub:
-                cols.append(b.column(si))
-                names.append(sub_name)
-            cols.append(code_arr)
-            names.append("code")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(ii), b.column(mi), code_arr],
+                names=[id_name, m_name, "code"],
+            )
 
     return fn
 
@@ -447,17 +437,15 @@ def probe_cells_kernel(
     )
 
 
-def assign_codes_kernel(
-    sub: DataFrame, books, id_col: str = "vec_id", with_sub: bool = False
-) -> DataFrame:
-    """(vec_id, m[, sub], code) via the vectorized kernel — the PQ encode's
-    argmin with inner-join-on-m semantics. ``books``: {m: [(code, c), ...]}."""
+def assign_codes_kernel(sub: DataFrame, books, id_col: str = "vec_id") -> DataFrame:
+    """(vec_id, m, code) via the vectorized kernel — the PQ encode's argmin
+    with inner-join-on-m semantics. ``books``: {m: [(code, c), ...]}."""
     src = sub.select(id_col, "m", _doubles("sub"))
-    fields = [src.schema[id_col], src.schema["m"]]
-    if with_sub:
-        fields.append(src.schema["sub"])
-    fields.append(T.StructField("code", T.IntegerType(), True))
-    return src.mapInArrow(
-        make_codes_fn(books, id_col, "m", "sub", with_sub=with_sub),
-        T.StructType(fields),
+    schema = T.StructType(
+        [
+            src.schema[id_col],
+            src.schema["m"],
+            T.StructField("code", T.IntegerType(), True),
+        ]
     )
+    return src.mapInArrow(make_codes_fn(books, id_col, "m", "sub"), schema)

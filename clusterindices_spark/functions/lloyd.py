@@ -1,8 +1,10 @@
-"""One k-means++/Lloyd loop for every K of a sweep.
+"""Driver-side Lloyd fits on one bounded sample: every K of a sweep, and
+the seeded single-K fits behind the IVF coarse quantizer and the PQ
+codebooks.
 
 The validity indices are centroid-based, so once the centroids are fixed
 one linear pass over the points yields every index (Luna-Romera et al.
-2018, §3–4). This module fits every K of a sweep on one driver sample and
+2018, §3–4). ``fit_sweep`` fits every K of a sweep on one driver sample and
 runs that pass in the driver whenever the sample is the whole input:
 
 1. **Sample.** One count, then one ``toArrow()`` collect (a JVM job, no
@@ -44,6 +46,14 @@ NaN, ±Inf or NULL coordinate, or a vector whose dimension differs from the
 others, raises ``ValueError`` naming a ``vec_id``: the driver checks the
 sample (the whole input within the cap), and each pass counts such rows
 among the rest.
+
+``fit_seeded`` is the third caller of the sample: ``similarity.ivf_build``
+(one block, K = ``n_cells``) and ``pq.pq_train_encode`` (one block per
+subspace) fit on it with fixed seeds, the first K usable sample rows, and
+``SEEDED_ITERS`` updates that drop the clusters an update leaves empty.
+Only the corpus-wide assignment and encode after it run in Spark, through
+the ``cellassign`` kernels. It skips unusable rows instead of raising:
+the kernels still assign them by their NULL-distance rule.
 """
 
 from __future__ import annotations
@@ -64,6 +74,8 @@ from pyspark.storagelevel import StorageLevel
 from clusterindices_spark.functions.cellassign import _d2acc
 
 SAMPLE_CAP = 100_000
+# Lloyd updates of every fit_seeded fit
+SEEDED_ITERS = 2
 
 _INT, _LONG, _DBL = T.IntegerType(), T.LongType(), T.DoubleType()
 _PASS_SCHEMA = T.StructType(
@@ -158,6 +170,33 @@ def fit_sweep(
         pts.unpersist()
 
 
+def fit_seeded(pts: DataFrame, k: int, blocks: int = 1) -> list[list[tuple]]:
+    """Seeded Lloyd fit of ``pts`` (vec_id, x ARRAY<DOUBLE>), per block of
+    columns: ``blocks`` splits x as ``pq._subvectors`` does (block i starts
+    at ⌊i·d/blocks⌋ and is ⌊d/blocks⌋ wide). Returns, per block, the
+    surviving [(cl, centroid list), ...] ascending by cl, where cl is the
+    seed's index among the first ``k`` usable sample rows."""
+    n = pts.count()
+    ids, xcol, dim = _sorted(hash_slice(pts, n, SAMPLE_CAP).toArrow())
+    _, X, _ = _usable(ids, xcol, dim)
+    # the slice bounds of _subvectors' Spark expression, in the same doubles
+    w = dim / blocks
+    starts = [int(i * w + 1) - 1 for i in range(blocks)]
+    return [_seeded(X[:, s : s + int(w)], k) for s in starts]
+
+
+def _seeded(X: np.ndarray, k: int) -> list[tuple]:
+    """``SEEDED_ITERS`` Lloyd updates from the first ``k`` rows of ``X``;
+    each update drops the clusters it leaves empty."""
+    cls, C = np.arange(min(k, len(X))), X[:k]
+    xx = np.einsum("ij,ij->i", X, X)
+    for _ in range(SEEDED_ITERS):
+        lab = _nearest(X, xx, C)
+        keep = np.unique(lab)
+        cls, C = cls[keep], _means(X, lab, C)[keep]
+    return [(int(cl), c.tolist()) for cl, c in zip(cls, C)]
+
+
 def _refine(pts: DataFrame, state: dict, dim: int, t0: float) -> list[Fit]:
     """Full passes until every K in ``state`` ({k: (centroids, fingerprint
     of the labels that produced them or None, updates left)}) is final."""
@@ -226,17 +265,22 @@ def pass_frame(pts: DataFrame, cents: dict[int, np.ndarray], dim: int) -> DataFr
 def _sample(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
     """(ids, X) of the collected sample sorted by vec_id; raises on rows the
     loop cannot use."""
-    table = table.sort_by([("vec_id", "ascending")])
-    ids = _ids(table.column("vec_id").combine_chunks())
-    xcol = table.column("x").combine_chunks()
-    if len(xcol) == 0:
-        return ids, np.zeros((0, 0))
-    lens = pc.list_value_length(xcol).to_numpy(zero_copy_only=False)
-    dim = int(np.bincount(lens).argmax())
+    ids, xcol, dim = _sorted(table)
     ok, X, bad = _usable(ids, xcol, dim)
     if bad:
         _raise_bad(bad, dim)
     return ids, X
+
+
+def _sorted(table: pa.Table) -> tuple[np.ndarray, pa.ListArray, int]:
+    """(ids, x column, most common dimension, 0 when empty) of a collected
+    sample sorted by vec_id, rows with a NULL vector dropped."""
+    table = table.sort_by([("vec_id", "ascending")])
+    table = table.filter(pc.is_valid(table.column("x")))
+    xcol = table.column("x").combine_chunks()
+    lens = pc.list_value_length(xcol).to_numpy(zero_copy_only=False)
+    dim = int(np.bincount(lens).argmax()) if len(lens) else 0
+    return _ids(table.column("vec_id").combine_chunks()), xcol, dim
 
 
 def _raise_bad(bad: dict, dim: int):
@@ -286,7 +330,10 @@ def _nearest(X: np.ndarray, xx: np.ndarray, C: np.ndarray) -> np.ndarray:
     """Nearest-centroid labels equal to the argmin of the exact left fold
     (``_d2acc``; ties to the lowest index). Distances are screened as
     ‖x‖² + ‖c‖² − 2x·c; a row whose two best screened distances lie within
-    the rounding bound of both forms is recomputed with the fold."""
+    the rounding bound of both forms is recomputed with the fold. Fewer
+    than two centroids label every row 0."""
+    if len(C) < 2:
+        return np.zeros(len(X), dtype=np.intp)
     cc = np.einsum("ij,ij->i", C, C)
     # einsum, not a BLAS matmul: BLAS worker threads spin between calls and
     # tripled the driver's CPU time for no wall gain

@@ -9,9 +9,10 @@ float32 — 64×), and approximate distances are computed WITHOUT decoding via
 a per-probe distance table (ADC: d²(q, x) ≈ Σ_m T[m][code_m(x)]).
 
 Spark-first shape:
-- training/encoding works on ONE exploded frame (vec_id, m, sub) — all M
-  subspaces train in the same Lloyd round (groupBy (m, code) instead of M
-  separate jobs), codebooks stay M broadcastable rows;
+- training is ``lloyd.fit_seeded`` on one driver sample, each subspace a
+  block of columns, so all M codebooks come from one count and one
+  collect; encoding is one Arrow pass over the exploded frame
+  (vec_id, m, sub), and codebooks stay M broadcastable rows;
 - the corpus-side cost of search is a scan of the CODES table (4 bytes/vec
   + the per-row M-term table-lookup fold) with zero shuffle before the
   per-probe top-k (partial+final WindowGroupLimit moves O(n·k) rows);
@@ -19,17 +20,19 @@ Spark-first shape:
   construction, computed from the M-row codebook without touching the
   corpus.
 
-Determinism: codebook seeds are the PQ_K lowest vec_ids' subvectors; every
-collect_list is array_sort'ed by an explicit key; ties in argmin break on
-(d2, code). Approximate by construction → rows-only driver check + recall /
-determinism / shape tests (tests/test_pq.py).
+Determinism: codebook seeds are the subvectors of the sample's PQ_K lowest
+vec_ids with a usable vector; every collect_list is array_sort'ed by an
+explicit key; ties in argmin break on (d2, code). Approximate by
+construction → rows-only driver check + recall / determinism / shape tests
+(tests/test_pq.py).
 
-Scale (100 TB): encoding is one scan + (m, code)-keyed Lloyd shuffles over
-M·K·dim-scale aggregates; search never shuffles the corpus (codes scan +
-broadcast tables) until the top-k. Compose with IVF cells (assign codes
-within each cell's residual space) to prune the scan itself; the codes
-table is small enough (4 bytes/vec) that even the unpruned scan is ~25 GB
-per 6G vectors.
+Scale (100 TB): training reads a fixed-size sample (at most
+``lloyd.SAMPLE_CAP`` vectors) into the driver, so its cost is constant in
+corpus size; encoding is one scan plus the vec_id reassembly shuffle;
+search never shuffles the corpus (codes scan + broadcast tables) until the
+top-k. Compose with IVF cells (assign codes within each cell's residual
+space) to prune the scan itself; the codes table is small enough (4
+bytes/vec) that even the unpruned scan is ~25 GB per 6G vectors.
 """
 
 from __future__ import annotations
@@ -40,7 +43,7 @@ from pyspark.sql import functions as F
 from clusterindices_spark.functions import cellassign as _ck
 from clusterindices_spark.functions.distances import l2sq, norm
 from clusterindices_spark.functions.local import local_frame
-from clusterindices_spark.functions.lloyd import hash_slice
+from clusterindices_spark.functions.lloyd import fit_seeded
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 M_SUBSPACES = 8  # 64-dim fixtures → 8 subvectors of 8 dims
@@ -56,13 +59,6 @@ PQ_N_PROBES = 10
 # nprobe=4); nprobe was NOT the binding constraint (4→6 changed nothing
 # below expand 32) — ADC ordering quality was.
 PQ_EXPAND = 64
-
-# diagnostics for the last COLD codebook fit (zero extra actions — all
-# values are computed by the fit anyway): n = distinct fit-universe size,
-# cap = sample_cap, sampled = whether the hash slice engaged. Read by
-# tools/scale_stress.py's ivfpq arm to prove BOTH composed legs hit their
-# sampled-fit paths at stress scale (VERDICT r10 item 6).
-_LAST_FIT: dict = {"n": None, "cap": None, "sampled": False}
 
 
 def _unit(emb: DataFrame) -> DataFrame:
@@ -89,68 +85,38 @@ def _subvectors(emb: DataFrame, m: int = M_SUBSPACES) -> DataFrame:
     )
 
 
-def _fold_codebook(cents: DataFrame) -> DataFrame:
-    """(m, code, c) rows → M rows (m, book ARRAY<STRUCT<code,c>>) for
-    broadcast argmin; book sorted by code for deterministic iteration."""
-    return cents.groupBy("m").agg(
-        F.array_sort(F.collect_list(F.struct("code", "c"))).alias("book")
-    )
-
-
-def _books_of(rows):
-    """{m: [(code, c), ...]} from collected codebook rows."""
-    return {
-        int(r["m"]): [(s["code"], s["c"]) for s in r["book"]] for r in rows
-    }
-
-
-def _update_codebook(assigned: DataFrame, d_sub: int) -> DataFrame:
-    """Lloyd update: per-(m, code) per-dimension mean as ONE hash agg with
-    d_sub avg expressions reassembled in-row — a posexplode +
-    double-groupBy formulation costs two extra stages per round for the
-    same M·K·d_sub-scale result (measured ~1 s/round of pure stage
-    overhead at sf0.1)."""
-    return assigned.groupBy("m", "code").agg(
-        F.array(
-            *[F.avg(F.get("sub", i)) for i in range(d_sub)]
-        ).alias("c")
-    )
-
-
 def pq_train_encode(
     emb: DataFrame,
     m: int = M_SUBSPACES,
     k: int = PQ_K,
-    lloyd_iters: int = 2,
     normalize: bool = True,
-    sample_cap: int | None = 100_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Train per-subspace codebooks and encode the corpus.
 
-    Sampled fit (r9 — the ivf_build pattern): codebook Lloyd refinement
-    is O(n·m·k) distance evaluations per round; the FIT now runs on a
-    deterministic hash-sample of at most ``sample_cap`` vectors (Knuth
-    mod-reduce on vec_id — no rand()) while the full corpus is encoded
-    exactly once. At fixed cap the training cost is constant in corpus
-    size; the encode stays one embarrassingly-parallel pass.
-    Gate/bench SFs sit under the default cap, so every oracle/recall
-    artifact is bit-identical to the unsampled path; ``None`` restores
-    full-corpus fit.
-
-    Every assignment (Lloyd rounds and the final encode) is the Arrow
-    kernel ``cellassign.assign_codes_kernel``, which casts ``sub`` to
+    Training is ``lloyd.fit_seeded`` with one block of columns per
+    subspace: one count, one ``toArrow()`` collect of the sample (the
+    whole corpus up to ``lloyd.SAMPLE_CAP`` vectors, else its
+    ``hash_slice``), then per subspace the seeds — the subvectors of the
+    ``k`` lowest-``vec_id`` sample rows with a usable vector — refined by
+    ``lloyd.SEEDED_ITERS`` Lloyd updates in NumPy. A code that an update
+    leaves empty is dropped, and the others keep their seed index. At a
+    fixed cap the training cost is constant in corpus size; the full
+    corpus is encoded exactly once, by the Arrow kernel
+    ``cellassign.assign_codes_kernel``, which casts ``sub`` to
     ``ARRAY<DOUBLE>``: a float32 (or other numeric) corpus is encoded from
-    distances computed in double, and its codebook is ``ARRAY<DOUBLE>``
-    once a Lloyd round has run.
+    distances computed in double, and its codebook is ``ARRAY<DOUBLE>``.
 
-    Returns ``(codebook, codes)``: codebook = M rows (m, book), codes =
-    (vec_id, codes ARRAY<INT> length M), both materialized (codebook is a
-    literal M×k×d_sub-double table, codes a persisted corpus-scale frame)
-    so downstream consumers never replay the Lloyd chain. The exploded
-    subvector frame is persisted across rounds — every Lloyd round plus
-    the final encode reads it, and unpersisted each consumer would replay
-    scan→normalize→explode (measured ~3 s of the 8.9 s training time at
-    sf0.1)."""
+    Vectors with a NULL or non-finite coordinate, or another dimension
+    than most, take no part in training (``_unit`` maps a zero vector to
+    an all-NULL one); the encode still gives every vector a code per
+    subspace, by the kernel's NULL-distance rule. (When such a vector was
+    a seed, its NULL distances outranked every real one and each subspace
+    trained a single code.) An input with no usable vector gives an empty
+    codebook and empty codes.
+
+    Returns ``(codebook, codes)``: codebook = M rows (m, book), a local
+    relation, codes = (vec_id, codes ARRAY<INT> length M), a persisted
+    corpus-scale frame."""
     from pyspark.storagelevel import StorageLevel
 
     from clusterindices_spark.functions.pins import repin
@@ -160,73 +126,14 @@ def pq_train_encode(
     # zero-residual vector (point == centroid) must not be dropped by the
     # zero-norm guard
     src = _unit(emb) if normalize else emb.select("vec_id", "x")
-    tag = "pq_sub" if normalize else "pq_sub_resid"
-    sub = repin(tag, _subvectors(src, m))
-    first = sub.select("sub").first()
-    if first is None:
-        # empty corpus: nothing to train or encode — empty codebook/codes
-        # with the contract schemas instead of first()[0] crashing (r9
-        # hostile empty gate); every downstream search yields 0 rows
-        spark = emb.sparkSession
-        folded = local_frame(
-            spark, [], "m INT, book ARRAY<STRUCT<code: INT, c: ARRAY<DOUBLE>>>"
-        )
-        codes = local_frame(
-            spark, [], "vec_id BIGINT, codes ARRAY<INT>"
-        )
-        return folded, codes
-    d_sub = len(first["sub"])
-    # fit set: full sub-vector frame under the cap, else a hash slice of
-    # ~sample_cap vectors (fraction from one count over the pinned frame;
-    # the filter re-evaluates over it per Lloyd reference)
-    sub_fit = sub
-    _LAST_FIT.update(n=None, cap=sample_cap, sampled=False)
-    if sample_cap is not None:
-        n = sub.select("vec_id").distinct().count()
-        _LAST_FIT.update(n=n, sampled=n > sample_cap)
-        sub_fit = hash_slice(sub, n, sample_cap)
-    # seeds = the FIT SET's k lowest vec_ids — seeding from the full
-    # corpus's lowest ids would lose every seed the hash sample dropped,
-    # silently shrinking the codebook below k (measured: recall@5 0.825
-    # vs 1.0 at a 1/3 sample before this fix)
-    seeds = sub_fit.join(
-        F.broadcast(
-            sub_fit.select("vec_id").distinct().orderBy("vec_id").limit(k)
-        ),
-        "vec_id",
+    books = {i: b for i, b in enumerate(fit_seeded(src, k, blocks=m)) if b}
+    codebook = local_frame(
+        emb.sparkSession,
+        sorted(books.items()),
+        "m INT, book ARRAY<STRUCT<code: INT, c: ARRAY<DOUBLE>>>",
     )
-    cents0 = seeds.groupBy("m").agg(
-        F.array_sort(F.collect_list(F.struct("vec_id", "sub"))).alias("sv")
-    )
-    folded = cents0.select(
-        "m",
-        F.transform(
-            "sv",
-            lambda s, i: F.struct(
-                i.cast("int").alias("code"), s["sub"].alias("c")
-            ),
-        ).alias("book"),
-    )
-    # each Lloyd round's n·m×k argmin is one vectorized Arrow pass
-    # (cellassign.assign_codes_kernel). The kernel needs the round's
-    # codebook driver-resident, so each round ends in one tiny collect
-    # (M×k×d_sub doubles); assignment values and order equal the HOF
-    # argmin reference (tests/test_cellassign.py), so the (m, code) avg
-    # accumulates the same partials.
-    rows = folded.collect()
-    for _ in range(lloyd_iters):
-        folded = _fold_codebook(
-            _update_codebook(
-                _ck.assign_codes_kernel(
-                    sub_fit, _books_of(rows), "vec_id", with_sub=True
-                ),
-                d_sub,
-            )
-        )
-        rows = folded.collect()
-    folded = local_frame(emb.sparkSession, rows, folded.schema)
     codes = (
-        _ck.assign_codes_kernel(sub, _books_of(rows), "vec_id")
+        _ck.assign_codes_kernel(_subvectors(src, m), books, "vec_id")
         .groupBy("vec_id")
         .agg(
             F.transform(
@@ -245,7 +152,7 @@ def pq_train_encode(
         StorageLevel.MEMORY_AND_DISK,
     )
     codes.count()
-    return folded, codes
+    return codebook, codes
 
 
 def pq_adc_topk(
@@ -496,7 +403,7 @@ def ivfpq_topk(
     )
 
     unit = _unit(emb)
-    folded_cells, index = ivf_build(unit, n_cells=n_cells, lloyd_iters=2)
+    folded_cells, index = ivf_build(unit, n_cells=n_cells)
     cells = unfold_cents(folded_cells).select(
         F.col("cluster").alias("cell"), F.col("centroid").alias("cc")
     )

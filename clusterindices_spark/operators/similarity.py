@@ -33,13 +33,10 @@ from clusterindices_spark.functions.distances import (
 )
 from clusterindices_spark.functions import cellassign as _ck
 from clusterindices_spark.functions.local import local_frame
-from clusterindices_spark.functions.lloyd import hash_slice
+from clusterindices_spark.functions.lloyd import fit_seeded
 from clusterindices_spark.sources.fixtures import fan_out, load_table
 
 N_PROBES = 10
-# last COLD centroid-fit diagnostics (pq.py's _LAST_FIT twin; zero extra
-# actions) — proves the sampled-fit path engaged at stress scale
-_LAST_FIT: dict = {"n": None, "cap": None, "sampled": False}
 TOP_K = 5
 # synthetic embeddings are near-orthogonal (max pairwise cos ≈ 0.51 at
 # sf0.01); 0.4 exercises the operator with non-empty output. Real corpora
@@ -430,7 +427,6 @@ def semantic_pairs_ann(
     threshold: float = COSINE_DUP_THRESHOLD,
     n_cells: int | None = None,
     n_probe_cells: int = 12,
-    lloyd_iters: int = 2,
     hot_cell_factor: int = 8,
 ) -> DataFrame:
     """Near-dup pair candidates via IVF cell co-bucketing — the
@@ -494,7 +490,7 @@ def semantic_pairs_ann(
         # planted-cluster membership is exact there at Θ(2·n^1.5) — the
         # knn_graph cost class, and what tools/scaling_curves.py measures.
         n_cells = max(8, math.isqrt(n) // 2)
-    folded, index = ivf_build(emb_v, n_cells=n_cells, lloyd_iters=lloyd_iters)
+    folded, index = ivf_build(emb_v, n_cells=n_cells)
     occ = index.groupBy("cell").agg(F.count(F.lit(1)).alias("occ"))
     cap = max(64, hot_cell_factor * max(n // n_cells, 1))
     # r14 (guide §8 — decide with small rows): the hot-cell set is
@@ -689,43 +685,6 @@ def _cents_of(rows):
     return [(s["cl"], s["c"]) for s in row["cents"]]
 
 
-def _centroids_folded(assigned: DataFrame) -> DataFrame:
-    """Per-cluster mean vectors folded STRAIGHT into the 1-row broadcast
-    form (cents: array<struct<cl,c>>, cl-sorted).
-
-    One posexplode→groupBy(cluster, dim) shuffle (map-side combined:
-    K×dim×partitions records regardless of n) + one global agg of the K×dim
-    result; the per-cluster array reassembly happens inside the single row
-    with HOFs. This deletes the intermediate groupBy(cluster) assembly stage
-    AND the downstream re-fold agg that the K-row `centroids_of` +
-    `_centroid_row` pairing costs per Lloyd round — measured ~0.3 s/round of
-    pure stage overhead at sf0.1 (the data volume is trivial; the stages
-    are not)."""
-    per_dim = (
-        assigned.select("cluster", F.posexplode("x").alias("dim", "val"))
-        .groupBy("cluster", "dim")
-        .agg(F.avg("val").alias("m"))
-    )
-    flat = per_dim.agg(
-        F.array_sort(
-            F.collect_list(F.struct("cluster", "dim", "m"))
-        ).alias("a")
-    )
-    cls_ = F.array_distinct(F.transform("a", lambda s: s["cluster"]))
-    return flat.select(
-        F.transform(
-            cls_,  # already ascending: `a` is sorted by (cluster, dim)
-            lambda cl: F.struct(
-                cl.alias("cl"),
-                F.transform(
-                    F.filter("a", lambda s: s["cluster"] == cl),
-                    lambda s: s["m"],
-                ).alias("c"),
-            ),
-        ).alias("cents")
-    )
-
-
 def fold_cents_table(cents: DataFrame) -> DataFrame:
     """Fold a K-row (cluster, centroid) table into the 1-row broadcast form."""
     return cents.agg(
@@ -742,91 +701,45 @@ def unfold_cents(folded: DataFrame) -> DataFrame:
     )
 
 
-def ivf_build(
-    emb: DataFrame,
-    n_cells: int = 8,
-    lloyd_iters: int = 2,
-    sample_cap: int | None = 100_000,
-) -> tuple[DataFrame, DataFrame]:
+def ivf_build(emb: DataFrame, n_cells: int = 8) -> tuple[DataFrame, DataFrame]:
     """IVF index build: coarse-quantize vectors into ``n_cells`` Voronoi
-    cells (seeds = lowest vec_ids, refined with ``lloyd_iters`` Lloyd
-    rounds — fully deterministic, no MLlib randomness).
+    cells — fully deterministic, no MLlib randomness.
 
-    Sampled fit (VERDICT r8 item 4 — the scale-correct BUILD path): Lloyd
-    refinement is O(n·K) distance evaluations PER ROUND, the one place the
-    IVF pipeline paid superlinearly in K at corpus scale (measured 166 s
-    at n_cells=64 over 5M vecs in the r8 stress). Centroid FIT now runs on
-    a deterministic hash-sample of at most ``sample_cap`` rows (overflow-
-    safe Knuth mod-reduce on vec_id — the r7 portable-hash convention; no
-    rand()), and the FULL corpus is distance-evaluated exactly once, at
-    the final index assignment. Build cost drops from O(n·K·iters + n·K)
-    to O(s·K·iters + n·K) with s = sample_cap: at 100 TB the fit cost is
-    CONSTANT in corpus size while assignment stays a single embarrassingly
-    parallel pass. Centroid quality is a sample estimate of the
-    same Voronoi means — recall floors are re-verified by the standing
-    bench gate (>=0.90) and the A/B lives in tools/scale_stress.py
-    (IVF_SAMPLE_CAP env). ``sample_cap=None`` restores full-corpus fit.
-    Gate/bench SFs (<=80k vecs) sit under the default cap, so their
-    builds — and every oracle/recall artifact — are bit-identical to the
-    unsampled path.
+    The fit is ``lloyd.fit_seeded`` on one driver sample (the whole corpus
+    up to ``lloyd.SAMPLE_CAP`` rows, else its ``hash_slice``): one count,
+    one ``toArrow()`` collect, then the seeds — the ``n_cells`` lowest
+    ``vec_id`` rows of the sample with a usable vector — refined by
+    ``lloyd.SEEDED_ITERS`` Lloyd updates in NumPy. A cell that an update
+    leaves empty is dropped, and the others keep their seed index as
+    ``cl``. The corpus is distance-evaluated once, by the index
+    assignment (``cellassign.assign_cells``, one Arrow pass), so the build
+    costs O(s·K·iters) driver work plus O(n·K) in Spark.
+
+    Rows with a NULL vector, a NULL or non-finite coordinate, or another
+    dimension than most take no part in the fit; the assignment still
+    places every row, by the kernel's NULL-distance rule. (When such a row
+    was a seed, its NULL distance outranked every real one and its cell
+    took every row.)
 
     Returns ``(folded_cents, index)``: the 1-row folded centroid table
-    (``unfold_cents`` gives the K-row form) and the inverted file
-    ``(neighbor_id, cell, xb)``. The whole build carries centroids in the
-    folded form — K-row tables only materialize at the storage boundary
-    (ivf_write_bucketed).
+    ``cents ARRAY<STRUCT<cl INT, c ARRAY<DOUBLE>>>`` (``unfold_cents``
+    gives the K-row form), a local relation, and the inverted file
+    ``(neighbor_id, cell, xb)``. K-row tables only materialize at the
+    storage boundary (ivf_write_bucketed).
 
     ``x`` is cast to ``ARRAY<DOUBLE>`` on entry (a no-op on double input),
-    so a float32 or other numeric corpus gets double seeds, centroids and
-    distances, and its ``xb`` is ``ARRAY<DOUBLE>``.
-
-    Each Lloyd round's assignment and the final index assignment are one
-    vectorized Arrow pass (``cellassign.assign_cells``). The kernel needs
-    the round's centroids driver-resident, so each round ends in one tiny
-    collect (one row of K×dim doubles); assignment order is preserved, so
-    every round's centroid row is bit-equal to the same rounds chained over
-    the ``array_min`` HOF reference (tests/test_cellassign.py)."""
+    so a float32 or other numeric corpus gets double centroids and
+    distances, and its ``xb`` is ``ARRAY<DOUBLE>``."""
     from pyspark.storagelevel import StorageLevel
 
     pts = emb.select(
         "vec_id", F.col("x").cast("array<double>").alias("x")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    seeds = (
-        pts.orderBy("vec_id")
-        .limit(n_cells)
-        .agg(F.array_sort(F.collect_list(F.struct("vec_id", "x"))).alias("sv"))
-        .select(
-            F.transform(
-                "sv",
-                lambda s, i: F.struct(
-                    i.cast("int").alias("cl"), s["x"].alias("c")
-                ),
-            ).alias("cents")
-        )
+    (cents,) = fit_seeded(pts, n_cells)
+    folded = local_frame(
+        emb.sparkSession, [(cents,)], "cents ARRAY<STRUCT<cl: INT, c: ARRAY<DOUBLE>>>"
     )
-    # fit set: the full corpus under the cap, else a deterministic hash
-    # slice of ~sample_cap rows (fraction from ONE count over the persisted
-    # points — the count doubles as the persist materializer). The filter
-    # re-evaluates over cached pts per Lloyd reference: cheaper than a
-    # second cache entry.
-    fit = pts
-    _LAST_FIT.update(n=None, cap=sample_cap, sampled=False)
-    if sample_cap is not None:
-        n = pts.count()
-        _LAST_FIT.update(n=n, sampled=n > sample_cap)
-        fit = hash_slice(pts, n, sample_cap)
-    cdf = seeds
-    rows = seeds.collect()
-    for _ in range(lloyd_iters):
-        cdf = _centroids_folded(
-            _ck.assign_cells(fit, _cents_of(rows), "vec_id", "x")
-        )
-        rows = cdf.collect()
-    # the FINAL centroid row goes back as a local relation: both downstream
-    # consumers (index assignment and probe-cell selection) read it, and a
-    # lazy row would re-execute the last round per consumer
-    folded = local_frame(emb.sparkSession, rows, cdf.schema)
-    index = _ck.assign_cells(pts, _cents_of(rows), "vec_id", "x").select(
+    index = _ck.assign_cells(pts, cents, "vec_id", "x").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
         F.col("x").alias("xb"),
@@ -926,7 +839,6 @@ def ivf_topk(
     k: int = TOP_K,
     n_cells: int = 8,
     n_probe_cells: int = 4,
-    lloyd_iters: int = 2,
 ) -> DataFrame:
     """IVF (inverted-file) ANN — the 100 TB scale path for similarity search.
 
@@ -938,7 +850,7 @@ def ivf_topk(
     rows-only check + recall property test vs topk_exact
     (tests/test_dedup_similarity.py).
     """
-    cents, index = ivf_build(emb, n_cells=n_cells, lloyd_iters=lloyd_iters)
+    cents, index = ivf_build(emb, n_cells=n_cells)
     return _ivf_search(cents, index, probes, k=k, n_probe_cells=n_probe_cells)
 
 
@@ -947,7 +859,6 @@ def ivf_write_bucketed(
     table: str,
     n_cells: int = 8,
     n_buckets: int | None = None,
-    lloyd_iters: int = 2,
 ) -> None:
     """Persist an IVF index with the inverted file bucketed by ``cell``
     (table ``{table}``) and the centroid table at ``{table}_cents``.
@@ -958,7 +869,7 @@ def ivf_write_bucketed(
     """
     from clusterindices_spark.sources.bucketing import drop_table, write_bucketed
 
-    folded, index = ivf_build(emb, n_cells=n_cells, lloyd_iters=lloyd_iters)
+    folded, index = ivf_build(emb, n_cells=n_cells)
     write_bucketed(index, table, "cell", n_buckets or n_cells)
     spark = emb.sparkSession
     drop_table(spark, f"{table}_cents")
@@ -1109,7 +1020,7 @@ def q_similarity_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     probes = emb.where(F.col("vec_id") < N_PROBES)
     k = TOP_K
     max_p = max(IVF_NPROBE_GRID)
-    folded, index = ivf_build(emb, n_cells=8, lloyd_iters=2)
+    folded, index = ivf_build(emb, n_cells=8)
     ranked = _probe_cells(probes, folded, max_p)
     # r14: the r13 norm hoist is REVERTED at this site — candidates here
     # are only probes × max_p × (n/K) rows (~20k at sf0.1, candidate-scale
@@ -1171,7 +1082,6 @@ def knn_graph(
     k: int = 5,
     n_cells: int | None = 16,
     n_probe_cells: int = 2,
-    lloyd_iters: int = 2,
 ) -> DataFrame:
     """Approximate k-NN GRAPH (every vector is a probe) — the neighbor
     graph behind near-dup clustering, label propagation, and graph-based
@@ -1211,7 +1121,7 @@ def knn_graph(
         import math
 
         n_cells = max(16, math.isqrt(emb.count()))
-    folded, index = ivf_build(emb, n_cells=n_cells, lloyd_iters=lloyd_iters)
+    folded, index = ivf_build(emb, n_cells=n_cells)
     # r14 candidate scoring (guide §4.2/§8): the cell equi-join's per-pair
     # interpreted HOF dot (the measured wall of this key — ~40 µs ×
     # n·p·(n/K) candidates inside the join filter) moves to a vectorized

@@ -159,8 +159,6 @@ def test_probe_kernel_equals_hof(spark, name, pts_rows, cents, p):
 
 
 def test_codes_kernel_equals_hof(spark):
-    from clusterindices_spark.operators.pq import _books_of, _fold_codebook
-
     sub_rows = [
         (1, 0, [0.1, 0.2]),
         (1, 1, [9.9, 0.3]),
@@ -175,24 +173,17 @@ def test_codes_kernel_equals_hof(spark):
     sub = spark.createDataFrame(
         sub_rows, "vec_id BIGINT, m INT, sub ARRAY<DOUBLE>"
     )
-    cents = spark.createDataFrame(
-        [
-            (0, 0, [0.0, 0.0]),
-            (0, 1, [10.0, 0.0]),
-            (0, 2, [0.0, 10.0]),
-            (1, 0, [0.0, 0.0]),
-            (1, 1, [5.0, 5.0]),
-        ],
-        "m INT, code INT, c ARRAY<DOUBLE>",
+    books = {
+        0: [(0, [0.0, 0.0]), (1, [10.0, 0.0]), (2, [0.0, 10.0])],
+        1: [(0, [0.0, 0.0]), (1, [5.0, 5.0])],
+    }
+    folded = spark.createDataFrame(
+        sorted(books.items()),
+        "m INT, book ARRAY<STRUCT<code: INT, c: ARRAY<DOUBLE>>>",
     )
-    folded = _fold_codebook(cents)
-    books = _books_of(folded.collect())
-    hof = _assign_codes(sub, folded).select("vec_id", "m", "sub", "code")
-    kern = ck.assign_codes_kernel(sub, books, "vec_id", with_sub=True)
-    assert _ordered_rows(kern.select("vec_id", "m", "sub", "code")) == _ordered_rows(hof)
-    # the no-sub form used by the final encode: same rows minus the column
-    kern2 = ck.assign_codes_kernel(sub, books, "vec_id", with_sub=False)
-    assert _ordered_rows(kern2) == _ordered_rows(hof.select("vec_id", "m", "code"))
+    hof = _assign_codes(sub, folded).select("vec_id", "m", "code")
+    kern = ck.assign_codes_kernel(sub, books, "vec_id")
+    assert _ordered_rows(kern) == _ordered_rows(hof)
 
 
 def test_kernel_closures_are_same_result(spark):
@@ -236,7 +227,7 @@ def _plan_str(df):
 
 def test_size_dispatch_and_memo_replay(spark):
     """ivf_build has one arm: a float64 corpus runs the Arrow kernel
-    (MapInArrow) at any size, sampled or not, and so does a float32 corpus
+    (MapInArrow) at any size, and so does a float32 corpus
     (cast to double at entry) — whose values, exact in float32, give the
     same index as the float64 copy. A repeat build replays to a sameResult
     plan with no result memo — the build is a pure function of its
@@ -247,14 +238,12 @@ def test_size_dispatch_and_memo_replay(spark):
     rows = [(i, [float(i % 7), float(i % 3)]) for i in range(100)]
     emb64 = _mk_pts(spark, rows)
     emb32 = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<FLOAT>")
-    _, i1 = ivf_build(emb64, n_cells=4, lloyd_iters=1)  # 400 evals
+    _, i1 = ivf_build(emb64, n_cells=4)  # 400 evals
     assert "MapInArrow" in _plan_str(i1)
-    _, i2 = ivf_build(emb64, n_cells=4, lloyd_iters=1)
+    _, i2 = ivf_build(emb64, n_cells=4)
     assert same_plan(i1, i2)
     assert _rows(i1) == _rows(i2)
-    _, i3 = ivf_build(emb64, n_cells=4, lloyd_iters=1, sample_cap=None)
-    assert "MapInArrow" in _plan_str(i3)
-    _, i4 = ivf_build(emb32, n_cells=4, lloyd_iters=1)
+    _, i4 = ivf_build(emb32, n_cells=4)
     assert "MapInArrow" in _plan_str(i4)
     assert _rows(i4) == _rows(i1)
     clear_pins()
@@ -262,8 +251,8 @@ def test_size_dispatch_and_memo_replay(spark):
 
 def test_pq_size_dispatch(spark):
     """Same single arm for the PQ encode: a tiny float64 corpus runs the
-    kernel with or without the sampling cap, and a float32 corpus runs it
-    too, encoding its float32-exact values exactly as the float64 copy."""
+    kernel, and a float32 corpus runs it too, encoding its float32-exact
+    values exactly as the float64 copy."""
     from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.operators.pq import pq_train_encode
 
@@ -271,29 +260,78 @@ def test_pq_size_dispatch(spark):
     emb64 = _mk_pts(spark, rows)
     emb32 = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<FLOAT>")
     got = {}
-    for name, emb, cap in (
-        ("f64", emb64, 100_000),
-        ("f64_nocap", emb64, None),
-        ("f32", emb32, 100_000),
-    ):
-        _, codes = pq_train_encode(
-            emb, m=4, k=4, lloyd_iters=1, sample_cap=cap, normalize=False
-        )
+    for name, emb in (("f64", emb64), ("f32", emb32)):
+        _, codes = pq_train_encode(emb, m=4, k=4, normalize=False)
         assert "MapInArrow" in _plan_str(codes), name
         got[name] = _rows(codes)
         clear_pins()
     assert got["f32"] == got["f64"]
 
 
-def test_fit_loop_kernel_equals_hof_chain(spark):
-    """End-to-end Lloyd fit: the kernel path's per-round collect+reembed
-    must produce the SAME centroid rows as the chained HOF plan built on
-    the `_assign_folded` reference."""
-    from clusterindices_spark.operators.similarity import (
-        _centroids_folded,
-        ivf_build,
-        unfold_cents,
+def _centroids_folded(assigned):
+    """Per-cluster mean vectors folded STRAIGHT into the 1-row broadcast
+    form (cents: array<struct<cl,c>>, cl-sorted).
+
+    One posexplode→groupBy(cluster, dim) shuffle (map-side combined:
+    K×dim×partitions records regardless of n) + one global agg of the K×dim
+    result; the per-cluster array reassembly happens inside the single row
+    with HOFs. This deletes the intermediate groupBy(cluster) assembly stage
+    AND the downstream re-fold agg that the K-row `centroids_of` +
+    `_centroid_row` pairing costs per Lloyd round — measured ~0.3 s/round of
+    pure stage overhead at sf0.1 (the data volume is trivial; the stages
+    are not)."""
+    per_dim = (
+        assigned.select("cluster", F.posexplode("x").alias("dim", "val"))
+        .groupBy("cluster", "dim")
+        .agg(F.avg("val").alias("m"))
     )
+    flat = per_dim.agg(
+        F.array_sort(
+            F.collect_list(F.struct("cluster", "dim", "m"))
+        ).alias("a")
+    )
+    cls_ = F.array_distinct(F.transform("a", lambda s: s["cluster"]))
+    return flat.select(
+        F.transform(
+            cls_,  # already ascending: `a` is sorted by (cluster, dim)
+            lambda cl: F.struct(
+                cl.alias("cl"),
+                F.transform(
+                    F.filter("a", lambda s: s["cluster"] == cl),
+                    lambda s: s["m"],
+                ).alias("c"),
+            ),
+        ).alias("cents")
+    )
+
+
+def _fold_codebook(cents):
+    """(m, code, c) rows → M rows (m, book ARRAY<STRUCT<code,c>>) for
+    broadcast argmin; book sorted by code for deterministic iteration."""
+    return cents.groupBy("m").agg(
+        F.array_sort(F.collect_list(F.struct("code", "c"))).alias("book")
+    )
+
+
+def _update_codebook(assigned, d_sub: int):
+    """Lloyd update: per-(m, code) per-dimension mean as ONE hash agg with
+    d_sub avg expressions reassembled in-row — a posexplode +
+    double-groupBy formulation costs two extra stages per round for the
+    same M·K·d_sub-scale result (measured ~1 s/round of pure stage
+    overhead at sf0.1)."""
+    return assigned.groupBy("m", "code").agg(
+        F.array(
+            *[F.avg(F.get("sub", i)) for i in range(d_sub)]
+        ).alias("c")
+    )
+
+
+def test_fit_loop_kernel_equals_hof_chain(spark):
+    """End-to-end Lloyd fit: the driver fit (lloyd.fit_seeded) must produce
+    the SAME centroid rows as the chained Spark plan of `_assign_folded`
+    and `_centroids_folded` rounds."""
+    from clusterindices_spark.functions.lloyd import SEEDED_ITERS
+    from clusterindices_spark.operators.similarity import ivf_build, unfold_cents
 
     rows = [
         (i, [float((i * 37) % 11), float((i * 53) % 7), float(i % 5)])
@@ -313,8 +351,45 @@ def test_fit_loop_kernel_equals_hof_chain(spark):
         )
     )
     folded_hof = seeds
-    for _ in range(2):
+    for _ in range(SEEDED_ITERS):
         folded_hof = _centroids_folded(_assign_folded(emb, folded_hof))
     hof_rows = _rows(unfold_cents(folded_hof))
-    ck_folded, _ = ivf_build(emb, n_cells=4, lloyd_iters=2, sample_cap=None)
+    ck_folded, _ = ivf_build(emb, n_cells=4)
     assert _rows(unfold_cents(ck_folded)) == hof_rows
+
+
+def test_pq_fit_equals_spark_codebook_chain(spark):
+    """The PQ twin: the driver codebook equals the chained Spark plan of
+    `_assign_codes`, `_update_codebook` and `_fold_codebook` rounds from
+    the k lowest vec_ids' subvectors, on integer-valued input (so every
+    mean is exact in any summation order). Seed 1 duplicates seed 0, so
+    code 1 empties in the first round and is dropped from both."""
+    from clusterindices_spark.functions.lloyd import SEEDED_ITERS
+    from clusterindices_spark.operators.pq import _subvectors, pq_train_encode
+
+    rows = [(0, [1.0, 2.0, 3.0, 4.0]), (1, [1.0, 2.0, 3.0, 4.0])] + [
+        (i, [float((i * 7) % 5), float(i % 3), float((i * 5) % 4), float(i % 6)])
+        for i in range(2, 40)
+    ]
+    emb = _mk_pts(spark, rows)
+    m, k = 2, 4
+    sub = _subvectors(emb, m)
+    seeds = sub.join(
+        F.broadcast(sub.select("vec_id").distinct().orderBy("vec_id").limit(k)),
+        "vec_id",
+    )
+    folded = seeds.groupBy("m").agg(
+        F.array_sort(F.collect_list(F.struct("vec_id", "sub"))).alias("sv")
+    ).select(
+        "m",
+        F.transform(
+            "sv",
+            lambda s, i: F.struct(i.cast("int").alias("code"), s["sub"].alias("c")),
+        ).alias("book"),
+    )
+    for _ in range(SEEDED_ITERS):
+        folded = _fold_codebook(_update_codebook(_assign_codes(sub, folded), 2))
+    codebook, _ = pq_train_encode(emb, m=m, k=k, normalize=False)
+    assert _rows(codebook) == _rows(folded)
+    for r in codebook.collect():
+        assert [s["code"] for s in r["book"]] == [0, 2, 3], r["m"]

@@ -849,7 +849,7 @@ def test_ivf_build_sees_overwritten_input(spark, tmp_path):
     schema = "vec_id BIGINT, x ARRAY<DOUBLE>"
 
     def cents(p):
-        folded, _ = ivf_build(spark.read.parquet(str(p)), n_cells=3, lloyd_iters=2)
+        folded, _ = ivf_build(spark.read.parquet(str(p)), n_cells=3)
         return sorted((r["cluster"], r["centroid"]) for r in unfold_cents(folded).collect())
 
     _write_parquet(

@@ -2,7 +2,9 @@
 (functions/lloyd.py): its rows are the index suite of its own final
 centroids, they do not depend on partitioning or on the sample cap, the
 sweep runs a handful of Spark jobs, degenerate inputs give their stated
-results, and MLlib K-Means is gone from the package."""
+results, and MLlib K-Means is gone from the package. The seeded fits of
+the IVF coarse quantizer and the PQ codebooks (lloyd.fit_seeded) leave
+unusable rows out of their seeds."""
 
 from __future__ import annotations
 
@@ -249,3 +251,45 @@ def test_package_does_not_use_mllib_kmeans():
                 if v.found:
                     hits[os.path.relpath(path, _PKG)] = v.found
     assert hits == {}
+
+
+def test_seeded_fits_skip_null_seeds(spark):
+    """A NULL vector among the n_cells lowest vec_ids must not seed a cell:
+    its NULL distance would outrank every real one and the cell would take
+    every row. Likewise a zero vector among PQ's k lowest ids, all-NULL
+    once ``_unit`` scales it, must not leave one code per subspace. Every
+    row is still assigned (and every non-NULL vector encoded)."""
+    from clusterindices_spark.functions.pins import clear_pins
+    from clusterindices_spark.operators.pq import pq_train_encode
+    from clusterindices_spark.operators.similarity import ivf_build
+
+    rows = [(0, [1.0, 0.0, 0.0, 1.0]), (1, None), (2, [0.0, 0.0, 0.0, 0.0])] + [
+        (i, [float(i % 4) + 1, float(i % 3), float((i * 7) % 5), float(i % 2) + 1])
+        for i in range(3, 40)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<DOUBLE>")
+    _, index = ivf_build(emb, n_cells=4)
+    got = index.select("neighbor_id", "cell").collect()
+    assert sorted(r["neighbor_id"] for r in got) == list(range(40))
+    assert len({r["cell"] for r in got}) > 1
+    codebook, codes = pq_train_encode(emb, m=2, k=4)
+    books = codebook.collect()
+    assert len(books) == 2 and all(len(r["book"]) > 1 for r in books)
+    coded = codes.collect()
+    # _unit drops the NULL vector; the zero vector is still encoded
+    assert sorted(r["vec_id"] for r in coded) == [0] + list(range(2, 40))
+    assert all(len(r["codes"]) == 2 and None not in r["codes"] for r in coded)
+    clear_pins()
+
+
+def test_seeded_fit_of_identical_rows_keeps_one_cell(spark):
+    """Identical seeds tie on every row, so the first update leaves one
+    cell and the next update runs with a single centroid."""
+    from clusterindices_spark.operators.similarity import ivf_build, unfold_cents
+
+    emb = spark.createDataFrame(
+        [(i, [2.0, -1.0]) for i in range(6)], "vec_id BIGINT, x ARRAY<DOUBLE>"
+    )
+    folded, index = ivf_build(emb, n_cells=3)
+    assert [tuple(r) for r in unfold_cents(folded).collect()] == [(0, [2.0, -1.0])]
+    assert {r["cell"] for r in index.collect()} == {0}

@@ -149,7 +149,7 @@ def test_pq_codebook_sees_overwritten_input(spark, tmp_path):
         )
 
     def book(p):
-        folded, _ = pq_train_encode(spark.read.parquet(str(p)), m=2, k=4, lloyd_iters=1)
+        folded, _ = pq_train_encode(spark.read.parquet(str(p)), m=2, k=4)
         return sorted((r["m"], r["book"]) for r in folded.collect())
 
     write(path, [(i, [float((i * 7) % 5 + 1), 1.0, float(i % 3), 2.0]) for i in range(32)])

@@ -182,8 +182,8 @@ def test_fit_sample_hash_pmod_on_negative_ids(spark):
     """ADVICE r10 low: the fit-sample filter must reduce NEGATIVE ids
     into [0, 1000003) so the cap holds; sign-preserving % passed every
     negative id. Pins both the expression semantics and that the one
-    source site, lloyd.hash_slice (called by the IVF and PQ fits), uses
-    pmod."""
+    source site, lloyd.hash_slice (called by lloyd.fit_seeded, the IVF and
+    PQ fits), uses pmod."""
     expr = "pmod(pmod(vec_id, 1000003) * 2654435761, 1000003)"
     df = spark.range(-4000, 0).withColumnRenamed("id", "vec_id")
     lo, hi, n_under = (
@@ -208,8 +208,9 @@ def test_fit_sample_hash_pmod_on_negative_ids(spark):
     for mod in (lloyd, pqmod, simmod):
         src = inspect.getsource(mod)
         assert "(vec_id % 1000003) * 2654435761" not in src
+    assert "hash_slice(" in inspect.getsource(lloyd.fit_seeded)
     for mod in (pqmod, simmod):
-        assert "hash_slice(" in inspect.getsource(mod)
+        assert "fit_seeded(" in inspect.getsource(mod)
 
 
 def test_bench_hist_medians_same_sf_only(tmp_path):

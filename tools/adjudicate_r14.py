@@ -93,7 +93,7 @@ def main() -> int:
         probes = emb.where(F.col("vec_id") < sm.N_PROBES)
         k = sm.TOP_K
         max_p = max(sm.IVF_NPROBE_GRID)
-        folded, index = sm.ivf_build(emb, n_cells=8, lloyd_iters=2)
+        folded, index = sm.ivf_build(emb, n_cells=8)
         ranked = (
             probes.select(F.col("vec_id").alias("probe_id"), "x")
             .crossJoin(F.broadcast(folded))

@@ -3,7 +3,7 @@
 
 Generates the deterministic scaling_curves embeddings fixture at N rows,
 then times each phase of similarity_ann_pq with the noop sink:
-  fit      — pq_train_encode's Lloyd chain + codebook collect (+ encode/pin)
+  fit      — pq_train_encode's driver fit (count + sample collect) + encode/pin
   encode   — the corpus-scale code assignment (pinned codes count)
   adc      — pq_adc_topk over the pinned codes (k*expand candidates)
   rerank   — pq_topk_reranked end to end (includes adc)

@@ -164,9 +164,10 @@ def stress_ivf(spark) -> dict:
         ivf_build,
     )
 
+    from clusterindices_spark.functions.lloyd import SAMPLE_CAP
+
     n_vecs = int(os.environ.get("IVF_VECS", "5000000"))
     n_cells = int(os.environ.get("IVF_CELLS", "8"))
-    sample_cap = int(os.environ.get("IVF_SAMPLE_CAP", "100000"))
     dim = 16
     # cluster 0 gets 90%; 1..7 split the rest. center(c)[j] = 10c; noise
     # in [-0.5, 0.5) from a per-(id, j) hash — fully deterministic.
@@ -189,28 +190,15 @@ def stress_ivf(spark) -> dict:
     )
     emb.count()
 
-    # Build A/B (VERDICT r8 item 4): sampled-fit Lloyd (cap rows) vs the
-    # full-corpus fit. Same seeds, same round count — the only difference
-    # is the point set the centroid means are estimated from. A throwaway
-    # 2-cell build absorbs the one-time codegen/stage warmup so neither arm
-    # pays it (first-build-runs-cold confounded the walls otherwise).
-    ivf_build(emb, n_cells=2, lloyd_iters=1, sample_cap=sample_cap)[1].count()
+    # A throwaway 2-cell build absorbs the one-time codegen/stage warmup
+    # (first-build-runs-cold confounds the wall otherwise).
+    ivf_build(emb, n_cells=2)[1].count()
     t0 = time.monotonic()
-    cents, index = ivf_build(
-        emb, n_cells=n_cells, lloyd_iters=2, sample_cap=sample_cap
-    )
+    cents, index = ivf_build(emb, n_cells=n_cells)
     index = index.persist()
     hist = index.groupBy("cell").count().collect()
     build_sec = time.monotonic() - t0
     sizes = sorted((r["count"] for r in hist), reverse=True)
-
-    t0 = time.monotonic()
-    cents_full, index_full = ivf_build(
-        emb, n_cells=n_cells, lloyd_iters=2, sample_cap=None
-    )
-    index_full = index_full.persist()
-    index_full.count()
-    build_full_sec = time.monotonic() - t0
 
     def search(cents_, index_, probe_ids, n_probe_cells=1):
         # _probe_cells renames (vec_id, x) -> (probe_id, xa) itself
@@ -232,27 +220,22 @@ def stress_ivf(spark) -> dict:
 
     # recall floor at the stress scale: nprobe=n_cells IS exact top-k
     # (bit-identical round + tie-break — the r7 one-scan lesson), so the
-    # exact ground truth reuses the same search kernel. Either index works
-    # as the exact oracle (every cell probed ⇒ every vector scanned).
+    # exact ground truth reuses the same search kernel (every cell probed
+    # ⇒ every vector scanned).
     probe_ids = hot_ids + cold_ids
     _, exact = search(cents, index, probe_ids, n_probe_cells=n_cells)
-    _, got_sampled = search(cents, index, probe_ids)
-    _, got_full = search(cents_full, index_full, probe_ids)
-    recall_sampled = round(len(got_sampled & exact) / len(exact), 4)
-    recall_full = round(len(got_full & exact) / len(exact), 4)
+    _, got = search(cents, index, probe_ids)
 
     part = _part_rows(index, ["cell"])
-    emb.unpersist(), index.unpersist(), index_full.unpersist()
+    emb.unpersist(), index.unpersist()
     return {
         "metric": "ivf_skew_stress",
         "n_vecs": n_vecs,
         "n_cells": n_cells,
         "dim": dim,
-        "sample_cap": sample_cap,
+        "sampled": n_vecs > SAMPLE_CAP,
         "build_sec": round(build_sec, 1),
-        "build_full_sec": round(build_full_sec, 1),
-        "recall_at10_nprobe1_sampled": recall_sampled,
-        "recall_at10_nprobe1_full": recall_full,
+        "recall_at10_nprobe1": round(len(got & exact) / len(exact), 4),
         "cell_sizes_desc": sizes[:10],
         "cell_skew_max_over_mean": round(sizes[0] / (n_vecs / len(sizes)), 2),
         "hot_probe_sec": hot_sec,
@@ -262,10 +245,10 @@ def stress_ivf(spark) -> dict:
 
 
 def stress_pq(spark) -> dict:
-    """PQ codebook-training A/B at corpus scale: sampled fit (the r9
-    ivf_build pattern applied to pq_train_encode) vs full-corpus fit.
-    Train+encode wall for each arm plus recall@5 of the deployed
-    ADC-over-retrieve search against exact cosine top-k."""
+    """PQ codebook training at corpus scale (a driver fit on the
+    lloyd.SAMPLE_CAP sample): train+encode wall plus recall@5 of the
+    deployed ADC-over-retrieve search against exact cosine top-k."""
+    from clusterindices_spark.functions.lloyd import SAMPLE_CAP
     from clusterindices_spark.operators.pq import (
         pq_topk_reranked,
         pq_train_encode,
@@ -273,7 +256,6 @@ def stress_pq(spark) -> dict:
     from clusterindices_spark.operators.similarity import topk_exact
 
     n_vecs = int(os.environ.get("PQ_VECS", "2000000"))
-    sample_cap = int(os.environ.get("PQ_SAMPLE_CAP", "100000"))
     dim = 16  # divisible by M_SUBSPACES=8 (d_sub=2)
     x = F.transform(
         F.sequence(F.lit(0), F.lit(dim - 1)),
@@ -293,41 +275,33 @@ def stress_pq(spark) -> dict:
         for r in topk_exact(emb, probes, k=5).collect()
     }
 
-    walls, recalls = {}, {}
-    for arm, cap in (("sampled", sample_cap), ("full", None)):
-        t0 = time.monotonic()
-        codebook, codes = pq_train_encode(emb, sample_cap=cap)
-        walls[arm] = round(time.monotonic() - t0, 1)
-        got = {
-            (r["probe_id"], r["neighbor_id"])
-            for r in pq_topk_reranked(
-                codebook, codes, emb, probes, k=5
-            ).collect()
-        }
-        recalls[arm] = round(len(got & exact) / max(len(exact), 1), 4)
+    t0 = time.monotonic()
+    codebook, codes = pq_train_encode(emb)
+    wall = round(time.monotonic() - t0, 1)
+    got = {
+        (r["probe_id"], r["neighbor_id"])
+        for r in pq_topk_reranked(codebook, codes, emb, probes, k=5).collect()
+    }
     emb.unpersist()
     return {
         "metric": "pq_build_stress",
         "n_vecs": n_vecs,
         "dim": dim,
-        "sample_cap": sample_cap,
-        "train_encode_sec_sampled": walls["sampled"],
-        "train_encode_sec_full": walls["full"],
-        "recall_at5_sampled": recalls["sampled"],
-        "recall_at5_full": recalls["full"],
+        "sampled": n_vecs > SAMPLE_CAP,
+        "train_encode_sec": wall,
+        "recall_at5": round(len(got & exact) / max(len(exact), 1), 4),
     }
 
 
 def stress_ivfpq(spark) -> dict:
     """IVF-PQ composed-build stress (VERDICT r10 item 6): one end-to-end
-    ivfpq_topk at corpus scale, proving BOTH legs (coarse-quantizer Lloyd
-    via ivf_build, residual codebooks via pq_train_encode) engage their
-    sampled-fit paths — read from the legs' _LAST_FIT diagnostics, not
-    assumed — and that the composed recall vs exact cosine top-k holds the
-    bench floor (0.85) with two stacked sample estimates."""
+    ivfpq_topk at corpus scale, where both legs (the coarse quantizer via
+    ivf_build, the residual codebooks via pq_train_encode) fit on the
+    lloyd.SAMPLE_CAP sample once n_vecs exceeds it, and the composed recall
+    vs exact cosine top-k must hold the bench floor (0.85) with two stacked
+    sample estimates."""
+    from clusterindices_spark.functions.lloyd import SAMPLE_CAP
     from clusterindices_spark.functions.pins import clear_pins
-    from clusterindices_spark.operators import pq as pqmod
-    from clusterindices_spark.operators import similarity as simmod
     from clusterindices_spark.operators.pq import ivfpq_topk
     from clusterindices_spark.operators.similarity import topk_exact
 
@@ -359,7 +333,6 @@ def stress_ivfpq(spark) -> dict:
         for r in ivfpq_topk(emb, probes, k=5).collect()
     }
     wall = round(time.monotonic() - t0, 1)
-    fit = {"ivf": dict(simmod._LAST_FIT), "pq": dict(pqmod._LAST_FIT)}
     emb.unpersist()
     return {
         "metric": "ivfpq_composed_build_stress",
@@ -367,11 +340,7 @@ def stress_ivfpq(spark) -> dict:
         "dim": dim,
         "build_search_sec": wall,
         "recall_at5_vs_exact": round(len(got & exact) / max(len(exact), 1), 4),
-        "ivf_fit": fit["ivf"],
-        "pq_fit": fit["pq"],
-        "both_legs_sampled": bool(
-            fit["ivf"]["sampled"] and fit["pq"]["sampled"]
-        ),
+        "sampled": n_vecs > SAMPLE_CAP,
     }
 
 
