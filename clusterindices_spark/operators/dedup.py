@@ -13,7 +13,12 @@ Four tiers, all over ``documents``:
 Scale posture: every tier is (scan → per-row expression work → one or two
 hash-key shuffles). MinHash banding shuffles by (band, band_hash) — the
 classic way to avoid the O(n²) pair explosion at 100 TB; candidate
-verification only touches bucket-mates. The exact-Jaccard tier self-joins on
+verification only touches bucket-mates. When the per-doc band table, the
+candidate pairs and the candidates' shingles each fit LOCAL_LSH_ROWS rows,
+the banding and the verification run in the driver instead (two bounded
+collects, no join). A corpus over the budget first pays for the bounded
+band-table collect, then takes the band shuffle and the verification
+joins. The exact-Jaccard tier self-joins on
 shingle with stop-shingles (document frequency > MAX_SHINGLE_DF) removed
 first, so one boilerplate shingle can't quadratically explode the join; it
 exists as the oracle-able ground-truth tier, the LSH tiers are the scale
@@ -24,10 +29,11 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import DoubleType, IntegralType, StructField, StructType
 
 from clusterindices_spark.functions.local import arrow_frame, local_frame
 from clusterindices_spark.functions.text import (
@@ -65,6 +71,12 @@ MAX_BAND_BUCKET = 100
 # the driver instead of by further Spark rounds — 32 MB as two int64
 # Arrow columns.
 LOCAL_CC_EDGES = 1 << 21
+# Budget of the MinHash driver finish (minhash_pairs): band rows
+# (docs × bands), candidate pairs (Σ C(s,2) over the kept buckets) and the
+# candidate docs' shingle rows must each number at most this many for the
+# banding, the hot-bucket cap and the exact-Jaccard verification to run in
+# NumPy on the driver; any count over it runs the Spark joins instead.
+LOCAL_LSH_ROWS = 1 << 21
 SIMHASH_BITS = 63  # 63 keeps the packed value inside a signed int64
 JACCARD_THRESHOLD = 0.2
 # Stop-shingle cap for the exact-Jaccard tier: a shingle appearing in more
@@ -417,6 +429,10 @@ def _drop_hot_buckets(bands: DataFrame, bucket: str, stats: dict | None) -> Data
     than MAX_BAND_BUCKET rows; ``stats``, when given, receives
     ``dropped_buckets`` and ``dropped_band_rows`` (the rows they held).
 
+    The Spark form of the cap: ``simhash_pairs`` always runs it,
+    ``minhash_pairs`` only above LOCAL_LSH_ROWS (below it ``_band_pairs``
+    applies the same rule in NumPy).
+
     Occupancy is one map-side combined agg over the band rows, and the hot
     set is hot-bucket-scale (tiny by construction). It is collected here
     rather than broadcast inside the caller's action — the same two jobs —
@@ -440,6 +456,168 @@ def _drop_hot_buckets(bands: DataFrame, bucket: str, stats: dict | None) -> Data
     return bands.join(F.broadcast(hot_b), ["band", bucket], "left_anti")
 
 
+def _runs(counts):
+    """(i, j) for every j < counts[i], i ascending — the rows of a join
+    that matches input row i with counts[i] rows."""
+    i = np.repeat(np.arange(len(counts)), counts)
+    j = np.arange(len(i)) - np.repeat(np.cumsum(counts) - counts, counts)
+    return i, j
+
+
+def _band_pairs(ids, valid, bh, stats):
+    """Row pairs (ra, rb), ids[ra] < ids[rb], of the per-doc band table
+    that share a band bucket — ``_drop_hot_buckets`` plus the candidate
+    self-join and its distinct, in NumPy — or None when Σ C(s,2) over the
+    kept buckets exceeds LOCAL_LSH_ROWS.
+
+    ``bh[b]`` holds band b's hash of every row. A bucket's occupancy
+    counts every band row, NULL ``doc_id`` included; buckets over
+    MAX_BAND_BUCKET are dropped and reported in ``stats``; a NULL
+    ``doc_id`` is never paired."""
+    n_bands, n = bh.shape
+    band = np.repeat(np.arange(n_bands, dtype=np.int64), n)
+    key = (band << 32) | (bh.ravel().astype(np.int64) & 0xFFFFFFFF)
+    _, bucket, occ = np.unique(key, return_inverse=True, return_counts=True)
+    hot = occ > MAX_BAND_BUCKET
+    stats["dropped_buckets"] = int(hot.sum())
+    stats["dropped_band_rows"] = int(occ[hot].sum())
+    # ids are distinct per row, so rank order is id order
+    by_id = np.argsort(ids, kind="stable")
+    rank = np.empty(n, np.int64)
+    rank[by_id] = np.arange(n)
+    row = np.tile(np.arange(n), n_bands)
+    kept = ~hot[bucket] & valid[row]
+    b, r = bucket[kept], rank[row[kept]]
+    order = np.lexsort((r, b))
+    b, r = b[order], r[order]
+    starts = np.flatnonzero(np.diff(b, prepend=-1))
+    sizes = np.diff(np.append(starts, len(b)))
+    if int((sizes * (sizes - 1) // 2).sum()) > LOCAL_LSH_ROWS:
+        return None
+    # each member pairs with every later (larger-id) member of its bucket
+    left, j = _runs(np.repeat(starts + sizes, sizes) - np.arange(len(b)) - 1)
+    pair = np.unique(r[left] * n + r[left + 1 + j])
+    return by_id[pair // n], by_id[pair % n]
+
+
+def _pair_jaccard(doc, shingles, a_ids, b_ids, threshold):
+    """(doc_a, doc_b, jaccard) of the candidate pairs (a_ids, b_ids) over
+    the collected shingle rows (``doc``, ``shingles``), as the Spark
+    verification joins give them — one row per (row of a, row of b), so
+    a duplicated ``doc_id`` gives one row per copy — or None when those
+    rows exceed LOCAL_LSH_ROWS. Shingles are compared by bytes (one
+    dictionary code per distinct string) and the Jaccard is round6_stable's
+    double arithmetic; a NULL shingle array or an empty union has no
+    Jaccard and gives no row."""
+    parent = pc.list_parent_indices(shingles).to_numpy()
+    enc = pc.dictionary_encode(pc.list_flatten(shingles))
+    codes = enc.indices.to_numpy().astype(np.int64)
+    n_codes = len(enc.dictionary)
+    size = np.bincount(parent, minlength=len(doc))
+    start = np.cumsum(size) - size
+    member = np.sort(parent * n_codes + codes)
+    present = shingles.is_valid().to_numpy(zero_copy_only=False)
+
+    by_id = np.argsort(doc, kind="stable")
+    sid = doc[by_id]
+    lo_a = np.searchsorted(sid, a_ids)
+    n_a = np.searchsorted(sid, a_ids, "right") - lo_a
+    lo_b = np.searchsorted(sid, b_ids)
+    n_b = np.searchsorted(sid, b_ids, "right") - lo_b
+    if int((n_a * n_b).sum()) > LOCAL_LSH_ROWS:
+        return None
+    p, j = _runs(n_a * n_b)
+    ra = by_id[lo_a[p] + j // n_b[p]]
+    rb = by_id[lo_b[p] + j % n_b[p]]
+    ok = present[ra] & present[rb]
+    ra, rb = ra[ok], rb[ok]
+
+    # |A∩B|: each shingle of the smaller set is looked up in the larger
+    # one, in chunks of at most LOCAL_LSH_ROWS lookups (plus one set)
+    small = np.where(size[ra] <= size[rb], ra, rb)
+    big = ra + rb - small
+    ext = size[small]
+    first = np.cumsum(ext) - ext
+    inter = np.zeros(len(ra), np.int64)
+    lo = 0
+    while lo < len(ra):
+        hi = max(int(np.searchsorted(first, first[lo] + LOCAL_LSH_ROWS)), lo + 1)
+        c, k = _runs(ext[lo:hi])
+        q = big[lo:hi][c] * n_codes + codes[start[small[lo:hi]][c] + k]
+        at = np.minimum(np.searchsorted(member, q), len(member) - 1)
+        inter[lo:hi] = np.bincount(c[member[at] == q], minlength=hi - lo)
+        lo = hi
+
+    union = size[ra] + size[rb] - inter
+    ra, rb, inter, union = (v[union > 0] for v in (ra, rb, inter, union))
+    x = inter / union
+    r = np.floor(x * 1000000.0 + 0.5) / 1000000.0
+    jac = np.maximum(np.minimum(r, x + 1.0), x - 1.0)
+    keep = jac >= threshold
+    return doc[ra[keep]], doc[rb[keep]], jac[keep]
+
+
+def _driver_minhash_pairs(
+    sh: DataFrame, per_doc: DataFrame, n_bands: int, threshold: float, stats: dict
+) -> DataFrame | None:
+    """``minhash_pairs``' driver finish: its verified pairs as an Arrow
+    relation, or None when ``doc_id`` is not an integer or a count is over
+    LOCAL_LSH_ROWS (``stats`` is then left to the Spark path)."""
+    id_type = per_doc.schema["doc_id"].dataType
+    if not isinstance(id_type, IntegralType):
+        return None
+    spark = sh.sparkSession
+    max_docs = LOCAL_LSH_ROWS // n_bands
+    # bounded: the limit's reduce side stops at max_docs + 1 rows, and
+    # its map side writes at most that many rows per partition
+    head = per_doc.limit(max_docs + 1).toArrow()
+    if head.num_rows > max_docs:
+        return None
+    id_col = head.column("doc_id")
+    ids = id_col.fill_null(0).to_numpy()
+    valid = id_col.is_valid().to_numpy(zero_copy_only=False)
+    bh = np.stack([head.column(f"b{b}").to_numpy() for b in range(n_bands)])
+    found = _band_pairs(ids, valid, bh, stats)
+    if found is None:
+        return None
+    ra, rb = found
+    cand = np.unique(np.concatenate([ra, rb]))
+    if int(head.column("n_rows").to_numpy()[cand].sum()) > LOCAL_LSH_ROWS:
+        return None
+    struct = StructType(
+        [
+            StructField("doc_a", id_type),
+            StructField("doc_b", id_type),
+            StructField("jaccard", DoubleType()),
+        ]
+    )
+    schema = to_arrow_schema(struct)
+    cand_ids = arrow_frame(
+        spark,
+        pa.table([pa.array(ids[cand], type=schema[0].type)], names=["doc_id"]),
+        StructType([StructField("doc_id", id_type)]),
+    )
+    rows = (
+        sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
+        .select("doc_id", "shingles")
+        .toArrow()
+    )
+    out = _pair_jaccard(
+        rows.column("doc_id").to_numpy(),
+        rows.column("shingles").combine_chunks(),
+        ids[ra],
+        ids[rb],
+        threshold,
+    )
+    if out is None:
+        return None
+    stats["finish"] = "driver"
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(out, schema)], schema=schema
+    )
+    return arrow_frame(spark, table, struct)
+
+
 def minhash_pairs(
     d: DataFrame,
     threshold: float = 0.5,
@@ -452,10 +630,39 @@ def minhash_pairs(
 
     Band buckets holding more than MAX_BAND_BUCKET docs are dropped from
     the candidate join, which loses the pairs only they would have found.
-    The hot buckets are collected when this function is called, and
-    ``stats``, when given, receives ``dropped_buckets`` and
-    ``dropped_band_rows`` (the (doc, band) rows those buckets held)."""
+    The hot buckets are found when this function is called, and ``stats``,
+    when given, receives ``dropped_buckets`` and ``dropped_band_rows``
+    (the (doc, band) rows those buckets held), and ``finish``: "driver"
+    or "spark".
 
+    Driver finish: Spark shingles the docs and aggregates one band-hash
+    row per ``doc_id`` (pinned, with its count of shingle rows). When that
+    table holds at most LOCAL_LSH_ROWS band rows (docs × bands), one
+    bounded ``limit(…).toArrow()`` job brings it to the driver, where
+    NumPy groups the buckets, applies the cap and lists the candidate
+    pairs. When those number at most LOCAL_LSH_ROWS, and so do the
+    candidate docs' shingles, a second collect brings those shingles and
+    the driver verifies the pairs with byte-exact Jaccard; the result is
+    an Arrow relation. The budget bounds the driver's share: 2²¹ band
+    rows are 262k docs, and each count's NumPy arrays peak at a few
+    hundred MB. Rows, Jaccard bits and ``stats`` equal the Spark path's
+    (``tests/test_minhash_lsh.py``). A pair of rows whose shingle union is
+    empty — possible only between two empty copies of duplicated
+    ``doc_id``s — has no Jaccard and gives no row. A corpus over the budget
+    (any 100 TB one) or with non-integer ``doc_id``s runs the Spark path:
+    bands exploded from the pinned table, shuffled by (band, bucket),
+    self-joined, and verified by joins against the shingles. Over the
+    budget, the failed attempt costs the band-table collect (its limit
+    exchange writes up to 2²¹/bands + 1 rows per partition, and as many
+    reach the driver) and, when only the pairs or the shingles are over,
+    the NumPy bucketing as well.
+
+    A ``seeds`` below MINHASH_BAND_ROWS (no whole band) raises ValueError."""
+
+    if seeds < MINHASH_BAND_ROWS:
+        raise ValueError(
+            f"minhash_pairs needs seeds >= {MINHASH_BAND_ROWS} (one band), got {seeds}"
+        )
     # persisted: read twice (signatures + exact-Jaccard verification), and
     # shingling is the expensive expression work. A doc without shingles
     # explodes to zero rows: no signature, so never a candidate.
@@ -470,30 +677,40 @@ def minhash_pairs(
         "doc_id",
         *[F.xxhash64(F.lit(s), F.col("h")).alias(f"x{s}") for s in range(seeds)],
     )
-    # pinned (r13): `bands` below is referenced three times (hot-bucket
-    # aggregation + both candidate sides) and each reference used to replay
-    # the 16-seeded-xxhash explode + min aggregation from the shingle cache
-    sig = _repin(
-        "minhash_lsh_sigs",
-        hashed.groupBy("doc_id").agg(
-            *[F.min(f"x{s}").alias(f"h{s}") for s in range(seeds)]
+    n_bands = seeds // MINHASH_BAND_ROWS
+    sig = hashed.groupBy("doc_id").agg(
+        *[F.min(f"x{s}").alias(f"h{s}") for s in range(seeds)],
+        F.count(F.lit(1)).alias("n_rows"),
+    )
+    # pinned: the driver finish collects it, and the Spark path explodes
+    # its bands from it, so the signature aggregate runs once either way
+    per_doc = _repin(
+        "minhash_band_table",
+        sig.select(
+            "doc_id",
+            *[
+                F.hash(
+                    *[
+                        F.col(f"h{b * MINHASH_BAND_ROWS + r}")
+                        for r in range(MINHASH_BAND_ROWS)
+                    ]
+                ).alias(f"b{b}")
+                for b in range(n_bands)
+            ],
+            "n_rows",
         ),
     )
-    n_bands = seeds // MINHASH_BAND_ROWS
-    bands = sig.select(
+    stats = {} if stats is None else stats
+    local = _driver_minhash_pairs(sh, per_doc, n_bands, threshold, stats)
+    if local is not None:
+        return local
+    stats["finish"] = "spark"
+    bands = per_doc.select(
         "doc_id",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.hash(
-                            *[
-                                F.col(f"h{b * MINHASH_BAND_ROWS + r}")
-                                for r in range(MINHASH_BAND_ROWS)
-                            ]
-                        ).alias("bh"),
-                    )
+                    F.struct(F.lit(b).alias("band"), F.col(f"b{b}").alias("bh"))
                     for b in range(n_bands)
                 ]
             )
@@ -529,8 +746,11 @@ def minhash_pairs(
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn(
             "jaccard",
+            # an empty union (two empty-text copies of duplicated ids)
+            # has no Jaccard: NULL, not an ANSI division error
             round6_stable(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+                F.col("inter")
+                / F.nullif(F.col("na") + F.col("nb") - F.col("inter"), F.lit(0))
             ),
         )
     )

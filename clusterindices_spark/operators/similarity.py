@@ -730,11 +730,10 @@ def ivf_build(emb: DataFrame, n_cells: int = 8) -> tuple[DataFrame, DataFrame]:
     ``x`` is cast to ``ARRAY<DOUBLE>`` on entry (a no-op on double input),
     so a float32 or other numeric corpus gets double centroids and
     distances, and its ``xb`` is ``ARRAY<DOUBLE>``."""
-    from pyspark.storagelevel import StorageLevel
-
-    pts = emb.select(
-        "vec_id", F.col("x").cast("array<double>").alias("x")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # not persisted: the fit's count and sample collect read ``emb``
+    # twice, which costs less than caching it (traced ksweep), and the
+    # lazy index re-reads it anyway when its caller runs it
+    pts = emb.select("vec_id", F.col("x").cast("array<double>").alias("x"))
     (cents,) = fit_seeded(pts, n_cells)
     folded = local_frame(
         emb.sparkSession, [(cents,)], "cents ARRAY<STRUCT<cl: INT, c: ARRAY<DOUBLE>>>"

@@ -186,15 +186,10 @@ def test_doc_shingles_and_minhash_edge_inputs(spark):
     assert not {x for p in pairs for x in p} & no_shingles
 
 
-def test_minhash_reports_hot_bucket_drop(spark):
-    """A near-duplicate family larger than MAX_BAND_BUCKET: 150 variants of
-    one 60-word text (2 random word substitutions each, every pair at
-    J ≥ 0.5) plus 250 unrelated docs. Whole band buckets of the family go
-    over the cap and are dropped, so pairs go missing — and the caller is
-    told how many buckets and band rows the cap dropped."""
+def hot_family_docs():
+    """150 variants of one 60-word text (2 random word substitutions each,
+    every pair at J ≥ 0.5), and 250 unrelated docs: (family, unrelated)."""
     import random
-
-    from clusterindices_spark.operators.dedup import MAX_BAND_BUCKET
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(2000)]
@@ -208,6 +203,17 @@ def test_minhash_reports_hot_bucket_drop(spark):
     unrelated = [
         (1000 + j, " ".join(rng.choice(vocab) for _ in range(60))) for j in range(250)
     ]
+    return rows, unrelated
+
+
+def test_minhash_reports_hot_bucket_drop(spark):
+    """A near-duplicate family larger than MAX_BAND_BUCKET (hot_family_docs).
+    Whole band buckets of the family go over the cap and are dropped, so
+    pairs go missing — and the caller is told how many buckets and band
+    rows the cap dropped."""
+    from clusterindices_spark.operators.dedup import MAX_BAND_BUCKET
+
+    rows, unrelated = hot_family_docs()
     d = spark.createDataFrame(rows + unrelated, "doc_id BIGINT, text STRING")
     true_pairs = ngram_jaccard_pairs(d, threshold=0.5, max_shingle_df=10**9).count()
     assert true_pairs == 150 * 149 // 2
@@ -222,7 +228,7 @@ def test_minhash_reports_hot_bucket_drop(spark):
     minhash_pairs(
         spark.createDataFrame(unrelated, "doc_id BIGINT, text STRING"), stats=clean
     ).count()
-    assert clean == {"dropped_buckets": 0, "dropped_band_rows": 0}
+    assert clean == {"dropped_buckets": 0, "dropped_band_rows": 0, "finish": "driver"}
 
 
 def test_simhash_finds_exact_copies(spark):
@@ -838,6 +844,24 @@ def test_star_cc_sees_overwritten_input(spark, tmp_path):
     want = run(fresh_p)
     assert want == [(0, 0), (1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (6, 5), (7, 5)]
     assert got == want
+
+
+def test_ivf_build_leaves_no_persisted_frame(spark):
+    """Three builds over different inputs keep the session's persistent
+    RDD count flat: the build persists nothing, and its index still runs
+    afterwards."""
+    from clusterindices_spark.operators.similarity import ivf_build
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for b in range(3):
+        emb = spark.range(60).select(
+            F.col("id").alias("vec_id"),
+            F.array(F.col("id") % (3 + b), F.col("id") % 7 + b).cast("array<double>").alias("x"),
+        )
+        _, index = ivf_build(emb, n_cells=3)
+        assert index.count() == 60
+        assert jsc.getPersistentRDDs().size() == before, b
 
 
 def test_ivf_build_sees_overwritten_input(spark, tmp_path):

@@ -251,7 +251,8 @@ def test_fold_lower_cross_engine_parity(spark):
         fold_lower,
     )
 
-    texts = ["İstanbul Iı", "ΣΙΣΥΦΟΣ", "mixed İ and Σ here", "plain ascii"]
+    texts = ["İstanbul Iı", "ΣΙΣΥΦΟΣ", "mixed İ and Σ here", "plain ascii",
+             "İ\u0307 İ\u0301x xİ\u0308 ΣΣ ΑΣ. 𝐀Σ😀İ"]
     df = spark.createDataFrame([(t,) for t in texts], "t string")
     got = [r["f"] for r in
            df.select(fold_lower(F.col("t")).alias("f")).collect()]

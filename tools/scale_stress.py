@@ -104,8 +104,8 @@ def stress_minhash(spark) -> dict:
     """Millions of synthetic ~25-word docs through the REAL minhash_pairs
     operator. 2% of docs are planted duplicates (groups of 2 sharing
     content hash-seeded by the group), the rest unique. Reports the
-    band-bucket occupancy tail — the quadratic candidate hazard — and
-    plant recall."""
+    band-bucket occupancy tail — the quadratic candidate hazard — plant
+    recall, and which finish ran (above 262k docs, the Spark path)."""
     from clusterindices_spark.operators.dedup import minhash_pairs
 
     n_docs = int(os.environ.get("MH_DOCS", "3000000"))
@@ -128,7 +128,8 @@ def stress_minhash(spark) -> dict:
     expected_pairs = n_docs // 100  # (2g, 2g+1) groups
 
     t0 = time.monotonic()
-    pairs = minhash_pairs(docs, threshold=0.9).persist()
+    stats: dict = {}
+    pairs = minhash_pairs(docs, threshold=0.9, stats=stats).persist()
     n_pairs = pairs.count()
     sec = time.monotonic() - t0
     hit = pairs.where(
@@ -151,6 +152,9 @@ def stress_minhash(spark) -> dict:
         "planted_pairs": expected_pairs,
         "plant_recall": round(hit / expected_pairs, 4),
         "bands": MINHASH_SEEDS // MINHASH_BAND_ROWS,
+        # "spark" past LOCAL_LSH_ROWS band rows (262k docs at 8 bands)
+        "finish": stats["finish"],
+        "dropped_buckets": stats["dropped_buckets"],
         **part,
     }
 
