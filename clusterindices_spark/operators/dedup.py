@@ -13,12 +13,13 @@ Four tiers, all over ``documents``:
 Scale posture: every tier is (scan → per-row expression work → one or two
 hash-key shuffles). MinHash banding shuffles by (band, band_hash) — the
 classic way to avoid the O(n²) pair explosion at 100 TB; candidate
-verification only touches bucket-mates. When the per-doc band table, the
-candidate pairs and the candidates' shingles each fit LOCAL_LSH_ROWS rows,
-the banding and the verification run in the driver instead (two bounded
-collects, no join). A corpus over the budget first pays for the bounded
-band-table collect, then takes the band shuffle and the verification
-joins. The exact-Jaccard tier self-joins on
+verification only touches bucket-mates. When one aggregate says the
+corpus's collapsed text fits LOCAL_LSH_ROWS tokens, one collect brings it
+to the driver, which shingles, hashes, bands and verifies in NumPy with
+bit-exact twins of Spark's hashes (no shuffle of shingles or bands, no
+join, nothing persisted). A corpus over the budget pays for that one
+aggregate pass, then takes the band shuffle and the verification joins.
+The exact-Jaccard tier self-joins on
 shingle with stop-shingles (document frequency > MAX_SHINGLE_DF) removed
 first, so one boilerplate shingle can't quadratically explode the join; it
 exists as the oracle-able ground-truth tier, the LSH tiers are the scale
@@ -30,12 +31,20 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DoubleType, IntegralType, StructField, StructType
 
 from clusterindices_spark.functions.local import arrow_frame, local_frame
+from clusterindices_spark.functions.sparkhash import (
+    arrow_bytes,
+    murmur3_longs,
+    xxhash64_ints,
+    xxhash64_long_finish,
+    xxhash64_long_key,
+    xxhash64_spans,
+)
 from clusterindices_spark.functions.text import (
     FNV_MOD,
     SQL_FINGERPRINT,
@@ -71,12 +80,13 @@ MAX_BAND_BUCKET = 100
 # the driver instead of by further Spark rounds — 32 MB as two int64
 # Arrow columns.
 LOCAL_CC_EDGES = 1 << 21
-# Budget of the MinHash driver finish (minhash_pairs): band rows
-# (docs × bands), candidate pairs (Σ C(s,2) over the kept buckets) and the
-# candidate docs' shingle rows must each number at most this many for the
-# banding, the hot-bucket cap and the exact-Jaccard verification to run in
-# NumPy on the driver; any count over it runs the Spark joins instead.
-LOCAL_LSH_ROWS = 1 << 21
+# Budget of the MinHash driver finish (minhash_pairs): the tokens of the
+# whitespace-collapsed text, the candidate pairs (Σ C(s,2) over the kept
+# buckets) and their row pairs must each number at most this many, and the
+# text rows at most this many per band, for the shingles, signatures,
+# banding, hot-bucket cap and exact-Jaccard verification to run in NumPy on
+# the driver; any count over it runs the Spark joins instead.
+LOCAL_LSH_ROWS = 1 << 23
 SIMHASH_BITS = 63  # 63 keeps the packed value inside a signed int64
 JACCARD_THRESHOLD = 0.2
 # Stop-shingle cap for the exact-Jaccard tier: a shingle appearing in more
@@ -240,6 +250,12 @@ def q_dedup_token_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRIGRAM_AT_TOKEN = r"(?<=^| )(?=([^ ]+ [^ ]+ [^ ]+))"
 
 
+def _collapsed(text: Column) -> Column:
+    """fold_lower(text) with every \\s+ run (tokens' separator) collapsed
+    to one space: the string both MinHash paths take their trigrams from."""
+    return F.regexp_replace(fold_lower(text), r"\s+", " ")
+
+
 def _doc_shingles(d: DataFrame) -> DataFrame:
     # fan_out: never let a 1-file scan serialize the repo's most CPU-bound
     # expression on one core. The shingles are shingles3(tokens(text)) built
@@ -249,9 +265,8 @@ def _doc_shingles(d: DataFrame) -> DataFrame:
     # trigram. Leading/trailing whitespace yields no empty token, NULL text
     # gives NULL shingles, and array_distinct keeps first occurrences, as in
     # shingles3. No lambda, so Catalyst shares the chain with n_shingles.
-    spaced = F.regexp_replace(fold_lower(F.col("text")), r"\s+", " ")
     shingles = F.array_distinct(
-        F.regexp_extract_all(spaced, F.lit(_TRIGRAM_AT_TOKEN), 1)
+        F.regexp_extract_all(_collapsed(F.col("text")), F.lit(_TRIGRAM_AT_TOKEN), 1)
     )
     return (
         fan_out(d)
@@ -464,16 +479,14 @@ def _runs(counts):
     return i, j
 
 
-def _band_pairs(ids, valid, bh, stats):
+def _band_pairs(ids, bh, stats):
     """Row pairs (ra, rb), ids[ra] < ids[rb], of the per-doc band table
     that share a band bucket — ``_drop_hot_buckets`` plus the candidate
     self-join and its distinct, in NumPy — or None when Σ C(s,2) over the
     kept buckets exceeds LOCAL_LSH_ROWS.
 
-    ``bh[b]`` holds band b's hash of every row. A bucket's occupancy
-    counts every band row, NULL ``doc_id`` included; buckets over
-    MAX_BAND_BUCKET are dropped and reported in ``stats``; a NULL
-    ``doc_id`` is never paired."""
+    ``bh[b]`` holds band b's hash of every row; ``ids`` are distinct.
+    Buckets over MAX_BAND_BUCKET are dropped and reported in ``stats``."""
     n_bands, n = bh.shape
     band = np.repeat(np.arange(n_bands, dtype=np.int64), n)
     key = (band << 32) | (bh.ravel().astype(np.int64) & 0xFFFFFFFF)
@@ -486,7 +499,7 @@ def _band_pairs(ids, valid, bh, stats):
     rank = np.empty(n, np.int64)
     rank[by_id] = np.arange(n)
     row = np.tile(np.arange(n), n_bands)
-    kept = ~hot[bucket] & valid[row]
+    kept = ~hot[bucket]
     b, r = bucket[kept], rank[row[kept]]
     order = np.lexsort((r, b))
     b, r = b[order], r[order]
@@ -500,23 +513,17 @@ def _band_pairs(ids, valid, bh, stats):
     return by_id[pair // n], by_id[pair % n]
 
 
-def _pair_jaccard(doc, shingles, a_ids, b_ids, threshold):
+def _pair_jaccard(doc, parent, code, a_ids, b_ids, threshold):
     """(doc_a, doc_b, jaccard) of the candidate pairs (a_ids, b_ids) over
-    the collected shingle rows (``doc``, ``shingles``), as the Spark
-    verification joins give them — one row per (row of a, row of b), so
-    a duplicated ``doc_id`` gives one row per copy — or None when those
-    rows exceed LOCAL_LSH_ROWS. Shingles are compared by bytes (one
-    dictionary code per distinct string) and the Jaccard is round6_stable's
-    double arithmetic; a NULL shingle array or an empty union has no
-    Jaccard and gives no row."""
-    parent = pc.list_parent_indices(shingles).to_numpy()
-    enc = pc.dictionary_encode(pc.list_flatten(shingles))
-    codes = enc.indices.to_numpy().astype(np.int64)
-    n_codes = len(enc.dictionary)
+    the text rows with ids ``doc``, as the Spark verification joins give
+    them — one row per (row of a, row of b), so a duplicated ``doc_id``
+    gives one row per copy — or None when those rows exceed
+    LOCAL_LSH_ROWS. Row parent[i] holds the distinct shingle code[i] (one
+    code per distinct byte string; each row's entries contiguous, rows
+    ascending), and the Jaccard is round6_stable's double arithmetic; an
+    empty union has no Jaccard and gives no row."""
     size = np.bincount(parent, minlength=len(doc))
     start = np.cumsum(size) - size
-    member = np.sort(parent * n_codes + codes)
-    present = shingles.is_valid().to_numpy(zero_copy_only=False)
 
     by_id = np.argsort(doc, kind="stable")
     sid = doc[by_id]
@@ -529,13 +536,16 @@ def _pair_jaccard(doc, shingles, a_ids, b_ids, threshold):
     p, j = _runs(n_a * n_b)
     ra = by_id[lo_a[p] + j // n_b[p]]
     rb = by_id[lo_b[p] + j % n_b[p]]
-    ok = present[ra] & present[rb]
-    ra, rb = ra[ok], rb[ok]
 
     # |A∩B|: each shingle of the smaller set is looked up in the larger
-    # one, in chunks of at most LOCAL_LSH_ROWS lookups (plus one set)
+    # one (the sorted (row, code) keys of the larger sides only), in
+    # chunks of at most LOCAL_LSH_ROWS lookups (plus one set)
     small = np.where(size[ra] <= size[rb], ra, rb)
     big = ra + rb - small
+    n_codes = int(code.max()) + 1 if len(code) else 1
+    looked_up = np.zeros(len(doc), bool)
+    looked_up[big] = True
+    member = np.sort((parent * n_codes + code)[looked_up[parent]])
     ext = size[small]
     first = np.cumsum(ext) - ext
     inter = np.zeros(len(ra), np.int64)
@@ -543,7 +553,7 @@ def _pair_jaccard(doc, shingles, a_ids, b_ids, threshold):
     while lo < len(ra):
         hi = max(int(np.searchsorted(first, first[lo] + LOCAL_LSH_ROWS)), lo + 1)
         c, k = _runs(ext[lo:hi])
-        q = big[lo:hi][c] * n_codes + codes[start[small[lo:hi]][c] + k]
+        q = big[lo:hi][c] * n_codes + code[start[small[lo:hi]][c] + k]
         at = np.minimum(np.searchsorted(member, q), len(member) - 1)
         inter[lo:hi] = np.bincount(c[member[at] == q], minlength=hi - lo)
         lo = hi
@@ -557,33 +567,140 @@ def _pair_jaccard(doc, shingles, a_ids, b_ids, threshold):
     return doc[ra[keep]], doc[rb[keep]], jac[keep]
 
 
+def _tokens(s: pa.Array):
+    """(row, start, length, keep): the ' '-split pieces of each string of
+    ``s`` (no nulls) that are non-empty tokens, with each token's byte span
+    in ``s``'s data buffer, and ``keep`` the mask of those tokens among
+    all pieces."""
+    toks = pc.split_pattern(s, " ")
+    _, _, size = arrow_bytes(pc.list_flatten(toks))
+    offsets = toks.offsets.to_numpy()
+    row = np.repeat(np.arange(len(s)), np.diff(offsets))
+    # the pieces of a row sit one separator byte apart
+    at = np.cumsum(size + 1) - (size + 1)
+    _, s_start, _ = arrow_bytes(s)
+    start = s_start[row] + at - at[offsets[:-1] - offsets[0]][row]
+    keep = size > 0
+    return row[keep], start[keep], size[keep], keep
+
+
+def _trigram_spans(s: pa.Array):
+    """(row, start, length): the byte span in ``s``'s data buffer of every
+    word 3-gram of each string of ``s`` (collapsed text, no nulls), rows
+    ascending — the shingles ``_doc_shingles`` takes, as occurrences.
+
+    On a string whose whitespace runs are single spaces the matches of
+    _TRIGRAM_AT_TOKEN are the consecutive triples of its non-empty
+    ' '-split tokens, and each spans the text from its first token's start
+    to its last token's end. Splitting the bytes at 0x20 is exact: the
+    string is valid UTF-8."""
+    row, start, size, _ = _tokens(s)
+    at = np.flatnonzero(row[:-2] == row[2:])
+    return row[at], start[at], start[at + 2] + size[at + 2] - start[at]
+
+
+def _row_trigrams(s: pa.Array):
+    """(parent, code): the distinct word 3-grams of each string of ``s``,
+    as in ``_trigram_spans``, sorted by (row, code), where equal codes
+    mean equal bytes. A token holds no space, so a trigram's three token
+    codes identify its bytes."""
+    row, _, _, keep = _tokens(s)
+    words = pc.list_flatten(pc.split_pattern(s, " ")).filter(pa.array(keep))
+    enc = pc.dictionary_encode(words)
+    tok = enc.indices.to_numpy().astype(np.int64)
+    n = max(len(enc.dictionary), 1)
+    at = np.flatnonzero(row[:-2] == row[2:])
+    key = tok[at] * n + tok[at + 1]
+    if n**3 >= 1 << 63:  # compact the leading pairs so the key stays int64
+        _, key = np.unique(key, return_inverse=True)
+    _, code = np.unique(key * n + tok[at + 2], return_inverse=True)
+    n_codes = max(int(code.max()) + 1 if len(code) else 0, 1)
+    member = np.unique(row[at] * n_codes + code)
+    return member // n_codes, member % n_codes
+
+
+# trigram occurrences per block of rows in _driver_bands: one seed's pass
+# over a block stays in the CPU cache
+_SIG_BLOCK = 1 << 16
+
+
+def _driver_bands(row_ids, hashes, n_bands):
+    """(doc_ids, bh): the Spark path's band table in NumPy, from the
+    trigram occurrences' ``doc_id``s and xxhash64 values (grouped by text
+    row). Each distinct ``doc_id`` gets, per seed s, the minimum of
+    xxhash64(lit(s), h) over its trigrams' hashes h, and bh[b] is band
+    b's ``hash`` of its seeds' minima (int32).
+
+    The seed-independent half of ``hashLong`` is computed once per
+    occurrence; each seed then finishes it block by block."""
+    n_seeds = n_bands * MINHASH_BAND_ROWS
+    key = xxhash64_long_key(hashes)
+    starts = np.flatnonzero(np.diff(row_ids, prepend=row_ids[:1] - 1))
+    seeds = xxhash64_ints(np.arange(n_seeds))
+    sig = np.empty((n_seeds, len(starts)), np.int64)
+    cuts = np.unique(np.searchsorted(starts, np.arange(0, len(key), _SIG_BLOCK)))
+    ends = np.append(starts, len(key))
+    buf = np.empty(len(key), np.uint64)
+    for r0, r1 in zip(cuts, np.append(cuts[1:], len(starts))):
+        p0, p1 = ends[r0], ends[r1]
+        out = buf[: p1 - p0]
+        for s in range(n_seeds):
+            x = xxhash64_long_finish(key[p0:p1], int(seeds[s]), out=out)
+            sig[s, r0:r1] = np.minimum.reduceat(x, starts[r0:r1] - p0)
+    # copies of a doc_id pool into one signature, as the groupBy does
+    ids = row_ids[starts]
+    order = np.argsort(ids, kind="stable")
+    sid = ids[order]
+    first = np.flatnonzero(np.diff(sid, prepend=sid[:1] - 1))
+    if len(sid):
+        sig = np.minimum.reduceat(sig[:, order], first, axis=1)
+    bh = np.stack(
+        [
+            murmur3_longs(sig[b * MINHASH_BAND_ROWS : (b + 1) * MINHASH_BAND_ROWS])
+            for b in range(n_bands)
+        ]
+    )
+    return sid[first], bh
+
+
 def _driver_minhash_pairs(
-    sh: DataFrame, per_doc: DataFrame, n_bands: int, threshold: float, stats: dict
+    d: DataFrame, n_bands: int, threshold: float, stats: dict
 ) -> DataFrame | None:
     """``minhash_pairs``' driver finish: its verified pairs as an Arrow
-    relation, or None when ``doc_id`` is not an integer or a count is over
-    LOCAL_LSH_ROWS (``stats`` is then left to the Spark path)."""
-    id_type = per_doc.schema["doc_id"].dataType
+    relation, or None when ``doc_id`` is not an integer, or the text, the
+    candidate pairs or their row pairs are over LOCAL_LSH_ROWS (``stats``
+    is then left to the Spark path)."""
+    id_type = d.schema["doc_id"].dataType
     if not isinstance(id_type, IntegralType):
         return None
-    spark = sh.sparkSession
-    max_docs = LOCAL_LSH_ROWS // n_bands
-    # bounded: the limit's reduce side stops at max_docs + 1 rows, and
-    # its map side writes at most that many rows per partition
-    head = per_doc.limit(max_docs + 1).toArrow()
-    if head.num_rows > max_docs:
+    d = d.where(F.col("text").isNotNull())
+    # the tokens are Σ size(split(s, ' ')) over the collapsed text s; each
+    # \s+ run of the text is one separator of s (case folding moves no
+    # whitespace), so counting the runs gives that sum without building s
+    n_rows, n_tokens = d.agg(
+        F.count(F.lit(1)), F.sum(F.regexp_count("text", F.lit(r"\s+")) + 1)
+    ).first()
+    n_tokens = n_tokens or 0
+    stats["text_rows"], stats["text_tokens"] = n_rows, n_tokens
+    if n_rows > LOCAL_LSH_ROWS // n_bands or n_tokens > LOCAL_LSH_ROWS:
         return None
-    id_col = head.column("doc_id")
-    ids = id_col.fill_null(0).to_numpy()
-    valid = id_col.is_valid().to_numpy(zero_copy_only=False)
-    bh = np.stack([head.column(f"b{b}").to_numpy() for b in range(n_bands)])
-    found = _band_pairs(ids, valid, bh, stats)
+    table = d.select("doc_id", _collapsed(F.col("text")).alias("s")).toArrow()
+    ids = table.column("doc_id").to_numpy()
+    s = table.column("s").combine_chunks()
+    row, start, length = _trigram_spans(s)
+    hashes = xxhash64_spans(arrow_bytes(s)[0], start, length)
+    doc_ids, bh = _driver_bands(ids[row], hashes, n_bands)
+    found = _band_pairs(doc_ids, bh, stats)
     if found is None:
         return None
-    ra, rb = found
-    cand = np.unique(np.concatenate([ra, rb]))
-    if int(head.column("n_rows").to_numpy()[cand].sum()) > LOCAL_LSH_ROWS:
+    a_ids, b_ids = doc_ids[found[0]], doc_ids[found[1]]
+    # exact shingle sets for the candidates' rows only
+    rows = np.flatnonzero(np.isin(ids, np.concatenate([a_ids, b_ids])))
+    parent, code = _row_trigrams(s.take(pa.array(rows)))
+    out = _pair_jaccard(ids[rows], parent, code, a_ids, b_ids, threshold)
+    if out is None:
         return None
+    stats["finish"] = "driver"
     struct = StructType(
         [
             StructField("doc_a", id_type),
@@ -592,30 +709,10 @@ def _driver_minhash_pairs(
         ]
     )
     schema = to_arrow_schema(struct)
-    cand_ids = arrow_frame(
-        spark,
-        pa.table([pa.array(ids[cand], type=schema[0].type)], names=["doc_id"]),
-        StructType([StructField("doc_id", id_type)]),
-    )
-    rows = (
-        sh.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        .select("doc_id", "shingles")
-        .toArrow()
-    )
-    out = _pair_jaccard(
-        rows.column("doc_id").to_numpy(),
-        rows.column("shingles").combine_chunks(),
-        ids[ra],
-        ids[rb],
-        threshold,
-    )
-    if out is None:
-        return None
-    stats["finish"] = "driver"
     table = pa.Table.from_arrays(
         [pa.array(col, type=f.type) for col, f in zip(out, schema)], schema=schema
     )
-    return arrow_frame(spark, table, struct)
+    return arrow_frame(d.sparkSession, table, struct)
 
 
 def minhash_pairs(
@@ -625,37 +722,47 @@ def minhash_pairs(
     stats: dict | None = None,
 ) -> DataFrame:
     """Candidate pairs via banded MinHash (2 rows/band), verified with exact
-    Jaccard ≥ threshold. The hash family is xxhash64: each shingle g is
-    hashed once, h = xxhash64(g), and seed s's value is xxhash64(s, h).
+    Jaccard ≥ threshold. The hash family is xxhash64: a shingle g hashes
+    to h = xxhash64(g), and seed s's value is xxhash64(s, h).
+    The signature is per ``doc_id``: copies of a ``doc_id`` pool their
+    shingles into one. Jaccard is per row: one row per (copy of a, copy
+    of b). Rows with a NULL ``doc_id`` are dropped first (they can never
+    pair); NULL text gives no row; empty text has Jaccard 0 with a
+    non-empty copy and none with an empty one.
 
     Band buckets holding more than MAX_BAND_BUCKET docs are dropped from
     the candidate join, which loses the pairs only they would have found.
     The hot buckets are found when this function is called, and ``stats``,
     when given, receives ``dropped_buckets`` and ``dropped_band_rows``
-    (the (doc, band) rows those buckets held), and ``finish``: "driver"
-    or "spark".
+    (the (doc, band) rows those buckets held), ``finish``: "driver" or
+    "spark", and for an integer ``doc_id`` the decision's counts
+    ``text_rows`` and ``text_tokens``.
 
-    Driver finish: Spark shingles the docs and aggregates one band-hash
-    row per ``doc_id`` (pinned, with its count of shingle rows). When that
-    table holds at most LOCAL_LSH_ROWS band rows (docs × bands), one
-    bounded ``limit(…).toArrow()`` job brings it to the driver, where
-    NumPy groups the buckets, applies the cap and lists the candidate
-    pairs. When those number at most LOCAL_LSH_ROWS, and so do the
-    candidate docs' shingles, a second collect brings those shingles and
-    the driver verifies the pairs with byte-exact Jaccard; the result is
-    an Arrow relation. The budget bounds the driver's share: 2²¹ band
-    rows are 262k docs, and each count's NumPy arrays peak at a few
-    hundred MB. Rows, Jaccard bits and ``stats`` equal the Spark path's
-    (``tests/test_minhash_lsh.py``). A pair of rows whose shingle union is
-    empty — possible only between two empty copies of duplicated
-    ``doc_id``s — has no Jaccard and gives no row. A corpus over the budget
-    (any 100 TB one) or with non-integer ``doc_id``s runs the Spark path:
-    bands exploded from the pinned table, shuffled by (band, bucket),
-    self-joined, and verified by joins against the shingles. Over the
-    budget, the failed attempt costs the band-table collect (its limit
-    exchange writes up to 2²¹/bands + 1 rows per partition, and as many
-    reach the driver) and, when only the pairs or the shingles are over,
-    the NumPy bucketing as well.
+    Driver finish: one aggregate counts the non-NULL text rows and their
+    tokens, Σ size(split(s, ' ')) with s the case-folded text whose
+    whitespace runs are collapsed to one space. When the rows are at most
+    LOCAL_LSH_ROWS // bands and the tokens at most LOCAL_LSH_ROWS (2²³),
+    one ``toArrow()`` brings (doc_id, s) to the driver. NumPy takes each
+    trigram's byte span in s, hashes it with ``functions/sparkhash.py``'s
+    bit-exact twins of ``xxhash64`` and ``hash``, takes the minima per
+    ``doc_id``, bands them and applies the cap; the candidate pairs and
+    their row pairs must also fit LOCAL_LSH_ROWS. Exact shingle sets are
+    built for the candidates' rows only, and each pair is verified with
+    byte-exact Jaccard. The result is an Arrow relation, and nothing is
+    left persisted. Rows, Jaccard bits and ``stats`` equal the Spark
+    path's (``tests/test_minhash_lsh.py``). At the budget edge
+    (``tools/scale_stress.py`` at 335k docs of 25 words, 8.4M tokens, on a
+    4-core host) the call took 9.2 s wall and 19.6 CPU-s, and the driver
+    process peaked at 832 MB RSS.
+
+    A corpus over the budget (any 100 TB one) or with non-integer
+    ``doc_id``s runs the Spark path: shingles and a per-doc band table,
+    both pinned; bands exploded from the table, shuffled by (band,
+    bucket), self-joined, and verified by joins against the shingles.
+    Over the budget the failed decision costs one aggregate pass over the
+    text (a regex count per row; its exchange carries one partial row
+    per partition): 2.4–5.2 CPU-s at 400k docs of 25 words, with the
+    JIT warm and cold.
 
     A ``seeds`` below MINHASH_BAND_ROWS (no whole band) raises ValueError."""
 
@@ -663,6 +770,13 @@ def minhash_pairs(
         raise ValueError(
             f"minhash_pairs needs seeds >= {MINHASH_BAND_ROWS} (one band), got {seeds}"
         )
+    n_bands = seeds // MINHASH_BAND_ROWS
+    d = d.where(F.col("doc_id").isNotNull())
+    stats = {} if stats is None else stats
+    local = _driver_minhash_pairs(d, n_bands, threshold, stats)
+    if local is not None:
+        return local
+    stats["finish"] = "spark"
     # persisted: read twice (signatures + exact-Jaccard verification), and
     # shingling is the expensive expression work. A doc without shingles
     # explodes to zero rows: no signature, so never a candidate.
@@ -677,13 +791,11 @@ def minhash_pairs(
         "doc_id",
         *[F.xxhash64(F.lit(s), F.col("h")).alias(f"x{s}") for s in range(seeds)],
     )
-    n_bands = seeds // MINHASH_BAND_ROWS
     sig = hashed.groupBy("doc_id").agg(
-        *[F.min(f"x{s}").alias(f"h{s}") for s in range(seeds)],
-        F.count(F.lit(1)).alias("n_rows"),
+        *[F.min(f"x{s}").alias(f"h{s}") for s in range(seeds)]
     )
-    # pinned: the driver finish collects it, and the Spark path explodes
-    # its bands from it, so the signature aggregate runs once either way
+    # pinned: the hot-bucket agg and the band self-join both read it, so
+    # the signature aggregate runs once
     per_doc = _repin(
         "minhash_band_table",
         sig.select(
@@ -697,14 +809,8 @@ def minhash_pairs(
                 ).alias(f"b{b}")
                 for b in range(n_bands)
             ],
-            "n_rows",
         ),
     )
-    stats = {} if stats is None else stats
-    local = _driver_minhash_pairs(sh, per_doc, n_bands, threshold, stats)
-    if local is not None:
-        return local
-    stats["finish"] = "spark"
     bands = per_doc.select(
         "doc_id",
         F.explode(
@@ -1052,7 +1158,10 @@ def connected_components_star(
     Same output contract as connected_components: (node, component), with
     component the smallest node id of the node's component.
 
-    Each round's edge set is localCheckpoint'ed, not merely persisted: a
+    The input edge set is checkpointed only when a Spark round runs, so
+    above the budget the edge source is read twice: once by the bounded
+    probe and once by round 1. Each round's edge set is
+    localCheckpoint'ed, not merely persisted: a
     round references the previous edge set ~4× (symmetric view + both
     joins), so without lineage truncation the logical plan itself grows
     exponentially in the round count and planning OOMs long before any
@@ -1066,9 +1175,6 @@ def connected_components_star(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
         .where(F.col("u") != F.col("v"))
-        # lazy: the collect below materializes + checkpoints it, so the
-        # edge source runs once even when round 1 reads it next
-        .localCheckpoint(eager=False)
     )
     # one job whose reduce side stops at LOCAL_CC_EDGES + 1 rows: the
     # whole edge set when it fits, a bounded prefix when it does not (its
@@ -1076,6 +1182,9 @@ def connected_components_star(
     # budget it costs at most one shuffle write of the edges, once)
     head = e.limit(LOCAL_CC_EDGES + 1).toArrow()
     n_edges = head.num_rows
+    if n_edges > LOCAL_CC_EDGES:
+        # lazy: round 1's fingerprint agg materializes it
+        e = e.localCheckpoint(eager=False)
     prev = None
     rounds = 0
     fixpoint = False

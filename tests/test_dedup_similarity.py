@@ -122,17 +122,38 @@ def _n_tokenizers(df):
     return plan.count("regexp_extract_all(")
 
 
-def test_minhash_layer_tokenizes_once(spark):
+def test_minhash_layer_tokenizes_once(spark, monkeypatch):
     """The shingle tokenizer (regexp_extract_all over the whitespace-
     collapsed text) runs once per row: no filter on a shingles-derived
-    column may be pushed below it with the shingle chain substituted in."""
+    column may be pushed below it with the shingle chain substituted in.
+    The driver finish collects the collapsed text once (one
+    regexp_replace) and runs no tokenizer in Spark."""
     from clusterindices_spark.operators import dedup
     from clusterindices_spark.operators.curation import q_curation_decontaminate
 
     d = planted_docs(spark)
     assert _n_tokenizers(dedup._doc_shingles(d)) == 1
+    dedup.clear_pins()
+    monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 0)
     dedup.minhash_pairs(d)
     assert _n_tokenizers(dedup._PINNED["minhash_shingles"]) == 1
+
+    collected = []
+    to_arrow = type(d).toArrow
+
+    def spy(df):
+        collected.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return to_arrow(df)
+
+    dedup.clear_pins()
+    monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 1 << 23)
+    monkeypatch.setattr(type(d), "toArrow", spy)
+    stats: dict = {}
+    dedup.minhash_pairs(d, stats=stats)
+    assert stats["finish"] == "driver" and "minhash_shingles" not in dedup._PINNED
+    assert len(collected) == 1
+    assert collected[0].count("regexp_replace(") == 1
+    assert "regexp_extract_all(" not in collected[0]
     # one tokenizer per side: the eval set and the training docs
     assert _n_tokenizers(q_curation_decontaminate(spark, SF_SMOKE)) == 2
 
@@ -228,7 +249,13 @@ def test_minhash_reports_hot_bucket_drop(spark):
     minhash_pairs(
         spark.createDataFrame(unrelated, "doc_id BIGINT, text STRING"), stats=clean
     ).count()
-    assert clean == {"dropped_buckets": 0, "dropped_band_rows": 0, "finish": "driver"}
+    assert clean == {
+        "text_rows": 250,
+        "text_tokens": 250 * 60,
+        "dropped_buckets": 0,
+        "dropped_band_rows": 0,
+        "finish": "driver",
+    }
 
 
 def test_simhash_finds_exact_copies(spark):

@@ -1,11 +1,12 @@
 """Banded MinHash: the driver finish against the Spark joins.
 
-``minhash_pairs`` bands, caps and verifies in NumPy on the driver when the
-per-doc band table, the candidate pairs and the candidates' shingles each
-fit ``LOCAL_LSH_ROWS`` rows; with the budget at 0 every corpus runs the
-Spark path (hot-bucket agg, band self-join, distinct, verification joins)
-instead. Both must give the same rows with bit-equal Jaccard values, and
-the same ``stats`` apart from ``finish``.
+``minhash_pairs`` shingles, hashes, bands, caps and verifies in NumPy on
+the driver when the collapsed text's tokens, the candidate pairs and their
+row pairs each fit ``LOCAL_LSH_ROWS``; with the budget at 0 every
+non-empty corpus runs the Spark path (shingle pin, signature aggregate,
+hot-bucket agg, band self-join, distinct, verification joins) instead.
+Both must give the same rows with bit-equal Jaccard values, and the same
+``stats`` apart from ``finish``.
 """
 
 from __future__ import annotations
@@ -15,7 +16,9 @@ import re
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from clusterindices_spark.functions.sparkhash import arrow_bytes
 from clusterindices_spark.operators import dedup
 from tests.test_dedup_similarity import BASE, EDGE_DOCS, hot_family_docs
 
@@ -70,24 +73,23 @@ def test_hot_bucket_family(spark, monkeypatch):
     assert st["dropped_band_rows"] > st["dropped_buckets"] * dedup.MAX_BAND_BUCKET
 
 
-def test_null_doc_ids_fill_buckets_but_never_pair(spark, monkeypatch):
+def test_null_doc_ids_never_fill_buckets(spark, monkeypatch):
     """MAX_BAND_BUCKET identical docs share one bucket per band: it is kept
-    and gives all C(100, 2) pairs. One NULL-id copy more puts every bucket
-    over the cap: the NULL row counts towards occupancy, so all 8 buckets
-    (101 rows each) are dropped, on both paths."""
+    and gives all C(100, 2) pairs. A NULL-id copy more changes nothing:
+    NULL-id rows are dropped before the signature, on both paths, so they
+    neither pair nor count towards a bucket's occupancy."""
     n = dedup.MAX_BAND_BUCKET
     text = BASE[1]
     clique = [(i, text) for i in range(n)]
     got, st, _ = _both(spark.createDataFrame(clique, SCHEMA), monkeypatch)
     assert len(got) == n * (n - 1) // 2 and st["dropped_buckets"] == 0
 
-    # every NULL-id row is one doc of the band table: a NULL copy of the
-    # clique's text has the clique's band hashes
-    got, st, _ = _both(spark.createDataFrame(clique + [(None, text)], SCHEMA), monkeypatch)
-    n_bands = dedup.MINHASH_SEEDS // dedup.MINHASH_BAND_ROWS
-    assert got == []
-    assert st["dropped_buckets"] == n_bands
-    assert st["dropped_band_rows"] == n_bands * (n + 1)
+    with_null, st, _ = _both(
+        spark.createDataFrame(clique + [(None, text)], SCHEMA), monkeypatch
+    )
+    assert with_null == got
+    assert st["dropped_buckets"] == 0 and st["dropped_band_rows"] == 0
+    assert st["text_rows"] == n
 
     planted = _planted_family(4, [(None, BASE[0]), (None, BASE[0] + " more")])
     got, _, _ = _both(spark.createDataFrame(planted, SCHEMA), monkeypatch)
@@ -135,7 +137,13 @@ def test_empty_input_and_no_candidates(spark, monkeypatch):
     empty = spark.createDataFrame([], SCHEMA)
     got, st, st_spark = _both(empty, monkeypatch)
     assert got == [] and st_spark["finish"] == "driver"  # fits any budget
-    assert st == {"dropped_buckets": 0, "dropped_band_rows": 0, "finish": "driver"}
+    assert st == {
+        "text_rows": 0,
+        "text_tokens": 0,
+        "dropped_buckets": 0,
+        "dropped_band_rows": 0,
+        "finish": "driver",
+    }
 
     unrelated = spark.createDataFrame(list(enumerate(BASE)), SCHEMA)
     got, st, st_spark = _both(unrelated, monkeypatch)
@@ -168,7 +176,7 @@ def test_seeds_below_one_band_raise(spark):
         dedup.minhash_pairs(d, seeds=dedup.MINHASH_BAND_ROWS - 1)
 
 
-def _brute_band_pairs(ids, valid, bh):
+def _brute_band_pairs(ids, bh):
     n_bands, n = bh.shape
     buckets: dict = {}
     for b in range(n_bands):
@@ -179,9 +187,8 @@ def _brute_band_pairs(ids, valid, bh):
     for k, rows in buckets.items():
         if k in hot:
             continue
-        live = [i for i in rows if valid[i]]
-        for x in live:
-            for y in live:
+        for x in rows:
+            for y in rows:
                 if ids[x] < ids[y]:
                     pairs.add((x, y))
     return sorted(pairs), len(hot), sum(len(v) for v in hot.values())
@@ -192,19 +199,19 @@ def test_band_pairs_match_brute_force(n, width):
     rng = np.random.default_rng(n + width)
     n_bands = 8
     ids = rng.permutation(10 * max(n, 1))[:n].astype(np.int64) - 5 * n
-    valid = rng.random(n) > 0.1
     bh = rng.integers(-width, width, (n_bands, n)).astype(np.int32)
     stats: dict = {}
-    ra, rb = dedup._band_pairs(ids, valid, bh, stats)
-    want, n_hot, hot_rows = _brute_band_pairs(ids, valid, bh)
+    ra, rb = dedup._band_pairs(ids, bh, stats)
+    want, n_hot, hot_rows = _brute_band_pairs(ids, bh)
     assert sorted(zip(ra.tolist(), rb.tolist())) == want
     assert stats == {"dropped_buckets": n_hot, "dropped_band_rows": hot_rows}
 
 
 def test_minhash_pairs_job_count(spark, monkeypatch):
     """A near-dup corpus under the budget: the call plus a count of its
-    result run at most 9 jobs (8 here; the Spark joins ran 10), and
-    give the Spark path's rows."""
+    result run at most 5 jobs (the decision aggregate, the text collect
+    and the count; the Spark joins ran 10), and give the Spark path's
+    rows."""
     rng = random.Random(3)
     vocab = [f"w{i}" for i in range(3000)]
     rows = []
@@ -230,4 +237,108 @@ def test_minhash_pairs_job_count(spark, monkeypatch):
     got = sorted((r["doc_a"], r["doc_b"], r["jaccard"].hex()) for r in pairs.collect())
     d.unpersist()
     assert got == want and n == len(want) > 100
-    assert n_jobs <= 9, n_jobs
+    assert n_jobs <= 5, n_jobs
+
+
+def _random_text(rng, n_words):
+    """Words of 1–14 characters from a mixed-script, mixed-case alphabet
+    (so trigrams cross the hash's 4-, 8- and 32-byte branches), joined by
+    runs of spaces, tabs, newlines and vertical tabs; a no-break space is
+    part of a word."""
+    alpha = "abcXYZ09éÜßİΣς中\U0001f600 "
+    seps = [" ", "  ", "\t", "\n", " \r\n ", "\x0b", "\x0c"]
+    words = ["".join(rng.choice(alpha) for _ in range(rng.randint(1, 14))) for _ in range(n_words)]
+    return rng.choice(["", " ", "\t"]) + "".join(w + rng.choice(seps) for w in words)
+
+
+def test_driver_trigrams_match_doc_shingles(spark):
+    """The driver's trigram spans, as byte sets, equal ``_doc_shingles``'
+    arrays row by row on degenerate and on random text, NULL text aside
+    (it has no shingles and is never collected); ``_row_trigrams``' codes
+    give every row its distinct trigrams once, and two rows share as many
+    codes as they share trigrams."""
+    rng = random.Random(11)
+    rows = EDGE_DOCS + [(100 + i, _random_text(rng, rng.randint(0, 30))) for i in range(200)]
+    # repeated words make repeated trigrams within and across rows
+    rows += [(400 + i, " ".join(rng.choice("abc") for _ in range(12))) for i in range(20)]
+    d = spark.createDataFrame(rows, SCHEMA)
+    want = {r["doc_id"]: r["shingles"] for r in dedup._doc_shingles(d).collect()}
+    assert {k for k, v in want.items() if v is None} == {1}
+    table = d.where("text IS NOT NULL").select(
+        "doc_id", dedup._collapsed(F.col("text")).alias("s")
+    ).toArrow()
+    s = table.column("s").combine_chunks()
+    ids = table.column("doc_id").to_pylist()
+
+    data = arrow_bytes(s)[0].tobytes()
+    spans: dict = {i: set() for i in ids}
+    for r, a, n in zip(*(v.tolist() for v in dedup._trigram_spans(s))):
+        spans[ids[r]].add(data[a : a + n].decode())
+    assert spans == {k: set(v) for k, v in want.items() if v is not None}
+    assert sum(map(len, spans.values())) > 2000
+
+    codes: dict = {i: [] for i in ids}
+    for r, c in zip(*(v.tolist() for v in dedup._row_trigrams(s))):
+        codes[ids[r]].append(c)
+    assert {k: len(v) for k, v in codes.items()} == {k: len(v) for k, v in spans.items()}
+    keys = sorted(ids)
+    for a, b in zip(keys, keys[1:] + keys[:1]):
+        assert len(set(codes[a]) & set(codes[b])) == len(spans[a] & spans[b]), (a, b)
+
+
+def test_random_text_matches_spark_path(spark, monkeypatch):
+    """Random multi-script text with planted edits, and the edge docs: the
+    driver finish gives the Spark path's rows and stats, and the decision
+    counts the non-NULL text rows and Σ size(split(s, ' ')) over their
+    collapsed text."""
+    rng = random.Random(5)
+    rows = list(EDGE_DOCS)
+    for g in range(40):
+        text = _random_text(rng, 20)
+        rows.append((100 + 2 * g, text))
+        rows.append((101 + 2 * g, text.replace(text[5:9], "edit", 1)))
+    d = spark.createDataFrame(rows, SCHEMA)
+    got, st, _ = _both(d, monkeypatch, threshold=0.3)
+    assert len(got) >= 20
+    want = d.where("text IS NOT NULL").agg(
+        F.count(F.lit(1)),
+        F.sum(F.size(F.split(dedup._collapsed(F.col("text")), " "))),
+    ).first()
+    assert (st["text_rows"], st["text_tokens"]) == tuple(want)
+
+
+def test_driver_path_sees_externally_rewritten_input(spark, monkeypatch, tmp_path):
+    """A writer outside this session rewrites the parquet under a path;
+    with no ``clear_pins()`` the driver finish returns the new corpus's
+    pairs, exactly as a never-used path with the same rows does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 1 << 23)
+    path, fresh = tmp_path / "docs", tmp_path / "fresh"
+
+    def write(p, base):
+        p.mkdir(exist_ok=True)
+        rows = _planted_family(6) if base == 0 else [
+            (10 + i, BASE[1].replace("hot", f"cold{i}")) for i in range(5)
+        ]
+        ids, texts = zip(*rows)
+        pq.write_table(
+            pa.table({"doc_id": pa.array(ids, pa.int64()), "text": pa.array(texts)}),
+            str(p / "part-0.parquet"),
+        )
+
+    def pairs(p):
+        st: dict = {}
+        out = dedup.minhash_pairs(spark.read.parquet(str(p)), stats=st).collect()
+        assert st["finish"] == "driver"
+        return sorted((r["doc_a"], r["doc_b"], r["jaccard"]) for r in out)
+
+    write(path, 0)
+    old = pairs(path)
+    write(path, 1)
+    write(fresh, 1)
+    got = pairs(path)
+    want = pairs(fresh)
+    assert old and want and want != old
+    assert got == want

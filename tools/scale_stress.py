@@ -26,12 +26,15 @@ from __future__ import annotations
 
 import json
 import os
+import resource
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from perfbench.procs import cpu_seconds  # noqa: E402
 
 def _part_rows(df, cols) -> dict:
     per = df.groupBy(F.spark_partition_id().alias("pid")).agg(
@@ -105,7 +108,9 @@ def stress_minhash(spark) -> dict:
     operator. 2% of docs are planted duplicates (groups of 2 sharing
     content hash-seeded by the group), the rest unique. Reports the
     band-bucket occupancy tail — the quadratic candidate hazard — plant
-    recall, and which finish ran (above 262k docs, the Spark path)."""
+    recall, which finish ran (above 335k docs, the Spark path) with the
+    counts that decided it, and the call's wall, CPU and the driver
+    process's peak RSS."""
     from clusterindices_spark.operators.dedup import minhash_pairs
 
     n_docs = int(os.environ.get("MH_DOCS", "3000000"))
@@ -127,11 +132,14 @@ def stress_minhash(spark) -> dict:
     docs.count()
     expected_pairs = n_docs // 100  # (2g, 2g+1) groups
 
+    jvm_pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    cpu0 = cpu_seconds(jvm_pid)
     t0 = time.monotonic()
     stats: dict = {}
     pairs = minhash_pairs(docs, threshold=0.9, stats=stats).persist()
     n_pairs = pairs.count()
     sec = time.monotonic() - t0
+    cpu = cpu_seconds(jvm_pid) - cpu0
     hit = pairs.where(
         (F.col("doc_b") == F.col("doc_a") + 1)
         & (F.col("doc_a") % 100 == 0)
@@ -148,12 +156,20 @@ def stress_minhash(spark) -> dict:
         "metric": "minhash_stress",
         "n_docs": n_docs,
         "wall_sec": round(sec, 1),
+        # the JVM process tree plus this driver process, over the call
+        # and the count of its result
+        "cpu_sec": round(cpu, 1),
+        "driver_peak_rss_mb": round(
+            resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+        ),
         "n_verified_pairs": n_pairs,
         "planted_pairs": expected_pairs,
         "plant_recall": round(hit / expected_pairs, 4),
         "bands": MINHASH_SEEDS // MINHASH_BAND_ROWS,
-        # "spark" past LOCAL_LSH_ROWS band rows (262k docs at 8 bands)
+        # "spark" past LOCAL_LSH_ROWS tokens (335k docs of 25 words)
         "finish": stats["finish"],
+        "text_rows": stats.get("text_rows"),
+        "text_tokens": stats.get("text_tokens"),
         "dropped_buckets": stats["dropped_buckets"],
         **part,
     }
