@@ -14,7 +14,7 @@ Scale posture: every tier is (scan → per-row expression work → one or two
 hash-key shuffles). MinHash banding shuffles by (band, band_hash) — the
 classic way to avoid the O(n²) pair explosion at 100 TB; candidate
 verification only touches bucket-mates. When one aggregate says the
-corpus's collapsed text fits LOCAL_LSH_ROWS tokens, one collect brings it
+corpus's text fits LOCAL_LSH_BYTES, one collect brings its collapsed form
 to the driver, which shingles, hashes, bands and verifies in NumPy with
 bit-exact twins of Spark's hashes (no shuffle of shingles or bands, no
 join, nothing persisted). A corpus over the budget pays for that one
@@ -80,13 +80,18 @@ MAX_BAND_BUCKET = 100
 # the driver instead of by further Spark rounds — 32 MB as two int64
 # Arrow columns.
 LOCAL_CC_EDGES = 1 << 21
-# Budget of the MinHash driver finish (minhash_pairs): the tokens of the
-# whitespace-collapsed text, the candidate pairs (Σ C(s,2) over the kept
-# buckets) and their row pairs must each number at most this many, and the
-# text rows at most this many per band, for the shingles, signatures,
-# banding, hot-bucket cap and exact-Jaccard verification to run in NumPy on
-# the driver; any count over it runs the Spark joins instead.
+# Budgets of the MinHash driver finish (minhash_pairs): the UTF-8 bytes of
+# the text must number at most LOCAL_LSH_BYTES, the text rows at most
+# LOCAL_LSH_ROWS per band, and the candidate pairs (Σ C(s,2) over the kept
+# buckets) and their row pairs at most LOCAL_LSH_ROWS each, for the
+# shingles, signatures, banding, hot-bucket cap and exact-Jaccard
+# verification to run in NumPy on the driver; any count over its budget
+# runs the Spark joins instead. The byte budget bounds what the collect
+# holds whatever the script (text without ASCII whitespace is one token
+# but still all its bytes), and the tokens with it: a token and its
+# separator take at least two bytes.
 LOCAL_LSH_ROWS = 1 << 23
+LOCAL_LSH_BYTES = 1 << 26
 SIMHASH_BITS = 63  # 63 keeps the packed value inside a signed int64
 JACCARD_THRESHOLD = 0.2
 # Stop-shingle cap for the exact-Jaccard tier: a shingle appearing in more
@@ -568,12 +573,13 @@ def _pair_jaccard(doc, parent, code, a_ids, b_ids, threshold):
 
 
 def _tokens(s: pa.Array):
-    """(row, start, length, keep): the ' '-split pieces of each string of
-    ``s`` (no nulls) that are non-empty tokens, with each token's byte span
-    in ``s``'s data buffer, and ``keep`` the mask of those tokens among
-    all pieces."""
+    """(row, start, length, pieces, keep): the ' '-split pieces of each
+    string of ``s`` (no nulls) that are non-empty tokens, with each token's
+    byte span in ``s``'s data buffer; ``pieces`` holds all the pieces, and
+    ``keep`` is the mask of the tokens among them."""
     toks = pc.split_pattern(s, " ")
-    _, _, size = arrow_bytes(pc.list_flatten(toks))
+    pieces = pc.list_flatten(toks)
+    _, _, size = arrow_bytes(pieces)
     offsets = toks.offsets.to_numpy()
     row = np.repeat(np.arange(len(s)), np.diff(offsets))
     # the pieces of a row sit one separator byte apart
@@ -581,7 +587,7 @@ def _tokens(s: pa.Array):
     _, s_start, _ = arrow_bytes(s)
     start = s_start[row] + at - at[offsets[:-1] - offsets[0]][row]
     keep = size > 0
-    return row[keep], start[keep], size[keep], keep
+    return row[keep], start[keep], size[keep], pieces, keep
 
 
 def _trigram_spans(s: pa.Array):
@@ -594,7 +600,7 @@ def _trigram_spans(s: pa.Array):
     ' '-split tokens, and each spans the text from its first token's start
     to its last token's end. Splitting the bytes at 0x20 is exact: the
     string is valid UTF-8."""
-    row, start, size, _ = _tokens(s)
+    row, start, size, _, _ = _tokens(s)
     at = np.flatnonzero(row[:-2] == row[2:])
     return row[at], start[at], start[at + 2] + size[at + 2] - start[at]
 
@@ -604,9 +610,8 @@ def _row_trigrams(s: pa.Array):
     as in ``_trigram_spans``, sorted by (row, code), where equal codes
     mean equal bytes. A token holds no space, so a trigram's three token
     codes identify its bytes."""
-    row, _, _, keep = _tokens(s)
-    words = pc.list_flatten(pc.split_pattern(s, " ")).filter(pa.array(keep))
-    enc = pc.dictionary_encode(words)
+    row, _, _, pieces, keep = _tokens(s)
+    enc = pc.dictionary_encode(pieces.filter(pa.array(keep)))
     tok = enc.indices.to_numpy().astype(np.int64)
     n = max(len(enc.dictionary), 1)
     at = np.flatnonzero(row[:-2] == row[2:])
@@ -667,22 +672,19 @@ def _driver_minhash_pairs(
     d: DataFrame, n_bands: int, threshold: float, stats: dict
 ) -> DataFrame | None:
     """``minhash_pairs``' driver finish: its verified pairs as an Arrow
-    relation, or None when ``doc_id`` is not an integer, or the text, the
-    candidate pairs or their row pairs are over LOCAL_LSH_ROWS (``stats``
-    is then left to the Spark path)."""
+    relation, or None when ``doc_id`` is not an integer, or the text is
+    over LOCAL_LSH_BYTES, or its rows, the candidate pairs or their row
+    pairs are over LOCAL_LSH_ROWS (``stats`` is then left to the Spark
+    path)."""
     id_type = d.schema["doc_id"].dataType
     if not isinstance(id_type, IntegralType):
         return None
     d = d.where(F.col("text").isNotNull())
-    # the tokens are Σ size(split(s, ' ')) over the collapsed text s; each
-    # \s+ run of the text is one separator of s (case folding moves no
-    # whitespace), so counting the runs gives that sum without building s
-    n_rows, n_tokens = d.agg(
-        F.count(F.lit(1)), F.sum(F.regexp_count("text", F.lit(r"\s+")) + 1)
-    ).first()
-    n_tokens = n_tokens or 0
-    stats["text_rows"], stats["text_tokens"] = n_rows, n_tokens
-    if n_rows > LOCAL_LSH_ROWS // n_bands or n_tokens > LOCAL_LSH_ROWS:
+    # a length read per row, no pass over the characters
+    n_rows, n_bytes = d.agg(F.count(F.lit(1)), F.sum(F.octet_length("text"))).first()
+    n_bytes = n_bytes or 0
+    stats["text_rows"], stats["text_bytes"] = n_rows, n_bytes
+    if n_rows > LOCAL_LSH_ROWS // n_bands or n_bytes > LOCAL_LSH_BYTES:
         return None
     table = d.select("doc_id", _collapsed(F.col("text")).alias("s")).toArrow()
     ids = table.column("doc_id").to_numpy()
@@ -736,13 +738,14 @@ def minhash_pairs(
     when given, receives ``dropped_buckets`` and ``dropped_band_rows``
     (the (doc, band) rows those buckets held), ``finish``: "driver" or
     "spark", and for an integer ``doc_id`` the decision's counts
-    ``text_rows`` and ``text_tokens``.
+    ``text_rows`` and ``text_bytes``.
 
     Driver finish: one aggregate counts the non-NULL text rows and their
-    tokens, Σ size(split(s, ' ')) with s the case-folded text whose
-    whitespace runs are collapsed to one space. When the rows are at most
-    LOCAL_LSH_ROWS // bands and the tokens at most LOCAL_LSH_ROWS (2²³),
-    one ``toArrow()`` brings (doc_id, s) to the driver. NumPy takes each
+    UTF-8 bytes (``octet_length``: a length read, no regex). When the rows
+    are at most LOCAL_LSH_ROWS // bands and the bytes at most
+    LOCAL_LSH_BYTES (64 MiB), one ``toArrow()`` brings (doc_id, s) to the
+    driver, s the case-folded text whose whitespace runs are collapsed to
+    one space. NumPy takes each
     trigram's byte span in s, hashes it with ``functions/sparkhash.py``'s
     bit-exact twins of ``xxhash64`` and ``hash``, takes the minima per
     ``doc_id``, bands them and applies the cap; the candidate pairs and
@@ -750,19 +753,22 @@ def minhash_pairs(
     built for the candidates' rows only, and each pair is verified with
     byte-exact Jaccard. The result is an Arrow relation, and nothing is
     left persisted. Rows, Jaccard bits and ``stats`` equal the Spark
-    path's (``tests/test_minhash_lsh.py``). At the budget edge
-    (``tools/scale_stress.py`` at 335k docs of 25 words, 8.4M tokens, on a
-    4-core host) the call took 9.2 s wall and 19.6 CPU-s, and the driver
-    process peaked at 832 MB RSS.
+    path's (``tests/test_minhash_lsh.py``). Near the budget edge
+    (``tools/scale_stress.py`` at 395k docs of 25 words, 66.5 MB, 9.9M
+    tokens, on a 4-core host) the call took 10.9 s wall and 23.1 CPU-s,
+    and the driver process peaked at 938 MB RSS. The NumPy arrays hold
+    about 40–75 bytes per token, and the tokens are at most half the
+    bytes: 64 MiB of one-letter words, the worst case, would need about
+    2.4 GB (measured at 16 MiB: 0.57 GB over the process's base).
 
     A corpus over the budget (any 100 TB one) or with non-integer
     ``doc_id``s runs the Spark path: shingles and a per-doc band table,
     both pinned; bands exploded from the table, shuffled by (band,
     bucket), self-joined, and verified by joins against the shingles.
-    Over the budget the failed decision costs one aggregate pass over the
-    text (a regex count per row; its exchange carries one partial row
-    per partition): 2.4–5.2 CPU-s at 400k docs of 25 words, with the
-    JIT warm and cold.
+    Over the budget the failed decision costs one aggregate that reads
+    each text's length (its exchange carries one partial row per
+    partition): 0.3–1.2 CPU-s at 400k docs of 25 words, about what
+    ``count(1)`` alone costs.
 
     A ``seeds`` below MINHASH_BAND_ROWS (no whole band) raises ValueError."""
 
@@ -1110,6 +1116,25 @@ def _driver_labels(e: DataFrame, edges: pa.Table) -> DataFrame:
     return arrow_frame(e.sparkSession, table, struct)
 
 
+# plan nodes that only read, project or filter rows already held in
+# memory: the cache's (with cached data substituted) or a local relation's
+_IN_MEMORY_NODES = frozenset({"Project", "Filter", "InMemoryRelation", "LocalRelation"})
+
+
+def _in_memory(df: DataFrame) -> bool:
+    """True when every node of ``df``'s plan, with cached data
+    substituted, is in _IN_MEMORY_NODES: reading it again reruns no
+    scan, join or aggregate."""
+    stack = [df._jdf.queryExecution().withCachedData()]
+    while stack:
+        plan = stack.pop()
+        if plan.nodeName() not in _IN_MEMORY_NODES:
+            return False
+        kids = plan.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return True
+
+
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
@@ -1158,9 +1183,12 @@ def connected_components_star(
     Same output contract as connected_components: (node, component), with
     component the smallest node id of the node's component.
 
-    The input edge set is checkpointed only when a Spark round runs, so
-    above the budget the edge source is read twice: once by the bounded
-    probe and once by round 1. Each round's edge set is
+    An edge source that is computed (joins, scans, aggregates) is
+    checkpointed before the bounded probe, so it runs once whichever
+    finish follows. One that only projects and filters cached or local
+    rows (``_in_memory``; a persisted or driver-built pair table) is
+    checkpointed only when a Spark round runs: the probe then reads
+    those rows and round 1 reads them again. Each round's edge set is
     localCheckpoint'ed, not merely persisted: a
     round references the previous edge set ~4× (symmetric view + both
     joins), so without lineage truncation the logical plan itself grows
@@ -1180,9 +1208,14 @@ def connected_components_star(
     # whole edge set when it fits, a bounded prefix when it does not (its
     # map side writes up to that many rows per partition, so over the
     # budget it costs at most one shuffle write of the edges, once)
+    in_memory = _in_memory(e)
+    if not in_memory:
+        # lazy: the collect below materializes + checkpoints it, so the
+        # edge source runs once even when round 1 reads it next
+        e = e.localCheckpoint(eager=False)
     head = e.limit(LOCAL_CC_EDGES + 1).toArrow()
     n_edges = head.num_rows
-    if n_edges > LOCAL_CC_EDGES:
+    if n_edges > LOCAL_CC_EDGES and in_memory:
         # lazy: round 1's fingerprint agg materializes it
         e = e.localCheckpoint(eager=False)
     prev = None

@@ -380,12 +380,12 @@ def _clusters_from_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
     source: (vec_a, vec_b) edges → large/small-star components → per-vector
     membership (vec_id, component_id, is_canonical, n_members).
 
-    The edge list is handed to the star engine UN-checkpointed, so no
-    outer checkpoint adds a full pass over the pair tier (r13). A pair
-    graph within LOCAL_CC_EDGES is labelled in the driver from the
-    engine's bounded collect, one pass over the pair tier; a larger one is
-    read once more by the engine's first Spark round, which checkpoints
-    it."""
+    The edge list is handed to the star engine UN-checkpointed: the
+    engine's canonicalize step lazily checkpoints it, and its first action
+    (the bounded collect that decides between the driver finish and the
+    Spark rounds) materializes it, so the pair scan runs exactly once and
+    no outer checkpoint adds a full pass over the pair tier (r13). A pair
+    graph within LOCAL_CC_EDGES is labelled in the driver."""
     from pyspark.sql import Window as W
 
     from clusterindices_spark.operators.dedup import (

@@ -251,7 +251,7 @@ def test_minhash_reports_hot_bucket_drop(spark):
     ).count()
     assert clean == {
         "text_rows": 250,
-        "text_tokens": 250 * 60,
+        "text_bytes": sum(len(t.encode()) for _, t in unrelated),
         "dropped_buckets": 0,
         "dropped_band_rows": 0,
         "finish": "driver",
@@ -871,6 +871,49 @@ def test_star_cc_sees_overwritten_input(spark, tmp_path):
     want = run(fresh_p)
     assert want == [(0, 0), (1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (6, 5), (7, 5)]
     assert got == want
+
+
+def test_star_cc_runs_a_computed_edge_source_once(spark, monkeypatch, tmp_path):
+    """An edge source that computes its rows (here a Python UDF that logs
+    each call to a file: an accumulator misses the calls of a task that a
+    limit stops early) runs once even when the bounded probe finds it over
+    the budget and Spark rounds read it next; one that only projects
+    cached or local rows is read in place, with no checkpoint before the
+    probe."""
+    from pyspark.sql.types import LongType
+
+    from clusterindices_spark.functions.local import local_frame
+    from clusterindices_spark.operators import dedup
+
+    log = str(tmp_path / "calls")
+
+    def ident(x):
+        with open(log, "a") as f:
+            f.write("x")
+        return x
+
+    n = 40
+    edges = spark.range(n).select(
+        F.udf(ident, LongType()).asNondeterministic()(F.col("id")).alias("src"),
+        (F.col("id") + 1).alias("dst"),
+    )
+    monkeypatch.setattr(dedup, "LOCAL_CC_EDGES", 0)
+    stats: dict = {}
+    comp = dedup.connected_components_star(
+        spark.range(n + 1).select(F.col("id").alias("node")), edges, stats=stats
+    ).collect()
+    assert {r["component"] for r in comp} == {0} and stats["rounds"] > 0
+    with open(log) as f:
+        assert len(f.read()) == n
+
+    pairs = local_frame(spark, [(1, 2), (3, 4)], "src BIGINT, dst BIGINT")
+    cached = spark.range(5).select(F.col("id").alias("src"), F.col("id").alias("dst"))
+    cached.persist().count()
+    assert dedup._in_memory(pairs.where(F.col("src") > 0).select("src"))
+    assert dedup._in_memory(cached.select(F.col("dst").alias("u")))
+    assert not dedup._in_memory(edges)
+    assert not dedup._in_memory(pairs.join(cached, "src"))
+    cached.unpersist()
 
 
 def test_ivf_build_leaves_no_persisted_frame(spark):

@@ -1,8 +1,9 @@
 """Banded MinHash: the driver finish against the Spark joins.
 
 ``minhash_pairs`` shingles, hashes, bands, caps and verifies in NumPy on
-the driver when the collapsed text's tokens, the candidate pairs and their
-row pairs each fit ``LOCAL_LSH_ROWS``; with the budget at 0 every
+the driver when the text's bytes fit ``LOCAL_LSH_BYTES`` and its rows per
+band, the candidate pairs and their row pairs each fit
+``LOCAL_LSH_ROWS``; with the latter budget at 0 every
 non-empty corpus runs the Spark path (shingle pin, signature aggregate,
 hot-bucket agg, band self-join, distinct, verification joins) instead.
 Both must give the same rows with bit-equal Jaccard values, and the same
@@ -139,7 +140,7 @@ def test_empty_input_and_no_candidates(spark, monkeypatch):
     assert got == [] and st_spark["finish"] == "driver"  # fits any budget
     assert st == {
         "text_rows": 0,
-        "text_tokens": 0,
+        "text_bytes": 0,
         "dropped_buckets": 0,
         "dropped_band_rows": 0,
         "finish": "driver",
@@ -289,8 +290,7 @@ def test_driver_trigrams_match_doc_shingles(spark):
 def test_random_text_matches_spark_path(spark, monkeypatch):
     """Random multi-script text with planted edits, and the edge docs: the
     driver finish gives the Spark path's rows and stats, and the decision
-    counts the non-NULL text rows and Σ size(split(s, ' ')) over their
-    collapsed text."""
+    counts the non-NULL text rows and their UTF-8 bytes."""
     rng = random.Random(5)
     rows = list(EDGE_DOCS)
     for g in range(40):
@@ -300,11 +300,27 @@ def test_random_text_matches_spark_path(spark, monkeypatch):
     d = spark.createDataFrame(rows, SCHEMA)
     got, st, _ = _both(d, monkeypatch, threshold=0.3)
     assert len(got) >= 20
-    want = d.where("text IS NOT NULL").agg(
-        F.count(F.lit(1)),
-        F.sum(F.size(F.split(dedup._collapsed(F.col("text")), " "))),
-    ).first()
-    assert (st["text_rows"], st["text_tokens"]) == tuple(want)
+    texts = [t for _, t in rows if t is not None]
+    assert (st["text_rows"], st["text_bytes"]) == (
+        len(texts),
+        sum(len(t.encode()) for t in texts),
+    )
+
+
+def test_text_over_the_byte_budget_runs_spark(spark):
+    """Text without ASCII whitespace is one token however long, so only
+    the byte budget keeps it from the collect: at the default budgets a
+    corpus of long space-free docs just over LOCAL_LSH_BYTES, far under
+    the row budget, runs the Spark path."""
+    n_docs, size = 33, 1 << 21  # 66 MiB of text in 33 rows
+    assert n_docs * size > dedup.LOCAL_LSH_BYTES >= (n_docs - 1) * size
+    d = spark.range(n_docs).select(
+        F.col("id").alias("doc_id"), F.repeat(F.lit("x"), size).alias("text")
+    )
+    stats: dict = {}
+    dedup.minhash_pairs(d, stats=stats)
+    assert stats["finish"] == "spark"
+    assert (stats["text_rows"], stats["text_bytes"]) == (n_docs, n_docs * size)
 
 
 def test_driver_path_sees_externally_rewritten_input(spark, monkeypatch, tmp_path):

@@ -108,7 +108,7 @@ def stress_minhash(spark) -> dict:
     operator. 2% of docs are planted duplicates (groups of 2 sharing
     content hash-seeded by the group), the rest unique. Reports the
     band-bucket occupancy tail — the quadratic candidate hazard — plant
-    recall, which finish ran (above 335k docs, the Spark path) with the
+    recall, which finish ran (above about 390k docs, the Spark path) with the
     counts that decided it, and the call's wall, CPU and the driver
     process's peak RSS."""
     from clusterindices_spark.operators.dedup import minhash_pairs
@@ -166,10 +166,10 @@ def stress_minhash(spark) -> dict:
         "planted_pairs": expected_pairs,
         "plant_recall": round(hit / expected_pairs, 4),
         "bands": MINHASH_SEEDS // MINHASH_BAND_ROWS,
-        # "spark" past LOCAL_LSH_ROWS tokens (335k docs of 25 words)
+        # "spark" past LOCAL_LSH_BYTES (about 390k docs of 25 words)
         "finish": stats["finish"],
         "text_rows": stats.get("text_rows"),
-        "text_tokens": stats.get("text_tokens"),
+        "text_bytes": stats.get("text_bytes"),
         "dropped_buckets": stats["dropped_buckets"],
         **part,
     }
