@@ -38,7 +38,6 @@ def ranked(
     df: DataFrame,
     order: list[Column],
     *,
-    tag: str,
     rank_col: str = "rk",
     cum_of: Column | None = None,
     cum_col: str = "cum",
@@ -50,14 +49,14 @@ def ranked(
     single-partition window. ``order`` must be a total order (add an id
     tie-break).
 
-    Pinning (``tag``): the per-partition frame is persisted before the
-    P-row stats collect. Required for correctness, not speed — range
-    boundaries come from sampling seeded by the RDD id, so a SECOND job
-    rebuilding the plan could draw different boundaries and assign rows to
-    different partitions than the ones the offsets were computed from.
-    One materialization = one boundary draw = consistent pids."""
-    from clusterindices_spark.functions.pins import repin
-
+    The per-partition frame is eagerly localCheckpointed before the P-row
+    stats collect, and the returned frame reads that checkpoint. Required
+    for correctness, not speed — range boundaries come from sampling
+    seeded by the RDD id, so a SECOND job rebuilding the plan could draw
+    different boundaries and assign rows to different partitions than the
+    ones the offsets were computed from. One materialization = one
+    boundary draw = consistent pids; the checkpoint belongs to the
+    returned frame, so no later call can release it."""
     part = df.repartitionByRange(num_partitions, *order).withColumn(
         _PID, F.spark_partition_id()
     )
@@ -72,7 +71,7 @@ def ranked(
             ),
         )
         aggs.append(F.sum(cum_of).alias("_s"))
-    local = repin(f"ranking:{tag}", local)
+    local = local.localCheckpoint(eager=True)
     # P-row driver-side prefix: offsets[pid] = totals of all pids before it
     # (range partitions are ordered by pid, so prefix order == rank order).
     # Driver-scale by construction: one row per shuffle partition.

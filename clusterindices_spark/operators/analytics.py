@@ -529,7 +529,6 @@ def q_events_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     ranked = _gl_ranked(
         per_user,
         [F.col("cnt").desc(), F.col("user_id")],
-        tag="pareto_concentration",
         rank_col="rk",
         cum_of=F.col("cnt"),
         cum_col="cum",
@@ -749,7 +748,6 @@ def q_events_gini_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _gl_ranked(
         per_user,
         [F.col("cnt"), F.col("user_id")],
-        tag="gini_activity",
         rank_col="rk",
     ).select("cnt", "rk")
     agg = r.agg(

@@ -37,6 +37,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DoubleType, IntegralType, StructField, StructType
 
 from clusterindices_spark.functions.local import arrow_frame, local_frame
+from clusterindices_spark.functions.pins import clear_pins  # noqa: F401
 from clusterindices_spark.functions.sparkhash import (
     arrow_bytes,
     murmur3_longs,
@@ -106,19 +107,6 @@ MAX_SHINGLE_DF = 100
 # pairs within Hamming 3; beyond that recall decays, so the verify cutoff
 # matches the banding guarantee.
 HAMMING_MAX = 3
-
-# One persisted generation per pipeline stage, with same-plan reuse —
-# consecutive keys (components → star → triangles) share one exploded-
-# shingle cache, and repeated sweeps hold a bounded working set. The
-# mechanism (incl. the fixtures-immutable assumption and clear_pins) lives
-# in functions/pins.py; re-exported here because the dedup family is its
-# primary user and tests/docs reference dedup.clear_pins.
-from clusterindices_spark.functions.pins import (  # noqa: E402
-    _PINNED,
-    clear_pins,
-    pin_materialized,
-)
-from clusterindices_spark.functions.pins import repin as _repin  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -281,41 +269,39 @@ def _doc_shingles(d: DataFrame) -> DataFrame:
 
 
 def _ngram_ex0(d: DataFrame, max_shingle_df: int = MAX_SHINGLE_DF) -> DataFrame:
-    """Capped exploded-shingle frame shared by the whole exact-ngram family.
+    """Capped exploded-shingle frame (doc_id, shingle) behind the whole
+    exact-ngram family.
 
-    The exploded frame is pinned (it feeds the hot-set aggregation, per-doc
-    sizes, both self-join sides, and the estimator fingerprints — without
-    the cache each consumer replays tokenize→shingle→explode; measured 1.7s
-    extra at sf0.1 just for the hot-set pass). The hot set is ALSO pinned
-    (r13): it is tiny by construction (≤ total_shingle_rows / cap entries)
-    but every consumer used to re-run the full-exploded-frame aggregation
-    that derives it — one 260k-row agg per consumer at sf0.1; pinning makes
-    the per-consumer cost a cache scan + broadcast anti-join build of a
-    KB-scale frame."""
-    sh = _doc_shingles(d)
-    ex_all = _repin(
-        "ngram_exploded",
-        sh.select("doc_id", F.explode("shingles").alias("shingle")),
+    The exploded frame is localCheckpointed for the call: it feeds the
+    hot-set aggregation and the anti-join, and every reader of the capped
+    frame (per-doc sizes, both self-join sides, the estimator
+    fingerprints) would otherwise replay tokenize→shingle→explode
+    (measured 1.7s extra at sf0.1 just for the hot-set pass). The hot set
+    is checkpointed too: it is tiny by construction (≤ total_shingle_rows
+    / cap entries), and each reader then pays a checkpoint scan + a
+    broadcast anti-join build instead of re-running the 260k-row (sf0.1)
+    aggregation that derives it."""
+    ex_all = (
+        _doc_shingles(d)
+        .select("doc_id", F.explode("shingles").alias("shingle"))
+        .localCheckpoint(eager=False)
     )
-    hot = _repin(
-        "ngram_hot",
+    hot = (
         ex_all.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .where(F.col("df") > max_shingle_df)
-        .select("shingle"),
+        .select("shingle")
+        .localCheckpoint(eager=False)
     )
     return ex_all.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-def _ngram_pair_inter(
-    d: DataFrame, max_shingle_df: int = MAX_SHINGLE_DF
-) -> tuple[DataFrame, DataFrame]:
-    """(pair-intersection counts, per-doc set sizes) over the capped
-    shingle sets — the shared generation behind BOTH the jaccard and the
-    containment tiers (r13: previously each tier re-ran the shingle
-    self-join + pair aggregation, the single most expensive step of the
-    family; the scores differ only in the final arithmetic over
-    (inter, na, nb), so the aggregation is pinned once).
+def _ngram_pair_inter(ex0: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter, na, nb): pair-intersection counts with both
+    docs' set sizes over the capped shingle frame ``ex0`` — behind BOTH
+    the jaccard and the containment tiers, whose scores differ only in
+    the final arithmetic over (inter, na, nb). The sizes are read twice
+    (na and nb), so they are localCheckpointed for the call.
 
     Set sizes attach AFTER the pair aggregation, not before: v1 joined
     sizes onto the EXPLODED frame (a full shuffle of the biggest frame in
@@ -323,43 +309,30 @@ def _ngram_pair_inter(
     then carried na/nb through the shingle self-join and the pair groupBy
     as extra key bytes. Attaching to the aggregated PAIR table costs two
     pair-scale joins instead (isolated A/B at sf0.1: 3.0–4.2 → 2.8–3.3 s
-    warm, bit-identical). The broadcast hint in the consumers fits corpora
+    warm, bit-identical). The broadcast hints fit corpora
     up to ~10⁸ docs (16 B/row); beyond that drop the hint and let the
     pair-scale shuffle join run — still strictly cheaper than v1's
     exploded-scale shuffle."""
-    ex0 = _ngram_ex0(d, max_shingle_df)
-    sizes = _repin(
-        "ngram_doc_sizes",
-        ex0.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles")),
+    sizes = (
+        ex0.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n_shingles"))
+        .localCheckpoint(eager=False)
     )
     a = ex0.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = ex0.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = _repin(
-        "ngram_pair_inter",
+    inter = (
         a.join(b, "shingle")
         .where(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter")),
+        .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return inter, sizes
-
-
-def ngram_scored_pairs(
-    d: DataFrame,
-    max_shingle_df: int = MAX_SHINGLE_DF,
-) -> DataFrame:
-    """Exact Jaccard over word-3-gram sets for EVERY pair sharing ≥1
-    (non-stop) shingle — the unthresholded candidate universe. Shingles
-    with document frequency > max_shingle_df are removed from every set
-    first (see MAX_SHINGLE_DF) — without the cap a single boilerplate
-    shingle shared by m documents contributes m²/2 join rows. Pinned
-    separately from the thresholded view so the estimator PR audit (which
-    needs sub-threshold pairs to count false positives) shares one
-    generation with the dedup family."""
-
-    inter, sizes = _ngram_pair_inter(d, max_shingle_df)
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
+    return inter.join(F.broadcast(na), "doc_a").join(F.broadcast(nb), "doc_b")
+
+
+def _scored_pairs(ex0: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) over the capped shingle frame ``ex0``."""
     # round6_stable, not F.round: rational inter/union CAN land exactly on
     # a .xxxxxx5 boundary (e.g. inter=1, union=128 → 0.0078125, exact in
     # binary), where Spark HALF_UP and DuckDB's scaled-multiply diverge —
@@ -368,12 +341,21 @@ def ngram_scored_pairs(
     jac = round6_stable(
         F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
     )
-    return _repin(
-        "ngram_pairs_scored",
-        inter.join(F.broadcast(na), "doc_a")
-        .join(F.broadcast(nb), "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard")),
-    )
+    return _ngram_pair_inter(ex0).select("doc_a", "doc_b", jac.alias("jaccard"))
+
+
+def ngram_scored_pairs(
+    d: DataFrame,
+    max_shingle_df: int = MAX_SHINGLE_DF,
+) -> DataFrame:
+    """Exact Jaccard over word-3-gram sets for EVERY pair sharing ≥1
+    (non-stop) shingle — the unthresholded candidate universe (the
+    estimator PR audit needs the sub-threshold pairs to count false
+    positives). Shingles with document frequency > max_shingle_df are
+    removed from every set first (see MAX_SHINGLE_DF) — without the cap a
+    single boilerplate shingle shared by m documents contributes m²/2
+    join rows."""
+    return _scored_pairs(_ngram_ex0(d, max_shingle_df))
 
 
 def ngram_jaccard_pairs(
@@ -381,16 +363,10 @@ def ngram_jaccard_pairs(
     threshold: float = JACCARD_THRESHOLD,
     max_shingle_df: int = MAX_SHINGLE_DF,
 ) -> DataFrame:
-    """The verified (≥ threshold) pair table — a filter over the pinned
-    scored universe. Kept as its own pin (pair-scale, tiny) so the whole
-    dedup family's repeated consumption stays one cache scan; the r5
-    sharing contract (dedup_minhash_est reuses the same generation)
-    is unchanged."""
+    """The verified (≥ threshold) pair table — a filter over the scored
+    universe."""
     scored = ngram_scored_pairs(d, max_shingle_df=max_shingle_df)
-    return _repin(
-        "ngram_jaccard_pairs",
-        scored.where(F.col("jaccard") >= threshold),
-    )
+    return scored.where(F.col("jaccard") >= threshold)
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -413,21 +389,15 @@ def ngram_containment_pairs(
     directions' scores (c_ab = |A∩B|/|A|, c_ba = |A∩B|/|B|).
 
     Same candidate pipeline, stop-shingle cap, and pair-scale size
-    attachment as ngram_jaccard_pairs — the two keys share the pinned
-    exploded-shingle generation AND (r13) the pinned pair-intersection
-    aggregation: the scores differ only in the final arithmetic over
-    (inter, na, nb)."""
-    inter, sizes = _ngram_pair_inter(d, max_shingle_df)
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
+    attachment as ngram_jaccard_pairs: the scores differ only in the
+    final arithmetic over (inter, na, nb)."""
     # round6_stable for the same boundary-safety reason as the jaccard in
-    # ngram_scored_pairs: inter/na with a power-of-two na is exact in
+    # _scored_pairs: inter/na with a power-of-two na is exact in
     # binary and can sit on .xxxxxx5 where ROUND conventions diverge
     c_ab = round6_stable(F.col("inter") / F.col("na"))
     c_ba = round6_stable(F.col("inter") / F.col("nb"))
     return (
-        inter.join(F.broadcast(na), "doc_a")
-        .join(F.broadcast(nb), "doc_b")
+        _ngram_pair_inter(_ngram_ex0(d, max_shingle_df))
         .select("doc_a", "doc_b", c_ab.alias("c_ab"), c_ba.alias("c_ba"))
         .where(
             (F.col("c_ab") >= threshold) | (F.col("c_ba") >= threshold)
@@ -673,9 +643,9 @@ def _driver_minhash_pairs(
 ) -> DataFrame | None:
     """``minhash_pairs``' driver finish: its verified pairs as an Arrow
     relation, or None when ``doc_id`` is not an integer, or the text is
-    over LOCAL_LSH_BYTES, or its rows, the candidate pairs or their row
-    pairs are over LOCAL_LSH_ROWS (``stats`` is then left to the Spark
-    path)."""
+    over LOCAL_LSH_BYTES, or its rows, its tokens, the candidate pairs or
+    their row pairs are over LOCAL_LSH_ROWS (``stats`` is then left to the
+    Spark path)."""
     id_type = d.schema["doc_id"].dataType
     if not isinstance(id_type, IntegralType):
         return None
@@ -689,6 +659,11 @@ def _driver_minhash_pairs(
     table = d.select("doc_id", _collapsed(F.col("text")).alias("s")).toArrow()
     ids = table.column("doc_id").to_numpy()
     s = table.column("s").combine_chunks()
+    # the ' '-split pieces: the NumPy arrays below hold 40–75 bytes per
+    # piece, so one-letter words at the byte budget would need ~2.4 GB
+    n_tokens = (pc.sum(pc.count_substring(s, " ")).as_py() or 0) + len(s)
+    if n_tokens > LOCAL_LSH_ROWS:
+        return None
     row, start, length = _trigram_spans(s)
     hashes = xxhash64_spans(arrow_bytes(s)[0], start, length)
     doc_ids, bh = _driver_bands(ids[row], hashes, n_bands)
@@ -745,7 +720,10 @@ def minhash_pairs(
     are at most LOCAL_LSH_ROWS // bands and the bytes at most
     LOCAL_LSH_BYTES (64 MiB), one ``toArrow()`` brings (doc_id, s) to the
     driver, s the case-folded text whose whitespace runs are collapsed to
-    one space. NumPy takes each
+    one space. Its ' '-split tokens (the 0x20 bytes plus the rows) must
+    number at most LOCAL_LSH_ROWS: the NumPy arrays hold about 40–75 bytes
+    per token, so 2²³ tokens need at most about 0.6 GB, where 64 MiB of
+    one-letter words would have needed 2.4 GB. NumPy takes each
     trigram's byte span in s, hashes it with ``functions/sparkhash.py``'s
     bit-exact twins of ``xxhash64`` and ``hash``, takes the minima per
     ``doc_id``, bands them and applies the cap; the candidate pairs and
@@ -753,22 +731,20 @@ def minhash_pairs(
     built for the candidates' rows only, and each pair is verified with
     byte-exact Jaccard. The result is an Arrow relation, and nothing is
     left persisted. Rows, Jaccard bits and ``stats`` equal the Spark
-    path's (``tests/test_minhash_lsh.py``). Near the budget edge
-    (``tools/scale_stress.py`` at 395k docs of 25 words, 66.5 MB, 9.9M
-    tokens, on a 4-core host) the call took 10.9 s wall and 23.1 CPU-s,
-    and the driver process peaked at 938 MB RSS. The NumPy arrays hold
-    about 40–75 bytes per token, and the tokens are at most half the
-    bytes: 64 MiB of one-letter words, the worst case, would need about
-    2.4 GB (measured at 16 MiB: 0.57 GB over the process's base).
+    path's (``tests/test_minhash_lsh.py``). With ``tools/scale_stress.py``
+    (docs of 25 words, 4-core host) 250k docs took 9.2 s wall and 20.5
+    CPU-s, and the driver process peaked at 658 MB RSS; the token budget
+    holds about 335k such docs.
 
     A corpus over the budget (any 100 TB one) or with non-integer
     ``doc_id``s runs the Spark path: shingles and a per-doc band table,
-    both pinned; bands exploded from the table, shuffled by (band,
-    bucket), self-joined, and verified by joins against the shingles.
-    Over the budget the failed decision costs one aggregate that reads
-    each text's length (its exchange carries one partial row per
-    partition): 0.3–1.2 CPU-s at 400k docs of 25 words, about what
-    ``count(1)`` alone costs.
+    each localCheckpointed for the call; bands exploded from the table,
+    shuffled by (band, bucket), self-joined, and verified by joins
+    against the shingles. Over the budget the failed decision costs one
+    aggregate that reads each text's length (its exchange carries one
+    partial row per partition): 0.3–1.2 CPU-s at 400k docs of 25 words,
+    about what ``count(1)`` alone costs. Text within the byte budget but
+    over the token budget also pays for the collect.
 
     A ``seeds`` below MINHASH_BAND_ROWS (no whole band) raises ValueError."""
 
@@ -783,10 +759,11 @@ def minhash_pairs(
     if local is not None:
         return local
     stats["finish"] = "spark"
-    # persisted: read twice (signatures + exact-Jaccard verification), and
-    # shingling is the expensive expression work. A doc without shingles
-    # explodes to zero rows: no signature, so never a candidate.
-    sh = _repin("minhash_shingles", _doc_shingles(d))
+    # checkpointed for the call: read twice (signatures + exact-Jaccard
+    # verification), and shingling is the expensive expression work. A doc
+    # without shingles explodes to zero rows: no signature, so never a
+    # candidate.
+    sh = _doc_shingles(d).localCheckpoint(eager=False)
     # signatures via explode → one string hash per shingle → codegen'd
     # long-over-long seeded hashes → min per doc. Higher-order transform()
     # lambdas are INTERPRETED (no codegen); the exploded form codegens and
@@ -800,23 +777,20 @@ def minhash_pairs(
     sig = hashed.groupBy("doc_id").agg(
         *[F.min(f"x{s}").alias(f"h{s}") for s in range(seeds)]
     )
-    # pinned: the hot-bucket agg and the band self-join both read it, so
-    # the signature aggregate runs once
-    per_doc = _repin(
-        "minhash_band_table",
-        sig.select(
-            "doc_id",
-            *[
-                F.hash(
-                    *[
-                        F.col(f"h{b * MINHASH_BAND_ROWS + r}")
-                        for r in range(MINHASH_BAND_ROWS)
-                    ]
-                ).alias(f"b{b}")
-                for b in range(n_bands)
-            ],
-        ),
-    )
+    # checkpointed: the hot-bucket agg and the band self-join both read
+    # it, so the signature aggregate runs once
+    per_doc = sig.select(
+        "doc_id",
+        *[
+            F.hash(
+                *[
+                    F.col(f"h{b * MINHASH_BAND_ROWS + r}")
+                    for r in range(MINHASH_BAND_ROWS)
+                ]
+            ).alias(f"b{b}")
+            for b in range(n_bands)
+        ],
+    ).localCheckpoint(eager=False)
     bands = per_doc.select(
         "doc_id",
         F.explode(
@@ -978,6 +952,30 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """The distinct (src, dst) edges in both directions, localCheckpointed
+    for the caller's call: its label rounds read them once per round."""
+    return (
+        edges.select(F.col("src"), F.col("dst"))
+        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _owned(df: DataFrame) -> DataFrame:
+    """A driver loop's last, materialized table as a frame that holds its
+    own blocks: a persisted table (a CacheManager entry, which would
+    outlive the call) is copied into a local checkpoint and unpersisted; a
+    checkpointed one is returned as it is. Spark frees the checkpoint
+    once the returned frame is unreachable."""
+    if not df.is_cached:
+        return df
+    out = df.localCheckpoint(eager=True)
+    df.unpersist()
+    return out
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -997,21 +995,13 @@ def connected_components(
     sf0.1 vs checkpointing every round). At 100 TB swap localCheckpoint
     for checkpoint() to reliable storage; for adversarially long chains
     switch to connected_components_star (same primitives, O(log n) rounds).
+    Nothing stays persisted after the call: the returned frame holds its
+    own checkpoint of the last label table.
     """
-    from pyspark.storagelevel import StorageLevel
-
     # the edge list is usually the output of an expensive candidate pipeline
-    # (shingle joins); persist it or every propagation round replays it.
-    # Pinned with same-plan reuse (_repin): a repeat invocation on the same
-    # inputs then reads the already-materialized symmetric edge set instead
-    # of re-running the candidate self-join (~4 s of the ~7 s repeat cost
-    # at sf0.1); a different graph swaps the pin, keeping one generation.
-    sym = _repin(
-        "cc_sym",
-        edges.select(F.col("src"), F.col("dst"))
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct(),
-    )
+    # (shingle joins); checkpoint it for the call or every propagation
+    # round replays it.
+    sym = _symmetric(edges)
     labels = nodes.select(F.col("node"), F.col("node").alias("label")).persist()
     prev_sum = labels.agg(F.sum("label")).first()[0]
     converged = False
@@ -1048,23 +1038,12 @@ def connected_components(
             f"max_iters"
         )
         if strict:
-            # release the per-round persist before bailing — the raise path
-            # skips pin_materialized, so without this the final label table
-            # leaks cached partitions for the rest of the session (r9
-            # ADVICE); sym's pin is released by the next _repin/clear_pins
             labels.unpersist()
             raise RuntimeError(msg)
         import warnings
 
         warnings.warn(msg, stacklevel=2)
-    # sym stays materialized under its pin (released by the next
-    # invocation's _repin or clear_pins). The loop-materialized label table
-    # registers via pin_materialized — replacement MUST be same-plan-aware
-    # (the round count is data-dependent but deterministic, so a repeat
-    # invocation derives a sameResult-identical plan and the two pins share
-    # ONE CacheManager entry; the r3 regression documented in pins.py and
-    # BASELINE.md came from unpersisting that shared entry blindly).
-    labels = pin_materialized("cc_labels", labels)
+    labels = _owned(labels)
     return labels.withColumnRenamed("label", "component")
 
 
@@ -1434,10 +1413,10 @@ def q_dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same argmax window, so the gate certifies the full
     pairs→components→survivor composition end to end.
 
-    Scale: components ride the shared pinned pair table (one generation
-    for the whole dedup family); keep-best adds ONE doc_id equi-join to
-    attach n_chars and one component-keyed agg (max_by + sums, map-side
-    combined). Nothing new shuffles beyond the component key."""
+    Scale: components ride the verified pair table; keep-best adds ONE
+    doc_id equi-join to attach n_chars and one component-keyed agg
+    (max_by + sums, map-side combined). Nothing new shuffles beyond the
+    component key."""
     d = load_table(spark, sf_dir, "documents")
     nodes, pairs = _doc_pair_edges(spark, sf_dir)
     comp = connected_components_star(nodes, pairs)
@@ -1518,11 +1497,19 @@ def graph_pagerank(
             F.lit(0).cast("long").alias("pr_units"),
             F.lit(0.0).alias("pr"),
         )
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    # checkpointed for the call: sym feeds the degrees and sym_deg, and
+    # every round reads the degrees and sym_deg
+    sym = (
+        edges.select("src", "dst")
+        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .localCheckpoint(eager=False)
     )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    sym_deg = _repin("pr_sym_deg", sym.join(deg, "src"))
+    deg = (
+        sym.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .localCheckpoint(eager=False)
+    )
+    sym_deg = sym.join(deg, "src").localCheckpoint(eager=False)
     base = F.lit((15 * PR_SCALE) // (100 * n)).cast("long")
     pr = nodes.select("node", F.lit(PR_SCALE // n).cast("long").alias("v")).persist()
     for i in range(iters):
@@ -1556,7 +1543,7 @@ def graph_pagerank(
         new_pr.count()
         pr.unpersist()
         pr = new_pr
-    pr = pin_materialized("pr_ranks", pr)
+    pr = _owned(pr)
     return pr.select(
         "node",
         F.col("v").alias("pr_units"),
@@ -1582,18 +1569,10 @@ def graph_hops(nodes: DataFrame, edges: DataFrame, max_iters: int = HOPS_MAX_ITE
     Per round each node takes min(struct(l, d)) over itself and its
     neighbors' (l, d+1): labels converge to the component min and, once
     they have, d Bellman-Ford-relaxes to the BFS distance. Same
-    O(diameter) round budget, per-round shuffle pair, pin and
-    3rd-round-checkpoint lineage policy as connected_components; the
-    symmetric edge pin is byte-identical to CC's, so the two operators
-    share one materialized generation."""
-    from pyspark.storagelevel import StorageLevel  # noqa: F401
-
-    sym = _repin(
-        "cc_sym",
-        edges.select(F.col("src"), F.col("dst"))
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct(),
-    )
+    O(diameter) round budget, per-round shuffle pair, 3rd-round-checkpoint
+    lineage policy and returned checkpoint as connected_components; the
+    symmetric edge set is CC's (``_symmetric``)."""
+    sym = _symmetric(edges)
     state = nodes.select(
         "node",
         F.col("node").alias("l"),
@@ -1627,7 +1606,7 @@ def graph_hops(nodes: DataFrame, edges: DataFrame, max_iters: int = HOPS_MAX_ITE
         if key == prev_key:  # (l, d) pairs only ever lexicographically decrease
             break
         prev_key = key
-    state = pin_materialized("hops_state", state)
+    state = _owned(state)
     return state.select(
         F.col("node"), F.col("l").alias("component"), F.col("d").alias("hops")
     )
@@ -1833,29 +1812,29 @@ def _mh_perm(i: int, fp) -> F.Column:
     return (F.lit(2 * i + 1) * fp + F.lit(b)) % F.lit(FNV_MOD)
 
 
-def _minhash_sigs(d: DataFrame) -> DataFrame:
+def _minhash_sigs(ex0: DataFrame) -> DataFrame:
     """Portable-hash MinHash signatures (rolling fingerprint + affine
     permutations — every constant replayable in SQL) over the capped
-    shingle sets; shared by the estimator audit and the PR-curve audit.
+    shingle frame ``ex0``; shared by the estimator audit and the PR-curve
+    audit.
 
-    Pinned (r13): each audit attaches signatures to BOTH pair sides, and
-    the two differently-aliased projections defeat exchange reuse — the
-    anti-join + fingerprint + 16-min aggregation used to run twice per
-    query (≈1.6 s each warm at sf0.1) and four times across the two
-    audits; the pin makes every attachment a doc-scale cache scan."""
+    Checkpointed for the call: each audit attaches signatures to BOTH pair
+    sides, and the two differently-aliased projections defeat exchange
+    reuse — the anti-join + fingerprint + 16-min aggregation would run
+    twice per query (≈1.6 s each warm at sf0.1); the checkpoint makes
+    each attachment a doc-scale scan."""
     from clusterindices_spark.functions.text import rolling_fingerprint
 
-    fp = _ngram_ex0(d).select(
-        "doc_id", rolling_fingerprint(F.col("shingle")).alias("fp")
-    )
-    return _repin(
-        "minhash_est_sigs",
-        fp.groupBy("doc_id").agg(
+    fp = ex0.select("doc_id", rolling_fingerprint(F.col("shingle")).alias("fp"))
+    return (
+        fp.groupBy("doc_id")
+        .agg(
             *[
                 F.min(_mh_perm(i, F.col("fp"))).alias(f"s{i}")
                 for i in range(MINHASH_EST_H)
             ]
-        ),
+        )
+        .localCheckpoint(eager=False)
     )
 
 
@@ -1890,14 +1869,14 @@ def q_dedup_minhash_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     only unmeasured false-positive source, bounded by the banding tier's
     verification step in production).
 
-    Scale: reuses the pinned scored-pair universe + signature table; the
-    6-row τ grid (PR_TAUS) explodes onto the pair frame (map-side-combined
-    agg by τ) — nothing new shuffles."""
+    Scale: the scored-pair universe and the signature table share one
+    checkpointed shingle explode; the 6-row τ grid (PR_TAUS) explodes onto
+    the pair frame (map-side-combined agg by τ) — nothing new shuffles."""
     from clusterindices_spark.functions.aggregates import round6_stable
 
-    d = load_table(spark, sf_dir, "documents")
-    sig = _minhash_sigs(d)
-    scored = ngram_scored_pairs(d)
+    ex0 = _ngram_ex0(load_table(spark, sf_dir, "documents"))
+    sig = _minhash_sigs(ex0)
+    scored = _scored_pairs(ex0)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"s{i}").alias(f"a{i}") for i in range(MINHASH_EST_H)],
@@ -2007,15 +1986,13 @@ def q_dedup_simhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     is 16 comparisons, Hamming is popcount(xor) — no floats anywhere but
     the carried 6dp jaccard.
 
-    Scale: one doc-keyed 16-agg pass over the pinned fingerprint explode,
-    two pair-scale signature joins — shares every pin the minhash audits
-    use."""
+    Scale: one doc-keyed 16-agg pass over the checkpointed fingerprint
+    explode, two pair-scale signature joins — the same per-call
+    checkpoints the minhash audits use."""
     from clusterindices_spark.functions.text import rolling_fingerprint
 
-    d = load_table(spark, sf_dir, "documents")
-    fp = _ngram_ex0(d).select(
-        "doc_id", rolling_fingerprint(F.col("shingle")).alias("fp")
-    )
+    ex0 = _ngram_ex0(load_table(spark, sf_dir, "documents"))
+    fp = ex0.select("doc_id", rolling_fingerprint(F.col("shingle")).alias("fp"))
     votes = fp.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -2033,9 +2010,9 @@ def q_dedup_simhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for b in range(SIMHASH_EST_BITS)
     )
-    # pinned for the same both-sides-attachment reason as _minhash_sigs
-    sigs = _repin("simhash_est_sigs", votes.select("doc_id", sim.alias("sim")))
-    pairs = ngram_scored_pairs(d)
+    # checkpointed for the same both-sides-attachment reason as _minhash_sigs
+    sigs = votes.select("doc_id", sim.alias("sim")).localCheckpoint(eager=False)
+    pairs = _scored_pairs(ex0)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sim").alias("sim_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sim").alias("sim_b"))
     from clusterindices_spark.functions.aggregates import round6_stable
@@ -2073,7 +2050,7 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     |est − exact| error column are bit-identical.
 
     Emits (doc_a, doc_b, jaccard, est_jaccard, est_abs_err) for the same
-    candidate pairs as dedup_ngram_jaccard (shared pinned shingle explode,
+    candidate pairs as dedup_ngram_jaccard (one checkpointed shingle explode,
     same stop-shingle cap — signatures are computed over the capped sets
     the exact tier compares, apples-to-apples).
 
@@ -2082,9 +2059,9 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row array building); signatures then attach to the pair-scale
     frame by two joins — nothing beyond the existing candidate pipeline
     shuffles."""
-    d = load_table(spark, sf_dir, "documents")
-    sig = _minhash_sigs(d)
-    pairs = ngram_jaccard_pairs(d)
+    ex0 = _ngram_ex0(load_table(spark, sf_dir, "documents"))
+    sig = _minhash_sigs(ex0)
+    pairs = _scored_pairs(ex0).where(F.col("jaccard") >= JACCARD_THRESHOLD)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"s{i}").alias(f"a{i}") for i in range(MINHASH_EST_H)],

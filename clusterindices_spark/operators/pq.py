@@ -115,12 +115,8 @@ def pq_train_encode(
     codebook and empty codes.
 
     Returns ``(codebook, codes)``: codebook = M rows (m, book), a local
-    relation, codes = (vec_id, codes ARRAY<INT> length M), a persisted
-    corpus-scale frame."""
-    from pyspark.storagelevel import StorageLevel
-
-    from clusterindices_spark.functions.pins import repin
-
+    relation, codes = (vec_id, codes ARRAY<INT> length M), a corpus-scale
+    frame that holds its own local checkpoint."""
     # normalize=False for RESIDUAL inputs (ivfpq): residuals must stay in
     # the raw space the search-side tables are computed in, and a
     # zero-residual vector (point == centroid) must not be dropped by the
@@ -142,17 +138,8 @@ def pq_train_encode(
             ).alias("codes")
         )
     )
-    # one pinned generation (functions/pins): repeated invocations on the
-    # same corpus reuse the materialized codes instead of leaking a cache
-    # entry per call (the kernel pickles the codebook by value, so a repeat
-    # invocation's codes plan is sameResult)
-    codes = repin(
-        "pq_codes" if normalize else "pq_codes_resid",
-        codes,
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    codes.count()
-    return codebook, codes
+    # encoded once, here: the returned frame holds its own checkpoint
+    return codebook, codes.localCheckpoint(eager=True)
 
 
 def pq_adc_topk(
@@ -408,32 +395,24 @@ def ivfpq_topk(
         F.col("cluster").alias("cell"), F.col("centroid").alias("cc")
     )
     # residuals against the OWN cell centroid (cells is K rows, broadcast).
-    # Pinned: the frame feeds codebook training, the encode pass, AND the
-    # codes-cell join below, none of which should replay the corpus
-    # zip_with.
-    from clusterindices_spark.functions.pins import repin
-
-    resid = repin(
-        "ivfpq_resid",
-        index.join(F.broadcast(cells), "cell").select(
+    # Checkpointed for the call: the frame feeds codebook training, the
+    # encode pass, AND the codes-cell join below, none of which should
+    # replay the corpus zip_with.
+    resid = (
+        index.join(F.broadcast(cells), "cell")
+        .select(
             F.col("neighbor_id").alias("vec_id"),
             "cell",
             F.zip_with("xb", "cc", lambda a, b: a - b).alias("x"),
-        ),
+        )
+        .localCheckpoint(eager=False)
     )
     # normalize=False: residuals live in the raw space the search-side
     # tables are computed in (the corpus was already unit-normalized before
     # the cell quantizer)
     codebook, codes = pq_train_encode(resid, m=m, k=pq_k, normalize=False)
-    # (vec_id, codes, cell) — PINNED: this vec_id join is corpus-scale (the
-    # only shuffle of the codes table) and used to replay on EVERY query;
-    # pinning it moves the join into the build side of the boundary, so a
-    # warm search starts directly from the cell-tagged codes (VERDICT r4
-    # item 7 — the ADC-expansion query path was 7.6 s vs PQ's 2.4).
-    codes = repin(
-        "ivfpq_codes_cells",
-        codes.join(resid.select("vec_id", "cell"), "vec_id"),
-    )
+    # (vec_id, codes, cell): the codes table's only corpus-scale shuffle
+    codes = codes.join(resid.select("vec_id", "cell"), "vec_id")
 
     # probe side: n_probe nearest cells, residual q − c_cell per pair
     pc = _probe_cells(_unit(probes), folded_cells, n_probe_cells)

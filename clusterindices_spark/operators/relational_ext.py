@@ -770,7 +770,6 @@ def q_agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _gl_ranked(
         o,
         [F.col("o_totalprice"), F.col("o_orderkey")],
-        tag="equidepth_hist",
         rank_col="rk",
     )
     n = o.count()

@@ -46,38 +46,33 @@ def _with_tokens(d: DataFrame, fan: bool = False) -> DataFrame:
     # already spreads the work — there the extra exchange measured net-loss.
     # Kept for the SINGLE-PASS scan-shaped keys (langid/quality/scrub),
     # whose plan contract is a pushdown scan with zero exchanges; the
-    # multi-pass token consumers use _toks_pinned below.
+    # multi-pass token consumers use _toks_checkpointed below.
     if fan:
         d = fan_out(d)
     return d.withColumn("toks", tokens(F.col("text")))
 
 
-def _toks_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One tokenized generation (doc_id, lang, source, toks) shared by the
-    LM-scoring family (unigram/bigram logprob, heldout, pmi) — the keys
-    that walk the corpus three to four times per query (vocab agg + totals
-    + scoring join, pmi adds two plan-build driver counts) AND carried a
-    fan_out round-robin exchange on every pass. The pin tokenizes and
-    spreads once per session; every pass afterwards is a cache scan.
+def _toks_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One tokenized frame (doc_id, lang, source, toks) for the LM-scoring
+    family (unigram/bigram logprob, heldout, pmi) — the keys that walk the
+    corpus three to four times per query (vocab agg + totals + scoring
+    join, pmi adds two plan-build driver counts) AND carried a fan_out
+    round-robin exchange on every pass. The frame is localCheckpointed
+    for the call: it tokenizes and spreads once, and every pass afterwards
+    is a checkpoint scan.
 
-    Scope pinned by isolated A/B (r13, min-of-4 at sf0.1): the pin wins
-    only where it replaces repeated fan-exchange+tokenize passes
-    (unigram 1.28→0.81 s, bigram 1.66→1.33 s, pmi 1.58→1.12 s); for the
-    plain-scan keys the cached array<string> decode costs as much as
-    re-tokenizing (rake 1.42→2.04 s, js_divergence 0.82→1.11 s REGRESSED),
-    so single-scan-shaped keys stay on _with_tokens. Same one-generation
-    machinery and fixtures-immutable assumption as the dedup family's
-    ngram_exploded pin; at 100 TB this is the standard tokenize-once
-    materialization (disk-backed)."""
-    from clusterindices_spark.functions.pins import repin
-
+    Scope set by isolated A/B (r13, min-of-4 at sf0.1, with a cached
+    frame): materializing wins only where it replaces repeated
+    fan-exchange+tokenize passes (unigram 1.28→0.81 s, bigram
+    1.66→1.33 s, pmi 1.58→1.12 s); for the plain-scan keys the cached
+    array<string> decode costs as much as re-tokenizing (rake
+    1.42→2.04 s, js_divergence 0.82→1.11 s REGRESSED), so single-scan-
+    shaped keys stay on _with_tokens. At 100 TB this is the standard
+    tokenize-once materialization (disk-backed)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    return repin(
-        "text_toks",
-        d.select(
-            "doc_id", "lang", "source", tokens(F.col("text")).alias("toks")
-        ),
-    )
+    return d.select(
+        "doc_id", "lang", "source", tokens(F.col("text")).alias("toks")
+    ).localCheckpoint(eager=False)
 
 
 def q_text_tokens_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,7 +247,7 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the vocab (even millions of terms) still broadcasts; the
     per-doc agg shuffles by doc_id — the same key the explode preserved,
     so AQE coalesces it tightly."""
-    d = _toks_pinned(spark, sf_dir)
+    d = _toks_checkpointed(spark, sf_dir)
     ex = d.select("doc_id", F.explode("toks").alias("term"))
     vocab = ex.groupBy("term").agg(F.count(F.lit(1)).alias("tc"))
     total = ex.agg(F.count(F.lit(1)).alias("n_total"))
@@ -294,7 +289,7 @@ def q_text_lm_heldout_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: train-half vocab shuffles by term (map-side combined) and then
     BROADCASTS; scoring is a left join of the exploded score half against
     it — corpus never shuffles except the final doc_id agg."""
-    d = _toks_pinned(spark, sf_dir)
+    d = _toks_checkpointed(spark, sf_dir)
     train = d.where(F.col("doc_id") % 2 == 0)
     score = d.where(F.col("doc_id") % 2 == 1)
     tex = train.select(F.explode("toks").alias("term"))
@@ -530,7 +525,6 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _gl_ranked(
         vocab,
         [F.col("cnt").desc(), F.col("term")],
-        tag="zipf_fit",
         rank_col="rk",
     ).select(
         r6(F.log(F.col("rk").cast("double"))).alias("x"),
@@ -620,7 +614,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: bigram counts shuffle by (w1,w2) with map-side combine (bigram
     vocab ≪ corpus positions); unigram vocab broadcasts; the per-doc agg
     shuffles by the explode-preserved doc_id."""
-    d = _toks_pinned(spark, sf_dir)
+    d = _toks_checkpointed(spark, sf_dir)
     n_b = F.greatest(F.size("toks") - 1, F.lit(0))
     z = F.arrays_zip(
         F.slice("toks", 1, n_b).alias("w1"), F.slice("toks", 2, n_b).alias("w2")
@@ -833,15 +827,14 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: word scores floor to BIGINT micros BEFORE the per-phrase
     sum (deg/freq is one integer division — exact same double in both
     engines); ranking orders by the INTEGER micro score desc then phrase
-    asc, so ties cannot flip between engines. The r14 `grouped` pin is a
-    persist of an intermediate — values unchanged (oracle hash re-gated).
+    asc, so ties cannot flip between engines. `grouped` is checkpointed
+    for the call — values unchanged (oracle hash re-gated).
 
     Scale: every shuffle is doc_id-keyed (running stopword counter
     window, phrase agg, word-stats agg, score join, top-k window) — the
     explode preserves the key, AQE keeps the chain thin, and no global
     structure exists at all (RAKE is per-doc by construction)."""
     from clusterindices_spark.functions.aggregates import round6_stable
-    from clusterindices_spark.functions.pins import repin
 
     d = _with_tokens(load_table(spark, sf_dir, "documents"))
     ex = d.select(
@@ -855,18 +848,17 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §5): `grouped` is referenced by THREE consumers (phrases,
     # occ, the pscore join) — the executed plan ran the scan+tokenize+
     # posexplode chain twice and the running-stopword window FOUR times
-    # (ReusedExchange covered only 2 of 4 references; plans/r14). Pinning
-    # the flat (doc_id, pos, tok, grp) frame computes it once; unlike the
-    # r13 token-pin A/B (REGRESSED: cached array<string> decode ≈
-    # re-tokenize), the pinned columns here are scalar, so the cache read
-    # is cheap. Isolated interleaved A/B in plans/r14 + OPTIMIZATION_r14.md.
-    grouped = repin(
-        "rake_grouped",
-        ex.withColumn(
-            "grp", F.sum(F.col("is_stop").cast("int")).over(w_run)
-        )
+    # (ReusedExchange covered only 2 of 4 references; plans/r14).
+    # Checkpointing the flat (doc_id, pos, tok, grp) frame for the call
+    # computes it once; unlike the r13 token-cache A/B (REGRESSED: cached
+    # array<string> decode ≈ re-tokenize), its columns are scalar, so the
+    # read is cheap. Isolated interleaved A/B (with a cached frame) in
+    # plans/r14 + OPTIMIZATION_r14.md.
+    grouped = (
+        ex.withColumn("grp", F.sum(F.col("is_stop").cast("int")).over(w_run))
         .where(~F.col("is_stop"))
-        .select("doc_id", "pos", "tok", "grp"),
+        .select("doc_id", "pos", "tok", "grp")
+        .localCheckpoint(eager=False)
     )
     phrases = grouped.groupBy("doc_id", "grp").agg(
         F.count(F.lit(1)).alias("plen"),
@@ -1188,7 +1180,7 @@ def q_text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count agg is bigram-vocab-scale, never corpus-scale."""
     from clusterindices_spark.functions.aggregates import round6_stable
 
-    d = _toks_pinned(spark, sf_dir)
+    d = _toks_checkpointed(spark, sf_dir)
     n_b = F.greatest(F.size("toks") - 1, F.lit(0))
     z = F.arrays_zip(
         F.slice("toks", 1, n_b).alias("w1"),

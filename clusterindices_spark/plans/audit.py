@@ -9,11 +9,14 @@ Exits non-zero if any expectation fails; tests call `audit_all` directly.
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 # per-query plan expectations: substrings that MUST appear / must NOT appear
-# in the executed plan string
+# in the executed plan strings of the returned frame and of every frame the
+# query localCheckpoints while it is built ("forbid_returned": must not
+# appear in the returned frame's plan)
 EXPECTATIONS: dict[str, dict[str, list[str]]] = {
     "scan_project_filter": {
         # "*(" is the WholeStageCodegen stage marker in plan toString()
@@ -854,10 +857,12 @@ EXPECTATIONS: dict[str, dict[str, list[str]]] = {
     },
     "text_bpe_train_merges": {
         # the training loop runs as 5 V-scale TakeOrdered jobs over the
-        # eagerly-checkpointed vocab; the RETURNED plan is the learned
+        # eagerly-checkpointed vocab (its aggregate's Exchange is in the
+        # checkpointed frame's plan); the RETURNED plan is the learned
         # 5-row merge table (the dim_covariance collect-then-local shape)
         "require": ["Scan ExistingRDD"],
-        "forbid": ["CartesianProduct", "Exchange", "Join"],
+        "forbid": ["CartesianProduct", "Join"],
+        "forbid_returned": ["Exchange"],
     },
     "versioned_snapshot_diff": {
         # two time-travel reads full-outer SMJ'd on the key (partitioned
@@ -1645,15 +1650,41 @@ _BLANKET_EXEMPT: set[str] = set()
 _DEFAULT_EXPECTATION = {"require": [], "forbid": ["CartesianProduct"]}
 
 
+@contextmanager
+def _checkpointed_frames():
+    """The frames handed to ``DataFrame.localCheckpoint`` while open. A
+    frame an operator checkpoints for its call is a ``Scan ExistingRDD``
+    in the returned plan, so its own plan is audited from the recorded
+    frame."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames, local_checkpoint = [], DataFrame.localCheckpoint
+
+    def record(df, *args, **kwargs):
+        frames.append(df)
+        return local_checkpoint(df, *args, **kwargs)
+
+    DataFrame.localCheckpoint = record
+    try:
+        yield frames
+    finally:
+        DataFrame.localCheckpoint = local_checkpoint
+
+
 def audit_one(spark: SparkSession, name: str, sf_dir: str) -> list[str]:
     from clusterindices_spark.registry import all_queries
 
     probe = SUBPLAN_PROBES.get(name)
-    df = probe(spark, sf_dir) if probe else all_queries()[name](spark, sf_dir)
-    # executedPlan after AQE needs an action; use the initial physical plan
-    # plus the final adaptive plan when available
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    with _checkpointed_frames() as checkpointed:
+        df = probe(spark, sf_dir) if probe else all_queries()[name](spark, sf_dir)
+        # executedPlan after AQE needs an action; use the initial physical
+        # plan plus the final adaptive plan when available
+        df.collect()
+    returned = df._jdf.queryExecution().executedPlan().toString()
+    plan = "\n".join(
+        [returned]
+        + [f._jdf.queryExecution().executedPlan().toString() for f in checkpointed]
+    )
     problems = []
     exp = EXPECTATIONS.get(name, _DEFAULT_EXPECTATION)
     for frag in exp.get("require", []):
@@ -1662,6 +1693,9 @@ def audit_one(spark: SparkSession, name: str, sf_dir: str) -> list[str]:
     for frag in exp.get("forbid", []):
         if frag.lower() in plan.lower():
             problems.append(f"forbidden {frag!r} present")
+    for frag in exp.get("forbid_returned", []):
+        if frag.lower() in returned.lower():
+            problems.append(f"forbidden {frag!r} present in the returned plan")
     return problems
 
 

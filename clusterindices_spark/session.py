@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """SPARK_DRIVER_MEM, else min(8g, a quarter of physical memory): two
+    sessions side by side must not drive the host into its OOM killer."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "8g"
+    return f"{min(8 << 10, ram // 4 >> 20)}m"
+
+
 def get_spark(app_name: str = "clusterindices-spark", cpus: int | str | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "8")
     return (
@@ -22,6 +34,6 @@ def get_spark(app_name: str = "clusterindices-spark", cpus: int | str | None = N
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _driver_memory())
         .getOrCreate()
     )

@@ -109,15 +109,14 @@ def fan_out_by_bytes(
     the same class of data-boundary probe as fan_out's partition check.
     Floors at defaultParallelism so small inputs still use the cluster.
 
-    The input is persisted before the sizing aggregate: without it the
-    upstream plan evaluates TWICE (once for the byte total, again for the
-    repartition). On a production decode pipeline whose input is a bare
-    file scan, prefer deriving the total from file-level statistics
-    instead of this data pass.
+    The input is localCheckpointed before the sizing aggregate: without it
+    the upstream plan evaluates TWICE (once for the byte total, again for
+    the repartition). The returned frame holds the checkpoint, so nothing
+    stays cached after it is dropped. On a production decode pipeline
+    whose input is a bare file scan, prefer deriving the total from
+    file-level statistics instead of this data pass.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = df.localCheckpoint(eager=False)
     total = df.agg(F.sum(weight.cast("bigint"))).first()[0] or 0
     sc = df.sparkSession.sparkContext
     n = max(

@@ -186,25 +186,28 @@ def test_codes_kernel_equals_hof(spark):
     assert _ordered_rows(kern) == _ordered_rows(hof)
 
 
+def _same_result(a, b) -> bool:
+    return bool(
+        a._jdf.queryExecution().analyzed().sameResult(b._jdf.queryExecution().analyzed())
+    )
+
+
 def test_kernel_closures_are_same_result(spark):
     """Two kernel frames built from equal driver-side centroid lists must
-    canonicalize sameResult — the pin/memo economy (functions/pins.py)
-    rides on this (a fresh closure per invocation must still hit the
-    cached generation)."""
-    from clusterindices_spark.functions.pins import same_plan
-
+    canonicalize sameResult: a fresh closure per invocation pickles the
+    centroids by value, so equal inputs give equal plans."""
     pts = _mk_pts(spark, HOSTILE_PTS)
     cents_a = [(0, [0.0, 0.0]), (1, [10.0, 0.0])]
     cents_b = [(0, [0.0, 0.0]), (1, [10.0, 0.0])]
     a = ck.assign_cells(pts, cents_a, "vec_id", "x")
     b = ck.assign_cells(pts, cents_b, "vec_id", "x")
-    assert same_plan(a, b)
+    assert _same_result(a, b)
     # and different centroid VALUES must NOT be sameResult
     c = ck.assign_cells(pts, [(0, [0.0, 0.1]), (1, [10.0, 0.0])], "vec_id", "x")
-    assert not same_plan(a, c)
+    assert not _same_result(a, c)
     pa_ = ck.probe_cells_kernel(pts, cents_a, 2, "vec_id", "x")
     pb = ck.probe_cells_kernel(pts, cents_b, 2, "vec_id", "x")
-    assert same_plan(pa_, pb)
+    assert _same_result(pa_, pb)
 
 
 def test_kernel_guards(spark):
@@ -232,7 +235,6 @@ def test_size_dispatch_and_memo_replay(spark):
     same index as the float64 copy. A repeat build replays to a sameResult
     plan with no result memo — the build is a pure function of its
     input."""
-    from clusterindices_spark.functions.pins import clear_pins, same_plan
     from clusterindices_spark.operators.similarity import ivf_build
 
     rows = [(i, [float(i % 7), float(i % 3)]) for i in range(100)]
@@ -241,30 +243,37 @@ def test_size_dispatch_and_memo_replay(spark):
     _, i1 = ivf_build(emb64, n_cells=4)  # 400 evals
     assert "MapInArrow" in _plan_str(i1)
     _, i2 = ivf_build(emb64, n_cells=4)
-    assert same_plan(i1, i2)
+    assert _same_result(i1, i2)
     assert _rows(i1) == _rows(i2)
     _, i4 = ivf_build(emb32, n_cells=4)
     assert "MapInArrow" in _plan_str(i4)
     assert _rows(i4) == _rows(i1)
-    clear_pins()
 
 
-def test_pq_size_dispatch(spark):
+def test_pq_size_dispatch(spark, monkeypatch):
     """Same single arm for the PQ encode: a tiny float64 corpus runs the
     kernel, and a float32 corpus runs it too, encoding its float32-exact
-    values exactly as the float64 copy."""
-    from clusterindices_spark.functions.pins import clear_pins
+    values exactly as the float64 copy. The codes come back as a local
+    checkpoint, so the plan read is the encode's, handed to
+    ``localCheckpoint``."""
     from clusterindices_spark.operators.pq import pq_train_encode
 
     rows = [(i, [float((i * 31) % 13) for _ in range(8)]) for i in range(64)]
     emb64 = _mk_pts(spark, rows)
     emb32 = spark.createDataFrame(rows, "vec_id BIGINT, x ARRAY<FLOAT>")
+    encoded = []
+    local_checkpoint = type(emb64).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        encoded.append(df)
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(emb64), "localCheckpoint", spy)
     got = {}
     for name, emb in (("f64", emb64), ("f32", emb32)):
         _, codes = pq_train_encode(emb, m=4, k=4, normalize=False)
-        assert "MapInArrow" in _plan_str(codes), name
+        assert "MapInArrow" in _plan_str(encoded.pop()), name
         got[name] = _rows(codes)
-        clear_pins()
     assert got["f32"] == got["f64"]
 
 

@@ -127,16 +127,24 @@ def test_minhash_layer_tokenizes_once(spark, monkeypatch):
     collapsed text) runs once per row: no filter on a shingles-derived
     column may be pushed below it with the shingle chain substituted in.
     The driver finish collects the collapsed text once (one
-    regexp_replace) and runs no tokenizer in Spark."""
+    regexp_replace), runs no tokenizer in Spark and checkpoints nothing."""
     from clusterindices_spark.operators import dedup
     from clusterindices_spark.operators.curation import q_curation_decontaminate
 
     d = planted_docs(spark)
     assert _n_tokenizers(dedup._doc_shingles(d)) == 1
-    dedup.clear_pins()
+    checkpointed = []
+    local_checkpoint = type(d).localCheckpoint
+
+    def spy_checkpoint(df, *args, **kwargs):
+        checkpointed.append(_n_tokenizers(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(d), "localCheckpoint", spy_checkpoint)
     monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 0)
     dedup.minhash_pairs(d)
-    assert _n_tokenizers(dedup._PINNED["minhash_shingles"]) == 1
+    # the shingles and the band table; only the shingles tokenize
+    assert sorted(checkpointed) == [0, 1]
 
     collected = []
     to_arrow = type(d).toArrow
@@ -145,12 +153,12 @@ def test_minhash_layer_tokenizes_once(spark, monkeypatch):
         collected.append(df._jdf.queryExecution().optimizedPlan().toString())
         return to_arrow(df)
 
-    dedup.clear_pins()
+    checkpointed.clear()
     monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 1 << 23)
     monkeypatch.setattr(type(d), "toArrow", spy)
     stats: dict = {}
     dedup.minhash_pairs(d, stats=stats)
-    assert stats["finish"] == "driver" and "minhash_shingles" not in dedup._PINNED
+    assert stats["finish"] == "driver" and not checkpointed
     assert len(collected) == 1
     assert collected[0].count("regexp_replace(") == 1
     assert "regexp_extract_all(" not in collected[0]
@@ -501,43 +509,6 @@ def test_ann_lsh_drops_zero_norm_vectors(spark):
     assert all(r["neighbor_id"] != 3 for r in got)
 
 
-def test_repin_bounds_cache_generations(spark):
-    """Repeated invocations of the persisted dedup pipelines must not
-    accumulate pinned cache entries: each new call releases the previous
-    generation (the full-registry-sweep leak class)."""
-    from clusterindices_spark.operators.dedup import ngram_jaccard_pairs
-    from clusterindices_spark.sources.fixtures import load_table
-
-    def n_persistent():
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    ngram_jaccard_pairs(d).count()
-    first = n_persistent()
-    for _ in range(3):
-        ngram_jaccard_pairs(d).count()
-    assert n_persistent() <= first, (
-        "cache generations accumulated across invocations"
-    )
-
-
-def test_repin_reuses_identical_plan_generation(spark):
-    """Two invocations deriving the SAME plan (same input, same sf) must
-    share one materialized cache generation instead of tearing it down and
-    rebuilding — the components → star → triangles sequence relies on it."""
-    from clusterindices_spark.operators import dedup
-    from clusterindices_spark.sources.fixtures import load_table
-
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    dedup.ngram_jaccard_pairs(d).count()
-    gen1 = dedup._PINNED["ngram_exploded"]
-    dedup.ngram_jaccard_pairs(d).count()
-    assert dedup._PINNED["ngram_exploded"] is gen1
-    # a DIFFERENT plan must swap the generation
-    dedup.ngram_jaccard_pairs(d.where("doc_id < 100")).count()
-    assert dedup._PINNED["ngram_exploded"] is not gen1
-
-
 def test_ppm_parser_roundtrip_and_comments():
     """The stdlib P6 parser must survive header comments and reject
     truncated rasters — real-file robustness, not just the planted shape."""
@@ -731,10 +702,8 @@ def test_graph_hops_chain_and_star(spark):
     """Hand graphs: a 4-chain (1-2-3-4) gives hops 0,1,2,3 from canonical
     1; a star centered on 9 with leaves 10,11,12 gives hops 0,1,1,1; an
     isolated node is its own canonical at hops 0."""
-    from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.operators.dedup import graph_hops
 
-    clear_pins()
     nodes = spark.createDataFrame(
         [(n,) for n in (1, 2, 3, 4, 9, 10, 11, 12, 99)], "node BIGINT"
     )
@@ -751,7 +720,6 @@ def test_graph_hops_chain_and_star(spark):
         9: (9, 0), 10: (9, 1), 11: (9, 1), 12: (9, 1),
         99: (99, 0),
     }
-    clear_pins()
 
 
 def test_containment_catches_subset_jaccard_misses(spark, tmp_path):
@@ -767,14 +735,12 @@ def test_containment_catches_subset_jaccard_misses(spark, tmp_path):
     )
     out = str(tmp_path / "ct")
     df.write.mode("overwrite").parquet(f"{out}/documents.parquet")
-    from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.operators.dedup import (
         ngram_containment_pairs,
         ngram_jaccard_pairs,
     )
     from clusterindices_spark.sources.fixtures import load_table
 
-    clear_pins()
     d = load_table(spark, out, "documents")
     cont = {(r["doc_a"], r["doc_b"]): (r["c_ab"], r["c_ba"])
             for r in ngram_containment_pairs(d).collect()}
@@ -782,10 +748,8 @@ def test_containment_catches_subset_jaccard_misses(spark, tmp_path):
     c_ab, c_ba = cont[(1, 2)]
     assert c_ab == 1.0      # short side fully contained
     assert c_ba < 0.2       # tiny from the long side
-    clear_pins()
     jac = {(r["doc_a"], r["doc_b"]) for r in ngram_jaccard_pairs(d, threshold=0.5).collect()}
     assert (1, 2) not in jac  # Jaccard at a dedup-grade threshold misses it
-    clear_pins()
 
 
 def test_ivf_nprobe_curve_monotone_and_exact_at_full_probe(spark):

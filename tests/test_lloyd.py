@@ -259,7 +259,6 @@ def test_seeded_fits_skip_null_seeds(spark):
     every row. Likewise a zero vector among PQ's k lowest ids, all-NULL
     once ``_unit`` scales it, must not leave one code per subspace. Every
     row is still assigned (and every non-NULL vector encoded)."""
-    from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.operators.pq import pq_train_encode
     from clusterindices_spark.operators.similarity import ivf_build
 
@@ -279,7 +278,6 @@ def test_seeded_fits_skip_null_seeds(spark):
     # _unit drops the NULL vector; the zero vector is still encoded
     assert sorted(r["vec_id"] for r in coded) == [0] + list(range(2, 40))
     assert all(len(r["codes"]) == 2 and None not in r["codes"] for r in coded)
-    clear_pins()
 
 
 def test_seeded_fit_of_identical_rows_keeps_one_cell(spark):

@@ -4,7 +4,7 @@
 the driver when the text's bytes fit ``LOCAL_LSH_BYTES`` and its rows per
 band, the candidate pairs and their row pairs each fit
 ``LOCAL_LSH_ROWS``; with the latter budget at 0 every
-non-empty corpus runs the Spark path (shingle pin, signature aggregate,
+non-empty corpus runs the Spark path (shingle checkpoint, signature aggregate,
 hot-bucket agg, band self-join, distinct, verification joins) instead.
 Both must give the same rows with bit-equal Jaccard values, and the same
 ``stats`` apart from ``finish``.
@@ -155,13 +155,27 @@ def test_spark_path_plan(spark, monkeypatch):
     """Over the budget the pairs come from the banded joins: bands exploded
     from the band table, an equi-join on (band, bh), broadcast hash joins,
     map-side partial aggregates, and neither a cartesian product nor a
-    single-partition exchange."""
+    single-partition exchange. The shingles and the band table are
+    checkpointed for the call, so their plans are read from the frames
+    handed to ``localCheckpoint``."""
     rows = EDGE_DOCS + [(20, BASE[0]), (21, BASE[0].replace("brown", "EDITED"))]
+    d = spark.createDataFrame(rows, SCHEMA)
+    checkpointed = []
+    local_checkpoint = type(d).localCheckpoint
+
+    def spy(df, *args, **kwargs):
+        checkpointed.append(df)
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(d), "localCheckpoint", spy)
     monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 0)
     stats: dict = {}
-    pairs = dedup.minhash_pairs(spark.createDataFrame(rows, SCHEMA), stats=stats)
+    pairs = dedup.minhash_pairs(d, stats=stats)
     assert pairs.collect() and stats["finish"] == "spark"
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert len(checkpointed) == 2
+    plan = "\n".join(
+        f._jdf.queryExecution().executedPlan().toString() for f in [pairs, *checkpointed]
+    )
     for frag in ("Generate", "BroadcastHashJoin", "partial"):
         assert frag in plan, frag
     # the shingle explode under the signature aggregate is a Generate too
@@ -224,7 +238,6 @@ def test_minhash_pairs_job_count(spark, monkeypatch):
             rows.append((g * 10 + c, " ".join(t)))
     d = spark.createDataFrame(rows, SCHEMA).persist()
     d.count()
-    dedup.clear_pins()
     sc = spark.sparkContext
     sc.setJobGroup("minhash-job-count", "minhash_pairs")
     try:
@@ -323,14 +336,14 @@ def test_text_over_the_byte_budget_runs_spark(spark):
     assert (stats["text_rows"], stats["text_bytes"]) == (n_docs, n_docs * size)
 
 
-def test_driver_path_sees_externally_rewritten_input(spark, monkeypatch, tmp_path):
-    """A writer outside this session rewrites the parquet under a path;
-    with no ``clear_pins()`` the driver finish returns the new corpus's
-    pairs, exactly as a never-used path with the same rows does."""
+def _rewritten_input_pairs(spark, tmp_path, finish):
+    """(old, got, want): ``minhash_pairs``' rows over a parquet path, then
+    over the same path after a writer outside this session rewrote it,
+    then over a never-used path with the new rows; every call must take
+    the ``finish`` path."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 1 << 23)
     path, fresh = tmp_path / "docs", tmp_path / "fresh"
 
     def write(p, base):
@@ -347,14 +360,46 @@ def test_driver_path_sees_externally_rewritten_input(spark, monkeypatch, tmp_pat
     def pairs(p):
         st: dict = {}
         out = dedup.minhash_pairs(spark.read.parquet(str(p)), stats=st).collect()
-        assert st["finish"] == "driver"
+        assert st["finish"] == finish
         return sorted((r["doc_a"], r["doc_b"], r["jaccard"]) for r in out)
 
     write(path, 0)
     old = pairs(path)
     write(path, 1)
     write(fresh, 1)
-    got = pairs(path)
-    want = pairs(fresh)
+    return old, pairs(path), pairs(fresh)
+
+
+def test_driver_path_sees_externally_rewritten_input(spark, monkeypatch, tmp_path):
+    """A writer outside this session rewrites the parquet under a path;
+    the driver finish returns the new corpus's pairs, exactly as a
+    never-used path with the same rows does."""
+    monkeypatch.setattr(dedup, "LOCAL_LSH_ROWS", 1 << 23)
+    old, got, want = _rewritten_input_pairs(spark, tmp_path, "driver")
     assert old and want and want != old
     assert got == want
+
+
+def test_spark_path_sees_externally_rewritten_input(spark, monkeypatch, tmp_path):
+    """The same rewrite over the byte budget: the Spark path checkpoints
+    its shingles and band table for the call only, so the second call
+    reads the new files instead of an earlier call's cached frames."""
+    monkeypatch.setattr(dedup, "LOCAL_LSH_BYTES", 0)
+    old, got, want = _rewritten_input_pairs(spark, tmp_path, "spark")
+    assert old and want and want != old
+    assert got == want
+
+
+def test_token_dense_text_runs_spark(spark, monkeypatch):
+    """Rows and bytes within their budgets but more ' '-split tokens than
+    LOCAL_LSH_ROWS: the collected text is counted before any NumPy array
+    is built, and the Spark path gives the same rows."""
+    rows = _planted_family(6)
+    n_tokens = sum(len(t.split(" ")) for _, t in rows)
+    d = spark.createDataFrame(rows, SCHEMA)
+    want, st_driver, _ = _run(d, 1 << 23, monkeypatch)
+    budget = 8 * len(rows)  # the rows fit: 8 bands
+    assert n_tokens > budget
+    got, stats, _ = _run(d, budget, monkeypatch)
+    assert st_driver["finish"] == "driver" and stats["finish"] == "spark"
+    assert got == want and want

@@ -134,11 +134,9 @@ def test_pq_expand_curve_monotone_with_deployed_floor(spark):
 
 
 def test_pq_codebook_sees_overwritten_input(spark, tmp_path):
-    """After the corpus file is overwritten in place (and the pins are
-    released), the trained codebook must be the new rows' codebook — the
-    same one a never-used path yields."""
-    from clusterindices_spark.functions.pins import clear_pins
-
+    """After the corpus file is overwritten in place, the trained codebook
+    must be the new rows' codebook — the same one a never-used path
+    yields."""
     path, fresh = tmp_path / "emb", tmp_path / "fresh"
     schema = "vec_id BIGINT, x ARRAY<DOUBLE>"
 
@@ -157,9 +155,7 @@ def test_pq_codebook_sees_overwritten_input(spark, tmp_path):
     new_rows = [(i, [1.0, float((i * 5) % 9 + 1), 3.0, float(i % 4)]) for i in range(32)]
     write(path, new_rows)
     write(fresh, new_rows)
-    clear_pins()
     got = book(path)
-    clear_pins()
     want = book(fresh)
     assert want != old
     assert got == want

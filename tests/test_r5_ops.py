@@ -75,7 +75,7 @@ def test_mmr_first_pick_is_top1_and_picks_distinct(spark):
 
 
 def test_minhash_est_identical_docs_estimate_one(spark):
-    from clusterindices_spark.operators.dedup import q_dedup_minhash_est, clear_pins
+    from clusterindices_spark.operators.dedup import q_dedup_minhash_est
 
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     docs = spark.createDataFrame(
@@ -87,9 +87,7 @@ def test_minhash_est_identical_docs_estimate_one(spark):
 
     d = tempfile.mkdtemp(prefix="ci-mh-")
     docs.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    clear_pins()
     rows = q_dedup_minhash_est(spark, d).collect()
-    clear_pins()
     assert len(rows) == 1
     r = rows[0]
     assert (r["doc_a"], r["doc_b"]) == (1, 2)

@@ -22,6 +22,11 @@ ROOT = os.environ.get(
     "DUMP_ROOT", os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 sys.path.insert(0, ROOT)
+# Python-UDF keys import clusterindices_spark inside Python workers, which
+# inherit PYTHONPATH from this process
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    x for x in (ROOT, os.environ.get("PYTHONPATH", "")) if x
+)
 
 
 def _cell(v):

@@ -321,7 +321,6 @@ def stress_ivfpq(spark) -> dict:
     vs exact cosine top-k must hold the bench floor (0.85) with two stacked
     sample estimates."""
     from clusterindices_spark.functions.lloyd import SAMPLE_CAP
-    from clusterindices_spark.functions.pins import clear_pins
     from clusterindices_spark.operators.pq import ivfpq_topk
     from clusterindices_spark.operators.similarity import topk_exact
 
@@ -346,7 +345,6 @@ def stress_ivfpq(spark) -> dict:
         (r["probe_id"], r["neighbor_id"])
         for r in topk_exact(emb, probes, k=5).collect()
     }
-    clear_pins()
     t0 = time.monotonic()
     got = {
         (r["probe_id"], r["neighbor_id"])

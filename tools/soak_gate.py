@@ -9,10 +9,9 @@ Runs the FULL registry twice in ONE Spark session and asserts:
    shared cache entry, or any state leaking between invocations, shows up
    as a second-pass drift.
 2. **Bounded cache growth** — after pass 2, the session-wide cache
-   population (persistent RDDs, pins registry, roundtrip tempdirs) equals
-   the post-pass-1 snapshot: invocation N+1 must REUSE or REPLACE
-   generation N, never stack a new one (the pins.py contract,
-   measured rather than asserted in prose).
+   population (persistent RDDs, roundtrip tempdirs) equals the
+   post-pass-1 snapshot: no invocation may leave a cached frame behind
+   for the rest of the session.
 3. **No monotone slowdown** — pass-2 total wall must not exceed pass-1
    total by more than 1.5× (a dead InMemoryRelation recomputing per action
    — the r3 CC regression — roughly doubles affected keys).
@@ -29,7 +28,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check_oracle import _rows  # canonical multiset, NaN/-0.0 folded
@@ -46,7 +46,6 @@ def _cache_snapshot(spark):
     import gc
     import time as _t
 
-    from clusterindices_spark.functions import pins
     from clusterindices_spark.sources import readers
 
     try:
@@ -71,7 +70,6 @@ def _cache_snapshot(spark):
         n_tmp = len(os.listdir(readers._SESSION_TMP.name))
     return {
         "persistent_rdds": int(n_rdd),
-        "pins": len(pins._PINNED),
         "roundtrip_tmpdirs": n_tmp,
     }
 
